@@ -35,7 +35,7 @@ def _chunks_of(table: str):
 
 
 def kernel_bench(tables: list[str], repeats: int = 3) -> None:
-    from chimp_spark.framing import column_cache, encode_chunk
+    from chimp_spark.framing import encode_chunk
 
     for table in tables:
         chunks = list(_chunks_of(table))

@@ -149,9 +149,11 @@ def gcd_for_stats(vals: np.ndarray) -> tuple[int, int, int, int]:
         # Euclid reduce, and on grid-aligned data (the case where
         # gcd_for wins) it almost always verifies.
         gs = int(np.gcd.reduce(rel[:4096]))
-        if gs > 1 and not (rel % np.uint64(gs)).any():
+        if gs == 1:  # gcd(full) divides 1: no full reduce needed
+            g = 1
+        elif gs > 1 and not (rel % np.uint64(gs)).any():
             g = gs
-        else:
+        else:  # gs == 0 (constant prefix) says nothing about the rest
             g = int(np.gcd.reduce(rel))
     else:
         g = int(np.gcd.reduce(rel)) if rel.size else 0
@@ -388,7 +390,9 @@ def _dec_for_detect_iv(
         mult = np.float64(10.0**k)
         iv = np.round(vals * mult)
         if np.abs(iv).max() >= 2**53:
-            return None
+            # a hinted k can overflow where a smaller k fits: move on,
+            # as the C dec_verify_scale path does
+            continue
         # verify through the EXACT decode path (int64 cast loses the
         # sign of -0.0, so it must be part of the check)
         iv64 = iv.astype(np.int64)

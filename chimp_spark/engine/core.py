@@ -188,14 +188,10 @@ def encode_dataframe(
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
         state = {"chunk_id": 0, "row_start": 0}
-        from ..framing import column_cache
-
-        # cache scope includes run_id: reused workers amortize FSST
-        # training across THIS encode call's tasks without leaking a
-        # table trained on some earlier dataset that shared names
-        col_caches: dict[str, dict] = {
-            c: column_cache(f"{table_name}:{run_id}", c) for c in cols
-        }
+        # encode caches (FSST symbol tables) live for one task, so its
+        # frames depend on the partition's rows alone, never on what a
+        # reused worker encoded before
+        col_caches: dict[str, dict] = {c: {} for c in cols}
 
         def flush(tbl: pa.Table) -> pa.RecordBatch:
             out: dict[str, list] = {k.name: [] for k in ENC_ARROW_SCHEMA}

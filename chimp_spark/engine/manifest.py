@@ -11,7 +11,12 @@ Iceberg REST/HMS catalog can replace it):
 
 Commit protocol (single-writer, crash-safe): data files are written
 first, then a new manifest + metadata version, then the version hint
-is atomically replaced. A crashed run leaves orphan data files but an
+is atomically replaced. The data-file write is the commit's only Spark
+action: it observes the committed part ids and the totals (chunks, rows,
+raw and encoded bytes) as the rows stream past, so the data just
+written is never scanned again. The manifest gets one entry per part
+id plus one per data file; the totals land as ``summary`` in
+``v<N>.metadata.json``. A crashed run leaves orphan data files but an
 older consistent snapshot; the next run's resume anti-joins completed
 partition ids from the live snapshot and re-encodes only the rest —
 the lineage rows (table, column, part_id, chunk_id, codec, bytes,
@@ -152,58 +157,60 @@ class EncodedTable:
                epoch: int | None = None, mode: str | None = None,
                fingerprint: str | None = None,
                layout_parts: int | None = None) -> dict:
-        """Write encoded chunks as per-partition parquet files + new
-        snapshot. ``fingerprint`` (scan mode) records the input
-        file-set identity the positional unit ids were derived from —
-        see completed_scan_units. Returns commit stats."""
+        """Write encoded chunks as parquet data files + new snapshot.
+        The parquet write is the commit's only Spark action: it observes
+        the part ids and commit totals (chunks, rows, raw/enc bytes) as
+        it goes, so nothing reads the written files back.
+        ``fingerprint`` (scan mode) records the input file-set identity
+        the positional unit ids were derived from — see
+        completed_scan_units. Returns {version, files, partitions,
+        summary}; ``summary`` (the totals) is also stored in the
+        snapshot metadata."""
+        import glob
+        import shutil
+
+        from pyspark.sql import Observation
+
         os.makedirs(self.data_dir, exist_ok=True)
         os.makedirs(self.meta_dir, exist_ok=True)
         run_id = uuid.uuid4().hex[:12]
         staging = os.path.join(self.data_dir, f"_staging-{run_id}")
-        encoded.write.mode("overwrite").parquet(staging)
+        obs = Observation(f"commit-{run_id}")
+        encoded.observe(
+            obs,
+            F.collect_set("part_id").alias("part_ids"),
+            F.count(F.lit(1)).alias("chunks"),
+            F.sum("n").alias("rows"),
+            F.sum("raw_bytes").alias("raw_bytes"),
+            F.sum("enc_bytes").alias("enc_bytes"),
+        ).write.mode("overwrite").parquet(staging)
+        observed = obs.get
+        part_ids = sorted(observed["part_ids"])
+        summary = {k: int(observed[k] or 0)
+                   for k in ("chunks", "rows", "raw_bytes", "enc_bytes")}
 
         # fold staged files into the data dir under stable names
         files = []
-        df = spark.read.parquet(staging)
-        stats = (
-            df.groupBy("part_id")
-            .agg(
-                F.count("*").alias("chunks"),
-                F.sum("n").alias("rows"),
-                F.sum("raw_bytes").alias("raw_bytes"),
-                F.sum("enc_bytes").alias("enc_bytes"),
-            )
-            .collect()
-        )
-        part_stats = {r["part_id"]: r.asDict() for r in stats}
-        import glob
-        import shutil
-
-        entries = []
         for i, path in enumerate(sorted(glob.glob(os.path.join(staging, "part-*.parquet")))):
             name = f"part-{run_id}-{i:05d}.parquet"
             shutil.move(path, os.path.join(self.data_dir, name))
             files.append(name)
         shutil.rmtree(staging, ignore_errors=True)
 
-        for pid, s in part_stats.items():
-            entries.append(
-                {
-                    "table": table,
-                    "epoch": epoch,
-                    "mode": mode,
-                    "fingerprint": fingerprint,
-                    "layout_parts": layout_parts,
-                    "part_id": pid,
-                    "chunks": s["chunks"],
-                    "rows": s["rows"],
-                    "raw_bytes": s["raw_bytes"],
-                    "enc_bytes": s["enc_bytes"],
-                    "committed": True,
-                    "files": files,
-                    "file": files[0] if files else None,
-                }
-            )
+        entries = [
+            {
+                "table": table,
+                "epoch": epoch,
+                "mode": mode,
+                "fingerprint": fingerprint,
+                "layout_parts": layout_parts,
+                "part_id": pid,
+                "committed": True,
+                "files": files,
+                "file": files[0] if files else None,
+            }
+            for pid in part_ids
+        ]
         # data-file level entries for read path
         file_entries = [
             {"table": table, "epoch": epoch, "part_id": -1, "file": f, "committed": True}
@@ -224,6 +231,7 @@ class EncodedTable:
             "timestamp-ms": int(time.time() * 1000),
             "table": table,
             "manifests": prev_manifests + [manifest_name],
+            "summary": summary,
         }
         with open(os.path.join(self.meta_dir, f"v{new_v}.metadata.json"), "w") as f:
             json.dump(meta, f, indent=1)
@@ -231,7 +239,8 @@ class EncodedTable:
         with open(tmp, "w") as f:
             f.write(str(new_v))
         os.replace(tmp, os.path.join(self.meta_dir, "version-hint.text"))
-        return {"version": new_v, "files": len(files), "partitions": len(part_stats)}
+        return {"version": new_v, "files": len(files), "partitions": len(part_ids),
+                "summary": summary}
 
     # -- read / resume ---------------------------------------------------------
 

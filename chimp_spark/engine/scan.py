@@ -7,8 +7,9 @@ Spark's InternalRow -> Arrow conversion in mapInArrow — measured at
 the transfer). For the bulk case "encode this parquet/Iceberg table",
 that conversion is pure overhead: parquet is already columnar.
 
-``encode_parquet`` distributes (file, row_group) work units as a tiny
-DataFrame, and each task reads its row groups straight into Arrow with
+``encode_parquet`` distributes (file, row_group) work units as a JVM
+``range`` over unit indices (the unit list rides in the task closure),
+and each task reads its row groups straight into Arrow with
 pyarrow.parquet (column pruning pushed down via ``columns=``), then
 runs the same chunk kernels. Task granularity = row group, so a
 1000-executor cluster load-balances a 100 TB table the same way this
@@ -163,25 +164,20 @@ def encode_parquet(
         exec_units = [(u[0], u[1], u[2], 0, -1) for u in units]
 
     n_slices = num_slices or min(len(exec_units), spark.sparkContext.defaultParallelism * 2)
-    # positional slicing via parallelize: consecutive row groups of the
-    # same file land in the same task in order (footer parsed once per
-    # task, sequential reads) with balanced unit counts — the same
-    # layout repartitionByRange("unit") produced, minus its sampling
-    # job and exchange (two scheduled stages per call on a list the
-    # driver already holds sorted)
-    plan = spark.createDataFrame(
-        spark.sparkContext.parallelize(exec_units, n_slices),
-        "unit int, path string, rg int, off long, nrows long",
-    )
+    # the plan is a JVM range over unit indices; tasks look the units
+    # up in the closure (PySpark broadcasts a closure over 1 MB, as a
+    # 10^5-unit list is). range slices [0, N) contiguously, so
+    # consecutive row groups of the same file land in the same task in
+    # order (footer parsed once per task, sequential reads) with
+    # balanced unit counts, and no Python worker serves the plan's
+    # input rows
+    plan = spark.range(0, len(exec_units), 1, n_slices)
 
     codec_of = (lambda c: codec.get(c, "auto")) if isinstance(codec, dict) else (lambda c: codec)
 
     def work(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
-        from ..framing import column_cache
-
-        col_caches: dict[str, dict] = {}
         pf_cache: dict[str, pq.ParquetFile] = {}  # footer parses once
         # per (task, file), not once per row group — a many-row-group
         # file would otherwise pay O(row_groups^2) metadata parsing
@@ -189,12 +185,12 @@ def encode_parquet(
         rg_key = None
         rg_tbl = None
         for b in batches:
-            for i in range(b.num_rows):
-                unit = b.column("unit")[i].as_py()
-                path = b.column("path")[i].as_py()
-                rg = b.column("rg")[i].as_py()
-                sub_off = b.column("off")[i].as_py()
-                sub_len = b.column("nrows")[i].as_py()
+            for i in b.column("id").to_pylist():
+                unit, path, rg, sub_off, sub_len = exec_units[i]
+                # encode caches (FSST symbol tables) live for one work
+                # unit, so its frames depend on the unit's rows alone,
+                # never on what a reused worker encoded before
+                col_caches: dict[str, dict] = {}
                 pf = pf_cache.get(path)
                 if pf is None:
                     if len(pf_cache) >= 16:  # bound open handles
@@ -219,10 +215,7 @@ def encode_parquet(
                     for col in sl.column_names:
                         encode_chunk_into(
                             out, sl.column(col).combine_chunks(), col,
-                            codec_of(col),
-                            col_caches.setdefault(
-                                col, column_cache(f"{table_name}:{run_id}", col)
-                            ),
+                            codec_of(col), col_caches.setdefault(col, {}),
                             table_name, run_id, unit, chunk_id, row_start,
                         )
                     chunk_id += 1

@@ -22,7 +22,7 @@ trainer") pays the JVM emit for nothing. Two shapes:
   shuffle happens at all — the exact mirror of scan.py's work-unit
   model, and the shape a 100 TB decode job runs in: every task streams
   encoded shards from the store and writes decoded shards back,
-  nothing crosses the JVM but the unit list and file metadata.
+  nothing crosses the JVM but file indices and file metadata.
 
 Commit protocol (two-phase, task-retry safe): tasks write uniquely
 named files under ``<out_dir>/_staged/`` and report them; the driver
@@ -42,6 +42,7 @@ import os
 import uuid
 from collections.abc import Iterator
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -128,12 +129,17 @@ class _ShardWriter:
         self.buffered_bytes = 0
 
     def _avg_len(self, col_idx: int) -> float:
+        """Mean value length of a string/binary column, read from the
+        offsets: a sliced batch shares its parent's data buffer, whose
+        size says nothing about the slice's values."""
         rows = vals_bytes = 0
         for rb in self.pending:
             col = rb.column(col_idx)
             rows += len(col) - col.null_count
-            bufs = col.buffers()
-            vals_bytes += bufs[-1].size if bufs and bufs[-1] is not None else 0
+            if len(col):
+                large = pa.types.is_large_string(col.type) or pa.types.is_large_binary(col.type)
+                offs = np.frombuffer(col.buffers()[1], np.int64 if large else np.int32)
+                vals_bytes += int(offs[col.offset + len(col)] - offs[col.offset])
         return vals_bytes / rows if rows else 0.0
 
     def add(self, rb: pa.RecordBatch) -> None:
@@ -497,15 +503,11 @@ def decode_files_to_parquet(
     out_types = ddl_arrow_types(ddl)
     out_schema = _out_schema(columns, ddl, with_row_ids)
     n_slices = num_slices or min(len(files), spark.sparkContext.defaultParallelism)
-    # positional slicing, not repartitionByRange: same contiguous
-    # file-per-task layout without the range sampler's extra stage
-    # and exchange (see scan.py)
-    plan = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(i, p) for i, p in enumerate(files)], n_slices
-        ),
-        "unit int, path string",
-    )
+    # a JVM range over file indices, sliced contiguously: the same
+    # file-per-task layout as repartitionByRange without its sampler
+    # stage and exchange; tasks look the paths up in the closure (see
+    # scan.py)
+    plan = spark.range(0, len(files), 1, n_slices)
     col_set = list(dict.fromkeys(columns))
     _STAT_COLS = ["run_id", "part_id", "chunk_id", "column", "enc_bytes",
                   "stat_min", "stat_max", "stat_min_bin", "stat_max_bin"]
@@ -564,8 +566,8 @@ def decode_files_to_parquet(
 
         def file_batches() -> Iterator[pa.RecordBatch]:
             for b in batches:
-                for i in range(b.num_rows):
-                    path = b.column("path")[i].as_py()
+                for i in b.column("id").to_pylist():
+                    path = files[i]
                     flt = pads.field("column").isin(col_set)
                     if table is not None:
                         flt = flt & (pads.field("table") == table)

@@ -201,26 +201,6 @@ _STR_DEC = {
 }
 
 
-_COLUMN_CACHES: dict[tuple[str, str], dict] = {}
-
-
-def column_cache(table: str, column: str) -> dict:
-    """Process-level per-(table, column) encode cache.
-
-    Spark reuses python workers across tasks (spark.python.worker.reuse
-    defaults true), so keying the cache at module scope amortizes FSST
-    table training once per worker per column instead of once per task.
-    Correctness is unaffected: every frame embeds its own table; the
-    cache only shapes which table gets trained/reused."""
-    key = (table, column)
-    c = _COLUMN_CACHES.get(key)
-    if c is None:
-        if len(_COLUMN_CACHES) >= 256:  # bound long-lived worker memory
-            _COLUMN_CACHES.clear()
-        c = _COLUMN_CACHES[key] = {}
-    return c
-
-
 @dataclass
 class ChunkMeta:
     codec: str

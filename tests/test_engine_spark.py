@@ -841,3 +841,116 @@ def test_df_resume_refuses_pre_layout_parts_entries(spark, tmp_path):
 
     with pytest.raises(ValueError, match="predate layout_parts"):
         engine.encode_and_commit(spark, df, root, "t")
+
+
+def test_shard_writer_avg_len_reads_sliced_offsets(tmp_path):
+    """A sliced batch shares its parent's data buffer: short strings cut
+    from a batch of long ones must still count as short and keep the
+    parquet dictionary."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from chimp_spark.engine import sink as S
+
+    parent = pa.array(["x" * 1000] * 1000 + ["ab", "cd"] * 500)
+    rb = pa.RecordBatch.from_arrays([parent], ["t"]).slice(1000)
+    schema = pa.schema([("t", pa.string())])
+    w = S._ShardWriter(str(tmp_path), 0, schema, "snappy", row_group_rows=1 << 20)
+    w.add(rb)
+    assert w._avg_len(0) == 2.0
+    path, rows, _size = w.close()
+    assert rows == 1000
+    assert pq.ParquetFile(path).metadata.row_group(0).column(0).has_dictionary_page
+
+
+def test_commit_runs_one_spark_job(spark, tmp_path):
+    """commit() writes and gathers its stats in ONE Spark job (the
+    write observes them), and the observed totals equal the committed
+    rows'."""
+    import json as _json
+
+    src = str(tmp_path / "src")
+    spark.read.parquet(f"{SF_DIR}/orders.parquet").repartition(4).write.parquet(src)
+    enc = engine.encode_parquet(spark, src, columns=["o_orderkey", "o_totalprice"],
+                                table_name="orders")
+    t = engine.EncodedTable(str(tmp_path / "enc"))
+    sc = spark.sparkContext
+    group = "commit-one-job"
+    sc.setJobGroup(group, "commit under test")
+    try:
+        info = t.commit(spark, enc, "orders", mode="scan")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+    back = t.read(spark).agg(
+        F.countDistinct("part_id").alias("partitions"), F.count("*").alias("chunks"),
+        F.sum("n").alias("rows"), F.sum("raw_bytes").alias("raw_bytes"),
+        F.sum("enc_bytes").alias("enc_bytes"),
+    ).collect()[0].asDict()
+    assert info["partitions"] == back.pop("partitions") == 4
+    assert info["summary"] == back
+    meta_path = os.path.join(t.meta_dir, f"v{info['version']}.metadata.json")
+    assert _json.load(open(meta_path))["summary"] == back
+    assert t.completed_part_ids("orders", mode="scan") == {0, 1, 2, 3}
+
+
+def test_commit_empty_encoded_does_not_block(spark, tmp_path):
+    import threading
+
+    t = engine.EncodedTable(str(tmp_path / "enc"))
+    empty = spark.createDataFrame([], engine.ENC_DDL)
+    got = {}
+    th = threading.Thread(target=lambda: got.update(t.commit(spark, empty, "t")), daemon=True)
+    th.start()
+    th.join(120)
+    assert not th.is_alive(), "commit of an empty DataFrame blocked"
+    assert got["partitions"] == 0
+    assert got["summary"] == {"chunks": 0, "rows": 0, "raw_bytes": 0, "enc_bytes": 0}
+    assert t.completed_part_ids("t") == set()
+
+
+def test_range_slices_like_parallelize(spark):
+    """Work-unit plans rely on spark.range slicing [0, N) exactly like
+    parallelize: same unit sets per task, in order."""
+    sc = spark.sparkContext
+    for n, slices in ((10, 4), (7, 3), (100, 8), (5, 5), (3, 8)):
+        rows = spark.range(0, n, 1, slices).select(
+            "id", F.spark_partition_id().alias("p")).collect()
+        by_task = [[] for _ in range(slices)]
+        for r in rows:
+            by_task[r["p"]].append(r["id"])
+        assert by_task == sc.parallelize(range(n), slices).glom().collect()
+
+
+def test_scan_frames_independent_of_scheduling(spark, tmp_path):
+    """Frame bytes depend only on the input: the same 8-file text input
+    encoded twice at local[4] gives identical frames, and each unit's
+    frame equals an in-process encode of its rows with a fresh cache."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from chimp_spark import framing
+
+    rng = np.random.default_rng(17)
+    src = tmp_path / "docs"
+    src.mkdir()
+    texts = []
+    for k in range(8):
+        vocab = [f"{w}{k}" for w in ("alpha", "beta", "gamma", "delta", "omega")] + [
+            "".join(rng.choice(list("abcdefghij"), 6)) for _ in range(30)]
+        docs = [" ".join(rng.choice(vocab, 12)) for _ in range(600)]
+        texts.append(docs)
+        pq.write_table(pa.table({"text": docs}), str(src / f"f{k}.parquet"))
+
+    def frames():
+        enc = engine.encode_parquet(spark, str(src), codec="fsst", table_name="docs")
+        return {(r["part_id"], r["chunk_id"]): bytes(r["frame"])
+                for r in enc.select("part_id", "chunk_id", "frame").collect()}
+
+    first, second = frames(), frames()
+    assert len(first) == 8
+    assert first == second
+    for k, docs in enumerate(texts):
+        blob, _meta = framing.encode_chunk(pa.array(docs), codec="fsst", cache={})
+        assert first[(k, 0)] == blob

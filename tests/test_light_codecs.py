@@ -628,14 +628,19 @@ def test_dec_verify_scale_parity():
         np.round(rng.normal(100, 30, 4000), 2) + 1e-12,  # sub-ULP noise
         np.array([0.1, 0.2, 0.3]),
     ]
+    # a hinted k that overflows 2^53 while k=0 verifies: both paths
+    # must move on to the next k
+    hinted = [(np.array([1e12, 2e12, 3e12]), 4)]
     saved = N._FUNCS
-    for vals in cases:
-        nat_hit = L._dec_for_detect_iv(vals)
+    for vals, k_hint in [(v, None) for v in cases] + hinted:
+        nat_hit = L._dec_for_detect_iv(vals, k_hint=k_hint)
         try:
             N._FUNCS = {}
-            ref_hit = L._dec_for_detect_iv(vals)
+            ref_hit = L._dec_for_detect_iv(vals, k_hint=k_hint)
         finally:
             N._FUNCS = saved
+        if k_hint is not None:
+            assert ref_hit is not None and ref_hit[0] == 0
         if ref_hit is None:
             assert nat_hit is None
         else:
@@ -673,3 +678,27 @@ def test_dict_codes_parity():
         np.testing.assert_array_equal(codes, ref_codes)
         np.testing.assert_array_equal(doffs, ref_doffs)
         np.testing.assert_array_equal(ddata, ref_ddata)
+
+
+def test_gcd_for_stats_prefix_short_circuit_parity():
+    """gcd_for_stats (prefix-gcd shortcuts) must equal the plain full
+    np.gcd.reduce on random, grid-aligned and constant-prefix chunks."""
+    rng = np.random.default_rng(23)
+    cases = [
+        rng.integers(-(10**9), 10**9, 20_000, dtype=np.int64),
+        rng.integers(0, 10**6, 20_000, dtype=np.int64) * 86_400 + 7,
+        rng.integers(0, 1000, 20_000, dtype=np.int64) * 25,
+        # prefix on a coarser grid than the whole chunk: the check fails
+        np.concatenate([np.arange(5000, dtype=np.int64) * 50,
+                        np.arange(15_000, dtype=np.int64) * 10]),
+        # constant prefix (prefix gcd 0): the gcd comes from the rest
+        np.concatenate([np.zeros(5000, dtype=np.int64),
+                        rng.integers(1, 100, 15_000, dtype=np.int64) * 12]),
+        np.full(10_000, 42, dtype=np.int64),
+    ]
+    for iv in cases:
+        rel = (iv - iv.min()).view(np.uint64)
+        want = max(int(np.gcd.reduce(rel)), 1)
+        _size, lo, g, width = L.gcd_for_stats(iv)
+        assert (lo, g) == (int(iv.min()), want)
+        assert width == (int(rel.max()) // want).bit_length()

@@ -239,3 +239,29 @@ def test_pack_sequences_one_deterministic_exchange(spark):
     plan = _plan(chunking.pack_sequences(lens, budget=2048, num_partitions=4))
     assert plan.count("Exchange") == 1
     assert "xxhash64" in plan
+
+
+def test_work_unit_plans_scan_no_python_rdd(spark, tmp_path, monkeypatch):
+    """encode_parquet / decode_files_to_parquet plan their work units as
+    a JVM range: no Python RDD scan (ExistingRDD) feeds the tasks."""
+    src = str(tmp_path / "src")
+    spark.read.parquet(f"{SF_DIR}/orders.parquet").repartition(4).write.parquet(src)
+    enc = engine.encode_parquet(spark, src, columns=["o_orderkey"], table_name="orders")
+    plan = _formatted(enc)
+    assert "ExistingRDD" not in plan and "Range" in plan
+    root = str(tmp_path / "enc")
+    engine.EncodedTable(root).commit(spark, enc, "orders", mode="scan")
+
+    seen = []
+    cls = type(enc)
+    map_in_arrow = cls.mapInArrow
+
+    def spy(self, *a, **kw):
+        seen.append(_formatted(self))
+        return map_in_arrow(self, *a, **kw)
+
+    monkeypatch.setattr(cls, "mapInArrow", spy)
+    engine.decode_table_to_parquet(spark, root, ["o_orderkey"], "o_orderkey long",
+                                   str(tmp_path / "out"))
+    assert len(seen) == 1
+    assert "ExistingRDD" not in seen[0] and "Range" in seen[0]
