@@ -628,11 +628,9 @@ def _zone_pruned_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     laid = df.repartitionByRange(8, F.col("l_extendedprice"))
     enc = engine.encode_dataframe(laid, ["l_extendedprice"], codec="auto",
                                   chunk_rows=_CHUNK, table_name="lineitem")
-    dec = engine.decode_column(enc, "l_extendedprice", "double",
-                               value_range=(5000.0, 10000.0))
-    return dec.filter((F.col("value") >= 5000.0) & (F.col("value") <= 10000.0)).select(
-        F.col("value").alias("v")
-    )
+    dec = engine.decode_column(enc, "l_extendedprice", "double", predicate=(
+        "l_extendedprice", "between", (5000.0, 10000.0)))
+    return dec.select(F.col("value").alias("v"))
 
 
 _ZONE_ORACLE = """
@@ -643,17 +641,16 @@ WHERE l_extendedprice BETWEEN 5000.0 AND 10000.0
 
 def _zone_pruned_key_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String-key analogue of the numeric zone-map query: range layout
-    on a string column -> 16-byte truncated zone maps -> key_range
-    chunk pruning -> exact filter."""
+    on a string column -> 16-byte truncated zone maps -> chunk
+    pruning -> exact filter."""
     df = _read(spark, sf_dir, "documents")
     laid = df.repartitionByRange(4, F.col("source")).sortWithinPartitions("source")
     enc = engine.encode_dataframe(laid, ["source"], codec="auto",
                                   chunk_rows=_CHUNK, table_name="documents")
     lo, hi = "src0", "src12"  # lexicographic: src0, src1, src10..src12
-    dec = engine.decode_column(enc, "source", "string", key_range=(lo, hi))
-    return dec.filter((F.col("value") >= lo) & (F.col("value") <= hi)).select(
-        F.col("value").alias("v")
-    )
+    dec = engine.decode_column(enc, "source", "string",
+                               predicate=("source", "between", (lo, hi)))
+    return dec.select(F.col("value").alias("v"))
 
 
 _ZONE_KEY_ORACLE = """

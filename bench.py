@@ -591,18 +591,18 @@ def main() -> None:
         # decode_table(...).write.parquet, not .count() — a consumer
         # materializes files.
         engine.decode_to_parquet(enc, cols, ddl, "/tmp/bench_dec_li_w",
-                                 mode="overwrite", colocated=True)  # warm
+                                 mode="overwrite")  # warm
         dts = []
         for i in range(3):
             t0 = time.perf_counter()
             r = engine.decode_to_parquet(enc, cols, ddl, f"/tmp/bench_dec_li_{i}",
-                                         mode="overwrite", colocated=True)
+                                         mode="overwrite")
             dts.append(time.perf_counter() - t0)
         dt = min(dts)
         results["decode_sink_lineitem"] = round(dt, 3)
         extra["decode_sink_lineitem"] = {
             "rows": r["rows"], "gbps": round(raw5 / dt / 1e9, 4),
-            "sink": "decode_to_parquet (DF input, colocated=True: no shuffle)",
+            "sink": "decode_to_parquet (DF input, no shuffle)",
         }
         enc.unpersist()
         df.unpersist()

@@ -1,16 +1,16 @@
 from .core import (
     DEFAULT_CHUNK_ROWS,
     ENC_DDL,
-    arrow_max_bytes_per_batch,
     compression_summary,
     decode_column,
     decode_table,
     encode_dataframe,
     get_spark,
+    session_conf,
     verify_table,
 )
 from .manifest import EncodedTable, encode_and_commit
-from .sink import decode_files_to_parquet, decode_table_to_parquet, decode_to_parquet
+from .sink import decode_table_to_parquet, decode_to_parquet
 from .scan import encode_parquet, parquet_work_units, resolve_paths, units_fingerprint
 from .partitioning import (
     detect_hot_keys,
@@ -22,11 +22,9 @@ from .partitioning import (
 __all__ = [
     "DEFAULT_CHUNK_ROWS",
     "ENC_DDL",
-    "arrow_max_bytes_per_batch",
     "EncodedTable",
     "compression_summary",
     "decode_column",
-    "decode_files_to_parquet",
     "decode_table_to_parquet",
     "decode_to_parquet",
     "decode_table",
@@ -38,6 +36,7 @@ __all__ = [
     "resolve_paths",
     "units_fingerprint",
     "get_spark",
+    "session_conf",
     "repartition_balanced",
     "repartition_by_range",
     "repartition_salted",

@@ -23,10 +23,12 @@ is also the unit of resume.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import Any, NamedTuple
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..framing import decode_chunk, encode_chunk
@@ -66,22 +68,16 @@ ENC_DDL = (
 DEFAULT_CHUNK_ROWS = 65_536
 
 
-def get_spark(
-    cpus: int | str = "*",
-    shuffle_partitions: int | None = None,
-    app: str = "chimp_spark",
-    chunk_rows: int = DEFAULT_CHUNK_ROWS,
-    driver_memory: str = "24g",
-) -> SparkSession:
-    """Session tuned for the encode pipeline at local[N]; the same
-    configs are what a cluster submit would set per executor."""
-    n = 32 if cpus == "*" else int(cpus)
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or n))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+def session_conf(chunk_rows: int = DEFAULT_CHUNK_ROWS) -> dict[str, str]:
+    """The engine's Spark SQL settings — one set for get_spark and
+    every spark-submit job, so production runs the config the bench
+    measures. Master, memory, GC and UI settings are deployment
+    choices and stay out of it."""
+    import os
+
+    return {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
         # AQE targets max(total/parallelism, minPartitionSize) per
         # coalesced partition (parallelismFirst). The decode exchange
         # moves COMPRESSED frames that expand ~6x and pay heavy CPU per
@@ -89,32 +85,41 @@ def get_spark(
         # (19 of 32 cores at sf0.1). 256k only affects jobs whose
         # per-core share is < 1m — at scale total/parallelism dominates
         # and behavior is identical.
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(chunk_rows))
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", arrow_max_bytes_per_batch())
-        .config("spark.sql.files.maxPartitionBytes", "128m")
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "256k",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": str(chunk_rows),
+        # Spark 4's 64m default makes BatchedPythonArrowInput walk the
+        # whole Arrow struct vector after EVERY appended row; on a wide
+        # table that walk costs ~10x the row conversion itself
+        # (measured: a mapInArrow passthrough over cached lineitem
+        # dropped 2.05s -> 0.84s at local[32] without it). Int.MaxValue
+        # restores the Spark 3.x contract: batches bounded by
+        # maxRecordsPerBatch rows. Deployments with very large binary
+        # rows can re-cap via CHIMP_SPARK_ARROW_MAX_BYTES.
+        "spark.sql.execution.arrow.maxBytesPerBatch":
+            os.environ.get("CHIMP_SPARK_ARROW_MAX_BYTES", str(2**31 - 1)),
+        "spark.sql.files.maxPartitionBytes": "128m",
+    }
+
+
+def get_spark(
+    cpus: int | str = "*",
+    shuffle_partitions: int | None = None,
+    app: str = "chimp_spark",
+    chunk_rows: int = DEFAULT_CHUNK_ROWS,
+    driver_memory: str = "24g",
+) -> SparkSession:
+    """Session at local[N] with the engine's session_conf."""
+    n = 32 if cpus == "*" else int(cpus)
+    builder = (
+        SparkSession.builder.master(f"local[{cpus}]")
+        .appName(app)
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or n))
+        .config(map=session_conf(chunk_rows))
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-XX:+UseG1GC")
     )
     return builder.getOrCreate()
-
-
-def arrow_max_bytes_per_batch() -> str:
-    """Spark 4's arrow.maxBytesPerBatch default (64m) makes
-    BatchedPythonArrowInput call ArrowWriter.sizeInBytes() — a full
-    struct-vector walk — after EVERY appended row; on a wide table
-    that walk costs ~10x the row conversion itself (measured: a
-    mapInArrow passthrough over cached lineitem dropped 2.05s -> 0.84s
-    at local[32] when the walk is disabled). Int.MaxValue restores the
-    Spark 3.x contract: batches bounded by maxRecordsPerBatch rows
-    (our chunk protocol already slices to chunk_rows), batch bytes
-    bounded by partition layout. Deployments with very large binary
-    rows can re-cap via CHIMP_SPARK_ARROW_MAX_BYTES instead of paying
-    the per-row walk by default."""
-    import os
-
-    return os.environ.get("CHIMP_SPARK_ARROW_MAX_BYTES", str(2**31 - 1))
 
 
 def encode_chunk_into(out: dict, arr: pa.Array, col: str, codec: str,
@@ -224,79 +229,179 @@ def encode_dataframe(
     return src.mapInArrow(encode_iter, ENC_DDL)
 
 
+class Predicate(NamedTuple):
+    """One row predicate ``(col, op, payload)``: ``(col, "==", v)``,
+    ``(col, "in", [v, ...])``, ``(col, "<=", v)``, ``(col, ">=", v)``
+    or ``(col, "between", (lo, hi))``.
+
+    Zone maps prune with the predicate's [lo, hi] envelope ('in' takes
+    the min..max hull), rendered as a Spark Column (``zone_column``)
+    or a pyarrow Expression (``zone_expr``) over a frame row's stats:
+    numeric payloads check stat_min/stat_max, string/bytes payloads
+    the 16-byte truncated binary bounds (min is a prefix -> valid
+    lower bound; max is truncate-and-increment -> valid upper bound).
+    A chunk is kept when every bound it needs is null (unknown) or
+    overlaps. Pruning is conservative, so exactness comes from
+    ``row_expr``, the filter on decoded values."""
+
+    col: str
+    op: str
+    payload: Any
+
+    @classmethod
+    def of(cls, predicate: tuple | None, columns: list[str]) -> Predicate | None:
+        """Validate a ``(col, op, payload)`` tuple. The column must be
+        among the decoded ``columns``: the exact filter needs its
+        values."""
+        if predicate is None:
+            return None
+        col, op, payload = predicate
+        if col not in columns:
+            raise ValueError(
+                f"predicate column {col!r} must be among the decoded columns "
+                f"{columns} (chunk pruning is conservative; the exact filter "
+                f"runs on decoded values)"
+            )
+        if op not in ("==", "in", "<=", ">=", "between"):
+            raise ValueError(f"unsupported predicate op {op!r}")
+        if op == "in" and not payload:
+            raise ValueError("predicate 'in' needs a non-empty value list")
+        if op == "between" and len(payload) != 2:
+            raise ValueError("predicate 'between' needs (lo, hi)")
+        return cls(col, op, payload)
+
+    def _envelope(self) -> tuple[Any, Any, tuple[str, str]]:
+        """[lo, hi] of the matching values (None = unbounded) and the
+        (min, max) stats columns that bound them."""
+        op, p = self.op, self.payload
+        if op == "==":
+            lo, hi = p, p
+        elif op == "in":
+            lo, hi = min(p), max(p)
+        elif op == "<=":
+            lo, hi = None, p
+        elif op == ">=":
+            lo, hi = p, None
+        else:
+            lo, hi = p
+        if not isinstance(lo if lo is not None else hi, (str, bytes)):
+            return lo, hi, ("stat_min", "stat_max")
+        lo, hi = (v.encode() if isinstance(v, str) else v for v in (lo, hi))
+        return lo, hi, ("stat_min_bin", "stat_max_bin")
+
+    def _zone(self, field, lit, is_null):
+        lo, hi, (smin, smax) = self._envelope()
+        keep = []
+        if lo is not None:
+            keep.append(is_null(field(smax)) | (field(smax) >= lit(lo)))
+        if hi is not None:
+            keep.append(is_null(field(smin)) | (field(smin) <= lit(hi)))
+        return keep[0] if len(keep) == 1 else keep[0] & keep[1]
+
+    def zone_column(self, frame_columns: list[str]) -> Column:
+        """Spark rendering of the zone check. Tables written before
+        string zone maps existed (no stat_max_bin) keep every chunk."""
+        if self._envelope()[2][1] not in frame_columns:
+            return F.lit(True)
+        return self._zone(F.col, F.lit, lambda c: c.isNull())
+
+    def zone_expr(self) -> pc.Expression:
+        """pyarrow rendering of the zone check, for a stats table."""
+        return self._zone(pc.field, pa.scalar, lambda e: e.is_null())
+
+    def row_expr(self, name: str, value_type: pa.DataType) -> pc.Expression:
+        """Exact filter on decoded values in column ``name``; a null
+        value never matches (SQL WHERE semantics)."""
+        v, op, p = pc.field(name), self.op, self.payload
+        if op == "==":
+            return v == p
+        if op == "in":
+            return v.isin(pa.array(list(p), value_type))
+        if op == "<=":
+            return v <= p
+        if op == ">=":
+            return v >= p
+        return (v >= p[0]) & (v <= p[1])
+
+
+# the frame-row columns the group decode reads
+FRAME_COLS = ["run_id", "part_id", "chunk_id", "row_start", "column", "checksum", "frame"]
+
+
+def decode_group(
+    frames: dict[str, memoryview],
+    sums: dict[str, int],
+    types: dict[str, pa.DataType],
+    part_id: int,
+    row_start: int,
+    verify_checksums: bool = False,
+    where: pc.Expression | None = None,
+) -> Iterator[pa.RecordBatch]:
+    """Decode one chunk group — one frame per column of ``types``,
+    each with fresh codec state, like the reference's per-chunk decode
+    — into ``(part_id, row_id, *columns)`` batches, keeping only the
+    rows that match ``where``. The per-group step of every decode
+    path."""
+    from ..framing import checksum_of
+
+    arrs = []
+    for c, t in types.items():
+        raw = decode_chunk(frames[c])
+        if verify_checksums and checksum_of(raw) != sums[c]:
+            raise ValueError(f"checksum mismatch: col={c} part={part_id} row_start={row_start}")
+        arrs.append(_cast_to(raw, t))
+    n = len(arrs[0])
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array(np.full(n, part_id, dtype=np.int32)),
+         pa.array(row_start + np.arange(n, dtype=np.int64)), *arrs],
+        names=["part_id", "row_id", *types],
+    )
+    if where is None:
+        yield rb
+        return
+    # RecordBatch.filter takes no Expression; Table.filter does
+    for b in pa.Table.from_batches([rb]).filter(where).to_batches():
+        if b.num_rows:
+            yield b
+
+
 def decode_column(
     encoded: DataFrame, column: str, value_ddl: str, table: str | None = None,
-    verify_checksums: bool = False,
-    value_range: tuple[float, float] | None = None,
-    key_range: tuple[bytes | str, bytes | str] | None = None,
+    verify_checksums: bool = False, predicate: tuple | None = None,
 ) -> DataFrame:
     """Decode one column's frames -> (part_id, row_id, value).
 
     ``row_id = row_start + offset`` is stable per encode run, so two
     decoded columns of the same run align on (part_id, row_id) without
     any global sort. ``value_ddl`` is the Spark type of the value
-    column, e.g. ``"double"``.
+    column, e.g. ``"double"``. ``predicate=(column, op, payload)`` (see
+    Predicate) skips chunks by zone map and returns only matching rows.
     """
     from .. import _ship
 
     _ship.ensure(encoded.sparkSession)
+    pred = Predicate.of(predicate, [column])
     sel = encoded.filter(F.col("column") == column)
     if table is not None:
         sel = sel.filter(F.col("table") == table)
-    if value_range is not None:
-        # zone-map pruning: skip whole chunks whose [stat_min, stat_max]
-        # cannot intersect the requested range (conservative: frames
-        # without stats pass through). At scale this is the encoded
-        # table's answer to parquet min/max row-group skipping.
-        lo, hi = value_range
-        sel = sel.filter(
-            F.col("stat_min").isNull()
-            | ((F.col("stat_max") >= F.lit(lo)) & (F.col("stat_min") <= F.lit(hi)))
-        )
-    if key_range is not None and "stat_max_bin" not in encoded.columns:
-        key_range = None  # pre-upgrade table without string zone maps:
-        # fall back to a full (conservative) scan instead of failing
-    if key_range is not None:
-        # string/binary zone maps: 16-byte truncated bounds (min is a
-        # prefix -> valid lower bound; max is truncate-and-increment ->
-        # valid upper bound; NULL bound = unbounded, chunk kept). The
-        # encoded analogue of parquet row-group skipping on a sorted
-        # url layout.
-        klo, khi = key_range
-        klo = klo.encode() if isinstance(klo, str) else klo
-        khi = khi.encode() if isinstance(khi, str) else khi
-        sel = sel.filter(
-            (F.col("stat_max_bin").isNull() | (F.col("stat_max_bin") >= F.lit(klo)))
-            & (F.col("stat_min_bin").isNull() | (F.col("stat_min_bin") <= F.lit(khi)))
-        )
+    if pred is not None:
+        sel = sel.filter(pred.zone_column(encoded.columns))
     sel = sel.select("part_id", "row_start", "checksum", "frame")
-    out_type = _arrow_type_of_ddl(value_ddl)
+    types = {"value": _arrow_type_of_ddl(value_ddl)}
+    where = pred.row_expr("value", types["value"]) if pred is not None else None
 
     def dec_iter(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..framing import checksum_of
-
         for b in batches:
             pids = b.column("part_id").to_pylist()
             starts = b.column("row_start").to_pylist()
-            frames = b.column("frame")
             sums = b.column("checksum").to_pylist()
+            frames = b.column("frame")
             for i in range(b.num_rows):
-                # as_buffer(): zero-copy view into the arrow batch
-                raw = decode_chunk(memoryview(frames[i].as_buffer()))
-                if verify_checksums and checksum_of(raw) != sums[i]:
-                    raise ValueError(
-                        f"checksum mismatch: part={pids[i]} row_start={starts[i]}"
-                    )
-                arr = _cast_to(raw, out_type)
-                n = len(arr)
-                rs = starts[i]
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.full(n, pids[i], dtype=np.int32)),
-                        pa.array(rs + np.arange(n, dtype=np.int64)),
-                        arr,
-                    ],
-                    names=["part_id", "row_id", "value"],
+                # every frame row is a group of one; as_buffer() is a
+                # zero-copy view into the arrow batch
+                yield from decode_group(
+                    {"value": memoryview(frames[i].as_buffer())}, {"value": sums[i]},
+                    types, pids[i], starts[i], verify_checksums, where,
                 )
 
     return sel.mapInArrow(dec_iter, f"part_id int, row_id long, value {value_ddl}")
@@ -313,19 +418,6 @@ def _cast_to(arr: pa.Array, t: pa.DataType) -> pa.Array:
     return arr if arr.type == t else arr.cast(t)
 
 
-def colocate_chunks(encoded: DataFrame, columns: list[str]) -> DataFrame:
-    """The decode co-location plan: ONE hash shuffle moving compressed
-    frames so every (run, part, chunk) group's per-column frames land
-    in the same task, in order. Shared by decode_table (JVM-emitting)
-    and sink.decode_to_parquet (task-side writes)."""
-    return (
-        encoded.filter(F.col("column").isin(columns))
-        .select("run_id", "part_id", "chunk_id", "row_start", "column", "checksum", "frame")
-        .repartition(F.col("run_id"), F.col("part_id"), F.col("chunk_id"))
-        .sortWithinPartitions("run_id", "part_id", "chunk_id", "column")
-    )
-
-
 def ddl_arrow_types(ddl: str) -> dict[str, pa.DataType]:
     return {
         f.split()[0]: _arrow_type_of_ddl(" ".join(f.split()[1:]))
@@ -333,57 +425,37 @@ def ddl_arrow_types(ddl: str) -> dict[str, pa.DataType]:
     }
 
 
-# marker string of the incomplete-chunk-group error below; the decode
-# sink's colocation auto-detect matches it across the Py4J boundary
-# (a worker exception arrives stringified), so it lives as a shared
-# constant rather than a substring two files must keep in sync
-# the bracketed token makes the match effectively collision-proof: a
-# user error whose text merely says "lacks columns" must not trigger
-# the sink's silent second-pass fallback
-INCOMPLETE_GROUP_MARK = "[CHIMP_INCOMPLETE_GROUP] lacks columns"
-
-
 def iter_decoded_groups(
     batches: Iterator[pa.RecordBatch],
     columns: list[str],
     out_types: dict[str, pa.DataType],
     verify_checksums: bool = False,
+    where: pc.Expression | None = None,
 ) -> Iterator[pa.RecordBatch]:
-    """Worker-side decode of co-located chunk rows (colocate_chunks
-    order) -> one (part_id, row_id, *columns) RecordBatch per chunk
-    group. The shared kernel behind decode_table and the parquet sink.
-    """
-    from ..framing import checksum_of
-
+    """Worker-side decode of frame rows whose chunk groups arrive whole
+    and contiguous: decode_group per (run_id, part_id, chunk_id)
+    group. Shared by decode_table and both parquet sinks."""
+    types = {c: out_types[c] for c in columns}
     group_key: tuple[str, int, int] | None = None
-    group: dict[str, bytes] = {}
+    group: dict[str, memoryview] = {}
     sums: dict[str, int] = {}
-    group_meta: tuple[int, int] = (0, 0)
+    row_start = 0
 
-    def emit() -> pa.RecordBatch:
-        pid, rs = group_meta
+    def emit() -> Iterator[pa.RecordBatch]:
         missing = [c for c in columns if c not in group]
         if missing:
             raise ValueError(
-                f"chunk (run={group_key[0]}, part={pid}) {INCOMPLETE_GROUP_MARK} "
-                f"{missing}: decode_table needs all columns from ONE "
-                f"encode run — encode them together or decode per "
-                f"column and join on (part_id, row_id)"
+                f"chunk (run={group_key[0]}, part={group_key[1]}) lacks columns "
+                f"{missing}: every chunk group must hold all requested columns "
+                f"from ONE encode run, whole within one partition. "
+                f"decode_to_parquet takes an encode's direct output; for any "
+                f"other layout use decode_table(...) (one co-locating shuffle) "
+                f"or decode_table_to_parquet on a committed table. Columns "
+                f"encoded in separate runs decode per column and join on "
+                f"(part_id, row_id)"
             )
-        raws = {c: decode_chunk(group[c]) for c in columns}
-        if verify_checksums:
-            for c, a in raws.items():
-                if checksum_of(a) != sums[c]:
-                    raise ValueError(
-                        f"checksum mismatch: col={c} part={pid} row_start={rs}"
-                    )
-        arrs = {c: _cast_to(raws[c], out_types[c]) for c in columns}
-        n = len(next(iter(arrs.values())))
-        cols = [
-            pa.array(np.full(n, pid, dtype=np.int32)),
-            pa.array(rs + np.arange(n, dtype=np.int64)),
-        ] + [arrs[c] for c in columns]
-        return pa.RecordBatch.from_arrays(cols, names=["part_id", "row_id"] + columns)
+        return decode_group(group, sums, types, group_key[1], row_start,
+                            verify_checksums, where)
 
     for b in batches:
         # batch-decode the metadata columns once: per-element arrow
@@ -400,15 +472,15 @@ def iter_decoded_groups(
         for i in range(b.num_rows):
             key = (run_ids[i], part_ids[i], chunk_ids[i])
             if key != group_key and group:
-                yield emit()
-                group = {}
+                yield from emit()
+                group, sums = {}, {}
             group_key = key
-            group_meta = (key[1], row_starts[i])
+            row_start = row_starts[i]
             # zero-copy: the arrow buffer stays alive via refcount
             group[col_names[i]] = memoryview(frames[i].as_buffer())
             sums[col_names[i]] = checksums[i]
     if group:
-        yield emit()
+        yield from emit()
 
 
 def decode_table(
@@ -417,10 +489,11 @@ def decode_table(
 ) -> DataFrame:
     """Decode several columns back into aligned rows.
 
-    Chunks are co-located by (part_id, chunk_id) with one hash shuffle,
-    then each group's frames (one per column) decode into a single
-    output batch. ``ddl`` gives the decoded column types, e.g.
-    ``"l_orderkey long, l_extendedprice double"``.
+    Chunks are co-located by (run_id, part_id, chunk_id) with one hash
+    shuffle of compressed frames, then each group's frames (one per
+    column) decode into a single output batch. ``ddl`` gives the
+    decoded column types, e.g. ``"l_orderkey long, l_extendedprice
+    double"``.
 
     This path emits decoded VALUES through Spark (Arrow -> JVM rows) —
     right when the values feed further Spark plan nodes (joins, aggs).
@@ -431,7 +504,12 @@ def decode_table(
     from .. import _ship
 
     _ship.ensure(encoded.sparkSession)
-    sel = colocate_chunks(encoded, columns)
+    sel = (
+        encoded.filter(F.col("column").isin(columns))
+        .select(*FRAME_COLS)
+        .repartition(F.col("run_id"), F.col("part_id"), F.col("chunk_id"))
+        .sortWithinPartitions("run_id", "part_id", "chunk_id", "column")
+    )
     out_types = ddl_arrow_types(ddl)
 
     def dec_iter(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

@@ -105,7 +105,6 @@ def encode_parquet(
     codec: str | dict[str, str] = "auto",
     chunk_rows: int = DEFAULT_CHUNK_ROWS,
     table_name: str = "t",
-    num_slices: int | None = None,
     skip_part_ids: set[int] | None = None,
     units: list[tuple[int, str, int]] | None = None,
 ) -> DataFrame:
@@ -163,7 +162,7 @@ def encode_parquet(
     else:
         exec_units = [(u[0], u[1], u[2], 0, -1) for u in units]
 
-    n_slices = num_slices or min(len(exec_units), spark.sparkContext.defaultParallelism * 2)
+    n_slices = min(len(exec_units), spark.sparkContext.defaultParallelism * 2)
     # the plan is a JVM range over unit indices; tasks look the units
     # up in the closure (PySpark broadcasts a closure over 1 MB, as a
     # 10^5-unit list is). range slices [0, N) contiguously, so

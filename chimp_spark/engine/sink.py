@@ -8,21 +8,25 @@ so Spark only schedules); these bypass Arrow -> JVM on DECODE. The
 generic ``decode_table`` is right when decoded values feed further
 Spark plan nodes (joins, aggregations, filters) — but a decode
 *consumer* ("materialize this encoded table back to parquet for the
-trainer") pays the JVM emit for nothing. Two shapes:
+trainer") pays the JVM emit for nothing. Both shapes decode with
+NO shuffle: only file metadata returns through Spark.
 
 - ``decode_to_parquet(encoded_df, ...)``: input is an in-flight
-  encoded DataFrame. One co-location shuffle of COMPRESSED frames,
-  then tasks decode and write shards; only file metadata returns
-  through Spark. Measured ~2x faster than
-  ``decode_table(...).write.parquet(...)`` at sf0.1/local[32].
+  encoded DataFrame whose chunk groups are whole within a partition,
+  as the direct output of an encode is. One task per input partition
+  decodes its frames and writes a shard.
 - ``decode_table_to_parquet(spark, root, ...)``: input is a COMMITTED
   EncodedTable. Chunk groups never span data files (each encode task's
   batches land whole in one file — manifest.commit moves files
-  intact), so tasks read their files straight with pyarrow and NO
-  shuffle happens at all — the exact mirror of scan.py's work-unit
-  model, and the shape a 100 TB decode job runs in: every task streams
-  encoded shards from the store and writes decoded shards back,
-  nothing crosses the JVM but file indices and file metadata.
+  intact), so tasks read their files straight with pyarrow — the
+  mirror of scan.py's work-unit model, and the shape a 100 TB decode
+  job runs in: every task streams encoded shards from the store and
+  writes decoded shards back, nothing crosses the JVM but file indices
+  and file metadata. A ``predicate`` prunes chunk groups by zone map
+  before their frames are read.
+
+Both run the group-decode core of engine/core.py (iter_decoded_groups
+-> decode_group) and filter rows with the same core.Predicate.
 
 Commit protocol (two-phase, task-retry safe): tasks write uniquely
 named files under ``<out_dir>/_staged/`` and report them; the driver
@@ -47,15 +51,9 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .core import (
-    INCOMPLETE_GROUP_MARK,
-    colocate_chunks,
-    ddl_arrow_types,
-    iter_decoded_groups,
-)
+from .core import FRAME_COLS, Predicate, ddl_arrow_types, iter_decoded_groups
 
 _MANIFEST = "_decode_manifest.json"
-_META_COLS = ["run_id", "part_id", "chunk_id", "row_start", "column", "checksum", "frame"]
 
 
 def _prepare_out_dir(out_dir: str, mode: str) -> str:
@@ -189,92 +187,6 @@ _META_DDL = (
 )
 
 
-def _norm_predicate(predicate, columns: list[str]):
-    """Validate a decode-export predicate -> (col, op, payload).
-
-    Supported: ``(col, "==", v)``, ``(col, "in", [v, ...])``,
-    ``(col, "<=", v)``, ``(col, ">=", v)``, ``(col, "between", (lo,
-    hi))``. The predicate column must be among the decoded columns:
-    chunk pruning by zone maps is CONSERVATIVE (a surviving chunk may
-    still hold non-matching rows), so exactness comes from a row-level
-    filter on the decoded values — which requires the values."""
-    if predicate is None:
-        return None
-    col, op, payload = predicate
-    if col not in columns:
-        raise ValueError(
-            f"predicate column {col!r} must be among the decoded columns "
-            f"{columns} (chunk pruning is conservative; the exact filter "
-            f"runs on decoded values)"
-        )
-    if op not in ("==", "in", "<=", ">=", "between"):
-        raise ValueError(f"unsupported predicate op {op!r}")
-    if op == "in" and not payload:
-        raise ValueError("predicate 'in' needs a non-empty value list")
-    if op == "between" and len(payload) != 2:
-        raise ValueError("predicate 'between' needs (lo, hi)")
-    return col, op, payload
-
-
-def _pred_bounds(op, payload):
-    """[lo, hi] envelope of the predicate's matching values (for 'in',
-    the min..max hull — conservative, exactness comes later)."""
-    if op == "==":
-        return payload, payload
-    if op == "in":
-        return min(payload), max(payload)
-    if op == "<=":
-        return None, payload
-    if op == ">=":
-        return payload, None
-    return payload[0], payload[1]
-
-
-def _zone_keep(op, payload, smin, smax, bmin, bmax) -> bool:
-    """Can a chunk with these zone-map stats hold a matching row?
-    Missing stats => keep (conservative, mirrors core.decode_column).
-    Numeric predicates check the float stats; string/bytes predicates
-    check the 16-byte truncated binary bounds (min is a prefix ->
-    valid lower bound; max is truncate-and-increment -> valid upper
-    bound)."""
-    lo, hi = _pred_bounds(op, payload)
-    if isinstance(lo if lo is not None else hi, (str, bytes)):
-        klo = lo.encode() if isinstance(lo, str) else lo
-        khi = hi.encode() if isinstance(hi, str) else hi
-        if klo is not None and bmax is not None and bmax < klo:
-            return False
-        if khi is not None and bmin is not None and bmin > khi:
-            return False
-        return True
-    if smin is None or smax is None:
-        return True
-    if lo is not None and smax < lo:
-        return False
-    if hi is not None and smin > hi:
-        return False
-    return True
-
-
-def _row_mask(rb: pa.RecordBatch, idx: int, op, payload):
-    """Exact row-level predicate mask over a decoded batch (Arrow
-    compute, null -> False: SQL WHERE semantics)."""
-    import pyarrow.compute as pc
-
-    col = rb.column(idx)
-    if op == "==":
-        m = pc.equal(col, payload)
-    elif op == "in":
-        m = pc.is_in(col, value_set=pa.array(list(payload), col.type))
-    elif op == "<=":
-        m = pc.less_equal(col, payload)
-    elif op == ">=":
-        m = pc.greater_equal(col, payload)
-    else:
-        m = pc.and_(pc.greater_equal(col, payload[0]),
-                    pc.less_equal(col, payload[1]))
-    return pc.fill_null(m, False)
-
-
 def _commit(out_dir: str, staged: str, reported: list, columns: list[str],
             ddl: str, with_row_ids: bool, with_audit: bool = False) -> dict:
     """Rename exactly the reported shard files into out_dir; sweep the
@@ -320,18 +232,34 @@ def _commit(out_dir: str, staged: str, reported: list, columns: list[str],
     return out
 
 
-def _out_schema(columns: list[str], ddl: str, with_row_ids: bool) -> pa.Schema:
+def _partition_id() -> int:
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    return ctx.partitionId() if ctx is not None else 0
+
+
+def _shard_writes(staged: str, columns: list[str], ddl: str, with_row_ids: bool,
+                  compression: str, row_group_rows: int, verify_checksums: bool,
+                  pred: Predicate | None):
+    """The task body both sinks share: decode the frame rows' chunk
+    groups, filter them exactly by ``pred``, write one shard. Returns
+    ``write(pid, frame_batches) -> (path, rows, bytes) | None``."""
     out_types = ddl_arrow_types(ddl)
-    return pa.schema(
+    schema = pa.schema(
         ([("part_id", pa.int32()), ("row_id", pa.int64())] if with_row_ids else [])
         + [(c, out_types[c]) for c in columns]
     )
+    where = pred.row_expr(pred.col, out_types[pred.col]) if pred is not None else None
 
+    def write(pid: int, batches: Iterator[pa.RecordBatch]) -> tuple[str, int, int] | None:
+        w = _ShardWriter(staged, pid, schema, compression, row_group_rows)
+        for rb in iter_decoded_groups(batches, columns, out_types, verify_checksums, where):
+            w.add(rb if with_row_ids else
+                  pa.RecordBatch.from_arrays(rb.columns[2:], schema=schema))
+        return w.close()
 
-def _strip_ids(rb: pa.RecordBatch, n_cols: int, schema: pa.Schema) -> pa.RecordBatch:
-    return pa.RecordBatch.from_arrays(
-        [rb.column(j + 2) for j in range(n_cols)], schema=schema
-    )
+    return write
 
 
 def decode_to_parquet(
@@ -344,107 +272,66 @@ def decode_to_parquet(
     row_group_rows: int = 1 << 20,
     mode: str = "error",
     with_row_ids: bool = True,
-    colocated: bool | None = None,
     predicate: tuple | None = None,
 ) -> dict:
     """Decode ``columns`` of an in-flight encoded DataFrame into a
-    parquet directory (see module docstring for when to prefer the
-    no-shuffle ``decode_table_to_parquet``).
+    parquet directory: one shard per partition of ``encoded``, no
+    shuffle.
 
-    ``colocated=True`` skips the co-location shuffle entirely: valid
-    when ``encoded`` is the DIRECT (possibly cached) output of one
-    ``encode_dataframe`` call, whose kernel emits every column's frame
-    of a chunk contiguously within the task — the frames are already
-    grouped. A mis-declared input fails loudly (each group checks it
-    holds ALL requested columns) rather than writing wrong data.
-
-    ``colocated=None`` (default) AUTO-DETECTS: the no-shuffle path is
-    tried first, and the same group-completeness check that makes
-    ``colocated=True`` safe doubles as the detector — a layout whose
-    chunk groups are not whole-and-contiguous per partition cannot
-    pass it (a split group is missing columns in EVERY fragment), so
-    on that failure the decode transparently re-runs through the
-    co-location shuffle. Encode-direct callers get the fast path with
-    no flag; shuffled layouts still round-trip. The retry re-reads the
-    input, so for an expensive uncached ``encoded`` lineage either
-    cache it or pass ``colocated`` explicitly. One sharp edge: a
-    column that is genuinely ABSENT from the table raises the same
-    incomplete-group error, so auto mode pays the failed fast pass
-    AND the shuffle pass before surfacing it — another reason to pass
-    ``colocated`` explicitly when lineage is expensive.
+    ``encoded`` must hold every chunk group whole and contiguous within
+    one partition. The direct (possibly cached) output of
+    ``encode_dataframe`` or ``encode_parquet`` does: their tasks emit
+    each group as one batch. Any other layout fails on its first
+    incomplete group, naming the missing columns, and writes nothing
+    wrong: decode it with ``decode_table(...)`` (one co-locating
+    shuffle), or commit it and use ``decode_table_to_parquet``.
 
     Output schema: ``(part_id int32, row_id int64, *columns)`` (the
     alignment identity of the encode run) unless ``with_row_ids=False``
-    strips the index columns. Shard count == shuffle partition count
-    of the co-location exchange (or, with ``colocated=True``, the
-    encoded DataFrame's own partition count — the encode layout); each
-    shard's rows are ordered by (run_id, part_id, chunk_id), i.e.
-    encode order within the shard.
+    strips the index columns. Each shard's rows are in encode order.
 
-    ``predicate=(col, op, value)`` (same forms as
-    decode_files_to_parquet) exports only matching rows via an exact
-    row-level filter on the decoded values. No chunk-level zone
+    ``predicate=(col, op, value)`` (see core.Predicate) exports only
+    matching rows via an exact filter on the decoded values. No chunk
     pruning here: an in-flight frame DataFrame has already paid its
-    materialization, so pruning would save only decode CPU — the
-    committed-table path (decode_table_to_parquet), where stats ride
-    with the files and pruning skips IO, is the split-export shape.
+    materialization, so pruning would save only decode CPU; the
+    committed-table sink, where stats ride with the files and pruning
+    skips IO, is the split-export shape.
 
     Returns ``{"out_dir", "files", "rows", "bytes"}``. ``mode`` is
     ``"error"`` (refuse an existing non-empty out_dir) or
     ``"overwrite"``.
     """
-    import shutil
-
     from .. import _ship
 
     _ship.ensure(encoded.sparkSession)
-    pred = _norm_predicate(predicate, columns)
+    pred = Predicate.of(predicate, columns)
     staged = _prepare_out_dir(out_dir, mode)
-    out_types = ddl_arrow_types(ddl)
-    out_schema = _out_schema(columns, ddl, with_row_ids)
+    write = _shard_writes(staged, columns, ddl, with_row_ids, compression,
+                          row_group_rows, verify_checksums, pred)
 
-    def write_shard(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        w = _ShardWriter(staged, pid, out_schema, compression, row_group_rows)
-        pred_idx = 2 + columns.index(pred[0]) if pred is not None else -1
-        for rb in iter_decoded_groups(batches, columns, out_types, verify_checksums):
-            if pred is not None:
-                rb = rb.filter(_row_mask(rb, pred_idx, pred[1], pred[2]))
-                if rb.num_rows == 0:
-                    continue
-            w.add(rb if with_row_ids else _strip_ids(rb, len(columns), out_schema))
-        shard = w.close()
+    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        pid = _partition_id()
+        shard = write(pid, batches)
         if shard is not None:
             yield _meta_batch(pid, shard)
 
-    def run(skip_shuffle: bool) -> dict:
-        if skip_shuffle:
-            sel = encoded.filter(F.col("column").isin(columns)).select(*_META_COLS)
-        else:
-            sel = colocate_chunks(encoded, columns)
-        reported = sel.mapInArrow(write_shard, _META_DDL).collect()
-        return _commit(out_dir, staged, reported, columns, ddl, with_row_ids)
-
-    if colocated is not None:
-        return run(colocated)
-    try:
-        return run(True)
-    except Exception as e:  # noqa: BLE001 — Py4J wraps the worker error
-        if INCOMPLETE_GROUP_MARK not in str(e):
-            raise
-        # not colocated: sweep the failed attempt's staging files and
-        # re-run through the co-location shuffle
-        shutil.rmtree(staged, ignore_errors=True)
-        os.makedirs(staged, exist_ok=True)
-        return run(False)
+    sel = encoded.filter(F.col("column").isin(columns)).select(*FRAME_COLS)
+    reported = sel.mapInArrow(task, _META_DDL).collect()
+    return _commit(out_dir, staged, reported, columns, ddl, with_row_ids)
 
 
-def decode_files_to_parquet(
+_STAT_COLS = ["run_id", "part_id", "chunk_id", "column", "enc_bytes",
+              "stat_min", "stat_max", "stat_min_bin", "stat_max_bin"]
+
+
+def _group_keys(t: pa.Table) -> list[tuple[str, int, int]]:
+    return list(zip(t.column("run_id").to_pylist(), t.column("part_id").to_pylist(),
+                    t.column("chunk_id").to_pylist()))
+
+
+def decode_table_to_parquet(
     spark: SparkSession,
-    enc_files: list[str],
+    root: str,
     columns: list[str],
     ddl: str,
     out_dir: str,
@@ -454,109 +341,92 @@ def decode_files_to_parquet(
     row_group_rows: int = 1 << 20,
     mode: str = "error",
     with_row_ids: bool = True,
-    num_slices: int | None = None,
     predicate: tuple | None = None,
 ) -> dict:
-    """NO-SHUFFLE decode: each task reads whole encoded data files
-    with pyarrow, decodes, writes a decoded shard. Valid because a
-    chunk group (one encode task's per-column frames for one chunk)
-    never spans data files — encode emits each group in ONE output
-    batch and commit moves files intact. Rows within a file may be in
-    any order: each file is sorted task-side by (run_id, part_id,
-    chunk_id) before group iteration (cheap: sorting metadata columns
-    of frame-level rows, ~1 row per 64 K values).
-
-    The unit of work is the FILE (a chunk group must not be split), so
+    """Decode a COMMITTED EncodedTable (engine/manifest.py layout) to a
+    decoded parquet directory with NO shuffle: each task reads whole
+    encoded data files with pyarrow, decodes, writes a decoded shard.
+    Valid because a chunk group never spans data files — encode emits
+    each group in ONE output batch and commit moves files intact. Rows
+    within a file may be in any order: each file is sorted task-side by
+    (run_id, part_id, chunk_id) before group iteration (cheap: ~1
+    frame row per 64 K values). The unit of work is the FILE, so
     parallelism == file count; encode jobs already write one file per
     task, which keeps the two jobs' granularities aligned.
 
-    ``predicate`` exports only matching rows — the "materialize just
-    split='train'" shape (see _norm_predicate for the forms). Two
-    levels, both task-side:
+    ``predicate=(col, op, value)`` (see core.Predicate) exports only
+    matching rows — e.g. ``("split", "==", "train")`` after
+    prepare_corpus. Two levels, both task-side:
 
-    1. CHUNK PRUNE: a metadata-only pass per file (parquet is
-       columnar — reading the key/stats/enc_bytes columns touches no
-       frame payload pages) drops every chunk group whose zone map
-       cannot intersect the predicate; surviving groups are re-read
-       with a chunk_id pushdown filter, so pruned groups' payload
-       bytes are never materialized. When the encode layout clusters
-       the predicate column (e.g. sorted by split/lang), this skips
-       the bulk of the table's bytes; a hostile layout degrades to
-       reading everything — never to wrong output.
-    2. EXACT ROW FILTER on the decoded batches (Arrow compute,
-       null -> False), so the result is bit-identical to
+    1. CHUNK PRUNE: a metadata-only pass per file (parquet is columnar
+       — reading the key/stats/enc_bytes columns touches no frame
+       payload pages) keeps the chunk groups whose zone map may match;
+       survivors are re-read with a chunk_id pushdown filter, so pruned
+       groups' payload bytes are never materialized. A layout that
+       clusters the predicate column (sorted by split/lang) skips the
+       bulk of the bytes; a hostile layout degrades to reading
+       everything — never to wrong output.
+    2. EXACT ROW FILTER on the decoded batches, so the result equals
        decode-everything-then-filter regardless of layout.
 
     The returned dict's ``audit`` records groups_total/groups_decoded
-    and frame_bytes_total/frame_bytes_read so callers (and tests) can
-    verify the prune actually skipped payload bytes.
+    and frame_bytes_total/frame_bytes_read, so callers can verify the
+    prune skipped payload bytes.
     """
     from .. import _ship
+    from .manifest import EncodedTable
 
     _ship.ensure(spark)
-    pred = _norm_predicate(predicate, columns)
+    t = EncodedTable(root)
+    files = sorted(
+        os.path.join(t.data_dir, e["file"])
+        for e in t.manifest_entries()
+        if e["part_id"] == -1 and (table is None or e["table"] == table)
+    )
+    pred = Predicate.of(predicate, columns)
     staged = _prepare_out_dir(out_dir, mode)
-    files = sorted(enc_files)
     if not files:
         return _commit(out_dir, staged, [], columns, ddl, with_row_ids,
                        with_audit=True)
-    out_types = ddl_arrow_types(ddl)
-    out_schema = _out_schema(columns, ddl, with_row_ids)
-    n_slices = num_slices or min(len(files), spark.sparkContext.defaultParallelism)
+    write = _shard_writes(staged, columns, ddl, with_row_ids, compression,
+                          row_group_rows, verify_checksums, pred)
     # a JVM range over file indices, sliced contiguously: the same
     # file-per-task layout as repartitionByRange without its sampler
     # stage and exchange; tasks look the paths up in the closure (see
     # scan.py)
-    plan = spark.range(0, len(files), 1, n_slices)
+    plan = spark.range(0, len(files), 1, min(len(files), spark.sparkContext.defaultParallelism))
     col_set = list(dict.fromkeys(columns))
-    _STAT_COLS = ["run_id", "part_id", "chunk_id", "column", "enc_bytes",
-                  "stat_min", "stat_max", "stat_min_bin", "stat_max_bin"]
+    zone = pred.zone_expr() if pred is not None else None
 
     def work(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import pyarrow.compute as pc
         import pyarrow.dataset as pads
-        from pyspark import TaskContext
 
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        w = _ShardWriter(staged, pid, out_schema, compression, row_group_rows)
         audit = {"groups_total": 0, "groups_decoded": 0,
                  "frame_bytes_total": 0, "frame_bytes_read": 0}
 
-        def prune_keys(path, flt):
+        def prune_keys(path, flt) -> set:
             """Zone-map pass over one file WITHOUT the frame column:
             returns the surviving (run_id, part_id, chunk_id) keys."""
             m = pads.dataset(path, format="parquet").to_table(
                 columns=_STAT_COLS, filter=flt
             )
-            keys = list(zip(m.column("run_id").to_pylist(),
-                            m.column("part_id").to_pylist(),
-                            m.column("chunk_id").to_pylist()))
-            ebytes = m.column("enc_bytes").to_pylist()
-            all_keys = set(keys)
-            cols = m.column("column").to_pylist()
-            keep = set()
-            seen_pred = set()
-            for j, c in enumerate(cols):
-                if c != pred[0]:
-                    continue
-                seen_pred.add(keys[j])
-                if _zone_keep(pred[1], pred[2],
-                              m.column("stat_min")[j].as_py(),
-                              m.column("stat_max")[j].as_py(),
-                              m.column("stat_min_bin")[j].as_py(),
-                              m.column("stat_max_bin")[j].as_py()):
-                    keep.add(keys[j])
-            if all_keys - seen_pred:
+            keys = _group_keys(m)
+            on_pred = m.filter(pc.field("column") == pred.col)
+            unchecked = set(keys) - set(_group_keys(on_pred))
+            if unchecked:
                 # a group with no frame for the predicate column can't
                 # be zone-checked; pruning it silently would turn a
                 # typo'd/missing column into an empty (wrong) export
                 # where the unpredicated decode would have raised
                 raise ValueError(
-                    f"predicate column {pred[0]!r} has no frames for "
-                    f"{len(all_keys - seen_pred)} chunk group(s) in {path} "
+                    f"predicate column {pred.col!r} has no frames for "
+                    f"{len(unchecked)} chunk group(s) in {path} "
                     f"— the table was not encoded with this column"
                 )
-            audit["groups_total"] += len(all_keys)
+            keep = set(_group_keys(on_pred.filter(zone)))
+            ebytes = m.column("enc_bytes").to_pylist()
+            audit["groups_total"] += len(set(keys))
             audit["groups_decoded"] += len(keep)
             audit["frame_bytes_total"] += sum(ebytes)
             audit["frame_bytes_read"] += sum(
@@ -585,18 +455,10 @@ def decode_files_to_parquet(
                         if len(chunk_ids) <= 4096:
                             flt = flt & pads.field("chunk_id").isin(chunk_ids)
                     t = pads.dataset(path, format="parquet").to_table(
-                        columns=_META_COLS, filter=flt
+                        columns=FRAME_COLS, filter=flt
                     )
                     if pred is not None:
-                        mask = [
-                            (r, p, c) in keep
-                            for r, p, c in zip(
-                                t.column("run_id").to_pylist(),
-                                t.column("part_id").to_pylist(),
-                                t.column("chunk_id").to_pylist(),
-                            )
-                        ]
-                        t = t.filter(pa.array(mask))
+                        t = t.filter(pa.array([k in keep for k in _group_keys(t)], pa.bool_()))
                     # group contiguity within the file regardless of
                     # how the encode interleaved its emits
                     t = t.sort_by(
@@ -605,44 +467,10 @@ def decode_files_to_parquet(
                     )
                     yield from t.to_batches()
 
-        pred_idx = 2 + columns.index(pred[0]) if pred is not None else -1
-        for rb in iter_decoded_groups(file_batches(), columns, out_types, verify_checksums):
-            if pred is not None:
-                rb = rb.filter(_row_mask(rb, pred_idx, pred[1], pred[2]))
-                if rb.num_rows == 0:
-                    continue
-            w.add(rb if with_row_ids else _strip_ids(rb, len(columns), out_schema))
-        shard = w.close()
+        pid = _partition_id()
+        shard = write(pid, file_batches())
         yield _meta_batch(pid, shard, audit)
 
     reported = plan.mapInArrow(work, _META_DDL).collect()
     return _commit(out_dir, staged, reported, columns, ddl, with_row_ids,
                    with_audit=True)
-
-
-def decode_table_to_parquet(
-    spark: SparkSession,
-    root: str,
-    columns: list[str],
-    ddl: str,
-    out_dir: str,
-    table: str | None = None,
-    **kwargs,
-) -> dict:
-    """Decode a COMMITTED EncodedTable (engine/manifest.py layout) to
-    a decoded parquet directory with the no-shuffle file-unit path.
-
-    Accepts ``predicate=(col, op, value)`` (see decode_files_to_parquet)
-    to export only matching rows with zone-map chunk pruning — e.g.
-    ``predicate=("split", "==", "train")`` after prepare_corpus."""
-    from .manifest import EncodedTable
-
-    t = EncodedTable(root)
-    files = [
-        os.path.join(t.data_dir, e["file"])
-        for e in t.manifest_entries()
-        if e["part_id"] == -1 and (table is None or e["table"] == table)
-    ]
-    return decode_files_to_parquet(
-        spark, files, columns, ddl, out_dir, table=table, **kwargs
-    )

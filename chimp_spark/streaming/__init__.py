@@ -1,2 +1,1 @@
 from .ingest import encode_stream  # noqa: F401
-from .rollup import stateful_running_stats, windowed_rollup  # noqa: F401

@@ -54,12 +54,12 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from chimp_spark.engine import (
-        arrow_max_bytes_per_batch,
         detect_hot_keys,
         encode_and_commit,
         repartition_balanced,
         repartition_by_range,
         repartition_salted,
+        session_conf,
     )
 
     from chimp_spark.codecs.light import CODEC_IDS
@@ -80,9 +80,7 @@ def main() -> None:
         p.error(f"--codec: unknown codec '{args.codec}'")
 
     spark = (SparkSession.builder.appName(f"chimp_spark_encode_{args.table}")
-             .config("spark.sql.execution.arrow.maxBytesPerBatch",
-                     arrow_max_bytes_per_batch())
-             .getOrCreate())
+             .config(map=session_conf(args.chunk_rows)).getOrCreate())
 
     # the scan path (direct Arrow row-group reads, no JVM row
     # conversion — measured ~80% of DataFrame-path encode wall) is the

@@ -104,12 +104,10 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from chimp_spark.engine import arrow_max_bytes_per_batch, decode_table_to_parquet
+    from chimp_spark.engine import decode_table_to_parquet, session_conf
 
     spark = (SparkSession.builder.appName(f"chimp_spark_export_{args.table}")
-             .config("spark.sql.execution.arrow.maxBytesPerBatch",
-                     arrow_max_bytes_per_batch())
-             .getOrCreate())
+             .config(map=session_conf()).getOrCreate())
     res = decode_table_to_parquet(
         spark, args.input, [c.strip() for c in args.columns.split(",")],
         args.ddl, args.output,

@@ -50,7 +50,7 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from chimp_spark.engine import arrow_max_bytes_per_batch
+    from chimp_spark.engine import session_conf
     from chimp_spark.ops.pipeline import prepare_corpus
 
     weights = {}
@@ -59,9 +59,7 @@ def main() -> None:
         weights[name.strip()] = float(w)
 
     spark = (SparkSession.builder.appName("chimp_spark_prepare_corpus")
-             .config("spark.sql.execution.arrow.maxBytesPerBatch",
-                     arrow_max_bytes_per_batch())
-             .getOrCreate())
+             .config(map=session_conf(args.chunk_rows)).getOrCreate())
     try:
         stats = prepare_corpus(
             spark,

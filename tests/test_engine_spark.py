@@ -245,7 +245,7 @@ def test_batch_resume_ignores_streaming_epochs(spark, tmp_path):
 
 
 def test_zone_map_pruning(spark):
-    """Range-partitioned encode -> decode_column(value_range=...) must
+    """Range-partitioned encode -> decode_column(predicate=...) must
     skip non-overlapping chunks (zone maps) and return exact results."""
     df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     laid = df.repartitionByRange(8, F.col("l_extendedprice"))
@@ -260,7 +260,7 @@ def test_zone_map_pruning(spark):
     assert pruned < total / 2, f"zone maps should prune: {pruned}/{total}"
 
     dec = engine.decode_column(enc, "l_extendedprice", "double",
-                               value_range=(lo, hi))
+                               predicate=("l_extendedprice", "between", (lo, hi)))
     got = dec.filter((F.col("value") >= lo) & (F.col("value") <= hi))
     expect = df.filter((F.col("l_extendedprice") >= lo) & (F.col("l_extendedprice") <= hi))
     assert got.count() == expect.count()
@@ -318,7 +318,7 @@ def test_encode_parquet_scan_resume(spark, tmp_path):
 
 def test_string_zone_map_pruning(spark):
     """Range-partition documents by source (string key) -> encode ->
-    key_range decode must skip non-overlapping chunks and return
+    predicate decode must skip non-overlapping chunks and return
     exactly the matching rows (parquet row-group skipping, but on the
     ENCODED table's string zone maps)."""
     df = spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -333,7 +333,8 @@ def test_string_zone_map_pruning(spark):
         & (F.col("stat_min_bin").isNull() | (F.col("stat_min_bin") <= F.lit(hi.encode())))
     )
     assert 0 < pruned.count() < enc.count(), "pruning must keep some and drop some"
-    dec = engine.decode_column(enc, "source", "string", key_range=(lo, hi))
+    dec = engine.decode_column(enc, "source", "string",
+                               predicate=("source", "between", (lo, hi)))
     got = dec.filter((F.col("value") >= lo) & (F.col("value") <= hi)).select(
         F.col("value").alias("v"))
     want = df.filter((F.col("source") >= lo) & (F.col("source") <= hi)).select(
@@ -545,10 +546,10 @@ def test_decode_table_to_parquet_no_shuffle_sink(spark, tmp_path):
 
 
 def test_decode_to_parquet_colocated_fast_path(spark, tmp_path):
-    """colocated=True skips the co-location shuffle for encode-direct
-    DataFrames (frames of a chunk are emitted contiguously by the
-    encode kernel): output must be bit-identical to the shuffled path,
-    and a NON-colocated input must fail loudly, never write wrong data."""
+    """decode_to_parquet never shuffles: on encode-direct DataFrames
+    (frames of a chunk are emitted contiguously by the encode kernel)
+    its output must be bit-identical to the shuffled decode_table, and
+    a NON-colocated input must fail loudly, never write wrong data."""
     df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     cols = ["l_orderkey", "l_extendedprice", "l_returnflag"]
     ddl = "l_orderkey long, l_extendedprice double, l_returnflag string"
@@ -556,9 +557,8 @@ def test_decode_to_parquet_colocated_fast_path(spark, tmp_path):
                                   table_name="lineitem").cache()
     out_a = str(tmp_path / "shuffled")
     out_b = str(tmp_path / "coloc")
-    engine.decode_to_parquet(enc, cols, ddl, out_a, verify_checksums=True)
-    res = engine.decode_to_parquet(enc, cols, ddl, out_b, verify_checksums=True,
-                                   colocated=True)
+    engine.decode_table(enc, cols, ddl, verify_checksums=True).write.parquet(out_a)
+    res = engine.decode_to_parquet(enc, cols, ddl, out_b, verify_checksums=True)
     assert res["rows"] == df.count()
 
     def canon(d):
@@ -574,8 +574,7 @@ def test_decode_to_parquet_colocated_fast_path(spark, tmp_path):
     # a repartitioned (genuinely non-colocated) frame layout must raise
     scrambled = enc.repartition(7)
     with pytest.raises(Exception, match="lacks columns|needs all columns"):
-        engine.decode_to_parquet(scrambled, cols, ddl, str(tmp_path / "bad"),
-                                 colocated=True)
+        engine.decode_to_parquet(scrambled, cols, ddl, str(tmp_path / "bad"))
     enc.unpersist()
 
 
@@ -585,7 +584,7 @@ def test_predicate_pruned_decode_export(spark, tmp_path):
     pruned chunks' payload bytes (audited against an independent
     zone-map computation over the committed metadata), and (3) stay
     exact on a hostile layout where nothing can be pruned."""
-    from chimp_spark.engine import sink as S
+    from chimp_spark.engine.core import Predicate
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     cols = ["doc_id", "lang", "text"]
@@ -615,16 +614,13 @@ def test_predicate_pruned_decode_export(spark, tmp_path):
     assert res["rows"] == ref.count()
 
     # audit vs an independent zone computation over the metadata
-    meta = t.read(spark).filter(F.col("column") == "lang").select(
-        "run_id", "part_id", "chunk_id",
-        "stat_min", "stat_max", "stat_min_bin", "stat_max_bin",
-    ).collect()
+    meta = t.read(spark).filter(F.col("column") == "lang")
+    zone = Predicate.of(("lang", "==", "en"), cols).zone_column(meta.columns)
     keep = {
         (r["run_id"], r["part_id"], r["chunk_id"])
-        for r in meta
-        if S._zone_keep("==", "en", r["stat_min"], r["stat_max"],
-                        r["stat_min_bin"], r["stat_max_bin"])
+        for r in meta.filter(zone).collect()
     }
+    meta = meta.collect()
     a = res["audit"]
     assert a["groups_decoded"] == len(keep)
     assert a["groups_total"] == len(meta)
@@ -687,13 +683,9 @@ def test_predicate_pruned_decode_export(spark, tmp_path):
         )
 
 
-def test_decode_to_parquet_auto_colocation(spark, tmp_path, monkeypatch):
-    """With no colocated flag, an encode-direct input must take the
-    no-shuffle path (proved by forbidding colocate_chunks), and a
-    scrambled layout must transparently fall back to the shuffle and
-    still round-trip bit-identically."""
-    from chimp_spark.engine import sink as S
-
+def test_decode_to_parquet_auto_colocation(spark, tmp_path):
+    """An encode-direct input takes the no-shuffle path: the decode job
+    runs as ONE stage (an exchange would add a second)."""
     df = spark.read.parquet(f"{SF_DIR}/orders.parquet")
     cols = ["o_orderkey", "o_totalprice"]
     ddl = "o_orderkey long, o_totalprice double"
@@ -701,32 +693,124 @@ def test_decode_to_parquet_auto_colocation(spark, tmp_path, monkeypatch):
                                   table_name="orders").cache()
     enc.count()
 
-    def forbidden(*a, **k):
-        raise AssertionError("auto-detect took the shuffle path on "
-                             "an encode-direct input")
-
-    monkeypatch.setattr(S, "colocate_chunks", forbidden)
     out = str(tmp_path / "auto_fast")
-    res = engine.decode_to_parquet(enc, cols, ddl, out, verify_checksums=True)
+    sc = spark.sparkContext
+    group = "decode-no-shuffle"
+    sc.setJobGroup(group, "decode_to_parquet under test")
+    try:
+        res = engine.decode_to_parquet(enc, cols, ddl, out, verify_checksums=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1
+    assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) == 1
     assert res["rows"] == df.count()
-    monkeypatch.undo()
-
-    # scrambled layout: auto must fall back to the shuffle, not fail
-    out2 = str(tmp_path / "auto_fallback")
-    res2 = engine.decode_to_parquet(enc.repartition(7), cols, ddl, out2,
-                                    verify_checksums=True)
-    assert res2["rows"] == df.count()
 
     def canon(d):
         return d.select("o_orderkey",
                         F.col("o_totalprice").cast("string").alias("p"))
     a = spark.read.parquet(out)
-    b = spark.read.parquet(out2)
     src = canon(df)
-    for got in (a, b):
-        assert canon(got).exceptAll(src).isEmpty()
-        assert src.exceptAll(canon(got)).isEmpty()
+    assert canon(a).exceptAll(src).isEmpty()
+    assert src.exceptAll(canon(a)).isEmpty()
     enc.unpersist()
+
+
+def test_decode_to_parquet_single_pass_failure(spark, tmp_path):
+    """A non-colocated input fails after ONE Spark job (no retry through
+    a shuffle), naming the missing columns and the decode paths that
+    handle any layout."""
+    df = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    cols = ["o_orderkey", "o_totalprice"]
+    enc = engine.encode_dataframe(df, cols, codec="auto", chunk_rows=4096,
+                                  table_name="orders").cache()
+    # materialize the scrambled layout first, so its own exchange (a
+    # separate job under AQE) is not counted as a decode pass
+    scrambled = enc.repartition(7).cache()
+    scrambled.count()
+    sc = spark.sparkContext
+    group = "decode-single-pass"
+    sc.setJobGroup(group, "decode_to_parquet on a scrambled layout")
+    try:
+        with pytest.raises(Exception, match=r"lacks columns \['o_(orderkey|totalprice)'\]") as e:
+            engine.decode_to_parquet(scrambled, cols,
+                                     "o_orderkey long, o_totalprice double",
+                                     str(tmp_path / "bad"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert "decode_table(...)" in str(e.value) and "decode_table_to_parquet" in str(e.value)
+    scrambled.unpersist()
+    enc.unpersist()
+
+
+def test_decode_column_predicate_is_exact(spark):
+    """decode_column(predicate=...) returns exactly the matching source
+    rows, with no filter on the caller's side."""
+    df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    enc = engine.encode_dataframe(
+        df.repartitionByRange(4, "l_extendedprice"), ["l_extendedprice", "l_returnflag"],
+        chunk_rows=512, table_name="li",
+    ).cache()
+    for col, ddl, pred, want in [
+        ("l_extendedprice", "double", ("between", (5_000.0, 10_000.0)),
+         F.col("l_extendedprice").between(5_000.0, 10_000.0)),
+        ("l_returnflag", "string", ("in", ["A", "R"]),
+         F.col("l_returnflag").isin("A", "R")),
+    ]:
+        got = engine.decode_column(enc, col, ddl, predicate=(col, *pred)).select(
+            F.col("value").alias("v"))
+        ref = df.filter(want).select(F.col(col).alias("v"))
+        assert 0 < got.count() == ref.count() < df.count()
+        assert got.exceptAll(ref).isEmpty() and ref.exceptAll(got).isEmpty()
+    enc.unpersist()
+
+
+def test_predicate_renderings_agree(spark, tmp_path):
+    """The Spark Column and pyarrow Expression renderings of one
+    Predicate keep the same chunk groups of a committed table, on a
+    numeric and a string column, null string stats included."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from chimp_spark.engine.core import Predicate
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").withColumn(
+        "lang", F.when(F.col("doc_id") < 150, None).otherwise(F.col("lang")))
+    cols = ["doc_id", "lang"]
+    t = engine.EncodedTable(str(tmp_path / "t"))
+    for order in (["doc_id"], ["lang", "doc_id"]):  # cluster each column once
+        t.commit(spark, engine.encode_dataframe(
+            docs.orderBy(*order), cols, chunk_rows=64, table_name="documents"),
+            "documents", mode="df")
+    meta = t.read(spark)
+    stats = pa.concat_tables(pq.read_table(f) for f in t.data_files())
+    key = ["run_id", "part_id", "chunk_id"]
+
+    def spark_keys(df):
+        return {tuple(r) for r in df.select(*key).collect()}
+
+    def arrow_keys(tbl):
+        return set(zip(*(tbl.column(k).to_pylist() for k in key)))
+
+    null_lang = spark_keys(meta.filter((F.col("column") == "lang")
+                                       & F.col("stat_min_bin").isNull()))
+    assert null_lang
+    cases = [("doc_id", 150), ("doc_id", [3, 400, 401]), ("doc_id", 120),
+             ("doc_id", 300), ("doc_id", (100, 250)),
+             ("lang", "en"), ("lang", ["de", "en"]), ("lang", "de"),
+             ("lang", "fr"), ("lang", ("de", "es"))]
+    for (col, payload), op in zip(cases, ["==", "in", "<=", ">=", "between"] * 2):
+        pred = Predicate.of((col, op, payload), cols)
+        on_col = meta.filter(F.col("column") == col)
+        got_spark = spark_keys(on_col.filter(pred.zone_column(meta.columns)))
+        got_arrow = arrow_keys(stats.filter(pc.field("column") == col)
+                               .filter(pred.zone_expr()))
+        assert got_spark == got_arrow, (col, op, payload)
+        assert 0 < len(got_spark) < on_col.count(), (col, op, payload)
+        if col == "lang":
+            assert null_lang <= got_spark
 
 
 def test_predicate_on_missing_column_raises(spark, tmp_path):

@@ -242,7 +242,7 @@ def test_pack_sequences_one_deterministic_exchange(spark):
 
 
 def test_work_unit_plans_scan_no_python_rdd(spark, tmp_path, monkeypatch):
-    """encode_parquet / decode_files_to_parquet plan their work units as
+    """encode_parquet / decode_table_to_parquet plan their work units as
     a JVM range: no Python RDD scan (ExistingRDD) feeds the tasks."""
     src = str(tmp_path / "src")
     spark.read.parquet(f"{SF_DIR}/orders.parquet").repartition(4).write.parquet(src)

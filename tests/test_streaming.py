@@ -64,102 +64,3 @@ def test_stream_encode_incremental(spark, tmp_path):
     stream = spark.readStream.schema(EVENTS_DDL).parquet(src_dir)
     encode_stream(spark, stream, root, "events", chunk_rows=256, checkpoint_dir=ckpt)
     assert engine.EncodedTable(root).current_version() == v
-
-
-def test_windowed_rollup_stream_matches_batch(spark, tmp_path):
-    """Watermarked tumbling-window rollup over a file stream: the
-    finalized (append-mode) windows must equal the batch groupBy over
-    the same rows. Two ordered files advance the watermark so the
-    early windows finalize."""
-    from chimp_spark.streaming import windowed_rollup
-
-    src_dir = str(tmp_path / "win_src")
-    os.makedirs(src_dir)
-    events = spark.read.parquet(f"{SF_DIR}/events.parquet").cache()
-    # ts is TIMESTAMP_NTZ in the testdata; order by its raw micros
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    cut = events.agg(F.expr(
-        "percentile(unix_micros(cast(ts as timestamp)), 0.5)")).collect()[0][0]
-    early = events.filter(us < cut)
-    late = events.filter(us >= cut)
-    for i, part in enumerate([early, late]):
-        tmp = str(tmp_path / f"wp{i}")
-        part.coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        shutil.copy(os.path.join(tmp, src), os.path.join(src_dir, f"b{i}.parquet"))
-
-    stream = spark.readStream.schema(EVENTS_DDL).option(
-        "maxFilesPerTrigger", 1).parquet(src_dir)
-    rolled = windowed_rollup(stream, window="1 hour", watermark="30 minutes")
-    q = (
-        rolled.writeStream.format("memory").queryName("roll")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["win_start"], r["event_type"]): (r["cnt"], r["vmin"], r["vmax"])
-        for r in spark.sql("SELECT * FROM roll").collect()
-    }
-    assert got, "no windows finalized"
-    # batch ground truth for exactly the finalized windows (cast NTZ ->
-    # LTZ to match the stream schema's event-time type)
-    batch = windowed_rollup(
-        events.withColumn("ts", F.col("ts").cast("timestamp")),
-        window="1 hour", watermark="30 minutes",
-    )
-    want = {
-        (r["win_start"], r["event_type"]): (r["cnt"], r["vmin"], r["vmax"])
-        for r in batch.collect()
-    }
-    for k, v in got.items():
-        assert want[k] == v, (k, v, want[k])
-
-
-def test_stateful_running_stats_across_batches(spark, tmp_path):
-    """applyInPandasWithState carries per-key state across
-    micro-batches: the LAST emitted row per key must equal the batch
-    aggregate over all rows."""
-    from chimp_spark.streaming import stateful_running_stats
-
-    src_dir = str(tmp_path / "state_src")
-    ckpt = str(tmp_path / "state_ckpt")
-    os.makedirs(src_dir)
-    events = spark.read.parquet(f"{SF_DIR}/events.parquet").cache()
-    h1 = events.filter(F.col("event_id") % 2 == 0)
-    h2 = events.filter(F.col("event_id") % 2 == 1)
-    for i, part in enumerate([h1, h2]):
-        tmp = str(tmp_path / f"sp{i}")
-        part.coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        shutil.copy(os.path.join(tmp, src), os.path.join(src_dir, f"b{i}.parquet"))
-
-    stream = spark.readStream.schema(EVENTS_DDL).option(
-        "maxFilesPerTrigger", 1).parquet(src_dir)
-    stats = stateful_running_stats(stream)
-    q = (
-        stats.writeStream.format("memory").queryName("stats")
-        .outputMode("update").option("checkpointLocation", ckpt)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    import pandas as pd  # noqa: F401
-    rows = spark.sql("SELECT * FROM stats").collect()
-    # keep the final (largest-cnt) row per key — update mode emits one
-    # row per key per batch it appears in
-    final = {}
-    for r in rows:
-        if r["event_type"] not in final or r["cnt"] > final[r["event_type"]]["cnt"]:
-            final[r["event_type"]] = r
-    want = {
-        r["event_type"]: r
-        for r in events.groupBy("event_type").agg(
-            F.count("*").alias("cnt"), F.sum("value").alias("vsum"),
-            F.min("value").alias("vmin"), F.max("value").alias("vmax"),
-        ).collect()
-    }
-    assert set(final) == set(want)
-    for k in want:
-        assert final[k]["cnt"] == want[k]["cnt"]
-        assert abs(final[k]["vsum"] - want[k]["vsum"]) < 1e-6
-        assert final[k]["vmin"] == want[k]["vmin"]
-        assert final[k]["vmax"] == want[k]["vmax"]
