@@ -397,7 +397,7 @@ def _corpus_prep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chimp_spark.ops.pipeline import prepare_corpus
 
     docs = _read(spark, sf_dir, "documents")
-    root = _ann_index_root(sf_dir, "corpus", "prep_q3_c4096", table="documents")
+    root = _ann_index_root(sf_dir, "corpus", "prep_q3_c4096_log", table="documents")
     stats_path = os.path.join(root, "prep_stats.json")
     if os.path.exists(stats_path):
         with open(stats_path) as f:

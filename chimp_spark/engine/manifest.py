@@ -1,26 +1,28 @@
-"""Iceberg-style table layout + chunk-granular lineage and resume.
+"""Encoded tables: parquet data files plus an append-only commit log.
 
-No Iceberg runtime ships in this sandbox, so the layout is an
-Iceberg-*style* file-based catalog (kept adapter-thin so a real
-Iceberg REST/HMS catalog can replace it):
+    <root>/data/<run_id>/part-*.parquet   encoded-chunk rows of one commit
+    <root>/_log/<N:08d>.json              commit record N (N = 1, 2, ...)
 
-    <root>/data/part-<part_id>-<uuid>.parquet     encoded-chunk rows
-    <root>/metadata/v<N>.metadata.json            snapshot pointer
-    <root>/metadata/manifest-<N>.jsonl            one line per data file
-    <root>/metadata/version-hint.text             current version N
+A record is immutable and self-contained: ``{table, mode, epoch,
+fingerprint, layout_parts, run_id, timestamp_ms, part_ids, files,
+summary}``. The table is the set of records; every query replays the
+log once and only files a record names are visible.
 
-Commit protocol (single-writer, crash-safe): data files are written
-first, then a new manifest + metadata version, then the version hint
-is atomically replaced. The data-file write is the commit's only Spark
-action: it observes the committed part ids and the totals (chunks, rows,
-raw and encoded bytes) as the rows stream past, so the data just
-written is never scanned again. The manifest gets one entry per part
-id plus one per data file; the totals land as ``summary`` in
-``v<N>.metadata.json``. A crashed run leaves orphan data files but an
-older consistent snapshot; the next run's resume anti-joins completed
-partition ids from the live snapshot and re-encodes only the rest —
-the lineage rows (table, column, part_id, chunk_id, codec, bytes,
-checksum) give chunk-granular audit on top.
+Commit: the parquet write into a fresh ``data/<run_id>/`` is the only
+Spark action. It observes the part ids and the totals (chunks, rows,
+raw and encoded bytes) as the rows stream past, so nothing reads the
+written files back. The record is then appended put-if-absent (the
+Delta Lake log protocol): it is written to a temp file in ``_log/`` and
+``os.link``-ed to the next number. A link onto an existing name fails,
+so a writer that lost the race takes the next number. No record depends
+on earlier ones, so the retry is always correct and two concurrent
+writers both land.
+
+A crash before the link leaves a ``data/<run_id>/`` directory (and
+perhaps a temp record) that no record names: reads never see it, and
+the next run's resume re-encodes those part ids. Once the link exists
+the commit is complete. A root in the older ``metadata/`` layout is
+refused; re-encode it into a fresh root.
 """
 
 from __future__ import annotations
@@ -40,32 +42,55 @@ class EncodedTable:
     def __init__(self, root: str):
         self.root = root
         self.data_dir = os.path.join(root, "data")
-        self.meta_dir = os.path.join(root, "metadata")
+        self.log_dir = os.path.join(root, "_log")
 
-    # -- snapshot plumbing ---------------------------------------------------
+    # -- log -----------------------------------------------------------------
+
+    def _versions(self) -> list[int]:
+        try:
+            names = os.listdir(self.log_dir)
+        except FileNotFoundError:
+            if os.path.exists(os.path.join(self.root, "metadata", "version-hint.text")):
+                raise ValueError(
+                    f"{self.root} holds an encoded table in the old metadata/ "
+                    "layout (version-hint + manifests), which is no longer "
+                    "read. Re-encode it into a fresh root.") from None
+            return []
+        return sorted(int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit())
+
+    def _record_path(self, version: int) -> str:
+        return os.path.join(self.log_dir, f"{version:08d}.json")
+
+    def _records(self, table: str | None = None) -> list[dict]:
+        records = []
+        for v in self._versions():
+            with open(self._record_path(v)) as f:
+                r = json.load(f)
+            if table is None or r["table"] == table:
+                records.append(r)
+        return records
+
+    def _append(self, record: dict, version: int) -> int:
+        """Link ``record`` to the first free number at or after
+        ``version`` and return that number."""
+        os.makedirs(self.log_dir, exist_ok=True)
+        tmp = os.path.join(self.log_dir, f".{record['run_id']}.tmp")
+        with open(tmp, "w") as f:
+            json.dump(record, f)
+        try:
+            while True:
+                try:
+                    os.link(tmp, self._record_path(version))
+                    return version
+                except FileExistsError:
+                    version += 1
+        finally:
+            os.unlink(tmp)
 
     def current_version(self) -> int:
-        hint = os.path.join(self.meta_dir, "version-hint.text")
-        try:
-            with open(hint) as f:
-                return int(f.read().strip())
-        except (FileNotFoundError, ValueError):
-            return 0
+        return max(self._versions(), default=0)
 
-    def _read_metadata(self, version: int) -> dict:
-        with open(os.path.join(self.meta_dir, f"v{version}.metadata.json")) as f:
-            return json.load(f)
-
-    def manifest_entries(self) -> list[dict]:
-        v = self.current_version()
-        if v == 0:
-            return []
-        meta = self._read_metadata(v)
-        entries: list[dict] = []
-        for mf in meta["manifests"]:
-            with open(os.path.join(self.meta_dir, mf)) as f:
-                entries.extend(json.loads(line) for line in f if line.strip())
-        return entries
+    # -- queries -------------------------------------------------------------
 
     def completed_part_ids(self, table: str, mode: str | None = None) -> set[int]:
         """Batch-resume partition ids. Streaming commits (epoch set)
@@ -76,22 +101,15 @@ class EncodedTable:
         ``mode`` filters to one part-id namespace: DataFrame-path ids
         are Spark partition ids ('df') while scan-path ids are
         row-group unit indices ('scan') — resuming one from the
-        other's entries would silently skip unrelated data. mode=None
-        returns every batch entry. Entries written before modes
-        existed (no 'mode' key) count for NO mode-specific query:
-        their namespace is unknown, so treating them as completed
-        would let a scan resume skip unit ids that collide with legacy
-        DataFrame partition ids — silently dropping never-encoded row
-        groups. Excluding them makes mixed legacy tables re-encode
-        (duplication), the lesser failure; new commits always carry a
+        other's commits would silently skip unrelated data. mode=None
+        returns every batch commit's ids. A commit made without a mode
+        counts for NO mode-specific query: its namespace is unknown, so
+        treating it as completed would let a scan resume skip unit ids
+        that collide with DataFrame partition ids — silently dropping
+        never-encoded row groups. Such tables re-encode (duplication),
+        the lesser failure; the engine's own commits always carry a
         mode."""
-        return {
-            e["part_id"]
-            for e in self.manifest_entries()
-            if e["table"] == table and e["part_id"] >= 0
-            and e.get("committed", True) and e.get("epoch") is None
-            and (mode is None or e.get("mode") == mode)
-        }
+        return {p for r in _batch(self._records(table), mode) for p in r["part_ids"]}
 
     def completed_scan_units(self, table: str, fingerprint: str) -> set[int]:
         """Scan-path resume with input-identity validation.
@@ -102,79 +120,52 @@ class EncodedTable:
         different row groups and a blind resume silently skips
         never-encoded data. Every scan commit records the file-set
         fingerprint (see scan.units_fingerprint); resume REFUSES when
-        any committed scan entry carries a different or missing one.
+        any committed scan commit carries a different or missing one.
         """
-        stale = [
-            e for e in self.manifest_entries()
-            if e["table"] == table and e["part_id"] >= 0
-            and e.get("committed", True) and e.get("epoch") is None
-            and e.get("mode") == "scan"
-            and e.get("fingerprint") != fingerprint
-        ]
+        scans = _batch(self._records(table), "scan")
+        stale = sorted({str(r["fingerprint"]) for r in scans
+                        if r["fingerprint"] != fingerprint})
         if stale:
-            got = sorted({str(e.get("fingerprint")) for e in stale})
             raise ValueError(
-                f"scan resume refused for table '{table}': {len(stale)} "
-                f"committed scan entries were encoded from a different "
-                f"input file set (fingerprint {got} != {fingerprint!r}). "
+                f"scan resume refused for table '{table}': committed scan "
+                f"commits were encoded from a different input file set "
+                f"(fingerprint {stale} != {fingerprint!r}). "
                 "The positional unit ids no longer identify the same row "
                 "groups. Encode into a fresh table root, or rerun with "
                 "resume disabled to append a full re-encode."
             )
-        return self.completed_part_ids(table, mode="scan")
+        return {p for r in scans for p in r["part_ids"]}
 
-    def data_files(self) -> list[str]:
-        """Committed data file paths — ONLY the file-level entries
-        (part_id == -1, same filter read() uses). Partition-level
-        entries repeat their commit's first file and may carry None,
-        so including them would duplicate or crash."""
-        return [
-            os.path.join(self.data_dir, e["file"])
-            for e in self.manifest_entries()
-            if e["part_id"] == -1
-        ]
-
-    # -- commit --------------------------------------------------------------
+    def data_files(self, table: str | None = None) -> list[str]:
+        """Committed data file paths, in commit order."""
+        return [os.path.join(self.data_dir, f)
+                for r in self._records(table) for f in r["files"]]
 
     def committed_epochs(self, table: str) -> set[int]:
-        return {
-            e["epoch"]
-            for e in self.manifest_entries()
-            if e.get("table") == table and e.get("epoch") is not None
-        }
+        return {r["epoch"] for r in self._records(table) if r["epoch"] is not None}
 
     def df_layout_parts(self, table: str) -> set[int]:
         """Partition counts of the layouts previous df-mode commits
         were stamped from (see encode_and_commit's resume guard)."""
-        return {
-            e["layout_parts"]
-            for e in self.manifest_entries()
-            if e["table"] == table and e.get("mode") == "df"
-            and e["part_id"] >= 0 and e.get("layout_parts") is not None
-        }
+        return {r["layout_parts"] for r in _df_commits(self._records(table))
+                if r["layout_parts"] is not None}
+
+    # -- commit / read -------------------------------------------------------
 
     def commit(self, spark: SparkSession, encoded: DataFrame, table: str,
                epoch: int | None = None, mode: str | None = None,
                fingerprint: str | None = None,
                layout_parts: int | None = None) -> dict:
-        """Write encoded chunks as parquet data files + new snapshot.
-        The parquet write is the commit's only Spark action: it observes
-        the part ids and commit totals (chunks, rows, raw/enc bytes) as
-        it goes, so nothing reads the written files back.
-        ``fingerprint`` (scan mode) records the input file-set identity
-        the positional unit ids were derived from — see
-        completed_scan_units. Returns {version, files, partitions,
-        summary}; ``summary`` (the totals) is also stored in the
-        snapshot metadata."""
-        import glob
-        import shutil
-
+        """Write encoded chunks as parquet data files and append their
+        commit record. ``fingerprint`` (scan mode) records the input
+        file-set identity the positional unit ids were derived from —
+        see completed_scan_units. Returns {version, files, partitions,
+        summary}; ``summary`` (the totals) is also in the record."""
         from pyspark.sql import Observation
 
-        os.makedirs(self.data_dir, exist_ok=True)
-        os.makedirs(self.meta_dir, exist_ok=True)
+        version = self.current_version() + 1  # refuses an old layout before writing
         run_id = uuid.uuid4().hex[:12]
-        staging = os.path.join(self.data_dir, f"_staging-{run_id}")
+        out = os.path.join(self.data_dir, run_id)
         obs = Observation(f"commit-{run_id}")
         encoded.observe(
             obs,
@@ -183,85 +174,39 @@ class EncodedTable:
             F.sum("n").alias("rows"),
             F.sum("raw_bytes").alias("raw_bytes"),
             F.sum("enc_bytes").alias("enc_bytes"),
-        ).write.mode("overwrite").parquet(staging)
+        ).write.parquet(out)
         observed = obs.get
-        part_ids = sorted(observed["part_ids"])
-        summary = {k: int(observed[k] or 0)
-                   for k in ("chunks", "rows", "raw_bytes", "enc_bytes")}
-
-        # fold staged files into the data dir under stable names
-        files = []
-        for i, path in enumerate(sorted(glob.glob(os.path.join(staging, "part-*.parquet")))):
-            name = f"part-{run_id}-{i:05d}.parquet"
-            shutil.move(path, os.path.join(self.data_dir, name))
-            files.append(name)
-        shutil.rmtree(staging, ignore_errors=True)
-
-        entries = [
-            {
-                "table": table,
-                "epoch": epoch,
-                "mode": mode,
-                "fingerprint": fingerprint,
-                "layout_parts": layout_parts,
-                "part_id": pid,
-                "committed": True,
-                "files": files,
-                "file": files[0] if files else None,
-            }
-            for pid in part_ids
-        ]
-        # data-file level entries for read path
-        file_entries = [
-            {"table": table, "epoch": epoch, "part_id": -1, "file": f, "committed": True}
-            for f in files
-        ]
-
-        v = self.current_version()
-        new_v = v + 1
-        manifest_name = f"manifest-{new_v:05d}.jsonl"
-        with open(os.path.join(self.meta_dir, manifest_name), "w") as f:
-            for e in entries + file_entries:
-                f.write(json.dumps(e) + "\n")
-        prev_manifests = self._read_metadata(v)["manifests"] if v else []
-        meta = {
-            "format-version": 1,
-            "snapshot-id": run_id,
-            "parent-version": v,
-            "timestamp-ms": int(time.time() * 1000),
-            "table": table,
-            "manifests": prev_manifests + [manifest_name],
-            "summary": summary,
+        record = {
+            "table": table, "mode": mode, "epoch": epoch,
+            "fingerprint": fingerprint, "layout_parts": layout_parts,
+            "run_id": run_id, "timestamp_ms": int(time.time() * 1000),
+            "part_ids": sorted(observed["part_ids"]),
+            "files": sorted(f"{run_id}/{n}" for n in os.listdir(out)
+                            if n.startswith("part-") and n.endswith(".parquet")),
+            "summary": {k: int(observed[k] or 0)
+                        for k in ("chunks", "rows", "raw_bytes", "enc_bytes")},
         }
-        with open(os.path.join(self.meta_dir, f"v{new_v}.metadata.json"), "w") as f:
-            json.dump(meta, f, indent=1)
-        tmp = os.path.join(self.meta_dir, f".hint-{run_id}")
-        with open(tmp, "w") as f:
-            f.write(str(new_v))
-        os.replace(tmp, os.path.join(self.meta_dir, "version-hint.text"))
-        return {"version": new_v, "files": len(files), "partitions": len(part_ids),
-                "summary": summary}
-
-    # -- read / resume ---------------------------------------------------------
+        return {"version": self._append(record, version), "files": len(record["files"]),
+                "partitions": len(record["part_ids"]), "summary": record["summary"]}
 
     def read(self, spark: SparkSession) -> DataFrame:
-        files = [
-            os.path.join(self.data_dir, e["file"])
-            for e in self.manifest_entries()
-            if e["part_id"] == -1
-        ]
+        files = self.data_files()
         if not files:
             return spark.createDataFrame([], ENC_DDL)
         return spark.read.parquet(*files)
 
-    def pending_partitions(self, df_with_pid: DataFrame, table: str) -> DataFrame:
-        """Resume filter: drop source partitions already committed.
-        ``df_with_pid`` must carry a ``__part_id`` column (use
-        spark_partition_id() right after the layout repartition)."""
-        done = self.completed_part_ids(table, mode="df")
-        if not done:
-            return df_with_pid
-        return df_with_pid.filter(~F.col("__part_id").isin(sorted(done)))
+
+def _batch(records: list[dict], mode: str | None) -> list[dict]:
+    """Batch commits (no epoch) that cover part ids, in namespace
+    ``mode`` (None: any)."""
+    return [r for r in records if r["epoch"] is None and r["part_ids"]
+            and (mode is None or r["mode"] == mode)]
+
+
+def _df_commits(records: list[dict]) -> list[dict]:
+    """df-mode commits that cover part ids, streaming ones included:
+    each must carry the layout its ids were stamped from."""
+    return [r for r in records if r["mode"] == "df" and r["part_ids"]]
 
 
 def encode_and_commit(
@@ -276,19 +221,18 @@ def encode_and_commit(
 ) -> dict:
     """End-to-end encode job with partition-granular resume.
 
-    Stamps each row with its physical partition id, anti-joins
-    partitions already committed in the table's snapshot, encodes the
-    rest, commits a new snapshot.
+    Stamps each row with its physical partition id, drops partitions
+    already committed for ``table``, encodes the rest and commits them.
 
     Resume correctness requires the rerun to reproduce the SAME
     partition membership (a pure-value layout like prepare_corpus's
     hash-of-id repartition, not round-robin). The commit records the
     layout's partition count and a resume refuses when it changed —
     the common way membership silently drifts (different
-    spark.sql.shuffle.partitions / parallelism between runs). Equal
-    counts with a value-dependent layout remain the caller's
-    contract, same as scan mode's stronger fingerprint is tied to the
-    file list.
+    spark.sql.shuffle.partitions / parallelism between runs) — or when
+    a df-mode commit carries none. Equal counts with a value-dependent
+    layout remain the caller's contract, same as scan mode's stronger
+    fingerprint is tied to the file list.
     """
     from .core import encode_dataframe
 
@@ -296,7 +240,18 @@ def encode_and_commit(
     layout_parts = df.rdd.getNumPartitions()
     work = df.withColumn("__part_id", F.spark_partition_id())
     if resume:
-        stored = t.df_layout_parts(table)
+        committed = _df_commits(t._records(table))
+        stored = {r["layout_parts"] for r in committed}
+        if None in stored:
+            # a commit with no layout identity: resuming against it could
+            # silently commit duplicated/missing rows under a different
+            # partition membership — refuse instead of skipping the check
+            raise ValueError(
+                f"df resume refused for table '{table}': committed df-mode "
+                f"commits carry no layout_parts, so the input layout cannot "
+                f"be validated. Re-encode into a fresh root or rerun with "
+                f"resume disabled"
+            )
         if stored and stored != {layout_parts}:
             raise ValueError(
                 f"df resume refused: input layout has {layout_parts} "
@@ -305,21 +260,9 @@ def encode_and_commit(
                 f"not identify the same rows. Rerun with the identical "
                 f"partitioning, or use a fresh output root"
             )
-        if not stored and any(
-            e["table"] == table and e.get("mode") == "df" and e["part_id"] >= 0
-            for e in t.manifest_entries()
-        ):
-            # df-mode entries committed before layout_parts was recorded
-            # carry no layout identity: resuming against them could
-            # silently commit duplicated/missing rows under a different
-            # partition membership — refuse instead of skipping the check
-            raise ValueError(
-                f"df resume refused for table '{table}': committed df-mode "
-                f"entries predate layout_parts stamping, so the input "
-                f"layout cannot be validated. Re-encode into a fresh root "
-                f"or rerun with resume disabled"
-            )
-        work = t.pending_partitions(work, table)
+        done = {p for r in _batch(committed, "df") for p in r["part_ids"]}
+        if done:
+            work = work.filter(~F.col("__part_id").isin(sorted(done)))
     cols = columns or [c for c in df.columns]
     # emptiness checked on the cheap filtered scan, not on the encoded
     # plan (isEmpty() on the latter would run encode work twice)

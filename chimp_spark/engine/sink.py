@@ -17,8 +17,8 @@ NO shuffle: only file metadata returns through Spark.
   decodes its frames and writes a shard.
 - ``decode_table_to_parquet(spark, root, ...)``: input is a COMMITTED
   EncodedTable. Chunk groups never span data files (each encode task's
-  batches land whole in one file — manifest.commit moves files
-  intact), so tasks read their files straight with pyarrow — the
+  batches land whole in one file, which the commit records as
+  written), so tasks read their files straight with pyarrow — the
   mirror of scan.py's work-unit model, and the shape a 100 TB decode
   job runs in: every task streams encoded shards from the store and
   writes decoded shards back, nothing crosses the JVM but file indices
@@ -35,8 +35,8 @@ renames exactly the files reported by SUCCESSFUL task attempts into
 staging dir (orphans from failed/speculative attempts die there), and
 writes a ``_decode_manifest.json`` (underscore-prefixed: directory
 readers skip it). Same idea as Spark's v1 file committer, kept
-adapter-thin; on an object store the rename step becomes a manifest
-pointer swap (see engine/manifest.py).
+adapter-thin; on an object store the rename step becomes a
+put-if-absent log record (see engine/manifest.py).
 """
 
 from __future__ import annotations
@@ -377,12 +377,7 @@ def decode_table_to_parquet(
     from .manifest import EncodedTable
 
     _ship.ensure(spark)
-    t = EncodedTable(root)
-    files = sorted(
-        os.path.join(t.data_dir, e["file"])
-        for e in t.manifest_entries()
-        if e["part_id"] == -1 and (table is None or e["table"] == table)
-    )
+    files = EncodedTable(root).data_files(table)
     pred = Predicate.of(predicate, columns)
     staged = _prepare_out_dir(out_dir, mode)
     if not files:

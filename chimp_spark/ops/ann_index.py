@@ -7,7 +7,7 @@ corpus scan. These builders write the index ONCE as a partitioned
 parquet table; queries read only the probed partitions (visible as
 ``PartitionFilters`` on the index scan — pinned in tests/test_plans).
 
-Layout (Iceberg-thin, mirroring engine.EncodedTable's style):
+Layout (one JSON params manifest over parquet data):
 
     <root>/ann_index.json     params manifest: kind, dim, nbits/tables/
                               seed/n_pfx (lsh) or n_centroids (ivf),

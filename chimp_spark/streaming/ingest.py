@@ -2,9 +2,9 @@
 table with exactly-once snapshot commits.
 
 Shape: ``readStream`` source -> ``foreachBatch`` -> the same narrow
-encode kernel as batch -> manifest commit stamped with the epoch id.
+encode kernel as batch -> commit record stamped with the epoch id.
 Exactly-once comes from two layers: Spark's checkpoint replays an
-epoch at most once per restart, and the manifest skips epochs it has
+epoch at most once per restart, and the commit log skips epochs it has
 already committed (so a crash between sink write and checkpoint
 advance cannot double-ingest).
 

@@ -896,34 +896,19 @@ def test_shard_writer_flushes_on_bytes(tmp_path):
 
 
 def test_df_resume_refuses_pre_layout_parts_entries(spark, tmp_path):
-    """df-mode entries committed before layout_parts stamping carry no
-    layout identity; resuming against them must refuse loudly instead
-    of silently skipping the membership check (ADVICE r5, medium)."""
-    import glob
-    import json as _json
-
+    """A df-mode commit made without layout_parts carries no layout
+    identity; resuming against it must refuse loudly instead of
+    silently skipping the membership check (ADVICE r5, medium)."""
     import pytest
 
     from chimp_spark import engine
 
     root = str(tmp_path / "enc_pre_layout")
     df = spark.range(1000).withColumn("v", F.col("id") * 2).repartition(4, "id")
-    engine.encode_and_commit(spark, df, root, "t")
+    enc = engine.encode_dataframe(df, ["id", "v"], table_name="t")
+    engine.EncodedTable(root).commit(spark, enc, "t", mode="df")  # no layout_parts
 
-    # simulate a pre-upgrade commit: strip layout_parts from every entry
-    for mf in glob.glob(str(tmp_path / "enc_pre_layout" / "metadata" / "*.jsonl")):
-        lines = [
-            _json.loads(ln)
-            for ln in open(mf)
-            if ln.strip()
-        ]
-        for e in lines:
-            e.pop("layout_parts", None)
-        with open(mf, "w") as f:
-            for e in lines:
-                f.write(_json.dumps(e) + "\n")
-
-    with pytest.raises(ValueError, match="predate layout_parts"):
+    with pytest.raises(ValueError, match="carry no layout_parts"):
         engine.encode_and_commit(spark, df, root, "t")
 
 
@@ -974,8 +959,8 @@ def test_commit_runs_one_spark_job(spark, tmp_path):
     ).collect()[0].asDict()
     assert info["partitions"] == back.pop("partitions") == 4
     assert info["summary"] == back
-    meta_path = os.path.join(t.meta_dir, f"v{info['version']}.metadata.json")
-    assert _json.load(open(meta_path))["summary"] == back
+    record_path = os.path.join(t.log_dir, f"{info['version']:08d}.json")
+    assert _json.load(open(record_path))["summary"] == back
     assert t.completed_part_ids("orders", mode="scan") == {0, 1, 2, 3}
 
 
@@ -992,6 +977,62 @@ def test_commit_empty_encoded_does_not_block(spark, tmp_path):
     assert got["partitions"] == 0
     assert got["summary"] == {"chunks": 0, "rows": 0, "raw_bytes": 0, "enc_bytes": 0}
     assert t.completed_part_ids("t") == set()
+
+
+def test_concurrent_commits_both_land(spark, tmp_path):
+    """Two writers committing to one root at the same time: each takes
+    its own log number, and reads see both commits' chunks and part
+    ids, across both commits' data directories."""
+    import threading
+
+    t = engine.EncodedTable(str(tmp_path / "enc"))
+    frames = {
+        name: engine.encode_dataframe(
+            spark.read.parquet(f"{SF_DIR}/{name}.parquet").repartition(3),
+            cols, chunk_rows=512, table_name=name).cache()
+        for name, cols in (("customer", ["c_custkey"]), ("orders", ["o_orderkey"]))
+    }
+    want = {name: enc.count() for name, enc in frames.items()}
+    start = threading.Barrier(len(frames))
+    got, errors = {}, []
+
+    def run(name):
+        try:
+            start.wait()
+            got[name] = t.commit(spark, frames[name], name, mode="df")
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(n,)) for n in frames]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(300)
+    assert not errors, errors
+    assert sorted(info["version"] for info in got.values()) == [1, 2]
+    assert t.current_version() == 2
+    assert len(t.data_files()) == sum(info["files"] for info in got.values())
+    back = {r["table"]: r["count"] for r in t.read(spark).groupBy("table").count().collect()}
+    assert back == want
+    for name in frames:
+        assert t.completed_part_ids(name, mode="df") == {0, 1, 2}
+        frames[name].unpersist()
+
+
+def test_old_metadata_layout_is_refused(spark, tmp_path):
+    """A root written in the old metadata/ layout (version hint,
+    snapshot metadata, JSONL manifests) is refused on every read and
+    on commit, never read as empty."""
+    root = tmp_path / "old"
+    (root / "metadata").mkdir(parents=True)
+    (root / "metadata" / "version-hint.text").write_text("1")
+    t = engine.EncodedTable(str(root))
+    for call in (t.current_version, t.data_files, lambda: t.read(spark),
+                 lambda: t.completed_part_ids("t"), lambda: t.committed_epochs("t"),
+                 lambda: t.commit(spark, spark.createDataFrame([], engine.ENC_DDL), "t")):
+        with pytest.raises(ValueError, match="old metadata/ layout"):
+            call()
+    assert not (root / "_log").exists() and not (root / "data").exists()
 
 
 def test_range_slices_like_parallelize(spark):
