@@ -5,6 +5,7 @@ Modes:
     python bench_extra.py kernel [table ...]   per-column encode kernel timing
     python bench_extra.py profile <table>      cProfile of the encode kernel
     python bench_extra.py decode [table ...]   per-column decode kernel timing
+    python bench_extra.py floor                per-task Python worker floor
 """
 
 from __future__ import annotations
@@ -143,6 +144,61 @@ def decode_bench(tables: list[str], repeats: int = 3) -> None:
         print(f"  TOTAL {tot*1e3:.1f} ms  {sum(raws.values())/tot/1e6:.1f} MB/s/core\n")
 
 
+def _floor_probe(batches):
+    """One task of the floor job: time importlib.invalidate_caches(),
+    which PySpark runs before every task, and count the cached
+    zipimporters per archive."""
+    import importlib
+    import zipimport
+
+    from chimp_spark import engine  # noqa: F401  (as every engine task does)
+
+    start = time.time()
+    for _ in batches:
+        pass
+    t0 = time.perf_counter()
+    importlib.invalidate_caches()
+    active_ms = (time.perf_counter() - t0) * 1e3
+    importers: dict[str, int] = {}
+    for v in sys.path_importer_cache.values():
+        if isinstance(v, zipimport.zipimporter):
+            name = os.path.basename(v.archive)
+            importers[name] = importers.get(name, 0) + 1
+    yield pa.RecordBatch.from_pylist([{
+        "pid": os.getpid(), "start": start, "active_ms": active_ms,
+        "importers": " ".join(f"{k}:{n}" for k, n in sorted(importers.items())),
+    }])
+
+
+def floor(tasks: int = 8, passes: int = 2) -> None:
+    """The per-task Python worker floor at local[nproc]: a ``tasks``-task
+    spark.range(...).mapInArrow job whose tasks import the engine, run
+    ``passes`` times (the first pass forks the workers)."""
+    from chimp_spark import _ship, engine
+
+    nproc = len(os.sched_getaffinity(0))
+    spark = engine.get_spark(cpus=nproc, app="chimp_floor", driver_memory="1g")
+    try:
+        _ship.ensure(spark)
+        seen: set[int] = set()
+        for p in range(passes):
+            t0 = time.perf_counter()
+            rows = spark.range(0, tasks, 1, tasks).mapInArrow(
+                _floor_probe, "pid long, start double, active_ms double, "
+                "importers string").collect()
+            wall = time.perf_counter() - t0
+            print(f"== pass {p + 1}: {tasks} tasks at local[{nproc}] ==")
+            print("     pid  worker_task  invalidate_ms  zipimporters")
+            for r in sorted(rows, key=lambda r: r["start"]):
+                first = r["pid"] not in seen
+                seen.add(r["pid"])
+                print(f"  {r['pid']:>6}  {'first' if first else 'reused':>11}  "
+                      f"{r['active_ms']:13.2f}  {r['importers']}")
+            print(f"  job wall {wall * 1e3:.0f} ms\n")
+    finally:
+        spark.stop()
+
+
 if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "kernel"
     args = sys.argv[2:] or ["lineitem", "orders", "events", "documents"]
@@ -152,3 +208,5 @@ if __name__ == "__main__":
         profile(args[0])
     elif mode == "decode":
         decode_bench(args)
+    elif mode == "floor":
+        floor()

@@ -9,5 +9,6 @@ over Spark DataFrames.
 """
 
 from . import _alloc  # noqa: F401  (allocator tuning side effect)
+from . import _zipcache  # noqa: F401  (per-task zip re-read fix, side effect)
 
 __version__ = "0.1.0"

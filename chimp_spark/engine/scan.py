@@ -106,7 +106,7 @@ def encode_parquet(
     chunk_rows: int = DEFAULT_CHUNK_ROWS,
     table_name: str = "t",
     skip_part_ids: set[int] | None = None,
-    units: list[tuple[int, str, int]] | None = None,
+    units: list[tuple[int, str, int, int]] | list[tuple[int, str, int]] | None = None,
 ) -> DataFrame:
     """Encoded-chunk DataFrame, reading row groups directly via Arrow.
 
@@ -114,9 +114,11 @@ def encode_parquet(
     EncodedTable.completed_scan_units, which also validates the input
     file set against the committed fingerprint) enables resume at
     row-group granularity: unit ids are deterministic for a given file
-    set. ``units`` accepts a precomputed parquet_work_units list so
-    callers that fingerprint the input don't pay the footer reads
-    twice."""
+    set. ``units`` accepts a precomputed parquet_work_units list of
+    ``(unit_id, file, row_group, rg_rows)`` so callers that fingerprint
+    the input don't pay the footer reads twice; legacy
+    ``(unit_id, file, row_group)`` 3-tuples are still accepted and
+    never split, since their row count is unknown."""
     from .. import _ship
 
     _ship.ensure(spark)

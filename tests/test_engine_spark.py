@@ -284,6 +284,17 @@ def test_encode_parquet_multifile_dir(spark, tmp_path):
     assert lhs.exceptAll(dec.select("o_orderkey", "o_totalprice")).isEmpty()
     assert dec.count() == df.count()
 
+    # precomputed units: parquet_work_units' 4-tuples and legacy
+    # (unit_id, file, row_group) 3-tuples give the same frames
+    def frames(e):
+        return sorted(map(tuple, e.select("part_id", "chunk_id", "column", "frame").collect()))
+
+    units = engine.parquet_work_units(engine.resolve_paths(src))
+    assert all(len(u) == 4 for u in units)
+    for us in (units, [u[:3] for u in units]):
+        again = engine.encode_parquet(spark, src, table_name="orders", chunk_rows=1024, units=us)
+        assert frames(again) == frames(enc)
+
 
 def test_encode_parquet_scan_resume(spark, tmp_path):
     """Scan-path resume: commit a subset of work units, then rerun with
@@ -1079,3 +1090,48 @@ def test_scan_frames_independent_of_scheduling(spark, tmp_path):
     for k, docs in enumerate(texts):
         blob, _meta = framing.encode_chunk(pa.array(docs), codec="fsst", cache={})
         assert first[(k, 0)] == blob
+
+
+def test_worker_keeps_unchanged_zip_directories(spark):
+    """A worker that unpickled an engine closure runs chimp_spark's
+    zipimporter.invalidate_caches, holds pyspark.zip sub-path importers,
+    and re-reads no archive directory on importlib.invalidate_caches()
+    (the call PySpark makes before every task). Counts, never times."""
+    import json
+
+    import pyarrow as pa
+
+    from chimp_spark import _ship
+
+    _ship.ensure(spark)
+
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        engine.session_conf  # the closure references the engine
+        for _ in batches:
+            pass
+        reads = []
+        real = zipimport._read_directory
+        zipimport._read_directory = lambda a: reads.append(a) or real(a)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        cached = [v for v in sys.path_importer_cache.values()
+                  if isinstance(v, zipimport.zipimporter)]
+        yield pa.RecordBatch.from_pydict({"r": [json.dumps({
+            "method": zipimport.zipimporter.invalidate_caches.__module__,
+            "pyspark_subpaths": sum(1 for v in cached
+                                    if v.archive.endswith("pyspark.zip") and v.prefix),
+            "reads": len(reads),
+        })]})
+
+    for _ in range(2):  # the second pass runs on reused workers
+        for row in spark.range(0, 4, 1, 4).mapInArrow(probe, "r string").collect():
+            r = json.loads(row["r"])
+            assert r["method"] == "chimp_spark._zipcache", r
+            assert r["pyspark_subpaths"] >= 1, r
+            assert r["reads"] == 0, r
