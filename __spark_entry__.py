@@ -371,6 +371,17 @@ def _ann_index_root(sf_dir: str, kind: str, tag: str, table: str = "embeddings")
     return f"/tmp/chimp_spark_ann_{os.path.basename(sf_dir.rstrip('/'))}_{kind}_{h}"
 
 
+def _ann_index_built(root: str) -> bool:
+    """Whether an ANN index has committed at ``root`` (else build it)."""
+    from chimp_spark.ops import ann_index
+
+    try:
+        ann_index.load_manifest(root)
+    except FileNotFoundError:
+        return False
+    return True
+
+
 def _corpus_prep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end corpus preparation (exact dedup -> MinHash near-dedup
     -> quality filter -> deterministic split -> encode+commit), then
@@ -531,8 +542,8 @@ def _lsh_ann_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _read(spark, sf_dir, "embeddings")
     q = [float(x) for x in emb.filter(F.col("vec_id") == 7).collect()[0]["embedding"]]
-    root = _ann_index_root(sf_dir, "lsh", "nbits6_t4_s7")
-    if not os.path.exists(os.path.join(root, "ann_index.json")):
+    root = _ann_index_root(sf_dir, "lsh", "nbits6_t4_s7_log")
+    if not _ann_index_built(root):
         ann_index.build_lsh_index(emb, root, dim=len(q), nbits=6, tables=4)
     return ann_index.lsh_index_topk(spark, root, q, k=5)
 
@@ -546,8 +557,8 @@ def _lsh_ann_batch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _read(spark, sf_dir, "embeddings")
     probe = emb.filter(F.col("vec_id") == 7).collect()[0]["embedding"]
-    root = _ann_index_root(sf_dir, "lsh", "nbits6_t4_s7")
-    if not os.path.exists(os.path.join(root, "ann_index.json")):
+    root = _ann_index_root(sf_dir, "lsh", "nbits6_t4_s7_log")
+    if not _ann_index_built(root):
         ann_index.build_lsh_index(emb, root, dim=len(probe), nbits=6, tables=4)
     qdf = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("qid"), "embedding"
@@ -565,8 +576,8 @@ def _ivf_ann_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _read(spark, sf_dir, "embeddings")
     q = [float(x) for x in emb.filter(F.col("vec_id") == 7).collect()[0]["embedding"]]
-    root = _ann_index_root(sf_dir, "ivf", "c16_s7")
-    if not os.path.exists(os.path.join(root, "ann_index.json")):
+    root = _ann_index_root(sf_dir, "ivf", "c16_s7_log")
+    if not _ann_index_built(root):
         ann_index.build_ivf_index(emb, root, dim=len(q), n_centroids=16)
     return ann_index.ivf_index_topk(spark, root, q, k=5, nprobe=6)
 
@@ -580,8 +591,8 @@ def _ivf_ann_batch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _read(spark, sf_dir, "embeddings")
     probe = emb.filter(F.col("vec_id") == 7).collect()[0]["embedding"]
-    root = _ann_index_root(sf_dir, "ivf", "c16_s7")
-    if not os.path.exists(os.path.join(root, "ann_index.json")):
+    root = _ann_index_root(sf_dir, "ivf", "c16_s7_log")
+    if not _ann_index_built(root):
         ann_index.build_ivf_index(emb, root, dim=len(probe), n_centroids=16)
     qdf = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("qid"), "embedding"

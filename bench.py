@@ -183,7 +183,7 @@ def _staged_encoded_documents(spark, sf_dir: str) -> str:
     staged = _stage_documents_big(sf_dir)
     tag = os.path.basename(_ship._package_zip()).split("_")[-1].split(".")[0]
     root = f"/tmp/bench_documents_enc_{_sf_tag(sf_dir)}_{tag}"
-    if engine.EncodedTable(root).current_version() == 0:
+    if engine.EncodedTable(root).log.current_version() == 0:
         import shutil
 
         shutil.rmtree(root, ignore_errors=True)

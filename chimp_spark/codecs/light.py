@@ -166,10 +166,6 @@ def gcd_for_stats(vals: np.ndarray) -> tuple[int, int, int, int]:
     return 17 + _bp_nbytes(iv.size, width), lo, g, width
 
 
-def gcd_for_size(vals: np.ndarray) -> int:
-    return gcd_for_stats(vals)[0]
-
-
 def delta_bp_size(vals: np.ndarray) -> int:
     iv = vals.astype(np.int64, copy=False)
     if iv.size == 1:

@@ -3,6 +3,10 @@
     <root>/data/<run_id>/part-*.parquet   encoded-chunk rows of one commit
     <root>/_log/<N:08d>.json              commit record N (N = 1, 2, ...)
 
+``Log`` is the one commit log of the package: ``EncodedTable`` commits
+through it here, and ``ops.ann_index`` links its build and append
+records through it the same way.
+
 A record is immutable and self-contained: ``{table, mode, epoch,
 fingerprint, layout_parts, run_id, timestamp_ms, part_ids, files,
 summary}``. The table is the set of records; every query replays the
@@ -31,6 +35,7 @@ import json
 import os
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,49 +43,47 @@ from pyspark.sql import functions as F
 from .core import ENC_DDL
 
 
-class EncodedTable:
-    def __init__(self, root: str):
-        self.root = root
-        self.data_dir = os.path.join(root, "data")
-        self.log_dir = os.path.join(root, "_log")
+class Log:
+    """An append-only directory of immutable JSON records, each at
+    ``<N:08d>.json`` (N = 1, 2, ...). ``refuse_old`` runs when the
+    directory is missing, so a caller can refuse a root in an older
+    layout before reading it as empty."""
 
-    # -- log -----------------------------------------------------------------
+    def __init__(self, directory: str, refuse_old: Callable[[], None] | None = None):
+        self.dir = directory
+        self._refuse_old = refuse_old
 
-    def _versions(self) -> list[int]:
-        try:
-            names = os.listdir(self.log_dir)
-        except FileNotFoundError:
-            if os.path.exists(os.path.join(self.root, "metadata", "version-hint.text")):
-                raise ValueError(
-                    f"{self.root} holds an encoded table in the old metadata/ "
-                    "layout (version-hint + manifests), which is no longer "
-                    "read. Re-encode it into a fresh root.") from None
+    def versions(self) -> list[int]:
+        if not os.path.isdir(self.dir):
+            if self._refuse_old is not None:
+                self._refuse_old()
             return []
-        return sorted(int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit())
+        return sorted(int(n[:-5]) for n in os.listdir(self.dir)
+                      if n.endswith(".json") and n[:-5].isdigit())
 
-    def _record_path(self, version: int) -> str:
-        return os.path.join(self.log_dir, f"{version:08d}.json")
+    def path(self, version: int) -> str:
+        return os.path.join(self.dir, f"{version:08d}.json")
 
-    def _records(self, table: str | None = None) -> list[dict]:
+    def records(self) -> list[dict]:
         records = []
-        for v in self._versions():
-            with open(self._record_path(v)) as f:
-                r = json.load(f)
-            if table is None or r["table"] == table:
-                records.append(r)
+        for v in self.versions():
+            with open(self.path(v)) as f:
+                records.append(json.load(f))
         return records
 
-    def _append(self, record: dict, version: int) -> int:
+    def append(self, record: dict, version: int | None = None) -> int:
         """Link ``record`` to the first free number at or after
-        ``version`` and return that number."""
-        os.makedirs(self.log_dir, exist_ok=True)
-        tmp = os.path.join(self.log_dir, f".{record['run_id']}.tmp")
+        ``version`` (default: the next one) and return that number."""
+        if version is None:
+            version = self.current_version() + 1
+        os.makedirs(self.dir, exist_ok=True)
+        tmp = os.path.join(self.dir, f".{record['run_id']}.tmp")
         with open(tmp, "w") as f:
             json.dump(record, f)
         try:
             while True:
                 try:
-                    os.link(tmp, self._record_path(version))
+                    os.link(tmp, self.path(version))
                     return version
                 except FileExistsError:
                     version += 1
@@ -88,7 +91,24 @@ class EncodedTable:
             os.unlink(tmp)
 
     def current_version(self) -> int:
-        return max(self._versions(), default=0)
+        return max(self.versions(), default=0)
+
+
+class EncodedTable:
+    def __init__(self, root: str):
+        self.root = root
+        self.data_dir = os.path.join(root, "data")
+        self.log = Log(os.path.join(root, "_log"), self._refuse_old_layout)
+
+    def _refuse_old_layout(self) -> None:
+        if os.path.exists(os.path.join(self.root, "metadata", "version-hint.text")):
+            raise ValueError(
+                f"{self.root} holds an encoded table in the old metadata/ "
+                "layout (version-hint + manifests), which is no longer "
+                "read. Re-encode it into a fresh root.")
+
+    def _records(self, table: str | None = None) -> list[dict]:
+        return [r for r in self.log.records() if table is None or r["table"] == table]
 
     # -- queries -------------------------------------------------------------
 
@@ -163,7 +183,7 @@ class EncodedTable:
         summary}; ``summary`` (the totals) is also in the record."""
         from pyspark.sql import Observation
 
-        version = self.current_version() + 1  # refuses an old layout before writing
+        version = self.log.current_version() + 1  # refuses an old layout before writing
         run_id = uuid.uuid4().hex[:12]
         out = os.path.join(self.data_dir, run_id)
         obs = Observation(f"commit-{run_id}")
@@ -186,7 +206,7 @@ class EncodedTable:
             "summary": {k: int(observed[k] or 0)
                         for k in ("chunks", "rows", "raw_bytes", "enc_bytes")},
         }
-        return {"version": self._append(record, version), "files": len(record["files"]),
+        return {"version": self.log.append(record, version), "files": len(record["files"]),
                 "partitions": len(record["part_ids"]), "summary": record["summary"]}
 
     def read(self, spark: SparkSession) -> DataFrame:
@@ -267,7 +287,7 @@ def encode_and_commit(
     # emptiness checked on the cheap filtered scan, not on the encoded
     # plan (isEmpty() on the latter would run encode work twice)
     if work.isEmpty():
-        return {"version": t.current_version(), "files": 0, "partitions": 0,
+        return {"version": t.log.current_version(), "files": 0, "partitions": 0,
                 "resumed": True}
     encoded = encode_dataframe(work.drop("__part_id"), cols, codec=codec,
                                chunk_rows=chunk_rows, table_name=table)

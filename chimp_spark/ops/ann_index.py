@@ -1,21 +1,37 @@
 """Persisted ANN indexes: build once, query by partition-pruned scans.
 
-The index-free helpers in ``similarity`` recompute signatures /
-centroid assignments over the whole corpus per query — fine for batch
-joins, wrong for query serving: at 100 TB every top-k would pay a full
-corpus scan. These builders write the index ONCE as a partitioned
-parquet table; queries read only the probed partitions (visible as
-``PartitionFilters`` on the index scan — pinned in tests/test_plans).
+The builders write the index ONCE as partitioned parquet; a top-k reads
+only the probed partitions (``PartitionFilters`` on the index scan,
+pinned in tests/test_plans), never the corpus.
 
-Layout (one JSON params manifest over parquet data):
+    <root>/_log/<N:08d>.json                  one record per build or append
+    <root>/index/run=<run_id>/t=../pfx=../    [lsh] one build's or append's data
+    <root>/index/run=<run_id>/list_id=../     [ivf]
+    <root>/index/run=<run_id>/_centroids.npy  [ivf] the build's coarse quantizer
 
-    <root>/ann_index.json     params manifest: kind, dim, nbits/tables/
-                              seed/n_pfx (lsh) or n_centroids (ivf),
-                              id/vec column names
-    <root>/centroids.npy      (ivf) the trained coarse quantizer
-    <root>/index/             parquet, partitioned by
-                                (t, pfx)   [lsh]  or
-                                (list_id)  [ivf]
+A run id is ``r<hex>``, so the ``run`` partition column infers as a
+string. A build record holds ``kind``, the params, ``fingerprint`` and
+``run_id``; an append record holds ``run_id``, ``fingerprint`` and
+``base``, the run id of the build it extends. A builder writes its run
+directory first, then links one record through the engine's commit log
+(``engine.manifest.Log``, put-if-absent).
+
+Read rule: the live index is the last build record plus the appends
+after it whose ``base`` is that build's run id, skipping an append whose
+fingerprint an earlier live record holds. Epoch = position in that list.
+Queries scan only the live runs' directories, so:
+
+- a run no record names (a crash before the link) is invisible, and a
+  retried append of its fingerprint is accepted;
+- a crash during a rebuild leaves the previous index live; a build
+  removes the earlier records' run directories only after its own
+  record has landed;
+- racing appends both land; of two with one fingerprint the later is
+  skipped and raises, and an append that finds a rebuild linked before
+  its record raises.
+
+A root in the older layout (a JSON manifest rewritten in place, no
+``_log/``) is refused on load, build and append: rebuild it.
 
 LSH partitioning: a 32-bit bucket space can't be one directory per
 bucket, so the partition key is ``pfx = bucket & (n_pfx-1)`` (bounded
@@ -32,8 +48,9 @@ candidates (cosine fold, JVM-side).
 
 from __future__ import annotations
 
-import json
 import os
+import shutil
+import uuid
 from collections.abc import Iterator
 from functools import reduce
 
@@ -42,96 +59,129 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..engine.manifest import Log
 from ._util import id_ddl
 from .similarity import (
     _dense_matrix,
     _hyperplanes,
+    _pairwise_cosine,
     cosine_topk,
     ivf_centroids,
     probe_buckets,
 )
 
-_MANIFEST = "ann_index.json"
-FORMAT_VERSION = 2  # v2: the index is partitioned by a leading epoch
-# directory (epoch=N/t=../pfx=.. or epoch=N/list_id=..) so a growing
-# corpus APPENDS an epoch instead of re-paying the full build; v1
-# (no epoch level) indexes still load and query. Loaders refuse
-# formats NEWER than this instead of misreading them.
+_CENTROIDS = "_centroids.npy"  # a leading "_" keeps Spark's file listing off it
 
 
-def _write_manifest(root: str, meta: dict) -> None:
-    os.makedirs(root, exist_ok=True)
-    tmp = os.path.join(root, f".{_MANIFEST}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f, indent=1)
-    os.replace(tmp, os.path.join(root, _MANIFEST))
+def _log(root: str) -> Log:
+    def refuse_old() -> None:
+        names = os.listdir(root) if os.path.isdir(root) else []
+        if any(n.endswith(".json") for n in names):
+            raise ValueError(
+                f"{root} holds an ANN index in the old layout (a JSON "
+                f"manifest rewritten in place, no _log/), which is no longer "
+                f"read. Delete it and rebuild the index."
+            )
+
+    return Log(os.path.join(root, "_log"), refuse_old)
 
 
-def load_manifest(root: str) -> dict:
-    with open(os.path.join(root, _MANIFEST)) as f:
-        meta = json.load(f)
-    if meta.get("format", 1) > FORMAT_VERSION:
-        raise ValueError(
-            f"index at {root} has format {meta['format']} > supported "
-            f"{FORMAT_VERSION}; rebuild or upgrade"
-        )
+def _run_dir(root: str, run_id: str) -> str:
+    return os.path.join(root, "index", f"run={run_id}")
+
+
+def _centroids_path(root: str, meta: dict) -> str:
+    return os.path.join(_run_dir(root, meta["epochs"][0]["run_id"]), _CENTROIDS)
+
+
+def _live(records: list[dict]) -> list[dict]:
+    """The last build record, then the appends after it that extend it;
+    an append whose fingerprint an earlier one of these holds is
+    skipped (a racing double-append must not double candidates)."""
+    builds = [i for i, r in enumerate(records) if "kind" in r]
+    if not builds:
+        return []
+    build = records[builds[-1]]
+    live, seen = [build], {build["fingerprint"]}
+    for r in records[builds[-1] + 1:]:
+        if r["base"] != build["run_id"]:
+            continue
+        if r["fingerprint"] is not None and r["fingerprint"] in seen:
+            continue
+        seen.add(r["fingerprint"])
+        live.append(r)
+    return live
+
+
+def _manifest(live: list[dict]) -> dict:
+    meta = {k: v for k, v in live[0].items() if k not in ("fingerprint", "run_id")}
+    meta["epochs"] = [{"epoch": i, "fingerprint": r["fingerprint"], "run_id": r["run_id"]}
+                      for i, r in enumerate(live)]
     return meta
 
 
-def _invalidate_manifest(root: str) -> None:
-    """Rebuild start-point: the stale manifest (old planes/seed/epoch
-    list) must die BEFORE its data does. A crash mid-rebuild then
-    leaves an unloadable directory — a clean refusal at load — instead
-    of a loadable index whose manifest params mismatch the new data,
-    which would return wrong neighbors with no error."""
-    try:
-        os.remove(os.path.join(root, _MANIFEST))
-    except FileNotFoundError:
-        pass
-
-
-def _epoch_dir(root: str, epoch: int) -> str:
-    return os.path.join(root, "index", f"epoch={epoch}")
+def load_manifest(root: str) -> dict:
+    """The live index's params plus ``epochs``: ``[{"epoch",
+    "fingerprint", "run_id"}]``, the build first. Raises
+    FileNotFoundError when no build has committed."""
+    live = _live(_log(root).records())
+    if not live:
+        raise FileNotFoundError(f"no ANN index at {root}: build one first")
+    return _manifest(live)
 
 
 def _read_index(spark: SparkSession, root: str, meta: dict) -> DataFrame:
-    """Scan ONLY the manifest-listed epoch directories. An orphan
-    epoch dir (data written by a crashed append whose manifest entry
-    never landed) must stay invisible: its fingerprint is unrecorded,
-    so the retried append is rightly accepted — scanning the orphan
-    too would double every one of its candidates. A PENDING entry is
-    included iff its directory exists: the publish rename is atomic,
-    so an existing dir is complete data that only missed the final
-    manifest rewrite. v1 indexes (no epoch level) read the whole dir."""
-    base = os.path.join(root, "index")
-    if "epochs" not in meta:
-        return spark.read.parquet(base)
-    paths = [
-        os.path.join(base, f"epoch={e['epoch']}")
-        for e in meta["epochs"]
-        if not e.get("pending") or os.path.isdir(_epoch_dir(root, e["epoch"]))
-    ]
-    if not paths:
-        raise ValueError(f"index at {root} has no committed epochs")
-    return spark.read.option("basePath", base).parquet(*paths)
+    """Scan ONLY the live runs' directories: a run no live record names
+    (crashed, overtaken or superseded) stays invisible."""
+    return spark.read.option("basePath", os.path.join(root, "index")).parquet(
+        *(_run_dir(root, e["run_id"]) for e in meta["epochs"]))
 
 
-def _stage_epoch_entry(root: str, meta: dict, epoch: int,
-                       fingerprint: str | None) -> None:
-    """Record the epoch in the manifest BEFORE the rename publishes
-    its data: the fingerprint must never exist on disk without being
-    findable by _next_epoch, or a retried append double-indexes."""
-    meta["epochs"] = meta.get("epochs", []) + [
-        {"epoch": epoch, "fingerprint": fingerprint, "pending": True}
-    ]
-    _write_manifest(root, meta)
+def _write_run(idx: DataFrame, root: str, partition_cols: list[str],
+               centroids: np.ndarray | None = None) -> str:
+    """Write one build's or append's data into a fresh run directory
+    and return its run id. Nothing reads it until a record names it."""
+    run_id = f"r{uuid.uuid4().hex[:12]}"
+    out = _run_dir(root, run_id)
+    try:
+        idx.write.partitionBy(*partition_cols).parquet(out)
+        if centroids is not None:
+            np.save(os.path.join(out, _CENTROIDS), centroids)
+    except BaseException:
+        shutil.rmtree(out, ignore_errors=True)
+        raise
+    return run_id
 
 
-def _commit_epoch_entry(root: str, meta: dict, epoch: int) -> None:
-    for e in meta["epochs"]:
-        if e["epoch"] == epoch:
-            e.pop("pending", None)
-    _write_manifest(root, meta)
+def _commit(root: str, record: dict) -> dict:
+    """Link a build or append record and return the manifest as of it.
+
+    A build then removes the run directories of every earlier record.
+    An append re-reads the log: if a rebuild landed before it, or an
+    earlier append of the same build already holds its fingerprint, its
+    record is dead under the read rule, so its run directory is removed
+    and it raises."""
+    log = _log(root)
+    log.append(record)
+    records = log.records()
+    mine = next(i for i, r in enumerate(records) if r["run_id"] == record["run_id"])
+    live = _live(records[:mine + 1])
+    if live[-1] is not records[mine]:
+        shutil.rmtree(_run_dir(root, record["run_id"]), ignore_errors=True)
+        if live[0]["run_id"] != record["base"]:
+            raise ValueError(
+                f"append refused: a rebuild of {root} committed before this "
+                f"append, whose data extended the replaced index; append "
+                f"again against the new index"
+            )
+        raise ValueError(
+            f"append refused: corpus fingerprint {record['fingerprint']!r} is "
+            f"already indexed (by a concurrent append)"
+        )
+    if "kind" in record:
+        for r in records[:mine]:
+            shutil.rmtree(_run_dir(root, r["run_id"]), ignore_errors=True)
+    return _manifest(live)
 
 
 def _norm_quantize_bits(quantize_bits: int | None) -> int | None:
@@ -214,123 +264,27 @@ def _sig_vec_kernel(df: DataFrame, dim: int, planes_by_t: list[np.ndarray],
     return sel.mapInArrow(kernel, out_ddl)
 
 
-def _next_epoch(
-    root: str, params: dict, fingerprint: str | None
-) -> tuple[dict, int]:
-    """Validate an append against the existing manifest: every index
-    parameter must match EXACTLY (appending with different planes /
-    centroids / prefix masks would silently corrupt recall), the index
-    must be epoch-partitioned (format >= 2), and a corpus fingerprint
-    already indexed is refused (appending the same files twice doubles
-    every candidate). Returns (manifest, new_epoch).
-
-    Pending markers from a crashed append are resolved here first: the
-    publish rename is atomic, so directory existence IS the commit bit
-    — an existing dir means the data published but the final manifest
-    rewrite was lost (promote: its fingerprint counts as indexed, so
-    the retry is refused); a missing dir means nothing published
-    (drop: the retry must be accepted)."""
+def _append_base(root: str, params: dict, fingerprint: str | None) -> dict:
+    """Validate an append against the live index and return its
+    manifest: every index parameter must match EXACTLY (appending with
+    different planes / centroids / prefix masks would silently corrupt
+    recall), and a corpus fingerprint already indexed is refused
+    (appending the same files twice doubles every candidate)."""
     meta = load_manifest(root)
-    if "epochs" not in meta:
-        raise ValueError(
-            f"index at {root} predates epoch partitioning (format "
-            f"{meta.get('format', 1)}): rebuild once to enable append"
-        )
-    resolved, changed = [], False
-    for e in meta["epochs"]:
-        if e.get("pending"):
-            changed = True
-            if not os.path.isdir(_epoch_dir(root, e["epoch"])):
-                continue
-            e = {k: v for k, v in e.items() if k != "pending"}
-        resolved.append(e)
-    if changed:
-        meta["epochs"] = resolved
-        _write_manifest(root, meta)
-    if "id_type" in params and "id_type" not in meta:
-        # manifest predates id_type (r5): validate against the STORED
-        # data's actual parquet schema instead of refusing every
-        # legacy append, and backfill the manifest
-        stored = _stored_id_type(root)
-        if stored is not None and stored != params["id_type"]:
-            raise ValueError(
-                f"append refused: id type {params['id_type']!r} != the "
-                f"index's stored {stored!r} (mixed id schemas under one "
-                f"index directory fail at query time)"
-            )
-        meta["id_type"] = stored or params["id_type"]
-        _write_manifest(root, meta)
     for k, v in params.items():
         if meta.get(k) != v:
             raise ValueError(
                 f"append refused: param {k}={v!r} != index's {meta.get(k)!r} "
                 f"(an index's planes/centroids are fixed at build time)"
             )
-    if fingerprint is not None:
-        done = {e.get("fingerprint") for e in meta["epochs"]}
-        if fingerprint in done:
-            raise ValueError(
-                f"append refused: corpus fingerprint {fingerprint!r} is "
-                f"already indexed (epoch "
-                f"{[e['epoch'] for e in meta['epochs'] if e.get('fingerprint') == fingerprint]})"
-            )
-    return meta, max(e["epoch"] for e in meta["epochs"]) + 1
-
-
-def _stored_id_type(root: str) -> str | None:
-    """DDL type of the persisted index's id column, read from one data
-    file's parquet schema; None when unreadable or unmapped (caller
-    then trusts the append's declared type)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    files = glob.glob(os.path.join(root, "index", "**", "*.parquet"),
-                      recursive=True)
-    if not files:
-        return None
-    try:
-        t = pq.read_schema(files[0]).field("id").type
-    except (OSError, KeyError):
-        return None
-    if pa.types.is_int64(t):
-        return "bigint"
-    if pa.types.is_int32(t):
-        return "int"
-    if pa.types.is_string(t) or pa.types.is_large_string(t):
-        return "string"
-    return None
-
-
-def _write_epoch(idx: DataFrame, root: str, epoch: int,
-                 partition_cols: list[str]) -> None:
-    """Crash-safe epoch write: the partitioned data lands in a staged
-    dir, then ONE directory rename publishes it as index/epoch=N —
-    queries never see a partially-written epoch. The caller records
-    the epoch in the manifest (pending) BEFORE calling this, so a
-    crash in the rename-to-manifest-commit window leaves a pending
-    entry that _next_epoch resolves by directory existence; a crash
-    earlier leaves only an invisible staging dir."""
-    import glob
-    import shutil
-    import uuid
-
-    # sweep staging dirs orphaned by a hard crash mid-write: the
-    # pending manifest entry is dropped on retry, but the multi-GB
-    # .staged dir itself would otherwise accumulate forever
-    # (single-writer assumption, like the rest of the protocol)
-    for d in glob.glob(os.path.join(root, ".epoch-*.staged")):
-        shutil.rmtree(d, ignore_errors=True)
-    staged = os.path.join(root, f".epoch-{epoch}-{uuid.uuid4().hex[:8]}.staged")
-    try:
-        idx.write.mode("overwrite").partitionBy(*partition_cols).parquet(staged)
-        os.makedirs(os.path.join(root, "index"), exist_ok=True)
-        final = os.path.join(root, "index", f"epoch={epoch}")
-        if os.path.exists(final):
-            raise FileExistsError(f"epoch dir already exists: {final}")
-        os.rename(staged, final)
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
+    done = [e["epoch"] for e in meta["epochs"]
+            if fingerprint is not None and e["fingerprint"] == fingerprint]
+    if done:
+        raise ValueError(
+            f"append refused: corpus fingerprint {fingerprint!r} is "
+            f"already indexed (epoch {done})"
+        )
+    return meta
 
 
 def build_lsh_index(
@@ -343,17 +297,18 @@ def build_lsh_index(
     """Build + persist a multi-table random-hyperplane index.
 
     One corpus pass computes every table's signatures; the write is
-    partitioned by (epoch, t, pfx) and sorted by bucket within
+    partitioned by (run, t, pfx) and sorted by bucket within
     partitions so queries prune directories first, then row groups.
-    Size (nbits, tables) with similarity.ann_params.
+    Size (nbits, tables) with similarity.ann_params. A rebuild leaves
+    the previous index live until its own record lands.
 
     ``append=True`` indexes ONLY ``df`` (the new vectors) as a new
     epoch — build cost proportional to the appended slice, not the
-    corpus; queries read every epoch transparently (epoch is just a
-    leading partition directory). Params must match the manifest
-    exactly; pass ``fingerprint`` (e.g. scan.units_fingerprint of the
-    appended files) to record what each epoch indexed and refuse
-    double-appends. Returns the manifest.
+    corpus; queries read every epoch transparently (each is one more
+    run directory). Params must match the live build exactly; pass
+    ``fingerprint`` (e.g. scan.units_fingerprint of the appended
+    files) to record what each epoch indexed and refuse double-appends.
+    Returns the manifest (see load_manifest).
 
     ``quantize_bits=8`` stores int8 codes instead of float32 vectors,
     serving the SAME queries: cosine ranking is invariant to the
@@ -386,30 +341,17 @@ def build_lsh_index(
         "id_type": id_ddl(df.select(id_col)),
     }
     if append:
-        meta, epoch = _next_epoch(root, params, fingerprint)
+        head = {"base": _append_base(root, params, fingerprint)["epochs"][0]["run_id"]}
     else:
-        import shutil
-
-        _invalidate_manifest(root)  # stale manifest dies before its data
-        shutil.rmtree(os.path.join(root, "index"), ignore_errors=True)
-        meta = {"format": FORMAT_VERSION, **params, "epochs": []}
-        epoch = 0
+        _log(root).versions()  # refuses an old layout before anything is written
+        head = params
     planes_by_t = [_hyperplanes(dim, nbits, seed + 1009 * t) for t in range(tables)]
     rows = _sig_vec_kernel(df, dim, planes_by_t, id_col, vec_col,
                            qbits=quantize_bits)
     idx = rows.withColumn("pfx", F.col("bucket").bitwiseAND(F.lit(n_pfx - 1)))
-    if append:
-        _stage_epoch_entry(root, meta, epoch, fingerprint)
-    _write_epoch(
-        idx.repartition("t", "pfx").sortWithinPartitions("bucket"),
-        root, epoch, ["t", "pfx"],
-    )
-    if append:
-        _commit_epoch_entry(root, meta, epoch)
-    else:
-        meta["epochs"] = [{"epoch": epoch, "fingerprint": fingerprint}]
-        _write_manifest(root, meta)
-    return meta
+    run_id = _write_run(idx.repartition("t", "pfx").sortWithinPartitions("bucket"),
+                        root, ["t", "pfx"])
+    return _commit(root, {**head, "fingerprint": fingerprint, "run_id": run_id})
 
 
 def _lsh_probes(meta: dict, query: list[float], multiprobe: int) -> dict[int, list[int]]:
@@ -466,13 +408,14 @@ def build_ivf_index(
     quantize_bits: int | None = None,
 ) -> dict:
     """Train the coarse quantizer (one bounded-sample pass), assign the
-    corpus (one pass), persist partitioned by (epoch, list_id). Queries
-    scan nprobe/n_centroids of the data — the IVF contract.
+    corpus (one pass), persist partitioned by (run, list_id) with the
+    centroids in the build's run directory. Queries scan
+    nprobe/n_centroids of the data — the IVF contract.
 
     ``append=True`` assigns ONLY ``df`` with the STORED centroids (the
     quantizer is fixed at build time — retraining would orphan prior
-    epochs' assignments) and publishes it as a new epoch; params must
-    match the manifest, and an already-indexed ``fingerprint`` is
+    epochs' assignments) and commits it as a new epoch; params must
+    match the live build, and an already-indexed ``fingerprint`` is
     refused."""
     from .. import _ship
 
@@ -485,32 +428,25 @@ def build_ivf_index(
         "id_type": id_ddl(df.select(id_col)),  # see build_lsh_index
     }
     if append:
-        meta, epoch = _next_epoch(root, params, fingerprint)
+        meta = _append_base(root, params, fingerprint)
         # validate the REQUESTED centroid count, not the actual one:
         # ivf_centroids clamps to the sample size, so an append issued
         # with the exact same arguments as the original build must not
         # be refused just because the stored count was clamped
-        stored_req = meta.get("n_centroids_requested", meta.get("n_centroids"))
-        if n_centroids != stored_req:
+        if n_centroids != meta["n_centroids_requested"]:
             raise ValueError(
                 f"append refused: param n_centroids={n_centroids!r} != "
-                f"index's requested {stored_req!r} (an index's centroids "
-                f"are fixed at build time)"
+                f"index's requested {meta['n_centroids_requested']!r} (an "
+                f"index's centroids are fixed at build time)"
             )
-        cent = np.load(os.path.join(root, "centroids.npy"))
+        cent = np.load(_centroids_path(root, meta))
+        head = {"base": meta["epochs"][0]["run_id"]}
     else:
-        import shutil
-
-        _invalidate_manifest(root)  # stale manifest dies before its data
-        shutil.rmtree(os.path.join(root, "index"), ignore_errors=True)
-        epoch = 0
+        _log(root).versions()  # refuses an old layout before anything is written
         cents = ivf_centroids(df, dim, n_centroids, sample, iters, id_col, vec_col, seed)
         cent = np.ascontiguousarray(cents, dtype=np.float32)
-        meta = {
-            "format": FORMAT_VERSION, **params,
-            "n_centroids": int(cent.shape[0]),
-            "n_centroids_requested": n_centroids, "epochs": [],
-        }
+        head = {**params, "n_centroids": int(cent.shape[0]),
+                "n_centroids_requested": n_centroids}
     sel = df.select(id_col, F.col(vec_col).cast("array<float>").alias(vec_col))
     qbits = quantize_bits
 
@@ -538,21 +474,9 @@ def build_ivf_index(
         f"id {_idt}, list_id int, vec array<tinyint>, vscale float"
         if qbits else f"id {_idt}, list_id int, vec array<float>",
     )
-    if not append:
-        # centroids land BEFORE the epoch data: the manifest is written
-        # last either way, so no ordering leaves a loadable-but-broken
-        # index behind
-        os.makedirs(root, exist_ok=True)
-        np.save(os.path.join(root, "centroids.npy"), cent)
-    if append:
-        _stage_epoch_entry(root, meta, epoch, fingerprint)
-    _write_epoch(rows.repartition("list_id"), root, epoch, ["list_id"])
-    if append:
-        _commit_epoch_entry(root, meta, epoch)
-    else:
-        meta["epochs"] = [{"epoch": epoch, "fingerprint": fingerprint}]
-        _write_manifest(root, meta)
-    return meta
+    run_id = _write_run(rows.repartition("list_id"), root, ["list_id"],
+                        None if append else cent)
+    return _commit(root, {**head, "fingerprint": fingerprint, "run_id": run_id})
 
 
 def ivf_index_topk(
@@ -567,7 +491,7 @@ def ivf_index_topk(
         raise ValueError(f"index at {root} is kind={meta['kind']!r}, not ivf")
     if len(query) != meta["dim"]:
         raise ValueError(f"query dim {len(query)} != index dim {meta['dim']}")
-    cent = np.load(os.path.join(root, "centroids.npy"))
+    cent = np.load(_centroids_path(root, meta))
     q = np.asarray(query, dtype=np.float32)
     qn = q / max(np.linalg.norm(q), 1e-12)
     probes = [int(x) for x in np.argsort(-(cent @ qn))[:nprobe]]
@@ -584,26 +508,6 @@ def ivf_index_topk(
 # ---------------------------------------------------------------------------
 
 _MAX_QUERY_BATCH = 100_000
-
-
-def _pairwise_cosine(vec_col: str, qvec_col: str):
-    """Cosine between two array columns — Catalyst fold, no UDF."""
-    dot = F.aggregate(
-        F.zip_with(
-            F.col(vec_col), F.col(qvec_col),
-            lambda a, b: a.cast("double") * b.cast("double"),
-        ),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
-    nv = F.sqrt(
-        F.aggregate(F.col(vec_col), F.lit(0.0),
-                    lambda acc, x: acc + x.cast("double") * x)
-    )
-    nq = F.sqrt(
-        F.aggregate(F.col(qvec_col), F.lit(0.0),
-                    lambda acc, x: acc + x.cast("double") * x)
-    )
-    return dot / (nv * nq)
 
 
 def _collect_queries(
@@ -746,7 +650,7 @@ def ivf_index_topk_batch(
     qrows = _collect_queries(queries, qid_col, vec_col, meta["dim"])
     if not qrows:
         raise ValueError("empty query batch")
-    cent = np.load(os.path.join(root, "centroids.npy"))
+    cent = np.load(_centroids_path(root, meta))
     qmat = np.asarray([q for _, q in qrows], dtype=np.float32)
     qnorm = qmat / np.maximum(
         np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12

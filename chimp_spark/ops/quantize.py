@@ -47,16 +47,3 @@ def quantize_embeddings(
     codes = F.transform(v, lambda x: F.round(x / F.col(scale_col)).cast("int"))
     return out.withColumn(q_col, codes)
 
-
-def dequantize_embeddings(
-    df: DataFrame,
-    q_col: str = "q",
-    scale_col: str = "scale",
-    out_col: str = "embedding_deq",
-) -> DataFrame:
-    """Inverse: x_hat = code * scale. Reconstruction error is bounded
-    by scale/2 = amax / (2^bits - 2) per element."""
-    return df.withColumn(
-        out_col,
-        F.transform(F.col(q_col), lambda c: (c * F.col(scale_col)).cast("float")),
-    )

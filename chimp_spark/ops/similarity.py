@@ -1,16 +1,18 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity over embedding columns (array<float>): exact top-k and
+the corpus-join path. Repeated ANN queries go through ``ann_index``,
+which persists these signatures / centroids once.
 
 - ``cosine_topk``: brute-force exact top-k for a query vector. The
   query is a broadcast literal; the dot product is a Catalyst
   ``aggregate(zip_with(...))`` fold, so the scan stays JVM-side,
   whole-stage-codegen'd, and embarrassingly parallel. This is the
   baseline/verifier.
-- ``lsh_bucketed_topk``: the scale path — random-hyperplane signatures
-  (signed projections, vectorized in Arrow batches) bucket vectors so
-  a query probes only its bucket (and optionally neighboring probes).
-  At 10^12 vectors the bucket join replaces the full scan.
+- ``rp_signatures_multi`` / ``ann_params``: random-hyperplane LSH
+  signatures over several tables in one corpus pass, sized for the
+  corpus; ``ivf_centroids`` trains IVF's coarse quantizer.
 - ``embedding_near_dup_pairs``: pairs with cosine >= threshold via
-  LSH buckets + exact verification (near-dup image/text dedup shape).
+  LSH buckets + exact verification (near-dup image/text dedup shape),
+  the corpus-join workload a batch of millions of queries really is.
 """
 
 from __future__ import annotations
@@ -49,6 +51,26 @@ def cosine_topk(
         .orderBy(F.desc("cos"), id_col)
         .limit(k)
     )
+
+
+def _pairwise_cosine(vec_col: str, qvec_col: str):
+    """Cosine between two array columns — Catalyst fold, no UDF."""
+    dot = F.aggregate(
+        F.zip_with(
+            F.col(vec_col), F.col(qvec_col),
+            lambda a, b: a.cast("double") * b.cast("double"),
+        ),
+        F.lit(0.0), lambda acc, x: acc + x,
+    )
+    nv = F.sqrt(
+        F.aggregate(F.col(vec_col), F.lit(0.0),
+                    lambda acc, x: acc + x.cast("double") * x)
+    )
+    nq = F.sqrt(
+        F.aggregate(F.col(qvec_col), F.lit(0.0),
+                    lambda acc, x: acc + x.cast("double") * x)
+    )
+    return dot / (nv * nq)
 
 
 def _dense_matrix(vecs: pa.Array, dim: int, n_rows: int) -> np.ndarray:
@@ -106,40 +128,15 @@ def _hyperplanes(dim: int, nbits: int, seed: int = 7) -> np.ndarray:
     return rng.standard_normal((nbits, dim)).astype(np.float32)
 
 
-def rp_signatures(
-    df: DataFrame, dim: int, nbits: int = 16,
-    id_col: str = "vec_id", vec_col: str = "embedding", seed: int = 7,
-) -> DataFrame:
-    """Random-hyperplane (SimHash-for-cosine) bucket signatures.
-    One matmul per Arrow batch — vectorized, deterministic."""
-    from .. import _ship
-
-    _ship.ensure(df.sparkSession)
-    planes = _hyperplanes(dim, nbits, seed)
-    sel = df.select(id_col, vec_col)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        weights = (1 << np.arange(nbits, dtype=np.int64))
-        for b in batches:
-            ids = b.column(0)
-            mat = _dense_matrix(b.column(1), dim, b.num_rows)
-            proj = mat @ planes.T  # (n, nbits)
-            sig = ((proj > 0) @ weights).astype(np.int64)
-            yield pa.RecordBatch.from_arrays([ids, pa.array(sig)], names=["id", "bucket"])
-
-    # the caller's id type rides through (string url keys work, same
-    # as the minhash/simhash/ann_index kernels)
-    return sel.mapInArrow(kernel, f"id {id_ddl(sel)}, bucket long")
-
-
 def rp_signatures_multi(
     df: DataFrame, dim: int, nbits: int, tables: int,
     id_col: str = "vec_id", vec_col: str = "embedding", seed: int = 7,
 ) -> DataFrame:
-    """(t, id, bucket) for ALL hyperplane tables in ONE corpus pass —
-    a per-table rp_signatures loop costs ``tables`` full scans; here
-    each Arrow batch is projected against every table's planes before
-    moving on (the matmuls dominate; the scan amortizes)."""
+    """Random-hyperplane (SimHash-for-cosine) bucket signatures
+    (t, id, bucket) for ALL hyperplane tables in ONE corpus pass: each
+    Arrow batch is projected against every table's planes before moving
+    on (the matmuls dominate; the scan amortizes). The caller's id type
+    rides through, so string url keys work."""
     from .. import _ship
 
     _ship.ensure(df.sparkSession)
@@ -175,40 +172,6 @@ def ann_params(n_vectors: int, target_bucket: int = 256, tables: int = 4) -> dic
 
     nbits = max(4, int(math.ceil(math.log2(max(n_vectors, 2) / target_bucket))))
     return {"nbits": nbits, "tables": tables}
-
-
-def lsh_bucketed_topk(
-    df: DataFrame, query: list[float], k: int = 10, nbits: int = 8,
-    id_col: str = "vec_id", vec_col: str = "embedding", seed: int = 7,
-    multiprobe: int = 1, tables: int = 1,
-) -> DataFrame:
-    """ANN: probe the query's bucket plus every bucket within
-    ``multiprobe`` bit flips in each of ``tables`` independent
-    hyperplane tables, union the candidates, rank exactly within
-    them. Recall at a given corpus size is tuned with (nbits, tables)
-    — see ann_params."""
-    from functools import reduce
-
-    dim = len(query)
-    q = np.asarray(query, dtype=np.float32)
-    weights = 1 << np.arange(nbits, dtype=np.int64)
-    conds = []
-    for t in range(tables):
-        planes = _hyperplanes(dim, nbits, seed + 1009 * t)
-        qsig = int(((q @ planes.T) > 0) @ weights)
-        conds.append(
-            (F.col("t") == t)
-            & F.col("bucket").isin(probe_buckets(qsig, nbits, multiprobe))
-        )
-    # ONE corpus pass computes every table's signatures (was one scan
-    # per table); for repeated queries use ops.ann_index instead
-    sigs = rp_signatures_multi(df, dim, nbits, tables, id_col, vec_col, seed)
-    cand_ids = (
-        sigs.filter(reduce(lambda a, b: a | b, conds))
-        .select(F.col("id").alias(id_col)).distinct()
-    )
-    cands = df.join(cand_ids, id_col)  # AQE broadcasts the small side
-    return cosine_topk(cands, query, k, id_col, vec_col)
 
 
 def ivf_centroids(
@@ -250,51 +213,6 @@ def ivf_centroids(
     return cent
 
 
-def ivf_assign(
-    df: DataFrame, centroids: np.ndarray,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, list_id): nearest-centroid assignment, one matmul+argmax
-    per Arrow batch. At scale this DataFrame is the IVF index — write
-    it partitioned by list_id so a query scans only its probe lists."""
-    from .. import _ship
-
-    _ship.ensure(df.sparkSession)
-    cent = np.ascontiguousarray(centroids, dtype=np.float32)
-    dim = cent.shape[1]
-    sel = df.select(id_col, vec_col)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            ids = b.column(0)
-            mat = _dense_matrix(b.column(1), dim, b.num_rows)
-            norms = np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            assign = ((mat / norms) @ cent.T).argmax(axis=1).astype(np.int32)
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(assign)], names=["id", "list_id"]
-            )
-
-    return sel.mapInArrow(kernel, f"id {id_ddl(sel)}, list_id int")
-
-
-def ivf_topk(
-    df: DataFrame, centroids: np.ndarray, query: list[float], k: int = 10,
-    nprobe: int = 4, id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF ANN: rank exactly within the query's ``nprobe`` nearest
-    inverted lists. Scan cost ~ nprobe/n_centroids of the corpus; the
-    recall/cost knob is (n_centroids, nprobe)."""
-    q = np.asarray(query, dtype=np.float32)
-    qn = q / max(np.linalg.norm(q), 1e-12)
-    probes = np.argsort(-(centroids @ qn))[:nprobe].tolist()
-    assign = ivf_assign(df, centroids, id_col, vec_col)
-    cand_ids = assign.filter(F.col("list_id").isin(probes)).select(
-        F.col("id").alias(id_col)
-    )
-    cands = df.join(cand_ids, id_col)  # AQE broadcasts the small side
-    return cosine_topk(cands, query, k, id_col, vec_col)
-
-
 def embedding_near_dup_pairs(
     df: DataFrame, threshold: float = 0.95, nbits: int = 12, dim: int = 64,
     id_col: str = "vec_id", vec_col: str = "embedding", seed: int = 7,
@@ -322,15 +240,8 @@ def embedding_near_dup_pairs(
         pairs.join(vecs.withColumnRenamed("id", "a").withColumnRenamed("v", "va"), "a")
         .join(vecs.withColumnRenamed("id", "b").withColumnRenamed("v", "vb"), "b")
     )
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x.cast("double") * y),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.col(c), F.lit(0.0), lambda acc, x: acc + x.cast("double") * x)
-    )
     return (
-        j.withColumn("cos", dot / (norm("va") * norm("vb")))
+        j.withColumn("cos", _pairwise_cosine("va", "vb"))
         .filter(F.col("cos") >= threshold)
         .select("a", "b", "cos")
     )

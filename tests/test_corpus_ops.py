@@ -133,7 +133,8 @@ def test_word_ngrams_short_text_guard(spark):
 
 def test_quantize_roundtrip_error_bound(spark, embeddings):
     q = quantize.quantize_embeddings(embeddings, bits=8)
-    dq = quantize.dequantize_embeddings(q)
+    dq = q.withColumn(  # x_hat = code * scale
+        "embedding_deq", F.transform("q", lambda c: (c * F.col("scale")).cast("float")))
     err = dq.select(
         F.max(
             F.array_max(

@@ -122,7 +122,7 @@ def test_manifest_commit_read_resume(spark, tmp_path):
     )
     assert stats["partitions"] >= 1
     t = engine.EncodedTable(root)
-    v1 = t.current_version()
+    v1 = t.log.current_version()
     assert v1 == 1
     enc = t.read(spark)
     dec = engine.decode_table(enc, ["n_nationkey", "n_name"], "n_nationkey long, n_name string")
@@ -132,7 +132,7 @@ def test_manifest_commit_read_resume(spark, tmp_path):
     # resume: second run encodes nothing new
     stats2 = engine.encode_and_commit(spark, df, root, "nation", chunk_rows=1024)
     assert stats2.get("resumed") or stats2["partitions"] == 0
-    assert engine.EncodedTable(root).current_version() == v1
+    assert engine.EncodedTable(root).log.current_version() == v1
 
 
 def test_compression_beats_raw_on_real_columns(spark):
@@ -970,7 +970,7 @@ def test_commit_runs_one_spark_job(spark, tmp_path):
     ).collect()[0].asDict()
     assert info["partitions"] == back.pop("partitions") == 4
     assert info["summary"] == back
-    record_path = os.path.join(t.log_dir, f"{info['version']:08d}.json")
+    record_path = t.log.path(info["version"])
     assert _json.load(open(record_path))["summary"] == back
     assert t.completed_part_ids("orders", mode="scan") == {0, 1, 2, 3}
 
@@ -1021,7 +1021,7 @@ def test_concurrent_commits_both_land(spark, tmp_path):
         th.join(300)
     assert not errors, errors
     assert sorted(info["version"] for info in got.values()) == [1, 2]
-    assert t.current_version() == 2
+    assert t.log.current_version() == 2
     assert len(t.data_files()) == sum(info["files"] for info in got.values())
     back = {r["table"]: r["count"] for r in t.read(spark).groupBy("table").count().collect()}
     assert back == want
@@ -1038,7 +1038,7 @@ def test_old_metadata_layout_is_refused(spark, tmp_path):
     (root / "metadata").mkdir(parents=True)
     (root / "metadata" / "version-hint.text").write_text("1")
     t = engine.EncodedTable(str(root))
-    for call in (t.current_version, t.data_files, lambda: t.read(spark),
+    for call in (t.log.current_version, t.data_files, lambda: t.read(spark),
                  lambda: t.completed_part_ids("t"), lambda: t.committed_epochs("t"),
                  lambda: t.commit(spark, spark.createDataFrame([], engine.ENC_DDL), "t")):
         with pytest.raises(ValueError, match="old metadata/ layout"):

@@ -565,7 +565,7 @@ def test_analytic_sizes_exact():
 
     for iv in arrays:
         assert L.for_bitpack_size(iv) == len(L.for_bitpack_encode(iv))
-        assert L.gcd_for_size(iv) == len(L.gcd_for_encode(iv))
+        assert L.gcd_for_stats(iv)[0] == len(L.gcd_for_encode(iv))
         assert L.delta_bp_size(iv) == len(L.delta_bp_encode(iv))
         assert L.ts_chimp_size(iv) == len(L.ts_chimp_encode(iv))
     floats = [

@@ -153,21 +153,27 @@ def test_cosine_topk_exact(spark, embeddings):
     assert cosines == sorted(cosines, reverse=True)
 
 
-def test_lsh_topk_recall(spark, embeddings):
+def test_lsh_topk_recall(spark, embeddings, tmp_path):
+    from chimp_spark.ops import ann_index
+
+    root = str(tmp_path / "lsh")
+    ann_index.build_lsh_index(embeddings, root, dim=64, nbits=6, tables=1)
     rows = embeddings.limit(5).collect()
     hits = 0
     for row in rows:
         q = [float(x) for x in row["embedding"]]
         exact = [r["vec_id"] for r in similarity.cosine_topk(embeddings, q, k=3).collect()]
-        ann = [r["vec_id"] for r in similarity.lsh_bucketed_topk(embeddings, q, k=3, nbits=6).collect()]
+        ann = [r["vec_id"] for r in ann_index.lsh_index_topk(spark, root, q, k=3).collect()]
         hits += len(set(exact[:1]) & set(ann))
     assert hits >= 4  # top-1 recall >= 80% with multiprobe
 
-def test_multi_table_ann_recall_pinned(spark, embeddings):
+def test_multi_table_ann_recall_pinned(spark, embeddings, tmp_path):
     """Recall >= 0.9 against cosine_topk ground truth at two corpus
     sizes, with planted near-neighbors (cos ~0.995) — the regime ANN
     is actually used in. A single narrow table misses these once
     buckets shrink; ann_params' multi-table setting must recover them."""
+    from chimp_spark.ops import ann_index
+
     base = embeddings.collect()
     rng_ = np.random.default_rng(3)
     for mult in (1, 4):  # two corpus sizes (n and 4n)
@@ -194,17 +200,15 @@ def test_multi_table_ann_recall_pinned(spark, embeddings):
         df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
         n = df.count()
         params = similarity.ann_params(n, target_bucket=64)
+        root = str(tmp_path / f"lsh_x{mult}")
+        ann_index.build_lsh_index(df, root, dim=64, nbits=params["nbits"],
+                                  tables=params["tables"])
         hits = want = 0
         for qi, ids in planted.items():
             q = rows[qi][1]
             exact = [r["vec_id"] for r in similarity.cosine_topk(df, q, k=4).collect()]
             assert set(ids) <= set(exact)  # ground truth sanity
-            ann = [
-                r["vec_id"]
-                for r in similarity.lsh_bucketed_topk(
-                    df, q, k=4, nbits=params["nbits"], tables=params["tables"]
-                ).collect()
-            ]
+            ann = [r["vec_id"] for r in ann_index.lsh_index_topk(spark, root, q, k=4).collect()]
             hits += len(set(exact) & set(ann))
             want += 4
         assert hits / want >= 0.9, f"recall {hits}/{want} at corpus {n}"
@@ -271,10 +275,12 @@ def test_simhash_rejects_underprovisioned_words(spark, docs):
         dedup.simhash_candidate_pairs(sigs, max_hamming=3, words=2).collect()
 
 
-def test_ivf_ann_recall(spark, embeddings):
+def test_ivf_ann_recall(spark, embeddings, tmp_path):
     """IVF coarse-quantizer ANN: planted near-neighbors (cos ~0.995)
     land in the same inverted list as their query with overwhelming
     probability; nprobe lists recover recall >= 0.9 vs exact top-k."""
+    from chimp_spark.ops import ann_index
+
     base = embeddings.collect()
     rng_ = np.random.default_rng(5)
     rows = [(int(r["vec_id"]), [float(x) for x in r["embedding"]]) for r in base]
@@ -292,18 +298,21 @@ def test_ivf_ann_recall(spark, embeddings):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
     cents = similarity.ivf_centroids(df, dim=64, n_centroids=16)
     assert cents.shape == (16, 64)
+    root = str(tmp_path / "ivf")
+    meta = ann_index.build_ivf_index(df, root, dim=64, n_centroids=16)
     hits = want = 0
     for qi, ids in planted.items():
         q = rows[qi][1]
         exact = [r["vec_id"] for r in similarity.cosine_topk(df, q, k=4).collect()]
         assert set(ids) <= set(exact)
-        ann = [r["vec_id"] for r in similarity.ivf_topk(df, cents, q, k=4, nprobe=4).collect()]
+        ann = [r["vec_id"] for r in
+               ann_index.ivf_index_topk(spark, root, q, k=4, nprobe=4).collect()]
         hits += len(set(exact) & set(ann))
         want += 4
     assert hits / want >= 0.9, f"ivf recall {hits}/{want}"
     # the probe actually restricts the scan: assignments are balancedish
-    counts = similarity.ivf_assign(df, cents).groupBy("list_id").count().collect()
-    assert len(counts) > 4
+    lists = ann_index._read_index(spark, root, meta).select("list_id").distinct().count()
+    assert lists > 4
     df.unpersist()
 
 
@@ -711,8 +720,8 @@ def test_chargram_dedup_end_to_end_no_space_corpus(spark, docs):
 def test_ann_index_append_epochs(spark, embeddings, tmp_path):
     """Appending a corpus slice must cost one epoch write (only the
     new vectors are signed/assigned), queries must see ALL epochs, and
-    the manifest must refuse changed params, double-appended
-    fingerprints, and appends to pre-epoch (format-1) indexes."""
+    an append must refuse changed params, double-appended fingerprints,
+    and roots in the old JSON-manifest layout."""
     import glob
 
     from chimp_spark.ops import ann_index
@@ -732,10 +741,8 @@ def test_ann_index_append_epochs(spark, embeddings, tmp_path):
         append=True, fingerprint="slice-2",
     )
     assert [e["epoch"] for e in meta["epochs"]] == [0, 1]
-    assert sorted(glob.glob(os.path.join(root, "index", "epoch=*"))) == [
-        os.path.join(root, "index", "epoch=0"),
-        os.path.join(root, "index", "epoch=1"),
-    ]
+    assert sorted(glob.glob(os.path.join(root, "index", "run=*"))) == sorted(
+        ann_index._run_dir(root, e["run_id"]) for e in meta["epochs"])
 
     # recall across epochs: planted neighbors live in BOTH halves
     hits = want = 0
@@ -760,10 +767,12 @@ def test_ann_index_append_epochs(spark, embeddings, tmp_path):
     # IVF: quantizer trained on slice 1, slice 2 assigned with the
     # STORED centroids — a centroid file byte-diff would break epoch 0
     ivf_root = str(tmp_path / "ivf_app")
-    ann_index.build_ivf_index(df1, ivf_root, dim=64, n_centroids=16)
-    cent_before = open(os.path.join(ivf_root, "centroids.npy"), "rb").read()
-    ann_index.build_ivf_index(df2, ivf_root, dim=64, n_centroids=16, append=True)
-    assert open(os.path.join(ivf_root, "centroids.npy"), "rb").read() == cent_before
+    built = ann_index.build_ivf_index(df1, ivf_root, dim=64, n_centroids=16)
+    cent_path = ann_index._centroids_path(ivf_root, built)
+    cent_before = open(cent_path, "rb").read()
+    appended = ann_index.build_ivf_index(df2, ivf_root, dim=64, n_centroids=16, append=True)
+    assert ann_index._centroids_path(ivf_root, appended) == cent_path
+    assert open(cent_path, "rb").read() == cent_before
     hits = want = 0
     for qi, _ids in planted.items():
         q = rows[qi][1]
@@ -774,18 +783,23 @@ def test_ann_index_append_epochs(spark, embeddings, tmp_path):
         want += 4
     assert hits / want >= 0.9, f"append-ivf recall {hits}/{want}"
 
-    # format-1 index (no epochs key): append refused with guidance
+    # a root in the old JSON-manifest layout: append and build refused
+    # with guidance, before anything is written
     import json as _json
 
     legacy = str(tmp_path / "legacy")
-    os.makedirs(legacy)
-    _json.dump({"format": 1, "kind": "lsh", "dim": 64, "nbits": params["nbits"],
+    os.makedirs(os.path.join(legacy, "index", "epoch=0"))
+    _json.dump({"format": 2, "kind": "lsh", "dim": 64, "nbits": params["nbits"],
                 "tables": params["tables"], "seed": 7, "n_pfx": 256,
-                "id_col": "vec_id", "vec_col": "embedding"},
+                "id_col": "vec_id", "vec_col": "embedding",
+                "epochs": [{"epoch": 0, "fingerprint": None}]},
                open(os.path.join(legacy, "ann_index.json"), "w"))
-    with pytest.raises(ValueError, match="rebuild"):
-        ann_index.build_lsh_index(df2, legacy, dim=64, nbits=params["nbits"],
-                                  tables=params["tables"], append=True)
+    for append in (True, False):
+        with pytest.raises(ValueError, match="rebuild"):
+            ann_index.build_lsh_index(df2, legacy, dim=64, nbits=params["nbits"],
+                                      tables=params["tables"], append=append)
+    assert sorted(os.listdir(legacy)) == ["ann_index.json", "index"]
+    assert os.listdir(os.path.join(legacy, "index")) == ["epoch=0"]
     full.unpersist()
 
 
@@ -935,16 +949,12 @@ def test_quantize_bits_validated_and_normalized(spark, embeddings, tmp_path):
 
 
 def test_ann_append_crash_windows_are_safe(spark, embeddings, tmp_path):
-    """The append/rebuild crash windows must fail SAFE (r4 advice):
-    (a) crash after the epoch rename but before the manifest commit
-    leaves a pending entry — the published data stays queryable AND
-    its fingerprint findable, so a retried append is refused instead
-    of double-indexing; (b) crash before anything published leaves a
-    pending entry with no directory — dropped, retry accepted; (c) a
-    crash mid-rebuild leaves an UNLOADABLE index (clean refusal), not
-    a loadable one whose manifest params mismatch the data."""
-    import json
-
+    """A crash anywhere in an append or a rebuild leaves the index that
+    was live before it: (a) an append whose run was written but never
+    linked is invisible, and its retry is accepted; (b) a crash in a
+    rebuild's write, or (c) between that write and its link, leaves the
+    old index returning the same top-k; (d) the rebuild that lands
+    removes the replaced runs."""
     from chimp_spark.ops import ann_index
 
     emb = embeddings.select("vec_id", "embedding")
@@ -952,65 +962,46 @@ def test_ann_append_crash_windows_are_safe(spark, embeddings, tmp_path):
     d2 = emb.filter(F.col("vec_id") >= 50)
     n1, n2 = d1.count(), d2.count()
     tables = 2
-
-    # (a) published-but-uncommitted epoch
-    root = str(tmp_path / "a")
+    root = str(tmp_path / "idx")
     ann_index.build_lsh_index(d1, root, dim=64, nbits=4, tables=tables,
                               fingerprint="s1")
-    ann_index.build_lsh_index(d2, root, dim=64, nbits=4, tables=tables,
-                              append=True, fingerprint="s2")
-    mpath = os.path.join(root, "ann_index.json")
-    meta = json.load(open(mpath))
-    meta["epochs"][1]["pending"] = True  # simulate crash post-rename
-    json.dump(meta, open(mpath, "w"))
-    # queries still see BOTH epochs (dir exists => data is complete)
-    assert ann_index._read_index(
-        spark, root, ann_index.load_manifest(root)
-    ).count() == tables * (n1 + n2)
-    with pytest.raises(ValueError, match="already indexed"):
-        ann_index.build_lsh_index(d2, root, dim=64, nbits=4, tables=tables,
-                                  append=True, fingerprint="s2")
-    # the refusal's pending-resolution pass promoted the entry
-    meta = json.load(open(mpath))
-    assert [e.get("pending") for e in meta["epochs"]] == [None, None]
-
-    # (b) staged-but-never-published epoch
-    root_b = str(tmp_path / "b")
-    ann_index.build_lsh_index(d1, root_b, dim=64, nbits=4, tables=tables,
-                              fingerprint="s1")
-    mpath_b = os.path.join(root_b, "ann_index.json")
-    meta = json.load(open(mpath_b))
-    meta["epochs"].append({"epoch": 1, "fingerprint": "s2", "pending": True})
-    json.dump(meta, open(mpath_b, "w"))
-    # queries skip the phantom epoch
-    assert ann_index._read_index(
-        spark, root_b, ann_index.load_manifest(root_b)
-    ).count() == tables * n1
-    # the retry is ACCEPTED (nothing was published) and commits cleanly
-    meta = ann_index.build_lsh_index(d2, root_b, dim=64, nbits=4,
-                                     tables=tables, append=True,
-                                     fingerprint="s2")
-    assert [(e["epoch"], e.get("pending")) for e in meta["epochs"]] == [
-        (0, None), (1, None)
-    ]
-
-    # (c) crash mid-rebuild: stale manifest must already be gone
-    root_c = str(tmp_path / "c")
-    ann_index.build_lsh_index(d1, root_c, dim=64, nbits=4, tables=tables)
 
     def boom(*a, **k):
-        raise RuntimeError("simulated crash during rebuild write")
+        raise RuntimeError("simulated crash")
 
-    real = ann_index._write_epoch
-    ann_index._write_epoch = boom
-    try:
-        with pytest.raises(RuntimeError, match="simulated"):
-            ann_index.build_lsh_index(d2, root_c, dim=64, nbits=4,
-                                      tables=tables)
-    finally:
-        ann_index._write_epoch = real
-    with pytest.raises(FileNotFoundError):
-        ann_index.load_manifest(root_c)
+    def crashing(name, **kw):
+        real = getattr(ann_index, name)
+        setattr(ann_index, name, boom)
+        try:
+            with pytest.raises(RuntimeError, match="simulated"):
+                ann_index.build_lsh_index(d2, root, dim=64, nbits=4, tables=tables, **kw)
+        finally:
+            setattr(ann_index, name, real)
+
+    # (a) the append's run is written, its record never linked
+    crashing("_commit", append=True, fingerprint="s2")
+    meta = ann_index.load_manifest(root)
+    assert len(os.listdir(os.path.join(root, "index"))) == 2  # the orphan run...
+    assert ann_index._read_index(spark, root, meta).count() == tables * n1  # ...is unread
+    meta = ann_index.build_lsh_index(d2, root, dim=64, nbits=4, tables=tables,
+                                     append=True, fingerprint="s2")
+    assert [(e["epoch"], e["fingerprint"]) for e in meta["epochs"]] == [(0, "s1"), (1, "s2")]
+    assert ann_index._read_index(spark, root, meta).count() == tables * (n1 + n2)
+
+    # (b) crash in the rebuild write, (c) crash between write and link
+    q = [float(x) for x in emb.filter(F.col("vec_id") == 60).collect()[0]["embedding"]]
+    before = ann_index.lsh_index_topk(spark, root, q, k=5).collect()
+    for name in ("_write_run", "_commit"):
+        crashing(name)
+        assert ann_index.load_manifest(root) == meta
+        assert ann_index.lsh_index_topk(spark, root, q, k=5).collect() == before
+
+    # (d) a landed rebuild serves only its own run and removed the old ones
+    rebuilt = ann_index.build_lsh_index(d2, root, dim=64, nbits=4, tables=tables)
+    assert len(rebuilt["epochs"]) == 1
+    assert ann_index._read_index(spark, root, rebuilt).count() == tables * n2
+    assert not any(os.path.exists(ann_index._run_dir(root, e["run_id"]))
+                   for e in meta["epochs"])
 
 
 def test_ann_append_id_type_validated(spark, embeddings, tmp_path):
@@ -1081,42 +1072,6 @@ def test_ann_storage_three_shapes_pinned(spark, embeddings, tmp_path):
     assert c <= 1.3 * n_vals
 
 
-def test_ann_append_legacy_manifest_without_id_type(spark, embeddings, tmp_path):
-    """Manifests written before id_type existed must accept a
-    type-matching append (validated against the stored parquet schema,
-    then backfilled) and refuse a type-changing one."""
-    import json
-
-    from chimp_spark.ops import ann_index
-
-    emb = embeddings.select("vec_id", "embedding")
-    d1 = emb.filter(F.col("vec_id") < 50)
-    d2 = emb.filter(F.col("vec_id") >= 50)
-    root = str(tmp_path / "legacy_idt")
-    ann_index.build_lsh_index(d1, root, dim=64, nbits=4, tables=1,
-                              fingerprint="s1")
-    mpath = os.path.join(root, "ann_index.json")
-    meta = json.load(open(mpath))
-    del meta["id_type"]  # simulate a pre-r5 manifest
-    json.dump(meta, open(mpath, "w"))
-    out = ann_index.build_lsh_index(d2, root, dim=64, nbits=4, tables=1,
-                                    append=True, fingerprint="s2")
-    assert out["id_type"] == "bigint"  # backfilled from the stored schema
-    assert len(out["epochs"]) == 2
-
-    # legacy manifest + TYPE-CHANGING append: still refused, via the
-    # stored schema
-    root2 = str(tmp_path / "legacy_idt2")
-    ann_index.build_lsh_index(d1, root2, dim=64, nbits=4, tables=1)
-    meta = json.load(open(os.path.join(root2, "ann_index.json")))
-    del meta["id_type"]
-    json.dump(meta, open(os.path.join(root2, "ann_index.json"), "w"))
-    keyed = d2.withColumn("vec_id", F.concat(F.lit("u"), F.col("vec_id")))
-    with pytest.raises(ValueError, match="stored"):
-        ann_index.build_lsh_index(keyed, root2, dim=64, nbits=4, tables=1,
-                                  append=True, fingerprint="s2")
-
-
 def test_probe_buckets_multibit_expansion():
     """multiprobe=m must expand to ALL buckets within m bit flips —
     the old code generated single-bit flips for every m >= 1
@@ -1136,25 +1091,29 @@ def test_probe_buckets_multibit_expansion():
         probe_buckets(0, 32, 3)  # C(32,3) alone is 4960
 
 
-def test_string_keyed_vector_ops(spark, embeddings):
-    """rp_signatures / lsh_bucketed_topk / ivf_assign must carry a
-    STRING id column through (they hardcoded 'id long' while every
-    text-dedup kernel already honored the caller's type)."""
-    from chimp_spark.ops.similarity import ivf_centroids, ivf_assign, rp_signatures
+def test_string_keyed_vector_ops(spark, embeddings, tmp_path):
+    """Signatures and both index kinds must carry a STRING id column
+    through (they once hardcoded 'id long' while every text-dedup
+    kernel already honored the caller's type)."""
+    from chimp_spark.ops import ann_index
+    from chimp_spark.ops.similarity import rp_signatures_multi
 
     keyed = embeddings.select(
         F.concat(F.lit("u"), F.col("vec_id")).alias("url"), "embedding"
     )
-    sigs = rp_signatures(keyed, dim=64, nbits=6, id_col="url").limit(5).collect()
-    assert all(isinstance(r["id"], str) for r in sigs)
+    sigs = rp_signatures_multi(keyed, dim=64, nbits=6, tables=1, id_col="url")
+    assert all(isinstance(r["id"], str) for r in sigs.limit(5).collect())
 
     row = keyed.limit(1).collect()[0]
     q = [float(x) for x in row["embedding"]]
-    top = similarity.lsh_bucketed_topk(keyed, q, k=3, nbits=6, id_col="url")
+    lsh_root = str(tmp_path / "lsh")
+    ann_index.build_lsh_index(keyed, lsh_root, dim=64, nbits=6, tables=1, id_col="url")
+    top = ann_index.lsh_index_topk(spark, lsh_root, q, k=3)
     assert top.limit(1).collect()[0]["url"].startswith("u")
 
-    cent = ivf_centroids(keyed, 64, 8, id_col="url")
-    asg = ivf_assign(keyed, cent, id_col="url").limit(5).collect()
+    ivf_root = str(tmp_path / "ivf")
+    meta = ann_index.build_ivf_index(keyed, ivf_root, dim=64, n_centroids=8, id_col="url")
+    asg = ann_index._read_index(spark, ivf_root, meta).select("id").limit(5).collect()
     assert all(isinstance(r["id"], str) for r in asg)
 
 

@@ -132,7 +132,7 @@ def test_ann_index_query_scans_only_probed_partitions(spark, tmp_path):
     assert "MapInArrow" not in plan
     # directory-level prune is real: only the probed list dirs are read
     import glob as _glob
-    n_dirs = len(_glob.glob(str(tmp_path / "ivf" / "index" / "epoch=0" / "list_id=*")))
+    n_dirs = len(_glob.glob(str(tmp_path / "ivf" / "index" / "run=*" / "list_id=*")))
     assert n_dirs > 2  # corpus spread over >nprobe lists
 
 

@@ -60,7 +60,7 @@ def test_stream_encode_incremental(spark, tmp_path):
     # epochs recorded; replaying the drained stream adds nothing
     epochs = engine.EncodedTable(root).committed_epochs("events")
     assert len(epochs) == 2
-    v = engine.EncodedTable(root).current_version()
+    v = engine.EncodedTable(root).log.current_version()
     stream = spark.readStream.schema(EVENTS_DDL).parquet(src_dir)
     encode_stream(spark, stream, root, "events", chunk_rows=256, checkpoint_dir=ckpt)
-    assert engine.EncodedTable(root).current_version() == v
+    assert engine.EncodedTable(root).log.current_version() == v

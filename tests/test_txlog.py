@@ -1,5 +1,6 @@
-"""EncodedTable's commit log without a Spark session: concurrent
-put-if-absent appends lose no record and never share a number."""
+"""The shared commit log without a Spark session: concurrent
+put-if-absent appends lose no record and never share a number, and
+EncodedTable's queries replay its records."""
 
 import json
 import os
@@ -21,8 +22,7 @@ t = EncodedTable(root)
 while not os.path.exists(go):
     time.sleep(0.001)
 for i in range(count):
-    t._append({"run_id": f"w{worker}-{i}", "table": "t", "worker": worker, "i": i},
-              t.current_version() + 1)
+    t.log.append({"run_id": f"w{worker}-{i}", "table": "t", "worker": worker, "i": i})
 """
 
 
@@ -33,7 +33,7 @@ def _record(run_id: str) -> dict:
 
 
 def _log(t: EncodedTable) -> dict[int, dict]:
-    return {v: json.load(open(t._record_path(v))) for v in t._versions()}
+    return {v: json.load(open(t.log.path(v))) for v in t.log.versions()}
 
 
 def test_concurrent_appends_lose_nothing(tmp_path):
@@ -51,21 +51,21 @@ def test_concurrent_appends_lose_nothing(tmp_path):
     assert sorted(log) == list(range(1, procs * per + 1))  # dense, none shared
     assert sorted((r["worker"], r["i"]) for r in log.values()) == [
         (w, i) for w in range(procs) for i in range(per)]  # every record present
-    assert t.current_version() == procs * per
-    assert sorted(os.listdir(t.log_dir)) == [f"{v:08d}.json" for v in sorted(log)]  # no temp left
+    assert t.log.current_version() == procs * per
+    assert sorted(os.listdir(t.log.dir)) == [f"{v:08d}.json" for v in sorted(log)]  # no temp left
 
 
 def test_append_at_taken_number_takes_next_free(tmp_path):
     t = EncodedTable(str(tmp_path / "table"))
-    assert t.current_version() == 0 and t.data_files() == []
-    assert [t._append(_record(f"r{v}"), v) for v in (1, 2, 4)] == [1, 2, 4]
-    assert t._append(_record("late"), 1) == 3  # 1 and 2 taken, 3 free
-    assert t._append(_record("later"), 3) == 5
+    assert t.log.current_version() == 0 and t.data_files() == []
+    assert [t.log.append(_record(f"r{v}"), v) for v in (1, 2, 4)] == [1, 2, 4]
+    assert t.log.append(_record("late"), 1) == 3  # 1 and 2 taken, 3 free
+    assert t.log.append(_record("later"), 3) == 5
     log = _log(t)
     assert {v: r["run_id"] for v, r in log.items()} == {
         1: "r1", 2: "r2", 3: "late", 4: "r4", 5: "later"}
-    assert t.current_version() == 5
-    assert sorted(os.listdir(t.log_dir)) == [f"{v:08d}.json" for v in range(1, 6)]
+    assert t.log.current_version() == 5
+    assert sorted(os.listdir(t.log.dir)) == [f"{v:08d}.json" for v in range(1, 6)]
 
 
 def test_queries_replay_records(tmp_path):
@@ -78,7 +78,7 @@ def test_queries_replay_records(tmp_path):
              files=["d/p0.parquet"]),
     ]
     for r in recs:
-        t._append(r, t.current_version() + 1)
+        t.log.append(r)
     assert t.completed_part_ids("t") == {0, 1, 2}  # the epoch commit is excluded
     assert t.completed_part_ids("t", mode="scan") == {0, 1}
     assert t.completed_scan_units("t", "fp") == {0, 1}
