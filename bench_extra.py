@@ -6,6 +6,7 @@ Modes:
     python bench_extra.py profile <table>      cProfile of the encode kernel
     python bench_extra.py decode [table ...]   per-column decode kernel timing
     python bench_extra.py floor                per-task Python worker floor
+    python bench_extra.py xor                  XOR codec kernels, C and numpy
 """
 
 from __future__ import annotations
@@ -144,6 +145,57 @@ def decode_bench(tables: list[str], repeats: int = 3) -> None:
         print(f"  TOTAL {tot*1e3:.1f} ms  {sum(raws.values())/tot/1e6:.1f} MB/s/core\n")
 
 
+def xor_bench(seed: int = 3, sensors: int = 2, repeats: int = 3) -> None:
+    """Single-core MB/s of each XOR codec's encode, size-only pass and
+    decode over the f64 chunks of ``sensors`` float_series sensors,
+    with the C kernels (``native``) and with the numpy/Python fallback
+    that CHIMP_SPARK_NO_NATIVE=1 selects (``fallback``, timed once)."""
+    from benchmark import gen
+    from chimp_spark import _native
+    from chimp_spark.codecs import xor_ref as X
+
+    t = gen.float_series(seed, sensors, CHUNK)
+    chunks = []
+    for col in t.column_names:
+        arr = t.column(col).combine_chunks()
+        if arr.type == pa.float64():
+            vals = arr.to_numpy(zero_copy_only=False).view(np.uint64)
+            chunks += [vals[o:o + CHUNK] for o in range(0, vals.size, CHUNK)]
+    raw = sum(c.nbytes for c in chunks)
+    one = [(c,) for c in chunks]
+
+    def mb_s(fn, args: list, reps: int) -> float:
+        best = float("inf")
+        for _ in range(reps):
+            t0 = time.perf_counter()
+            for a in args:
+                fn(*a)
+            best = min(best, time.perf_counter() - t0)
+        return raw / best / 1e6
+
+    print(f"== XOR kernels: {len(chunks)} float_series f64 chunks, "
+          f"{raw / 1e6:.1f} MB, MB/s single core ==")
+    print(f"  {'mode':9s} {'codec':8s} {'encode':>9s} {'size-only':>10s} {'decode':>9s}")
+    try:
+        for mode in ("native", "fallback"):
+            _native._FUNCS = None if mode == "native" else {}
+            if mode == "native" and _native.get() is None:
+                print("  native    (no C toolchain)")
+                continue
+            reps = repeats if mode == "native" else 1
+            for codec in ("chimp", "chimpn", "gorilla", "patas"):
+                enc = getattr(X, f"{codec}_encode")
+                dec = getattr(X, f"{codec}_decode")
+                size_bits = getattr(X, f"{codec}_size_bits")
+                e = mb_s(enc, one, reps)
+                s = mb_s(size_bits, one, reps)
+                d = mb_s(lambda w, n: dec(w, n_values=n),
+                         [(enc(c)[0], c.size) for c in chunks], reps)
+                print(f"  {mode:9s} {codec:8s} {e:9.1f} {s:10.1f} {d:9.1f}")
+    finally:
+        _native._FUNCS = None
+
+
 def _floor_probe(batches):
     """One task of the floor job: time importlib.invalidate_caches(),
     which PySpark runs before every task, and count the cached
@@ -210,3 +262,5 @@ if __name__ == "__main__":
         decode_bench(args)
     elif mode == "floor":
         floor()
+    elif mode == "xor":
+        xor_bench()

@@ -3,13 +3,18 @@
 The engine's own formats decode fully vectorized (xor_split, dict,
 RLE, FOR, delta). The *reference* bit formats, however, are
 sequentially self-delimiting (each record's width depends on its
-header — chimp.rs:242-270), and FSST's greedy longest-match walks
-byte-by-byte. Those two loops are the only places numpy can't help,
-so they get a ~60-line C implementation compiled on first use with
-the system toolchain and loaded via ctypes.
+header — chimp.rs:242-270), their encoders carry state from record to
+record (the leading-zeros state, Gorilla's window, the Chimp128/Patas
+ring index), and FSST's greedy longest-match walks byte-by-byte. Those
+loops run here as one sequential C pass each: the four XOR encoders
+(with a size-only mode for the selector's trials) and decoders, FSST
+compress/decode, and the fixed-width bit-pack walks. The source below
+is compiled on first use with the system toolchain and loaded via
+ctypes; the built library's name carries a hash of ``_SRC``, so an
+edited kernel is rebuilt rather than reused.
 
-Pure-Python fallbacks remain the reference implementations: if no C
-compiler is present (or CHIMP_SPARK_NO_NATIVE=1), everything still
+Pure-Python/numpy fallbacks remain the reference implementations: if no
+C compiler is present (or CHIMP_SPARK_NO_NATIVE=1), everything still
 works and the test suite exercises both paths for equality.
 """
 
@@ -182,40 +187,212 @@ long gorilla_dec(const uint64_t* w, long nwords, uint64_t* out, long max_out, in
     return cnt;
 }
 
-/* Chimp encoded size in BITS without materializing the stream — the
-   plan phase of chimp_encode (flag widths per chimp.rs:63-85) as one
-   sequential walk. Used by the selector's trial sizing: a trial needs
-   only the length, so the pack stage (and the vectorized plan's
-   clz/ctz passes) are pure overhead. Must stay bit-for-bit consistent
-   with chimp_encode's plan: same rounding table, same state update
-   (state <- rounded lead after every non-zero record). */
-long chimp_size_bits(const uint64_t* bits, long n) {
-    static const int ROUND[65] = {
-        0,0,0,0,0,0,0,0, 8,8,8,8, 12,12,12,12,
-        16,16,18,18,20,20,22,22,
-        24,24,24,24,24,24,24,24,24,24,24,24,24,24,24,24,
-        24,24,24,24,24,24,24,24,24,24,24,24,24,24,24,24,
-        24,24,24,24,24,24,24,24, 24};
-    if (n == 0) return 0;
-    long total = 64;
-    int state = -1;
-    uint64_t prev = bits[0];
-    for (long i = 1; i < n; i++) {
-        uint64_t x = bits[i] ^ prev;
-        prev = bits[i];
-        if (!x) { total += 2; continue; }
-        int lead = ROUND[__builtin_clzll(x)];
+/* ---- XOR-family encoders: one sequential plan-and-pack pass each ----
+   Each writes the same words as the numpy plan-then-pack encoder in
+   codecs/xor_ref.py (the fallback and test oracle) and returns the
+   exact stream length in bits. `close` appends the reference's close()
+   (chimp/chimpn/gorilla: a NaN sentinel value, chimp/chimpn also one 0
+   bit; patas: the 0xffff terminator and one 0 bit). With `size_only`
+   nothing is written and `out` is never touched: the selector's trials
+   need only the length. Otherwise `out` must hold the format's
+   worst-case record width times the record count (the caller sizes
+   it); it needs no zeroing, because words are stored whole. */
+
+typedef struct { uint64_t* out; long nw; uint64_t acc; int fill; long bits; } BW;
+
+/* MSB-first append of v's low nb bits (v < 2^nb, 0 <= nb <= 64): `acc`
+   holds the current word's `fill` pending bits in its low end; bits
+   above them are stale and shift out before the word is stored. */
+static inline __attribute__((always_inline))
+void bw_put(BW* b, uint64_t v, int nb, const int size_only) {
+    b->bits += nb;
+    if (size_only) return;
+    int room = 64 - b->fill;
+    if (nb < room) { b->acc = (b->acc << nb) | v; b->fill += nb; return; }
+    int rest = nb - room;
+    b->out[b->nw++] = (b->fill ? b->acc << room : 0) | (v >> rest);
+    b->acc = v;
+    b->fill = rest;
+}
+
+static inline __attribute__((always_inline))
+long bw_close(BW* b, const int size_only) {
+    if (!size_only && b->fill) b->out[b->nw++] = b->acc << (64 - b->fill);
+    return b->bits;
+}
+
+/* rounded leading zeros and their 3-bit code, indexed by clz (lib.rs:14-26) */
+static const int ROUND[65] = {
+    0,0,0,0,0,0,0,0, 8,8,8,8, 12,12,12,12, 16,16,18,18,20,20,22,22,
+    24,24,24,24,24,24,24,24,24,24,24,24,24,24,24,24,
+    24,24,24,24,24,24,24,24,24,24,24,24,24,24,24,24,
+    24,24,24,24,24,24,24,24, 24};
+static const uint64_t LENC[65] = {
+    0,0,0,0,0,0,0,0, 1,1,1,1, 2,2,2,2, 3,3,4,4,5,5,6,6,
+    7,7,7,7,7,7,7,7,7,7,7,7,7,7,7,7,
+    7,7,7,7,7,7,7,7,7,7,7,7,7,7,7,7,
+    7,7,7,7,7,7,7,7, 7};
+
+/* value i of the stream: the input, then close()'s NaN sentinel */
+#define VAL(i) ((i) < n ? bits[i] : NANSENT)
+#define PUT(v, nb) bw_put(&bw, (v), (nb), size_only)
+
+/* Chimp (chimp.rs:38-85): XOR against the previous value. */
+static inline __attribute__((always_inline))
+long chimp_core(const uint64_t* bits, long n, int close, uint64_t* out, const int size_only) {
+    long len = n + (close != 0);
+    if (len == 0) return 0;
+    BW bw = {out, 0, 0, 0, 0};
+    uint64_t prev = VAL(0);
+    PUT(prev, 64);
+    int state = -1;  /* u32::MAX, chimp.rs:24 */
+    for (long i = 1; i < len; i++) {
+        uint64_t v = VAL(i), x = v ^ prev;
+        prev = v;
+        if (!x) { PUT(0, 2); continue; }
+        int c = __builtin_clzll(x), lead = ROUND[c];
         if ((x & 0xFF) == 0) {
-            int tz = __builtin_ctzll(x);
-            total += 11 + (64 - lead - tz);
-        } else if (lead == state) {
-            total += 2 + (64 - lead);
+            int tz = __builtin_ctzll(x), center = 64 - lead - tz;
+            PUT((1ULL << 9) | (LENC[c] << 6) | (uint64_t)center, 11);
+            PUT(x >> tz, center);
         } else {
-            total += 5 + (64 - lead);
+            if (lead == state) PUT(2, 2);
+            else PUT((3ULL << 3) | LENC[c], 5);
+            PUT(x, 64 - lead);
         }
         state = lead;
     }
-    return total;
+    if (close) PUT(0, 1);
+    return bw_close(&bw, size_only);
+}
+
+/* Chimp128 (chimpn.rs:43-120): a 128-value ring reached through a
+   2^14-entry index of the last position holding each 14-bit LSB
+   pattern, zero-initialized (chimpn.rs:23). */
+static inline __attribute__((always_inline))
+long chimpn_core(const uint64_t* bits, long n, int close, uint64_t* out, const int size_only) {
+    static _Thread_local long idx[16384];
+    long len = n + (close != 0);
+    if (len == 0) return 0;
+    memset(idx, 0, sizeof(idx));
+    BW bw = {out, 0, 0, 0, 0};
+    uint64_t prev = VAL(0);
+    PUT(prev, 64);
+    int state = 0;  /* chimpn.rs:24 */
+    for (long i = 1; i < len; i++) {
+        uint64_t v = VAL(i), x = 0;
+        int l = (int)(v & 0x3fff);
+        long p = idx[l];
+        idx[l] = i;
+        int tz = 0, use = 0;
+        uint64_t ring;
+        if (i - 1 - p < 128) {
+            x = v ^ bits[p];
+            tz = x ? __builtin_ctzll(x) : 64;
+            use = tz > 13;  /* THRESHOLD, chimpn.rs:4,64 */
+        }
+        if (use) ring = (uint64_t)(p & 127);
+        else { x = v ^ prev; ring = (uint64_t)((i - 1) & 127); }
+        prev = v;
+        if (!x) { PUT(ring, 9); continue; }
+        int c = __builtin_clzll(x), lead = ROUND[c];
+        if (use) {
+            int center = 64 - lead - tz;
+            PUT(((128 | ring) << 9) | (LENC[c] << 6) | (uint64_t)center, 18);
+            PUT(x >> tz, center);
+        } else {
+            if (lead == state) PUT(2, 2);
+            else PUT((3ULL << 3) | LENC[c], 5);
+            PUT(x, 64 - lead);
+        }
+        state = lead;
+    }
+    if (close) PUT(0, 1);
+    return bw_close(&bw, size_only);
+}
+
+/* Gorilla (gorilla.rs:25-62): reuse the last (lead, trail) window when
+   the new XOR fits inside it; close() adds no trailing bit. */
+static inline __attribute__((always_inline))
+long gorilla_core(const uint64_t* bits, long n, int close, uint64_t* out, const int size_only) {
+    long len = n + (close != 0);
+    if (len == 0) return 0;
+    BW bw = {out, 0, 0, 0, 0};
+    uint64_t prev = VAL(0);
+    PUT(prev, 64);
+    int st_lead = 64, st_trail = 0;  /* u32::MAX: never <= a capped lead */
+    for (long i = 1; i < len; i++) {
+        uint64_t v = VAL(i), x = v ^ prev;
+        prev = v;
+        if (!x) { PUT(0, 1); continue; }
+        int lead = __builtin_clzll(x), trail = __builtin_ctzll(x);
+        if (lead > 31) lead = 31;  /* gorilla.rs:39-41 */
+        if (st_lead <= lead && st_trail <= trail) {
+            PUT(2, 2);
+            PUT(x >> st_trail, 64 - st_lead - st_trail);
+        } else {
+            int center = 64 - lead - trail;
+            PUT((3ULL << 11) | ((uint64_t)lead << 6) | (uint64_t)(center - 1), 13);
+            PUT(x >> trail, center);
+            st_lead = lead;
+            st_trail = trail;
+        }
+    }
+    return bw_close(&bw, size_only);
+}
+
+/* Patas (aligned.rs:42-83): byte-aligned records against a ring value
+   found through a 2^14-entry LSB index initialized to usize::MAX
+   (aligned.rs:24). `fixed` bumps the ambiguous sig_bytes == 1,
+   trail == 0 record to two payload bytes (see patas_encode). */
+static inline __attribute__((always_inline))
+long patas_core(const uint64_t* bits, long n, int close, int fixed, uint64_t* out,
+                const int size_only) {
+    static _Thread_local long idx[16384];
+    BW bw = {out, 0, 0, 0, 0};
+    if (n) {
+        memset(idx, 0xff, sizeof(idx));
+        PUT(bits[0], 64);
+        idx[bits[0] & 0x3fff] = 0;
+    }
+    for (long i = 1; i < n; i++) {
+        uint64_t v = bits[i];
+        int l = (int)(v & 0x3fff);
+        long p = idx[l];
+        idx[l] = i;
+        long ref = (p >= 0 && i - 1 - p < 128) ? p : i - 1;
+        uint64_t x = v ^ bits[ref];
+        uint64_t hdr = (uint64_t)(ref & 127) << 9;
+        if (!x) { PUT(hdr, 16); continue; }
+        int trail = __builtin_ctzll(x);
+        int sig = ((64 - trail - __builtin_clzll(x)) + 7) >> 3;
+        if (fixed && sig == 1 && trail == 0) sig = 2;
+        PUT(hdr | ((uint64_t)(sig - 1) << 6) | (uint64_t)trail, 16);
+        PUT(x >> trail, sig << 3);
+    }
+    if (close) { PUT(0xffff, 16); PUT(0, 1); }
+    return bw_close(&bw, size_only);
+}
+
+#undef PUT
+#undef VAL
+
+long chimp_enc(const uint64_t* bits, long n, int close, int size_only, uint64_t* out) {
+    return size_only ? chimp_core(bits, n, close, out, 1) : chimp_core(bits, n, close, out, 0);
+}
+
+long chimpn_enc(const uint64_t* bits, long n, int close, int size_only, uint64_t* out) {
+    return size_only ? chimpn_core(bits, n, close, out, 1) : chimpn_core(bits, n, close, out, 0);
+}
+
+long gorilla_enc(const uint64_t* bits, long n, int close, int size_only, uint64_t* out) {
+    return size_only ? gorilla_core(bits, n, close, out, 1) : gorilla_core(bits, n, close, out, 0);
+}
+
+long patas_enc(const uint64_t* bits, long n, int close, int fixed, int size_only,
+               uint64_t* out) {
+    return size_only ? patas_core(bits, n, close, fixed, out, 1)
+                     : patas_core(bits, n, close, fixed, out, 0);
 }
 
 /* dec_for verify+scale fused: out[i] = round(vals[i] * 10^k) with the
@@ -329,33 +506,26 @@ long dict_encode_block(const uint8_t* data, const int64_t* offs, long n,
     return card;
 }
 
-/* last-previous-occurrence of each value's 14 LSBs: the ring-buffer
-   candidate search of Chimp128/Patas as one O(n) table walk. */
-void prev_same_lsb(const uint64_t* bits, long n, int64_t dflt, int64_t* prev) {
-    static _Thread_local int64_t idx[16384];
-    for (int i = 0; i < 16384; i++) idx[i] = dflt;
-    for (long i = 0; i < n; i++) {
-        int l = (int)(bits[i] & 0x3fff);
-        prev[i] = idx[l];
-        idx[l] = i;
-    }
-}
-
 /* xor_split (the engine's own split-stream float codec): control
    byte = sig_bytes(5 bits)<<3 | trail_bytes(3 bits); payload bytes
-   little-endian. Same format as the numpy kernels. */
-long xs_enc(const uint64_t* bits, long n, uint8_t* ctrl, uint8_t* payload) {
+   little-endian. Same format as the numpy kernels. Returns the payload
+   length; with `size_only` nothing is written (the selector's trial). */
+long xs_enc(const uint64_t* bits, long n, int size_only, uint8_t* ctrl, uint8_t* payload) {
     if (n < 2) return 0;
     uint64_t prev = bits[0];
     long op = 0;
     for (long i = 1; i < n; i++) {
         uint64_t x = bits[i] ^ prev;
         prev = bits[i];
-        if (!x) { ctrl[i-1] = 7; continue; }  /* s=0, tz=7: canonical zero-xor control */
+        if (!x) {  /* s=0, tz=7: canonical zero-xor control */
+            if (!size_only) ctrl[i-1] = 7;
+            continue;
+        }
         int tz = __builtin_ctzll(x) >> 3; if (tz > 7) tz = 7;
         int lead = __builtin_clzll(x);
         int sig_bits = 64 - lead - (tz << 3);
         int s = (sig_bits + 7) >> 3;
+        if (size_only) { op += s; continue; }
         ctrl[i-1] = (uint8_t)((s << 3) | tz);
         uint64_t v = x >> (tz << 3);
         for (int b = 0; b < s; b++) { payload[op++] = (uint8_t)v; v >>= 8; }
@@ -376,35 +546,6 @@ long xs_dec(const uint8_t* ctrl, long m, const uint8_t* payload, uint64_t first,
         out[i + 1] = curr;
     }
     return p;
-}
-
-/* Sequential MSB-first bit packer for precomputed (header, payload)
-   field arrays — the pack stage of the XOR-family encoders. The bit
-   plan stays numpy-vectorized; this replaces only the final scatter. */
-long pack_hdr_pay(
-    uint64_t first, const uint64_t* hv, const int64_t* hw,
-    const uint64_t* pv, const int64_t* pw, long m, uint64_t* out)
-{
-    out[0] = first;
-    long pos = 64;
-    for (long i = 0; i < m; i++) {
-        for (int k = 0; k < 2; k++) {
-            int nb = (int)(k ? pw[i] : hw[i]);
-            if (!nb) continue;
-            uint64_t v = (k ? pv[i] : hv[i]);
-            if (nb < 64) v &= (1ULL << nb) - 1;
-            long w = pos >> 6; int s = 64 - (int)(pos & 63);
-            if (nb <= s) {
-                out[w] |= v << (s - nb);
-            } else {
-                int rest = nb - s;
-                out[w] |= v >> rest;
-                out[w + 1] |= v << (64 - rest);
-            }
-            pos += nb;
-        }
-    }
-    return pos;
 }
 
 /* Fixed-width bit-field unpack from big-endian words (the hot loop of
@@ -678,10 +819,14 @@ def _build() -> dict | None:
         fn.argtypes = [u64p, ctypes.c_long, u64p, ctypes.c_long, ctypes.c_int]
     lib.patas_dec.restype = ctypes.c_long
     lib.patas_dec.argtypes = [u8p, ctypes.c_long, u64p, ctypes.c_long, ctypes.c_int]
-    lib.prev_same_lsb.restype = None
-    lib.prev_same_lsb.argtypes = [u64p, ctypes.c_long, ctypes.c_int64, i64p]
-    lib.chimp_size_bits.restype = ctypes.c_long
-    lib.chimp_size_bits.argtypes = [u64p, ctypes.c_long]
+    for name in ("chimp_enc", "chimpn_enc", "gorilla_enc"):
+        fn = getattr(lib, name)
+        fn.restype = ctypes.c_long
+        fn.argtypes = [u64p, ctypes.c_long, ctypes.c_int, ctypes.c_int, u64p]
+    lib.patas_enc.restype = ctypes.c_long
+    lib.patas_enc.argtypes = [
+        u64p, ctypes.c_long, ctypes.c_int, ctypes.c_int, ctypes.c_int, u64p,
+    ]
     f64p = np.ctypeslib.ndpointer(dtype=np.float64, flags="C_CONTIGUOUS")
     lib.dec_verify_scale.restype = ctypes.c_int
     lib.dec_verify_scale.argtypes = [f64p, ctypes.c_long, ctypes.c_int, i64p]
@@ -698,13 +843,9 @@ def _build() -> dict | None:
         i64p, ctypes.c_long, ctypes.c_int64, ctypes.c_uint64, ctypes.c_int, u64p,
     ]
     lib.xs_enc.restype = ctypes.c_long
-    lib.xs_enc.argtypes = [u64p, ctypes.c_long, u8p, u8p]
+    lib.xs_enc.argtypes = [u64p, ctypes.c_long, ctypes.c_int, u8p, u8p]
     lib.xs_dec.restype = ctypes.c_long
     lib.xs_dec.argtypes = [u8p, ctypes.c_long, u8p, ctypes.c_uint64, u64p]
-    lib.pack_hdr_pay.restype = ctypes.c_long
-    lib.pack_hdr_pay.argtypes = [
-        ctypes.c_uint64, u64p, i64p, u64p, i64p, ctypes.c_long, u64p,
-    ]
     for fname in ("fsst_compress_block", "fsst_compress_block2"):
         fn = getattr(lib, fname)
         fn.restype = ctypes.c_long
@@ -718,8 +859,6 @@ def _build() -> dict | None:
         u8p, i64p, ctypes.c_long, u8p, i32p, u8p, ctypes.c_long, i64p,
     ]
     return {
-        "prev_same_lsb": lib.prev_same_lsb,
-        "chimp_size_bits": lib.chimp_size_bits,
         "dec_verify_scale": lib.dec_verify_scale,
         "dict_encode_block": lib.dict_encode_block,
         "bu_fixed": lib.bu_fixed,
@@ -727,7 +866,10 @@ def _build() -> dict | None:
         "bp_fixed_i64": lib.bp_fixed_i64,
         "xs_enc": lib.xs_enc,
         "xs_dec": lib.xs_dec,
-        "pack_hdr_pay": lib.pack_hdr_pay,
+        "chimp_enc": lib.chimp_enc,
+        "chimpn_enc": lib.chimpn_enc,
+        "gorilla_enc": lib.gorilla_enc,
+        "patas_enc": lib.patas_enc,
         "chimp_dec": lib.chimp_dec,
         "chimpn_dec": lib.chimpn_dec,
         "gorilla_dec": lib.gorilla_dec,

@@ -120,9 +120,12 @@ def bitunpack(buf: memoryview | bytes, n: int, width: int) -> np.ndarray:
 # The FOR family's output length is a pure function of (n, bit width):
 # header + ceil(n*width/64) big-endian words. The selector's trials
 # only need lengths, so computing them from min/max/gcd stats skips
-# the bit-packing entirely; ts_chimp needs a real plan pass but not
-# the pack (chimp_size_bits). Pinned equal to the encoders by
-# tests/test_light_codecs.py::test_analytic_sizes_exact.
+# the bit-packing entirely. ts_chimp and the XOR codecs need a real
+# plan pass but not the pack: their sizes (ts_chimp_size here,
+# *_block_size and xor_split_size next to the encoders) run the C
+# passes' size-only mode. Pinned equal to the encoders by
+# tests/test_light_codecs.py::test_analytic_sizes_exact and
+# ::test_chimp_size_bits_matches_encode.
 
 def _bp_nbytes(n: int, width: int) -> int:
     if width == 0 or n == 0:
@@ -185,11 +188,6 @@ def ts_chimp_size(vals: np.ndarray) -> int:
     shift = 64 - max(width, 1)
     total = X.chimp_size_bits(zz << np.uint64(shift))
     return 9 + ((total + 63) >> 6) * 8
-
-
-def chimp_block_size(vals: np.ndarray) -> int:
-    bits = vals.view(np.uint64) if vals.dtype != np.uint64 else vals
-    return 8 + ((X.chimp_size_bits(bits) + 63) >> 6) * 8
 
 
 # ---------------------------------------------------------------------------
@@ -451,7 +449,7 @@ def xor_split_encode(bits: np.ndarray) -> bytes:
         m = n - 1
         ctrl = np.empty(m, dtype=np.uint8)
         payload = np.empty(m * 8, dtype=np.uint8)
-        plen = nat["xs_enc"](bits, n, ctrl, payload)
+        plen = nat["xs_enc"](bits, n, 0, ctrl, payload)
         return head + ctrl.tobytes() + payload[:plen].tobytes()
     xor = bits[1:] ^ bits[:-1]
     m = n - 1
@@ -471,6 +469,22 @@ def xor_split_encode(bits: np.ndarray) -> bytes:
     col = np.arange(total, dtype=np.int64) - np.repeat(ends - s, s)
     payload = mat[row, col]
     return head + ctrl.tobytes() + payload.tobytes()
+
+
+def xor_split_size(bits: np.ndarray) -> int:
+    """len(xor_split_encode(bits)) without writing the streams: the
+    header, one control byte per value after the first, the payload."""
+    bits = np.ascontiguousarray(bits, dtype=np.uint64)
+    n = bits.size
+    from .. import _native
+
+    nat = _native.get()
+    if nat is None:
+        return len(xor_split_encode(bits))
+    if n <= 1:
+        return 12
+    unused = np.zeros(1, dtype=np.uint8)  # size-only: never written
+    return 12 + (n - 1) + int(nat["xs_enc"](bits, n, 1, unused, unused))
 
 
 def xor_split_decode(buf: memoryview, n_unused: int = 0) -> np.ndarray:
@@ -626,6 +640,14 @@ def _xorwords_encode(enc):
     return f
 
 
+def _xorwords_size(size_bits):
+    def f(vals: np.ndarray) -> int:
+        bits = vals.view(np.uint64) if vals.dtype != np.uint64 else vals
+        return 8 + ((size_bits(bits) + 63) >> 6) * 8
+
+    return f
+
+
 def _xorwords_decode(dec):
     def f(buf: memoryview, n: int, dtype: np.dtype) -> np.ndarray:
         words = np.frombuffer(buf, dtype=">u8", offset=8).astype("=u8")
@@ -636,14 +658,25 @@ def _xorwords_decode(dec):
     return f
 
 
+def patas_block_decode(buf: memoryview, n: int, dtype: np.dtype) -> np.ndarray:
+    # Patas is byte-aligned: its decoder reads the frame's big-endian
+    # bytes as stored, with no round trip through host-order words
+    if n == 0:
+        return np.zeros(0, dtype=dtype)
+    payload = np.frombuffer(buf, dtype=np.uint8, offset=8)
+    return X.patas_decode_bytes(payload, n_values=n).view(dtype)
+
+
 chimp_block_encode = _xorwords_encode(X.chimp_encode)
 chimp_block_decode = _xorwords_decode(X.chimp_decode)
+chimp_block_size = _xorwords_size(X.chimp_size_bits)
 chimpn_block_encode = _xorwords_encode(X.chimpn_encode)
 chimpn_block_decode = _xorwords_decode(X.chimpn_decode)
+chimpn_block_size = _xorwords_size(X.chimpn_size_bits)
 gorilla_block_encode = _xorwords_encode(X.gorilla_encode)
 gorilla_block_decode = _xorwords_decode(X.gorilla_decode)
 patas_block_encode = _xorwords_encode(X.patas_encode)
-patas_block_decode = _xorwords_decode(X.patas_decode)
+patas_block_size = _xorwords_size(X.patas_size_bits)
 
 
 # ---------------------------------------------------------------------------

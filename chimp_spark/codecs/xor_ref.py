@@ -1,22 +1,28 @@
 """XOR-family float codecs, bit-exact to the reference formats.
 
-Re-derives (from scratch, numpy plan-then-pack — NOT a translation of
-the Rust state machines) the four stream formats of the reference:
+The four stream formats of the reference:
 
-- Chimp      (/root/reference/src/chimp.rs:38-85, decoder 242-270)
-- Chimp128   (/root/reference/src/chimpn.rs:43-120, decoder 186-238)
-- Gorilla    (/root/reference/src/gorilla.rs:25-62, decoder 110-130)
-- Patas      (/root/reference/src/aligned.rs:42-83, decoder 144-176,
-              byte-aligned, "based off of the Patas compression
-              implemented in DuckDB" aligned.rs:6)
+- Chimp      (chimp.rs:38-85, decoder 242-270)
+- Chimp128   (chimpn.rs:43-120, decoder 186-238)
+- Gorilla    (gorilla.rs:25-62, decoder 110-130)
+- Patas      (aligned.rs:42-83, decoder 144-176, byte-aligned, "based
+              off of the Patas compression implemented in DuckDB"
+              aligned.rs:6)
 
-Encoding strategy follows the split the reference's own SIMD variant
-demonstrates (chimp.rs:87-151: vectorize xor/lead/trail analysis, then
-emit bits): we compute the entire bit plan as numpy arrays (XOR,
-leading/trailing-zero classes, flags, field widths — including the
+Each encoder is one sequential C pass (``chimp_enc`` and friends in
+:mod:`chimp_spark._native`) that plans and packs every record in one
+walk, like the reference's scalar loops. A size-only mode of the same
+pass returns the exact length without writing; the selector's trials
+use it (``*_size_bits``).
+
+The numpy encoders below are the fallback when no C compiler is present
+(or ``CHIMP_SPARK_NO_NATIVE=1``) and the tests' oracle; they write the
+same words. Re-derived from scratch (NOT a translation of the Rust state
+machines), they plan-then-pack, the split the reference's own SIMD
+variant demonstrates (chimp.rs:87-151): the whole bit plan as numpy
+arrays (XOR, leading/trailing-zero classes, flags, field widths, and the
 loop-carried leading-zeros state, which reduces to a forward-fill over
-the last non-zero-XOR record) and pack once via
-:func:`chimp_spark.bitio.pack_bits`.
+the last non-zero-XOR record), then one vectorized scatter.
 
 Two framings:
 
@@ -62,6 +68,40 @@ def _native_words_decode(
     if cnt < 0 or (n_values is not None and cnt != n_values):
         raise EOFError("stream truncated")
     return out[:cnt]
+
+
+# worst-case header + payload bits of one record, which sizes the C
+# encoders' output: chimp/chimpn flag 11 (5 + 64), gorilla control 11
+# (13 + 64), patas (16 + 64)
+_MAX_RECORD_BITS = {"chimp": 69, "chimpn": 69, "gorilla": 77, "patas": 80}
+_NO_OUT = np.zeros(1, dtype=np.uint64)  # size-only passes never write it
+
+
+def _native_encode(
+    nat, codec: str, bits: np.ndarray, reference_close: bool, *flags: int
+) -> tuple[np.ndarray, int]:
+    """One C pass of ``<codec>_enc``: (words, total) exactly as the
+    numpy encoder returns them. ``flags`` sit between the close and
+    size-only arguments (patas' ``fixed``)."""
+    n = bits.size
+    # first value, n records plus close()'s sentinel record, the tail
+    cap = (64 + _MAX_RECORD_BITS[codec] * (n + 1) + 17 + 63) >> 6
+    out = np.empty(cap, dtype=np.uint64)
+    total = int(nat[f"{codec}_enc"](bits, n, int(reference_close), *flags, 0, out))
+    nwords = (total + 63) >> 6
+    # reference close() reports the padded word length (chimp.rs:199)
+    return out[:nwords], (nwords * 64 if reference_close else total)
+
+
+def _size_bits(codec: str, encode, bits: np.ndarray, *flags: int) -> int:
+    """Framed-mode total bits of ``encode(bits)``: the C pass's
+    size-only mode, else the numpy encoder's own total."""
+    bits = np.ascontiguousarray(bits, dtype=np.uint64)
+    nat = _native.get()
+    if nat is None:
+        return encode(bits)[1]
+    return int(nat[f"{codec}_enc"](bits, bits.size, 0, *flags, 1, _NO_OUT))
+
 
 # NaN sentinel terminator, lib.rs:12
 NAN_SENTINEL = np.uint64(0x7FF8000000000000)
@@ -125,18 +165,6 @@ def _pack_records(
     zero bits (the reference's trailing write_bit(0), chimp.rs:197).
     """
     m = hdr_w.size
-    nat = _native.get()
-    if nat is not None and m:
-        total = 64 + int(hdr_w.sum() + pay_w.sum()) + tail_zero_bits
-        nwords = (total + 63) >> 6
-        out = np.zeros(nwords + 1, dtype=np.uint64)
-        nat["pack_hdr_pay"](
-            int(first),
-            np.ascontiguousarray(hdr_v), np.ascontiguousarray(hdr_w),
-            np.ascontiguousarray(pay_v), np.ascontiguousarray(pay_w),
-            m, out,
-        )
-        return out[:nwords], total
     off = np.empty(m + 1, dtype=np.int64)
     off[0] = 64
     np.cumsum(hdr_w + pay_w, out=off[1:])
@@ -163,11 +191,6 @@ def _prev_same_lsb(bits: np.ndarray, default: int) -> np.ndarray:
     scope) for Patas' ``Encoder::new`` (aligned.rs:24).
     """
     n = bits.size
-    nat = _native.get()
-    if nat is not None:
-        prev = np.empty(n, dtype=np.int64)
-        nat["prev_same_lsb"](np.ascontiguousarray(bits), n, default, prev)
-        return prev
     lsb = (bits & _U64(0x3FFF)).astype(np.int64)
     order = np.argsort(lsb, kind="stable")
     prev = np.full(n, default, dtype=np.int64)
@@ -189,6 +212,9 @@ def chimp_encode(bits: np.ndarray, reference_close: bool = False) -> tuple[np.nd
     the reported length is the padded word length * 64 (chimp.rs:199).
     """
     bits = np.ascontiguousarray(bits, dtype=np.uint64)
+    nat = _native.get()
+    if nat is not None:
+        return _native_encode(nat, "chimp", bits, reference_close)
     if reference_close:
         bits = np.append(bits, NAN_SENTINEL)
     n = bits.size
@@ -258,40 +284,10 @@ def chimp_encode(bits: np.ndarray, reference_close: bool = False) -> tuple[np.nd
 
 
 def chimp_size_bits(bits: np.ndarray) -> int:
-    """Total payload bits chimp_encode would produce, WITHOUT packing.
-
-    The selector's trials only need the length; this runs just the
-    plan (C single pass when available, else the vectorized numpy plan
-    minus the scatter). Pinned equal to chimp_encode's reported total
-    by tests/test_native_parity.py."""
-    bits = np.ascontiguousarray(bits, dtype=np.uint64)
-    n = bits.size
-    if n == 0:
-        return 0
-    nat = _native.get()
-    if nat is not None:
-        return int(nat["chimp_size_bits"](bits, n))
-    xor = bits[1:] ^ bits[:-1]
-    m = xor.size
-    if m == 0:
-        return 64
-    lead_u = LEADING_ROUND[np.minimum(clz64(xor), _U64(63)).astype(np.int64)]
-    tz = ctz64(xor).astype(np.int64)
-    lead = lead_u.astype(np.int64)
-    nz = xor != _U64(0)
-    low8 = (xor & _U64(0xFF)) == _U64(0)
-    last_nz = np.maximum.accumulate(np.where(nz, np.arange(m), -1))
-    prev_nz = np.empty(m, dtype=np.int64)
-    prev_nz[0] = -1
-    prev_nz[1:] = last_nz[:-1]
-    state = np.where(prev_nz >= 0, lead[np.maximum(prev_nz, 0)], np.int64(-1))
-    f1 = nz & low8
-    f23 = nz & ~low8
-    f3 = f23 & (lead != state)
-    center1 = np.int64(64) - lead - tz
-    hdr_w = 2 + f1 * np.int64(9) + f3 * np.int64(3)
-    pay_w = f1 * center1 + f23 * (np.int64(64) - lead)
-    return 64 + int(hdr_w.sum() + pay_w.sum())
+    """Total bits chimp_encode(bits) reports, without writing the
+    stream: the selector's trials and the analytic ts_chimp size need
+    only the length."""
+    return _size_bits("chimp", chimp_encode, bits)
 
 
 def chimp_decode(
@@ -419,6 +415,9 @@ def gorilla_encode(bits: np.ndarray, reference_close: bool = False) -> tuple[np.
     vectorized pass.
     """
     bits = np.ascontiguousarray(bits, dtype=np.uint64)
+    nat = _native.get()
+    if nat is not None:
+        return _native_encode(nat, "gorilla", bits, reference_close)
     if reference_close:
         bits = np.append(bits, NAN_SENTINEL)
     n = bits.size
@@ -474,6 +473,11 @@ def gorilla_encode(bits: np.ndarray, reference_close: bool = False) -> tuple[np.
     if reference_close:
         total_bits = words.size * 64  # gorilla.rs:83
     return words, total_bits
+
+
+def gorilla_size_bits(bits: np.ndarray) -> int:
+    """Total bits gorilla_encode(bits) reports, without writing."""
+    return _size_bits("gorilla", gorilla_encode, bits)
 
 
 def gorilla_decode(
@@ -578,6 +582,9 @@ def chimpn_encode(bits: np.ndarray, reference_close: bool = False) -> tuple[np.n
     is agnostic (the chosen index is explicit in the stream).
     """
     bits = np.ascontiguousarray(bits, dtype=np.uint64)
+    nat = _native.get()
+    if nat is not None:
+        return _native_encode(nat, "chimpn", bits, reference_close)
     if reference_close:
         bits = np.append(bits, NAN_SENTINEL)
     n = bits.size
@@ -657,6 +664,11 @@ def chimpn_encode(bits: np.ndarray, reference_close: bool = False) -> tuple[np.n
     if reference_close:
         total = words.size * 64  # chimpn.rs:154
     return words, total
+
+
+def chimpn_size_bits(bits: np.ndarray) -> int:
+    """Total bits chimpn_encode(bits) reports, without writing."""
+    return _size_bits("chimpn", chimpn_encode, bits)
 
 
 def chimpn_decode(
@@ -763,6 +775,9 @@ def patas_encode(
     aligned.rs:24): unseen LSB -> out of scope -> previous value.
     """
     bits = np.ascontiguousarray(bits, dtype=np.uint64)
+    nat = _native.get()
+    if nat is not None:
+        return _native_encode(nat, "patas", bits, reference_close, int(fixed))
     n = bits.size
     if n == 0:
         if reference_close:
@@ -819,34 +834,48 @@ def patas_encode(
     return words, total_bits
 
 
+def patas_size_bits(bits: np.ndarray) -> int:
+    """Total bits patas_encode(bits) (``fixed=True``) reports, without
+    writing."""
+    return _size_bits("patas", patas_encode, bits, 1)
+
+
 def patas_decode(
     words: np.ndarray, n_values: int | None = None, sentinel: bool = False
 ) -> np.ndarray:
-    """Decode Patas (aligned.rs:144-176 with the fixed-format rule).
+    """Decode Patas (aligned.rs:144-176 with the fixed-format rule)."""
+    return patas_decode_bytes(words.astype(">u8").view(np.uint8), n_values, sentinel)
+
+
+def patas_decode_bytes(
+    buf8: np.ndarray, n_values: int | None = None, sentinel: bool = False
+) -> np.ndarray:
+    """Decode Patas from the stream's big-endian bytes, the layout a
+    frame stores, so the block decoder hands its payload over as is.
 
     Sequential scan (payload width chains through the 16-bit metadata),
     ring of decoded values like Chimp128.
     """
     if (n_values is None) == (not sentinel):
         raise ValueError("exactly one of n_values / sentinel required")
+    if n_values is not None and n_values == 0:
+        return np.zeros(0, dtype=np.uint64)
     nat = _native.get()
     if nat is not None:
-        if n_values is not None and n_values == 0:
-            return np.zeros(0, dtype=np.uint64)
-        buf8 = np.frombuffer(words.astype(">u8").tobytes(), dtype=np.uint8)
+        buf8 = np.ascontiguousarray(buf8, dtype=np.uint8)
         max_out = n_values if n_values is not None else (buf8.size - 8) // 2 + 2
         out = np.empty(max(max_out, 1), dtype=np.uint64)
         cnt = nat["patas_dec"](buf8, buf8.size, out, max_out, 1 if sentinel else 0)
         if cnt < 0 or (n_values is not None and cnt != n_values):
             raise EOFError("patas stream truncated")
         return out[:cnt]
-    if n_values is not None and n_values == 0:
-        return np.zeros(0, dtype=np.uint64)
     # the Patas stream is byte-aligned throughout (64-bit first value,
     # 16-bit metadata, whole-byte payloads — aligned.rs:65-73), so
     # decode walks a plain byte string: ~5x faster than a bit cursor
-    buf = words.astype(">u8").tobytes()
+    buf = buf8.tobytes()
     nbytes = len(buf)
+    if nbytes < 8:
+        raise EOFError("patas stream truncated")
     first = int.from_bytes(buf[:8], "big")
     out = [first]
     ring = list(range(128))

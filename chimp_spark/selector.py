@@ -2,16 +2,19 @@
 "optimizer" — SURVEY.md §4: no Catalyst extension needed, selection is
 a pure driver-side/worker-side function over sampled statistics).
 
-Strategy: trial-encode a bounded sample (head + middle slices, so
-sorted prefixes don't bias) with every applicable codec, score by
+Strategy: size a bounded sample (head + middle slices, so sorted
+prefixes don't bias) with every applicable codec, score by
 
     score = sampled_bytes * (1 + ALPHA * (speed_rank - 1))
 
 where speed_rank reflects relative encode+decode cost. The cheapest
 plausible codecs are screened first with O(1) stats (constant? run
 count? sortedness? cardinality?) so the expensive trials only run when
-they can win. Deterministic — same chunk always picks the same codec;
-the decision and per-candidate sizes are recorded in lineage.
+they can win. The XOR and FOR families compute their exact encoded
+length without writing it; the rest (rle, dec_for, bss, the string
+codecs) trial-encode. Deterministic — same chunk always picks the
+same codec; the decision and per-candidate sizes are recorded in
+lineage.
 """
 
 from __future__ import annotations
@@ -120,15 +123,17 @@ def choose_codec(
                 # plain/rle/xor_split would regress near-decimal chunks
                 # to a clearly worse codec
                 cands["chimp"] = L.chimp_block_size(sample)
-                cands["patas"] = len(L.patas_block_encode(sample))
-                cands["chimpn"] = len(L.chimpn_block_encode(sample))
+                cands["patas"] = L.patas_block_size(sample)
+                cands["chimpn"] = L.chimpn_block_size(sample)
                 cands["bss"] = len(L.bss_encode(sample))
-            cands["xor_split"] = len(L.xor_split_encode(sample.view(np.uint64)))
+            cands["xor_split"] = L.xor_split_size(sample.view(np.uint64))
         else:
-            cands["xor_split"] = len(L.xor_split_encode(sample.view(np.uint64)))
+            # XOR trials are exact size-only passes, equal to the
+            # encoded lengths; bss needs its deflate, so it encodes
+            cands["xor_split"] = L.xor_split_size(sample.view(np.uint64))
             cands["chimp"] = L.chimp_block_size(sample)
-            cands["patas"] = len(L.patas_block_encode(sample))
-            cands["chimpn"] = len(L.chimpn_block_encode(sample))
+            cands["patas"] = L.patas_block_size(sample)
+            cands["chimpn"] = L.chimpn_block_size(sample)
             cands["bss"] = len(L.bss_encode(sample))
     elif dtype == "f32":
         # XOR family is 64-bit (lib.rs:44-50); f32 embedding payloads

@@ -578,9 +578,12 @@ def test_analytic_sizes_exact():
 
 
 def test_chimp_size_bits_matches_encode():
-    """chimp_size_bits (C and numpy twin) == chimp_encode's reported
-    total payload bits on adversarial inputs (zero XORs, state churn,
-    low-byte-zero flag-01 records)."""
+    """Each XOR codec's size-only length (the C pass's size-only mode,
+    and the numpy encoder's total without native code) == its encoder's
+    reported total on adversarial inputs (zero XORs, state churn,
+    low-byte-zero flag-01 records); the selector's block and xor_split
+    sizes == the encoded lengths."""
+    from chimp_spark.codecs import light as L
     from chimp_spark.codecs import xor_ref as X
 
     rng = np.random.default_rng(7)
@@ -592,19 +595,25 @@ def test_chimp_size_bits_matches_encode():
         np.zeros(100, dtype=np.uint64),
         rng.integers(0, 2**63, 2000, dtype=np.int64).view(np.uint64),
     ]
-    for bits in cases:
-        _words, total = X.chimp_encode(bits)
-        assert X.chimp_size_bits(bits) == total
 
+    def check():
+        for bits in cases:
+            for codec in ("chimp", "chimpn", "gorilla", "patas"):
+                _words, total = getattr(X, f"{codec}_encode")(bits)
+                assert getattr(X, f"{codec}_size_bits")(bits) == total, codec
+            for codec in ("chimp", "chimpn", "patas"):
+                want = len(getattr(L, f"{codec}_block_encode")(bits))
+                assert getattr(L, f"{codec}_block_size")(bits) == want, codec
+            assert L.xor_split_size(bits) == len(L.xor_split_encode(bits))
+
+    check()
     # numpy twin parity (no-native path)
     import chimp_spark._native as N
 
     saved = N._FUNCS
     try:
         N._FUNCS = {}
-        for bits in cases:
-            _words, total = X.chimp_encode(bits)
-            assert X.chimp_size_bits(bits) == total
+        check()
     finally:
         N._FUNCS = saved
 

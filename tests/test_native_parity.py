@@ -40,6 +40,118 @@ def test_decode_native_equals_python(codec, no_native, monkeypatch):
         np.testing.assert_array_equal(nat, bits)
 
 
+def _edge_cases():
+    """Inputs that steer every branch of the XOR encoders' plans."""
+    rng = np.random.default_rng(11)
+    specials = np.array(
+        [0.0, -0.0, np.inf, -np.inf, 5e-324, -5e-324, 2.2e-308, 1.0, -1.0],
+    ).view(np.uint64)
+    nans = np.concatenate([
+        np.uint64(0x7FF8_0000_0000_0000) | rng.integers(1, 2**51, 50, dtype=np.uint64),
+        np.array([0x7FF0_0000_0000_0001, 0xFFF8_0000_0000_0000,
+                  0xFFFF_FFFF_FFFF_FFFF], dtype=np.uint64),
+    ])
+    walk = (48.0 + np.cumsum(rng.normal(0, 0.2, 65_536))).view(np.uint64)
+    # every 14-bit LSB pattern recurs exactly 200 values later: the
+    # Chimp128/Patas index finds it, but outside the 128-value ring
+    far = (rng.integers(0, 2**64, 1000, dtype=np.uint64) & ~np.uint64(0x3FFF)) \
+        | (np.arange(1000, dtype=np.uint64) % np.uint64(200))
+    far[600:] = far[400:800]  # exact repeats, also 200 apart
+    # in-ring repeats and near-repeats (high trailing-zero XORs)
+    near = rng.integers(0, 2**64, 3000, dtype=np.uint64)
+    near[100::3] = near[50:-50:3][: near[100::3].size] ^ (np.uint64(1) << np.uint64(40))
+    near[101::7] = near[1:-100:7][: near[101::7].size]
+    # unseen LSB patterns alias to index 0 in Chimp128's zero-initialized
+    # index: XORs with the first value of every trailing-zero count 0-13
+    # straddle the candidate threshold (trail > 13)
+    first = walk[:1]
+    alias = first ^ ((rng.integers(0, 2**49, 14, dtype=np.uint64) << np.uint64(15))
+                     | (np.uint64(1) << np.arange(14, dtype=np.uint64)))
+    a = np.uint64(0x4000000000000000)  # Patas' ambiguous sig_bytes==1, trail==0
+    return {
+        "empty": np.zeros(0, dtype=np.uint64),
+        "one": walk[:1],
+        "two": walk[:2],
+        "129": walk[:129],
+        "65536": walk,
+        "specials": rng.choice(np.concatenate([specials, nans]), 4000),
+        "nan_payloads": nans,
+        "zero_runs": np.repeat(rng.choice(specials, 40), rng.integers(1, 90, 40)),
+        "all_zero": np.zeros(300, dtype=np.uint64),
+        "same_lsb_far": far,
+        "same_lsb_near": near,
+        "lsb_alias": np.concatenate([first, alias, walk[1:50]]),
+        "patas_ambiguous": np.array([a, a ^ np.uint64(5), a, a ^ np.uint64(1)],
+                                    dtype=np.uint64),
+    }
+
+
+@pytest.mark.parametrize("codec", ["chimp", "chimpn", "gorilla", "patas"])
+def test_encode_native_equals_numpy(codec, no_native, monkeypatch):
+    """Each C encoder pass writes the numpy encoder's words and total in
+    framed and reference-close modes (patas with fixed on and off), and
+    its size-only mode returns the same length."""
+    enc = getattr(X, f"{codec}_encode")
+    size_bits = getattr(X, f"{codec}_size_bits")
+    variants = [{"fixed": True}, {"fixed": False}] if codec == "patas" else [{}]
+    unused = np.zeros(1, dtype=np.uint64)
+    for name, bits in _edge_cases().items():
+        np_size = size_bits(bits)  # native disabled by fixture
+        for kw in variants:
+            for close in (False, True):
+                want = enc(bits, reference_close=close, **kw)
+                monkeypatch.setattr(native_mod, "_FUNCS", None)  # re-enable
+                words, total = enc(bits, reference_close=close, **kw)
+                flags = [int(kw["fixed"])] if kw else []
+                exact = native_mod.get()[f"{codec}_enc"](
+                    bits, bits.size, int(close), *flags, 1, unused)
+                monkeypatch.setattr(native_mod, "_FUNCS", {})
+                tag = f"{codec}/{name}/{kw}/close={close}"
+                assert total == want[1], tag
+                np.testing.assert_array_equal(words, want[0], err_msg=tag)
+                # close() reports padded words; the pass's exact length
+                # must still fill exactly those words
+                assert (exact + 63) >> 6 == words.size, tag
+                if not close:
+                    assert exact == total, tag
+                if not close and kw.get("fixed", True):
+                    assert np_size == total, tag
+                    monkeypatch.setattr(native_mod, "_FUNCS", None)
+                    assert size_bits(bits) == total, tag
+                    monkeypatch.setattr(native_mod, "_FUNCS", {})
+
+
+def test_selector_same_picks_native_and_numpy(no_native, monkeypatch):
+    """choose_codec returns the same (codec, reason) from the C
+    size-only trials as from the numpy encoders, on every f64 chunk of
+    the float_series workload for seeds 1-3 (sampled-decimal chunks
+    whose full chunk is not decimal included)."""
+    from benchmark import gen
+    from chimp_spark import selector as S
+    from chimp_spark.codecs import light as L
+
+    fell_through = 0
+    for seed in (1, 2, 3):
+        t = gen.float_series(seed, 16, 65_536)
+        for col in t.column_names:
+            arr = t.column(col).combine_chunks()
+            if str(arr.type) != "double":
+                continue
+            vals = arr.to_numpy(zero_copy_only=False)
+            for off in range(0, vals.size, 65_536):
+                chunk = np.ascontiguousarray(vals[off : off + 65_536])
+                py = S.choose_codec(chunk, "f64")[:2]  # native disabled
+                monkeypatch.setattr(native_mod, "_FUNCS", None)
+                nat = S.choose_codec(chunk, "f64")[:2]
+                monkeypatch.setattr(native_mod, "_FUNCS", {})
+                assert nat == py, f"seed {seed} {col}@{off}"
+                sample = np.concatenate(
+                    [chunk[s] for s in S._sample_slices(chunk.size)])
+                if L.dec_for_detect(sample) is not None and "dec_for" not in py[1]:
+                    fell_through += 1
+    assert fell_through > 0  # the NotDecimalError branch ran
+
+
 def test_fsst_native_equals_python(no_native, monkeypatch):
     rng = np.random.default_rng(5)
     vocab = "the of and web page data crawl index search content \xff weird".split()

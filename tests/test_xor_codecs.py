@@ -217,3 +217,15 @@ def test_truncated_streams_raise_not_garbage(monkeypatch):
             with pytest.raises(EOFError):
                 dec(words[: max(len(words) // 2, 2)], n_values=10)
         monkeypatch.setattr(_native, "_FUNCS", real or {})
+
+    # patas through the block decoder, which decodes the frame's bytes
+    # as stored: a frame cut inside the first value, mid-stream, or
+    # past its last word's padding must raise on both paths
+    frame = L.patas_block_encode(vals)
+    for funcs in (real or {}, {}):
+        monkeypatch.setattr(_native, "_FUNCS", funcs)
+        for cut in (12, len(frame) // 2, len(frame) - 9):
+            with pytest.raises(EOFError):
+                L.patas_block_decode(memoryview(frame[:cut]), vals.size,
+                                     np.dtype(np.float64))
+    monkeypatch.setattr(_native, "_FUNCS", real or {})
