@@ -7,6 +7,7 @@ Modes:
     python bench_extra.py decode [table ...]   per-column decode kernel timing
     python bench_extra.py floor                per-task Python worker floor
     python bench_extra.py xor                  XOR codec kernels, C and numpy
+    python bench_extra.py commit               EncodedTable.commit, fused and chained
 """
 
 from __future__ import annotations
@@ -147,7 +148,8 @@ def decode_bench(tables: list[str], repeats: int = 3) -> None:
 
 def xor_bench(seed: int = 3, sensors: int = 2, repeats: int = 3) -> None:
     """Single-core MB/s of each XOR codec's encode, size-only pass and
-    decode over the f64 chunks of ``sensors`` float_series sensors,
+    decode (from the stream's big-endian bytes, as block decode reads a
+    frame) over the f64 chunks of ``sensors`` float_series sensors,
     with the C kernels (``native``) and with the numpy/Python fallback
     that CHIMP_SPARK_NO_NATIVE=1 selects (``fallback``, timed once)."""
     from benchmark import gen
@@ -185,15 +187,67 @@ def xor_bench(seed: int = 3, sensors: int = 2, repeats: int = 3) -> None:
             reps = repeats if mode == "native" else 1
             for codec in ("chimp", "chimpn", "gorilla", "patas"):
                 enc = getattr(X, f"{codec}_encode")
-                dec = getattr(X, f"{codec}_decode")
+                dec_bytes = getattr(X, f"{codec}_decode_bytes")
                 size_bits = getattr(X, f"{codec}_size_bits")
                 e = mb_s(enc, one, reps)
                 s = mb_s(size_bits, one, reps)
-                d = mb_s(lambda w, n: dec(w, n_values=n),
-                         [(enc(c)[0], c.size) for c in chunks], reps)
+                d = mb_s(lambda b, n: dec_bytes(b, n_values=n),
+                         [(enc(c)[0].astype(">u8").view(np.uint8), c.size) for c in chunks],
+                         reps)
                 print(f"  {mode:9s} {codec:8s} {e:9.1f} {s:10.1f} {d:9.1f}")
     finally:
         _native._FUNCS = None
+
+
+def commit_bench(seed: int = 7, reps: int = 5) -> None:
+    """Seconds per ``EncodedTable.commit`` of the benchmark's tpch-shaped
+    inputs (lineitem, documents; ``benchmark.workloads.Tpch``), median
+    of ``reps`` at local[nproc], in its two compositions:
+
+    * ``fused``: the direct output of ``encode_parquet``; the file
+      writer runs inside the encode tasks, so this is encode + commit.
+    * ``chained``: the same encode persisted and counted first
+      (``encode``, as ``benchmark/run.py --trace 1`` splits it), then
+      the commit writes the cached frames (``commit``)."""
+    import shutil
+    import statistics
+    import tempfile
+
+    from benchmark.workloads import Tpch
+    from chimp_spark import engine
+
+    work = tempfile.mkdtemp(prefix="chimp_commit_bench_")
+    nproc = len(os.sched_getaffinity(0))
+    spark = engine.get_spark(cpus=nproc, app="chimp_commit", driver_memory="1g")
+    try:
+        wl = Tpch(os.path.join(work, "inputs"), os.path.join(work, "run"), seed)
+        wl.stage()
+        print(f"== EncodedTable.commit, tpch seed {seed}, local[{nproc}], "
+              f"median of {reps} (s) ==")
+        print(f"  {'table':10s} {'fused':>8s} {'encode':>8s} {'chained':>8s}")
+        n = 0
+        for table, src in wl.sources.items():
+            times: dict[str, list[float]] = {"fused": [], "encode": [], "chained": []}
+            for _ in range(reps + 1):  # the first round warms the workers
+                for composition in ("fused", "chained"):
+                    n += 1
+                    t = engine.EncodedTable(os.path.join(work, "run", f"t{n}"))
+                    enc = engine.encode_parquet(spark, src, table_name=table)
+                    t0 = time.perf_counter()
+                    if composition == "chained":
+                        enc = enc.persist()
+                        enc.count()
+                        times["encode"].append(time.perf_counter() - t0)
+                        t0 = time.perf_counter()
+                    t.commit(spark, enc, table, mode="scan")
+                    times[composition].append(time.perf_counter() - t0)
+                    enc.unpersist()
+            med = {k: statistics.median(v[1:]) for k, v in times.items()}
+            print(f"  {table:10s} {med['fused']:8.3f} {med['encode']:8.3f} "
+                  f"{med['chained']:8.3f}")
+    finally:
+        spark.stop()
+        shutil.rmtree(work, ignore_errors=True)
 
 
 def _floor_probe(batches):
@@ -264,3 +318,5 @@ if __name__ == "__main__":
         floor()
     elif mode == "xor":
         xor_bench()
+    elif mode == "commit":
+        commit_bench()

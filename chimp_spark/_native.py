@@ -31,23 +31,31 @@ _SRC = r"""
 #include <stddef.h>
 #include <string.h>
 
-static inline uint64_t rd(const uint64_t* w, long pos, int nb) {
+static inline uint64_t ld_be(const uint8_t* p) {
+    uint64_t v; memcpy(&v, p, 8); return __builtin_bswap64(v);
+}
+
+/* nb bits at bit position pos of a stream of big-endian 64-bit words,
+   read from the bytes as a frame stores them (no host-order copy) */
+static inline uint64_t rd(const uint8_t* b, long pos, int nb) {
     long i = pos >> 6; int s = 64 - (int)(pos & 63);
     uint64_t mask = (nb >= 64) ? ~0ULL : ((1ULL << nb) - 1);
-    if (nb <= s) return (w[i] >> (s - nb)) & mask;
+    uint64_t w0 = ld_be(b + i * 8);
+    if (nb <= s) return (w0 >> (s - nb)) & mask;
     int rest = nb - s;
-    return (((w[i] & ((1ULL << s) - 1)) << rest) | (w[i+1] >> (64 - rest))) & mask;
+    return (((w0 & ((1ULL << s) - 1)) << rest) | (ld_be(b + i * 8 + 8) >> (64 - rest))) & mask;
 }
 
 static const int LD[8] = {0,8,12,16,18,20,22,24};
 #define NANSENT 0x7ff8000000000000ULL
 
-long chimp_dec(const uint64_t* w, long nwords, uint64_t* out, long max_out, int sentinel) {
-    long end = nwords << 6;
+long chimp_dec(const uint8_t* w, long nbytes, uint64_t* out, long max_out, int sentinel) {
+    long end = (nbytes >> 3) << 6;
     if (end < 64 || max_out < 1) return -1;
     uint64_t curr = rd(w, 0, 64);
     long pos = 64, cnt = 0;
     int lead = 0;
+    if (sentinel && curr == NANSENT) return 0; /* empty stream */
     out[cnt++] = curr;
     while (cnt < max_out) {
         if (pos + 2 > end) { if (sentinel) return cnt; return -1; }
@@ -78,8 +86,8 @@ long chimp_dec(const uint64_t* w, long nwords, uint64_t* out, long max_out, int 
     return cnt;
 }
 
-long chimpn_dec(const uint64_t* w, long nwords, uint64_t* out, long max_out, int sentinel) {
-    long end = nwords << 6;
+long chimpn_dec(const uint8_t* w, long nbytes, uint64_t* out, long max_out, int sentinel) {
+    long end = (nbytes >> 3) << 6;
     if (end < 64 || max_out < 1) return -1;
     uint64_t ring[128];
     for (int i = 0; i < 128; i++) ring[i] = (uint64_t)i;
@@ -87,6 +95,7 @@ long chimpn_dec(const uint64_t* w, long nwords, uint64_t* out, long max_out, int
     ring[0] = curr;
     int ci = 0, lead = 0;
     long pos = 64, cnt = 0;
+    if (sentinel && curr == NANSENT) return 0; /* empty stream */
     out[cnt++] = curr;
     while (cnt < max_out) {
         if (pos + 2 > end) { if (sentinel) return cnt; return -1; }
@@ -125,6 +134,9 @@ long chimpn_dec(const uint64_t* w, long nwords, uint64_t* out, long max_out, int
 
 long patas_dec(const uint8_t* buf, long nbytes, uint64_t* out, long max_out, int sentinel) {
     if (nbytes < 8 || max_out < 1) return -1;
+    /* empty stream: the terminator alone, with no room for a first
+       value and a terminator after it */
+    if (sentinel && nbytes < 10 && buf[0] == 0xff && buf[1] == 0xff) return 0;
     uint64_t ring[128];
     for (int i = 0; i < 128; i++) ring[i] = (uint64_t)i;
     uint64_t curr = 0;
@@ -156,12 +168,13 @@ long patas_dec(const uint8_t* buf, long nbytes, uint64_t* out, long max_out, int
     return cnt;
 }
 
-long gorilla_dec(const uint64_t* w, long nwords, uint64_t* out, long max_out, int sentinel) {
-    long end = nwords << 6;
+long gorilla_dec(const uint8_t* w, long nbytes, uint64_t* out, long max_out, int sentinel) {
+    long end = (nbytes >> 3) << 6;
     if (end < 64 || max_out < 1) return -1;
     uint64_t curr = rd(w, 0, 64);
     long pos = 64, cnt = 0;
     int lead = 0, trail = 0;
+    if (sentinel && curr == NANSENT) return 0; /* empty stream */
     out[cnt++] = curr;
     while (cnt < max_out) {
         if (pos + 1 > end) { if (sentinel) return cnt; return -1; }
@@ -548,14 +561,6 @@ long xs_dec(const uint8_t* ctrl, long m, const uint8_t* payload, uint64_t first,
     return p;
 }
 
-/* Fixed-width bit-field unpack from big-endian words (the hot loop of
-   for_bitpack/gcd_for/delta_bp/dict-code decode): ~1-2ns/value vs
-   ~26ns/value for the numpy multi-op gather. buf holds ceil(n*w/64)
-   big-endian words. */
-static inline uint64_t ld_be(const uint8_t* p) {
-    uint64_t v; memcpy(&v, p, 8); return __builtin_bswap64(v);
-}
-
 /* Fixed-width bit-field pack into host-endian words (caller zeroes
    out_words and byteswaps to big-endian in one vector op). */
 /* FOR/gcd pack fused: out = pack((u64)(vals[i] - lo) / g, width) in a
@@ -600,6 +605,10 @@ void bp_fixed(const uint64_t* vals, long n, int width, uint64_t* out_words) {
     }
 }
 
+/* Fixed-width bit-field unpack from big-endian words (the hot loop of
+   for_bitpack/gcd_for/delta_bp/dict-code decode): ~1-2ns/value vs
+   ~26ns/value for the numpy multi-op gather. buf holds ceil(n*w/64)
+   big-endian words. */
 void bu_fixed(const uint8_t* buf, long n, int width, uint64_t* out) {
     uint64_t mask = (width >= 64) ? ~0ULL : ((1ULL << width) - 1);
     long pos = 0;
@@ -813,12 +822,10 @@ def _build() -> dict | None:
     i64p = np.ctypeslib.ndpointer(dtype=np.int64, flags="C_CONTIGUOUS")
     i32p = np.ctypeslib.ndpointer(dtype=np.int32, flags="C_CONTIGUOUS")
 
-    for name in ("chimp_dec", "chimpn_dec", "gorilla_dec"):
+    for name in ("chimp_dec", "chimpn_dec", "gorilla_dec", "patas_dec"):
         fn = getattr(lib, name)
         fn.restype = ctypes.c_long
-        fn.argtypes = [u64p, ctypes.c_long, u64p, ctypes.c_long, ctypes.c_int]
-    lib.patas_dec.restype = ctypes.c_long
-    lib.patas_dec.argtypes = [u8p, ctypes.c_long, u64p, ctypes.c_long, ctypes.c_int]
+        fn.argtypes = [u8p, ctypes.c_long, u64p, ctypes.c_long, ctypes.c_int]
     for name in ("chimp_enc", "chimpn_enc", "gorilla_enc"):
         fn = getattr(lib, name)
         fn.restype = ctypes.c_long

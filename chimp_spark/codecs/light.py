@@ -618,8 +618,8 @@ def ts_chimp_decode(buf: memoryview, n: int, dtype: np.dtype) -> np.ndarray:
         return out.astype(dtype, copy=False)
     out[0] = first
     if n > 1:
-        words = np.frombuffer(buf, dtype=">u8", offset=9).astype("=u8")
-        zz = X.chimp_decode(words, n_values=n - 1) >> _U64(shift)
+        payload = np.frombuffer(buf, dtype=np.uint8, offset=9)
+        zz = X.chimp_decode_bytes(payload, n_values=n - 1) >> _U64(shift)
         # inverse zigzag: (zz >> 1) ^ -(zz & 1)
         deltas = (zz >> _U64(1)).astype(np.int64) ^ -((zz & _U64(1)).astype(np.int64))
         np.cumsum(deltas, out=out[1:])
@@ -648,34 +648,27 @@ def _xorwords_size(size_bits):
     return f
 
 
-def _xorwords_decode(dec):
+def _xorwords_decode(dec_bytes):
+    # the decoder reads the frame's big-endian words as stored, with no
+    # copy into host-order words
     def f(buf: memoryview, n: int, dtype: np.dtype) -> np.ndarray:
-        words = np.frombuffer(buf, dtype=">u8", offset=8).astype("=u8")
         if n == 0:
             return np.zeros(0, dtype=dtype)
-        return dec(words, n_values=n).view(dtype)
+        return dec_bytes(np.frombuffer(buf, dtype=np.uint8, offset=8), n_values=n).view(dtype)
 
     return f
 
 
-def patas_block_decode(buf: memoryview, n: int, dtype: np.dtype) -> np.ndarray:
-    # Patas is byte-aligned: its decoder reads the frame's big-endian
-    # bytes as stored, with no round trip through host-order words
-    if n == 0:
-        return np.zeros(0, dtype=dtype)
-    payload = np.frombuffer(buf, dtype=np.uint8, offset=8)
-    return X.patas_decode_bytes(payload, n_values=n).view(dtype)
-
-
 chimp_block_encode = _xorwords_encode(X.chimp_encode)
-chimp_block_decode = _xorwords_decode(X.chimp_decode)
+chimp_block_decode = _xorwords_decode(X.chimp_decode_bytes)
 chimp_block_size = _xorwords_size(X.chimp_size_bits)
 chimpn_block_encode = _xorwords_encode(X.chimpn_encode)
-chimpn_block_decode = _xorwords_decode(X.chimpn_decode)
+chimpn_block_decode = _xorwords_decode(X.chimpn_decode_bytes)
 chimpn_block_size = _xorwords_size(X.chimpn_size_bits)
 gorilla_block_encode = _xorwords_encode(X.gorilla_encode)
-gorilla_block_decode = _xorwords_decode(X.gorilla_decode)
+gorilla_block_decode = _xorwords_decode(X.gorilla_decode_bytes)
 patas_block_encode = _xorwords_encode(X.patas_encode)
+patas_block_decode = _xorwords_decode(X.patas_decode_bytes)
 patas_block_size = _xorwords_size(X.patas_size_bits)
 
 

@@ -13,7 +13,10 @@ Each encoder is one sequential C pass (``chimp_enc`` and friends in
 :mod:`chimp_spark._native`) that plans and packs every record in one
 walk, like the reference's scalar loops. A size-only mode of the same
 pass returns the exact length without writing; the selector's trials
-use it (``*_size_bits``).
+use it (``*_size_bits``). Each decoder is one C pass as well
+(``chimp_dec`` ... ``patas_dec``) over the stream's big-endian bytes,
+the layout a frame stores: ``*_decode_bytes`` read a frame's payload in
+place, and the word-array ``*_decode`` wrap them.
 
 The numpy encoders below are the fallback when no C compiler is present
 (or ``CHIMP_SPARK_NO_NATIVE=1``) and the tests' oracle; they write the
@@ -51,23 +54,53 @@ from ..bitio import pack_bits, scatter_bits, unpack_fields
 from .. import _native
 
 
-def _native_words_decode(
-    fn, words: np.ndarray, n_values, sentinel, min_record_bits: int = 2
+def _native_decode(
+    fn, buf8: np.ndarray, n_values, sentinel, min_record_bits: int = 2
 ) -> np.ndarray:
+    """One C decoder pass over a stream's big-endian bytes."""
     if n_values is not None and n_values == 0:
         return np.zeros(0, dtype=np.uint64)
-    w = np.ascontiguousarray(words, dtype=np.uint64)
+    b = np.ascontiguousarray(buf8, dtype=np.uint8)
     # sentinel mode must size for the worst case: gorilla's zero-XOR
     # record is a single bit, chimp-family records are >= 2 bits
     max_out = (
         n_values if n_values is not None
-        else (w.size * 64) // min_record_bits + 2
+        else (b.size * 8) // min_record_bits + 2
     )
     out = np.empty(max(max_out, 1), dtype=np.uint64)
-    cnt = fn(w, w.size, out, max_out, 1 if sentinel else 0)
+    cnt = fn(b, b.size, out, max_out, 1 if sentinel else 0)
     if cnt < 0 or (n_values is not None and cnt != n_values):
         raise EOFError("stream truncated")
     return out[:cnt]
+
+
+def _be_u8(words: np.ndarray) -> np.ndarray:
+    """A word stream's big-endian bytes: the layout frames store."""
+    return np.ascontiguousarray(words, dtype=np.uint64).astype(">u8").view(np.uint8)
+
+
+def _bytes_decoder(codec: str, decode_words, min_record_bits: int = 2):
+    """``<codec>_decode_bytes(buf8, n_values=None, sentinel=False)``:
+    decode a word stream from its big-endian bytes, the layout a frame
+    stores, so the block decoder hands its payload over as is. The C
+    pass reads the words in place; without it the bytes become host
+    words for the Python decoder (a trailing partial word is ignored
+    on both paths)."""
+
+    def decode_bytes(buf8: np.ndarray, n_values: int | None = None,
+                     sentinel: bool = False) -> np.ndarray:
+        if (n_values is None) == (not sentinel):
+            raise ValueError("exactly one of n_values / sentinel required")
+        nat = _native.get()
+        if nat is not None:
+            return _native_decode(nat[f"{codec}_dec"], buf8, n_values, sentinel,
+                                  min_record_bits)
+        whole = buf8[: buf8.size - buf8.size % 8]
+        return decode_words(np.frombuffer(whole, dtype=">u8").astype(np.uint64),
+                            n_values, sentinel)
+
+    decode_bytes.__name__ = decode_bytes.__qualname__ = f"{codec}_decode_bytes"
+    return decode_bytes
 
 
 # worst-case header + payload bits of one record, which sizes the C
@@ -308,7 +341,7 @@ def chimp_decode(
         raise ValueError("exactly one of n_values / sentinel required")
     nat = _native.get()
     if nat is not None:
-        return _native_words_decode(nat["chimp_dec"], words, n_values, sentinel)
+        return _native_decode(nat["chimp_dec"], _be_u8(words), n_values, sentinel)
     if n_values is not None and n_values == 0:
         return np.zeros(0, dtype=np.uint64)
     wl = words.tolist()
@@ -402,6 +435,9 @@ def chimp_decode(
     return out
 
 
+chimp_decode_bytes = _bytes_decoder("chimp", chimp_decode)
+
+
 # ---------------------------------------------------------------------------
 # Gorilla (gorilla.rs)
 # ---------------------------------------------------------------------------
@@ -488,8 +524,8 @@ def gorilla_decode(
         raise ValueError("exactly one of n_values / sentinel required")
     nat = _native.get()
     if nat is not None:
-        return _native_words_decode(
-            nat["gorilla_dec"], words, n_values, sentinel, min_record_bits=1
+        return _native_decode(
+            nat["gorilla_dec"], _be_u8(words), n_values, sentinel, min_record_bits=1
         )
     if n_values is not None and n_values == 0:
         return np.zeros(0, dtype=np.uint64)
@@ -565,6 +601,9 @@ def gorilla_decode(
         if hits.size:
             out = out[: hits[0]]
     return out
+
+
+gorilla_decode_bytes = _bytes_decoder("gorilla", gorilla_decode, min_record_bits=1)
 
 
 # ---------------------------------------------------------------------------
@@ -680,7 +719,7 @@ def chimpn_decode(
         raise ValueError("exactly one of n_values / sentinel required")
     nat = _native.get()
     if nat is not None:
-        return _native_words_decode(nat["chimpn_dec"], words, n_values, sentinel)
+        return _native_decode(nat["chimpn_dec"], _be_u8(words), n_values, sentinel)
     if n_values is not None and n_values == 0:
         return np.zeros(0, dtype=np.uint64)
     wl = words.tolist()
@@ -702,6 +741,9 @@ def chimpn_decode(
 
     LD = LEADING_REPR_DEC.tolist()
     first = rd(0, 64)
+    nan = int(NAN_SENTINEL)
+    if sentinel and first == nan:  # empty stream: close() wrote only the sentinel
+        return np.zeros(0, dtype=np.uint64)
     pos = 64
     out = [first]
     ring = list(range(128))  # decoder init, chimpn.rs:178
@@ -709,7 +751,6 @@ def chimpn_decode(
     ci = 0
     curr = first
     lead = 0
-    nan = int(NAN_SENTINEL)
     limit = n_values if n_values is not None else 1 << 62
     while len(out) < limit:
         if pos + 2 > end:
@@ -751,6 +792,9 @@ def chimpn_decode(
             break
         out.append(curr)
     return np.array(out, dtype=np.uint64)
+
+
+chimpn_decode_bytes = _bytes_decoder("chimpn", chimpn_decode)
 
 
 # ---------------------------------------------------------------------------
@@ -844,7 +888,7 @@ def patas_decode(
     words: np.ndarray, n_values: int | None = None, sentinel: bool = False
 ) -> np.ndarray:
     """Decode Patas (aligned.rs:144-176 with the fixed-format rule)."""
-    return patas_decode_bytes(words.astype(">u8").view(np.uint8), n_values, sentinel)
+    return patas_decode_bytes(_be_u8(words), n_values, sentinel)
 
 
 def patas_decode_bytes(
@@ -858,17 +902,12 @@ def patas_decode_bytes(
     """
     if (n_values is None) == (not sentinel):
         raise ValueError("exactly one of n_values / sentinel required")
-    if n_values is not None and n_values == 0:
-        return np.zeros(0, dtype=np.uint64)
     nat = _native.get()
     if nat is not None:
-        buf8 = np.ascontiguousarray(buf8, dtype=np.uint8)
-        max_out = n_values if n_values is not None else (buf8.size - 8) // 2 + 2
-        out = np.empty(max(max_out, 1), dtype=np.uint64)
-        cnt = nat["patas_dec"](buf8, buf8.size, out, max_out, 1 if sentinel else 0)
-        if cnt < 0 or (n_values is not None and cnt != n_values):
-            raise EOFError("patas stream truncated")
-        return out[:cnt]
+        # a record is >= 16 bits (its metadata)
+        return _native_decode(nat["patas_dec"], buf8, n_values, sentinel, min_record_bits=16)
+    if n_values is not None and n_values == 0:
+        return np.zeros(0, dtype=np.uint64)
     # the Patas stream is byte-aligned throughout (64-bit first value,
     # 16-bit metadata, whole-byte payloads — aligned.rs:65-73), so
     # decode walks a plain byte string: ~5x faster than a bit cursor
@@ -876,6 +915,10 @@ def patas_decode_bytes(
     nbytes = len(buf)
     if nbytes < 8:
         raise EOFError("patas stream truncated")
+    if sentinel and nbytes < 10 and buf[:2] == b"\xff\xff":
+        # empty stream: the terminator alone, with no room for a first
+        # value and a terminator after it
+        return np.zeros(0, dtype=np.uint64)
     first = int.from_bytes(buf[:8], "big")
     out = [first]
     ring = list(range(128))

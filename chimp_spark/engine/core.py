@@ -67,6 +67,19 @@ ENC_DDL = (
 
 DEFAULT_CHUNK_ROWS = 65_536
 
+# the attribute under which an encode records (input plan, task
+# generator) on the DataFrame it returns, so EncodedTable.commit can run
+# its file writer inside the encode tasks (see manifest.py)
+ENCODE_SOURCE = "_encode_source"
+
+
+def encoded_frames(plan: DataFrame, work) -> DataFrame:
+    """``plan.mapInArrow(work, ENC_DDL)``, remembering ``(plan, work)``
+    on the result under ENCODE_SOURCE."""
+    out = plan.mapInArrow(work, ENC_DDL)
+    setattr(out, ENCODE_SOURCE, (plan, work))
+    return out
+
 
 def session_conf(chunk_rows: int = DEFAULT_CHUNK_ROWS) -> dict[str, str]:
     """The engine's Spark SQL settings — one set for get_spark and
@@ -226,7 +239,7 @@ def encode_dataframe(
         if buffered:
             yield flush(pa.Table.from_batches(pending))
 
-    return src.mapInArrow(encode_iter, ENC_DDL)
+    return encoded_frames(src, encode_iter)
 
 
 class Predicate(NamedTuple):

@@ -12,11 +12,15 @@ fingerprint, layout_parts, run_id, timestamp_ms, part_ids, files,
 summary}``. The table is the set of records; every query replays the
 log once and only files a record names are visible.
 
-Commit: the parquet write into a fresh ``data/<run_id>/`` is the only
-Spark action. It observes the part ids and the totals (chunks, rows,
-raw and encoded bytes) as the rows stream past, so nothing reads the
-written files back. The record is then appended put-if-absent (the
-Delta Lake log protocol): it is written to a temp file in ``_log/`` and
+Commit (the Delta Lake protocol: writers write their own data files, a
+commit appends one record listing them): one Spark job whose tasks
+write their frame rows with pyarrow into a fresh ``data/<run_id>/``,
+each under an attempt-unique name, and report one small row (file,
+part ids, chunk, row and byte totals). The record is built from the
+reported rows alone, which only successful task attempts deliver: the
+file of a failed or speculative attempt, or any other file in the
+directory, is never named and so never read. The record is then
+appended put-if-absent: it is written to a temp file in ``_log/`` and
 ``os.link``-ed to the next number. A link onto an existing name fails,
 so a writer that lost the race takes the next number. No record depends
 on earlier ones, so the retry is always correct and two concurrent
@@ -35,12 +39,16 @@ import json
 import os
 import time
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .core import ENC_DDL
+from .core import ENC_ARROW_SCHEMA, ENC_DDL, ENCODE_SOURCE
+from .sink import _partition_id, _ShardWriter
 
 
 class Log:
@@ -180,31 +188,37 @@ class EncodedTable:
         commit record. ``fingerprint`` (scan mode) records the input
         file-set identity the positional unit ids were derived from —
         see completed_scan_units. Returns {version, files, partitions,
-        summary}; ``summary`` (the totals) is also in the record."""
-        from pyspark.sql import Observation
+        summary}; ``summary`` (the totals) is also in the record.
 
+        One Spark job. The direct, uncached output of ``encode_parquet``
+        or ``encode_dataframe`` commits fused: the file writer runs
+        inside the encode tasks, so frames never leave them. Any other
+        encoded DataFrame (persisted, filtered, empty or user-built)
+        commits chained: a mapInArrow over it writes the frames it
+        reads. Either way the record names exactly the files the
+        tasks reported."""
+        from .. import _ship
+
+        _ship.ensure(spark)
         version = self.log.current_version() + 1  # refuses an old layout before writing
         run_id = uuid.uuid4().hex[:12]
         out = os.path.join(self.data_dir, run_id)
-        obs = Observation(f"commit-{run_id}")
-        encoded.observe(
-            obs,
-            F.collect_set("part_id").alias("part_ids"),
-            F.count(F.lit(1)).alias("chunks"),
-            F.sum("n").alias("rows"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-            F.sum("enc_bytes").alias("enc_bytes"),
-        ).write.parquet(out)
-        observed = obs.get
+        os.makedirs(out, exist_ok=True)
+        write_frames = _frame_writer(out)
+        source = vars(encoded).get(ENCODE_SOURCE)
+        if source is not None and encoded.storageLevel == StorageLevel.NONE:
+            plan, work = source
+            job = plan.mapInArrow(lambda it: write_frames(work(it)), _REPORT_DDL)
+        else:
+            job = encoded.mapInArrow(write_frames, _REPORT_DDL)
+        reported = job.collect()
         record = {
             "table": table, "mode": mode, "epoch": epoch,
             "fingerprint": fingerprint, "layout_parts": layout_parts,
             "run_id": run_id, "timestamp_ms": int(time.time() * 1000),
-            "part_ids": sorted(observed["part_ids"]),
-            "files": sorted(f"{run_id}/{n}" for n in os.listdir(out)
-                            if n.startswith("part-") and n.endswith(".parquet")),
-            "summary": {k: int(observed[k] or 0)
-                        for k in ("chunks", "rows", "raw_bytes", "enc_bytes")},
+            "part_ids": sorted({p for r in reported for p in r["part_ids"]}),
+            "files": sorted(f"{run_id}/{r['file']}" for r in reported),
+            "summary": {k: sum(r[k] for r in reported) for k in _TOTALS},
         }
         return {"version": self.log.append(record, version), "files": len(record["files"]),
                 "partitions": len(record["part_ids"]), "summary": record["summary"]}
@@ -214,6 +228,46 @@ class EncodedTable:
         if not files:
             return spark.createDataFrame([], ENC_DDL)
         return spark.read.parquet(*files)
+
+
+_TOTALS = ("chunks", "rows", "raw_bytes", "enc_bytes")
+_REPORT_DDL = ("file string, part_ids array<int>, chunks long, rows long, "
+               "raw_bytes long, enc_bytes long")
+_REPORT_SCHEMA = pa.schema([
+    ("file", pa.string()), ("part_ids", pa.list_(pa.int32())),
+    *((k, pa.int64()) for k in _TOTALS),
+])
+
+
+def _frame_writer(out: str) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
+    """The commit's task body: ``write_frames(batches)`` writes the
+    task's frame rows into one parquet file under ``out``, each batch
+    as its own row group as it arrives (an encode task's batch is one
+    chunk group), and yields one report row for the file (none if the
+    task had no rows)."""
+
+    def write_frames(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        w = _ShardWriter(out, _partition_id(), ENC_ARROW_SCHEMA, "snappy", row_group_rows=1)
+        part_ids: set[int] = set()
+        totals = dict.fromkeys(_TOTALS, 0)
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            if not rb.schema.equals(ENC_ARROW_SCHEMA):  # a chained input's
+                # Arrow types follow the session (e.g. large strings)
+                rb = rb.cast(ENC_ARROW_SCHEMA)
+            w.add(rb)
+            part_ids.update(pc.unique(rb.column("part_id")).to_pylist())
+            totals["chunks"] += rb.num_rows
+            for k, c in (("rows", "n"), ("raw_bytes", "raw_bytes"), ("enc_bytes", "enc_bytes")):
+                totals[k] += pc.sum(rb.column(c)).as_py() or 0
+        shard = w.close()
+        if shard is not None:
+            yield pa.RecordBatch.from_pylist(
+                [{"file": os.path.basename(shard[0]), "part_ids": sorted(part_ids), **totals}],
+                schema=_REPORT_SCHEMA)
+
+    return write_frames
 
 
 def _batch(records: list[dict], mode: str | None) -> list[dict]:

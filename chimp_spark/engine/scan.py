@@ -27,7 +27,8 @@ from collections.abc import Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
-from .core import DEFAULT_CHUNK_ROWS, ENC_ARROW_SCHEMA, ENC_DDL, encode_chunk_into
+from .core import (DEFAULT_CHUNK_ROWS, ENC_ARROW_SCHEMA, ENC_DDL, encode_chunk_into,
+                   encoded_frames)
 
 
 def resolve_paths(paths: list[str] | str) -> list[str]:
@@ -223,4 +224,4 @@ def encode_parquet(
                     row_start += sl.num_rows
                     yield pa.RecordBatch.from_pydict(out, schema=ENC_ARROW_SCHEMA)
 
-    return plan.mapInArrow(work, ENC_DDL)
+    return encoded_frames(plan, work)

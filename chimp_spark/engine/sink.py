@@ -73,10 +73,12 @@ def _prepare_out_dir(out_dir: str, mode: str) -> str:
 
 
 class _ShardWriter:
-    """One decoded parquet shard per task: buffers decoded batches to
-    ``row_group_rows`` row groups, writes with pyarrow. Attempt-unique
-    file name — a retried/speculative attempt writes its own file and
-    only the attempt whose metadata row Spark keeps gets committed.
+    """The engine's one task-side parquet writer: one file per task,
+    batches buffered to ``row_group_rows`` row groups, written with
+    pyarrow. The decode sinks write decoded shards with it and
+    ``EncodedTable.commit`` writes frame files. Attempt-unique file
+    name — a retried/speculative attempt writes its own file and only
+    the attempt whose report row Spark keeps gets committed.
 
     Flushes are ALSO byte-bounded: a row-count-only threshold would
     hold 2^20 rows of wide text (tens of GB of Arrow buffers) per
@@ -85,9 +87,9 @@ class _ShardWriter:
 
     MAX_BUFFER_BYTES = 256 << 20
 
-    def __init__(self, staged: str, pid: int, schema: pa.Schema,
+    def __init__(self, directory: str, pid: int, schema: pa.Schema,
                  compression: str, row_group_rows: int):
-        self.path = os.path.join(staged, f"part-{pid:05d}-{uuid.uuid4().hex[:8]}.parquet")
+        self.path = os.path.join(directory, f"part-{pid:05d}-{uuid.uuid4().hex[:8]}.parquet")
         self.schema = schema
         self.compression = compression
         self.row_group_rows = row_group_rows

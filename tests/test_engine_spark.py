@@ -944,35 +944,173 @@ def test_shard_writer_avg_len_reads_sliced_offsets(tmp_path):
 
 
 def test_commit_runs_one_spark_job(spark, tmp_path):
-    """commit() writes and gathers its stats in ONE Spark job (the
-    write observes them), and the observed totals equal the committed
-    rows'."""
+    """commit() writes the frame files and gathers its totals in ONE
+    Spark job, whether it writes inside the encode tasks (the direct
+    encode output) or over a persisted encode, and the reported totals
+    equal the committed rows'."""
     import json as _json
 
     src = str(tmp_path / "src")
     spark.read.parquet(f"{SF_DIR}/orders.parquet").repartition(4).write.parquet(src)
-    enc = engine.encode_parquet(spark, src, columns=["o_orderkey", "o_totalprice"],
-                                table_name="orders")
-    t = engine.EncodedTable(str(tmp_path / "enc"))
     sc = spark.sparkContext
-    group = "commit-one-job"
-    sc.setJobGroup(group, "commit under test")
-    try:
-        info = t.commit(spark, enc, "orders", mode="scan")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    for name in ("direct", "persisted"):
+        enc = engine.encode_parquet(spark, src, columns=["o_orderkey", "o_totalprice"],
+                                    table_name="orders")
+        if name == "persisted":
+            enc = enc.persist()
+        t = engine.EncodedTable(str(tmp_path / f"enc_{name}"))
+        group = f"commit-one-job-{name}"
+        sc.setJobGroup(group, "commit under test")
+        try:
+            info = t.commit(spark, enc, "orders", mode="scan")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, name
+        enc.unpersist()
 
-    back = t.read(spark).agg(
-        F.countDistinct("part_id").alias("partitions"), F.count("*").alias("chunks"),
-        F.sum("n").alias("rows"), F.sum("raw_bytes").alias("raw_bytes"),
-        F.sum("enc_bytes").alias("enc_bytes"),
-    ).collect()[0].asDict()
-    assert info["partitions"] == back.pop("partitions") == 4
-    assert info["summary"] == back
-    record_path = t.log.path(info["version"])
-    assert _json.load(open(record_path))["summary"] == back
-    assert t.completed_part_ids("orders", mode="scan") == {0, 1, 2, 3}
+        back = t.read(spark).agg(
+            F.countDistinct("part_id").alias("partitions"), F.count("*").alias("chunks"),
+            F.sum("n").alias("rows"), F.sum("raw_bytes").alias("raw_bytes"),
+            F.sum("enc_bytes").alias("enc_bytes"),
+        ).collect()[0].asDict()
+        assert info["partitions"] == back.pop("partitions") == 4
+        assert info["summary"] == back
+        record_path = t.log.path(info["version"])
+        assert _json.load(open(record_path))["summary"] == back
+        assert t.completed_part_ids("orders", mode="scan") == {0, 1, 2, 3}
+
+
+def _frame_digests(t) -> dict:
+    """codec and sha256 of every committed frame, by (part_id,
+    chunk_id, column)."""
+    import hashlib
+
+    import pyarrow.dataset as pads
+
+    cols = ["part_id", "chunk_id", "column", "codec", "frame"]
+    m = pads.dataset(t.data_files(), format="parquet").to_table(columns=cols)
+    return {(p, c, col): (codec, hashlib.sha256(f).hexdigest())
+            for p, c, col, codec, f in zip(*(m.column(k).to_pylist() for k in cols))}
+
+
+def test_commit_fused_and_chained_agree(spark, tmp_path):
+    """One encode committed twice: as encode_parquet returned it (the
+    writer runs inside the encode tasks) and after .persist() (the
+    writer reads the cached frames). Both commits hold the same frames,
+    part ids and totals; so does a filtered view committed while the
+    session hands mapInArrow large string/binary Arrow types."""
+    import json as _json
+
+    from chimp_spark.engine.core import ENCODE_SOURCE
+
+    src = str(tmp_path / "src")
+    spark.read.parquet(f"{SF_DIR}/lineitem.parquet").repartition(3).write.parquet(src)
+    enc = engine.encode_parquet(spark, src, table_name="lineitem", chunk_rows=4096)
+    assert ENCODE_SOURCE in vars(enc)
+    fused = engine.EncodedTable(str(tmp_path / "fused"))
+    chained = engine.EncodedTable(str(tmp_path / "chained"))
+    info_f = fused.commit(spark, enc, "lineitem", mode="scan")
+    info_c = chained.commit(spark, enc.persist(), "lineitem", mode="scan")
+    enc.unpersist()
+    digests = _frame_digests(fused)
+    assert len(digests) == info_f["summary"]["chunks"] > 0
+    assert digests == _frame_digests(chained)
+    large = engine.EncodedTable(str(tmp_path / "large"))
+    spark.conf.set("spark.sql.execution.arrow.useLargeVarTypes", "true")
+    try:
+        info_l = large.commit(spark, enc.filter(F.lit(True)), "lineitem", mode="scan")
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.useLargeVarTypes")
+    assert _frame_digests(large) == digests
+    assert info_l["summary"] == info_f["summary"]
+    rec_f, rec_c = (_json.load(open(t.log.path(1)))
+                    for t in (fused, chained))
+    assert rec_f["part_ids"] == rec_c["part_ids"] == [0, 1, 2]
+    assert rec_f["summary"] == rec_c["summary"] == info_f["summary"] == info_c["summary"]
+
+
+def test_commit_ignores_unreported_files(spark, tmp_path, monkeypatch):
+    """A parquet file in the commit's data directory that no task
+    reported (a failed attempt's, say) is never named by the record,
+    so reads never see it."""
+    import types
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    from chimp_spark.engine import manifest
+
+    fixed = uuid.UUID(int=0xABCDEF)
+    monkeypatch.setattr(manifest, "uuid", types.SimpleNamespace(uuid4=lambda: fixed))
+    t = engine.EncodedTable(str(tmp_path / "enc"))
+    enc = engine.encode_dataframe(spark.read.parquet(f"{SF_DIR}/orders.parquet"),
+                                  ["o_orderkey"], chunk_rows=4096, table_name="orders")
+    want = enc.collect()
+    run_dir = os.path.join(t.data_dir, fixed.hex[:12])
+    os.makedirs(run_dir)
+    stray = os.path.join(run_dir, "part-00000-deadbeef.parquet")
+    pq.write_table(spark.createDataFrame(want, engine.ENC_DDL).toArrow(), stray)
+    info = t.commit(spark, enc, "orders", mode="df")
+    files = t.data_files()
+    assert stray not in files and len(files) == info["files"] > 0
+    assert all(os.path.dirname(f) == run_dir for f in files)
+    assert t.read(spark).count() == len(want) == info["summary"]["chunks"]
+
+
+def test_root_mixing_spark_and_task_written_commits(spark, tmp_path):
+    """A root whose first commit's data files came from Spark's parquet
+    writer (how commits were written before tasks wrote their own) and
+    whose second commit is task-written reads back whole: through read
+    + decode_table, and through decode_table_to_parquet with a
+    predicate."""
+    import json as _json
+    import time as _time
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    cols = ["doc_id", "lang", "text"]
+    ddl = "doc_id long, lang string, text string"
+    halves = [docs.filter(F.col("doc_id") % 2 == k).orderBy("lang", "doc_id")
+              for k in (0, 1)]
+    t = engine.EncodedTable(str(tmp_path / "mixed"))
+
+    old = engine.encode_dataframe(halves[0], cols, chunk_rows=64, table_name="documents")
+    old = old.persist()
+    run_id = "0ld5par4wr1t"
+    old.write.parquet(os.path.join(t.data_dir, run_id))
+    totals = old.agg(F.count("*").alias("chunks"), F.sum("n").alias("rows"),
+                     F.sum("raw_bytes").alias("raw_bytes"),
+                     F.sum("enc_bytes").alias("enc_bytes")).collect()[0].asDict()
+    t.log.append({
+        "table": "documents", "mode": "df", "epoch": None, "fingerprint": None,
+        "layout_parts": None, "run_id": run_id,
+        "timestamp_ms": int(_time.time() * 1000),
+        "part_ids": sorted(r[0] for r in old.select("part_id").distinct().collect()),
+        "files": sorted(f"{run_id}/{n}" for n in os.listdir(os.path.join(t.data_dir, run_id))
+                        if n.startswith("part-") and n.endswith(".parquet")),
+        "summary": totals,
+    })
+    old.unpersist()
+    new = engine.encode_dataframe(halves[1], cols, chunk_rows=64, table_name="documents")
+    t.commit(spark, new, "documents", mode="df")
+    assert t.log.current_version() == 2
+    assert _json.load(open(t.log.path(1)))["files"][0].endswith(".snappy.parquet")
+
+    def canon(d):
+        return d.select(*cols)
+
+    back = engine.decode_table(t.read(spark), cols, ddl, verify_checksums=True)
+    assert canon(back).exceptAll(docs.select(*cols)).isEmpty()
+    assert docs.select(*cols).exceptAll(canon(back)).isEmpty()
+
+    out = str(tmp_path / "only_en")
+    res = engine.decode_table_to_parquet(spark, t.root, cols, ddl, out, table="documents",
+                                         verify_checksums=True,
+                                         predicate=("lang", "==", "en"))
+    want = docs.filter(F.col("lang") == "en").select(*cols)
+    written = spark.read.parquet(out).select(*cols)
+    assert written.exceptAll(want).isEmpty() and want.exceptAll(written).isEmpty()
+    assert res["rows"] == want.count() > 0
+    assert 0 < res["audit"]["groups_decoded"] < res["audit"]["groups_total"]
 
 
 def test_commit_empty_encoded_does_not_block(spark, tmp_path):

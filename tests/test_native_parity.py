@@ -40,6 +40,39 @@ def test_decode_native_equals_python(codec, no_native, monkeypatch):
         np.testing.assert_array_equal(nat, bits)
 
 
+@pytest.mark.parametrize("codec", ["chimp", "chimpn", "gorilla", "patas"])
+def test_decode_bytes_native_equals_python(codec, no_native, monkeypatch):
+    """The big-endian byte entry points (what block decode hands a
+    frame's payload to) decode what the word decoders decode, C and
+    Python alike, in framed and reference mode, also from an unaligned
+    buffer, and raise on a cut stream on both paths."""
+    enc = getattr(X, f"{codec}_encode")
+    dec_bytes = getattr(X, f"{codec}_decode_bytes")
+    for name, bits in _edge_cases().items():
+        if not bits.size:
+            continue
+        ref_bits = bits[bits != X.NAN_SENTINEL]  # reference mode holds no sentinel
+        framed = enc(bits)[0].astype(">u8").tobytes()
+        closed = enc(ref_bits, reference_close=True)[0].astype(">u8").tobytes()
+        # one leading pad byte: the payload starts off word alignment,
+        # as ts_chimp's does inside its frame
+        unaligned = np.frombuffer(b"\0" + framed, dtype=np.uint8)[1:]
+        got = {}
+        for funcs in ({}, None):  # Python, then C
+            monkeypatch.setattr(native_mod, "_FUNCS", funcs)
+            tag = f"{codec}/{name}/{'C' if funcs is None else 'py'}"
+            got[funcs is None] = dec_bytes(np.frombuffer(framed, np.uint8), n_values=bits.size)
+            np.testing.assert_array_equal(got[funcs is None], bits, err_msg=tag)
+            np.testing.assert_array_equal(dec_bytes(unaligned, n_values=bits.size), bits,
+                                          err_msg=tag)
+            np.testing.assert_array_equal(
+                dec_bytes(np.frombuffer(closed, np.uint8), sentinel=True), ref_bits,
+                err_msg=tag)
+            with pytest.raises(EOFError):
+                dec_bytes(np.frombuffer(framed[:8], np.uint8), n_values=bits.size + 64)
+        monkeypatch.setattr(native_mod, "_FUNCS", {})
+
+
 def _edge_cases():
     """Inputs that steer every branch of the XOR encoders' plans."""
     rng = np.random.default_rng(11)

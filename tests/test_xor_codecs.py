@@ -229,3 +229,27 @@ def test_truncated_streams_raise_not_garbage(monkeypatch):
                 L.patas_block_decode(memoryview(frame[:cut]), vals.size,
                                      np.dtype(np.float64))
     monkeypatch.setattr(_native, "_FUNCS", real or {})
+
+
+@pytest.mark.parametrize("path", ["native", "fallback"])
+@pytest.mark.parametrize("codec", ["chimp", "chimpn", "gorilla", "patas"])
+def test_reference_mode_empty_stream_decodes_empty(codec, path, monkeypatch):
+    """close() on no values writes only the terminator (the NaN
+    sentinel as the first value; Patas' 0xffff metadata): reference
+    mode decodes that to no values, not to the terminator as a value,
+    through the words and the byte entry points. Framed mode carries
+    its count and decodes empty from the same stream."""
+    from chimp_spark import _native
+
+    if path == "native" and _native.get() is None:
+        pytest.skip("no C toolchain")
+    monkeypatch.setattr(_native, "_FUNCS", None if path == "native" else {})
+    words, _ = getattr(X, f"{codec}_encode")(np.zeros(0, np.uint64), reference_close=True)
+    assert getattr(X, f"{codec}_decode")(words, sentinel=True).size == 0
+    buf8 = words.astype(">u8").view(np.uint8)
+    assert getattr(X, f"{codec}_decode_bytes")(buf8, sentinel=True).size == 0
+    assert getattr(X, f"{codec}_decode")(words, n_values=0).size == 0
+    # one value whose bits lead like the terminator still decodes
+    one = np.array([0xFFFF_0000_0000_0001], dtype=np.uint64)
+    words, _ = getattr(X, f"{codec}_encode")(one, reference_close=True)
+    np.testing.assert_array_equal(getattr(X, f"{codec}_decode")(words, sentinel=True), one)
