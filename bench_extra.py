@@ -202,13 +202,16 @@ def xor_bench(seed: int = 3, sensors: int = 2, repeats: int = 3) -> None:
 def commit_bench(seed: int = 7, reps: int = 5) -> None:
     """Seconds per ``EncodedTable.commit`` of the benchmark's tpch-shaped
     inputs (lineitem, documents; ``benchmark.workloads.Tpch``), median
-    of ``reps`` at local[nproc], in its two compositions:
+    of ``reps`` at local[nproc], rounds alternating the case order:
 
-    * ``fused``: the direct output of ``encode_parquet``; the file
-      writer runs inside the encode tasks, so this is encode + commit.
-    * ``chained``: the same encode persisted and counted first
-      (``encode``, as ``benchmark/run.py --trace 1`` splits it), then
-      the commit writes the cached frames (``commit``)."""
+    * ``fused``: the direct, uncached output of ``encode_parquet``; the
+      file writer runs inside the encode tasks (encode + commit).
+    * ``chained``: the same output behind ``select("*")``, which the
+      commit cannot fuse, so a second mapInArrow writes the frames the
+      encode tasks send across the Arrow boundary (encode + commit).
+    * ``cached``: the encode persisted and counted first (``encode``,
+      as ``benchmark/run.py --trace 1`` splits it), then a chained
+      commit of the cached frames (commit only)."""
     import shutil
     import statistics
     import tempfile
@@ -216,6 +219,7 @@ def commit_bench(seed: int = 7, reps: int = 5) -> None:
     from benchmark.workloads import Tpch
     from chimp_spark import engine
 
+    cases = ("fused", "chained", "cached")
     work = tempfile.mkdtemp(prefix="chimp_commit_bench_")
     nproc = len(os.sched_getaffinity(0))
     spark = engine.get_spark(cpus=nproc, app="chimp_commit", driver_memory="1g")
@@ -224,27 +228,29 @@ def commit_bench(seed: int = 7, reps: int = 5) -> None:
         wl.stage()
         print(f"== EncodedTable.commit, tpch seed {seed}, local[{nproc}], "
               f"median of {reps} (s) ==")
-        print(f"  {'table':10s} {'fused':>8s} {'encode':>8s} {'chained':>8s}")
+        print(f"  {'table':10s}" + "".join(f" {k:>8s}" for k in (*cases[:2], "encode", "cached")))
         n = 0
         for table, src in wl.sources.items():
-            times: dict[str, list[float]] = {"fused": [], "encode": [], "chained": []}
-            for _ in range(reps + 1):  # the first round warms the workers
-                for composition in ("fused", "chained"):
+            times: dict[str, list[float]] = {k: [] for k in (*cases, "encode")}
+            for r in range(reps + 1):  # the first round warms the workers
+                for case in cases[r % 3:] + cases[:r % 3]:
                     n += 1
                     t = engine.EncodedTable(os.path.join(work, "run", f"t{n}"))
                     enc = engine.encode_parquet(spark, src, table_name=table)
                     t0 = time.perf_counter()
-                    if composition == "chained":
+                    if case == "chained":
+                        enc = enc.select("*")
+                    elif case == "cached":
                         enc = enc.persist()
                         enc.count()
                         times["encode"].append(time.perf_counter() - t0)
                         t0 = time.perf_counter()
                     t.commit(spark, enc, table, mode="scan")
-                    times[composition].append(time.perf_counter() - t0)
+                    times[case].append(time.perf_counter() - t0)
                     enc.unpersist()
             med = {k: statistics.median(v[1:]) for k, v in times.items()}
-            print(f"  {table:10s} {med['fused']:8.3f} {med['encode']:8.3f} "
-                  f"{med['chained']:8.3f}")
+            print(f"  {table:10s}" + "".join(
+                f" {med[k]:8.3f}" for k in (*cases[:2], "encode", "cached")))
     finally:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)

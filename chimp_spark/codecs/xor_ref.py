@@ -328,20 +328,21 @@ def chimp_decode(
 ) -> np.ndarray:
     """Decode a Chimp stream back to uint64 bit patterns.
 
+    ``n_values`` drives framed mode; ``sentinel`` reference mode stops
+    at the NaN sentinel (chimp.rs:285-288).
+    """
+    return chimp_decode_bytes(_be_u8(words), n_values, sentinel)
+
+
+def _chimp_decode_py(words: np.ndarray, n_values: int | None, sentinel: bool) -> np.ndarray:
+    """chimp_decode without the C pass: the fallback and oracle.
+
     Two-pass: a sequential header scan locates every payload field
     (positions are data-dependent — chimp.rs:242-270), then payloads
     are gathered vectorized and the value chain is rebuilt with a
     single ``bitwise_xor.accumulate`` (Chimp always XORs against the
     immediately previous value, chimp.rs:44).
-
-    ``n_values`` drives framed mode; ``sentinel`` reference mode stops
-    at the NaN sentinel (chimp.rs:285-288).
     """
-    if (n_values is None) == (not sentinel):
-        raise ValueError("exactly one of n_values / sentinel required")
-    nat = _native.get()
-    if nat is not None:
-        return _native_decode(nat["chimp_dec"], _be_u8(words), n_values, sentinel)
     if n_values is not None and n_values == 0:
         return np.zeros(0, dtype=np.uint64)
     wl = words.tolist()
@@ -435,7 +436,7 @@ def chimp_decode(
     return out
 
 
-chimp_decode_bytes = _bytes_decoder("chimp", chimp_decode)
+chimp_decode_bytes = _bytes_decoder("chimp", _chimp_decode_py)
 
 
 # ---------------------------------------------------------------------------
@@ -519,14 +520,12 @@ def gorilla_size_bits(bits: np.ndarray) -> int:
 def gorilla_decode(
     words: np.ndarray, n_values: int | None = None, sentinel: bool = False
 ) -> np.ndarray:
-    """Decode Gorilla (gorilla.rs:110-130): header scan + prefix-XOR."""
-    if (n_values is None) == (not sentinel):
-        raise ValueError("exactly one of n_values / sentinel required")
-    nat = _native.get()
-    if nat is not None:
-        return _native_decode(
-            nat["gorilla_dec"], _be_u8(words), n_values, sentinel, min_record_bits=1
-        )
+    """Decode Gorilla (gorilla.rs:110-130)."""
+    return gorilla_decode_bytes(_be_u8(words), n_values, sentinel)
+
+
+def _gorilla_decode_py(words: np.ndarray, n_values: int | None, sentinel: bool) -> np.ndarray:
+    """gorilla_decode without the C pass: header scan + prefix-XOR."""
     if n_values is not None and n_values == 0:
         return np.zeros(0, dtype=np.uint64)
     wl = words.tolist()
@@ -603,7 +602,7 @@ def gorilla_decode(
     return out
 
 
-gorilla_decode_bytes = _bytes_decoder("gorilla", gorilla_decode, min_record_bits=1)
+gorilla_decode_bytes = _bytes_decoder("gorilla", _gorilla_decode_py, min_record_bits=1)
 
 
 # ---------------------------------------------------------------------------
@@ -713,13 +712,13 @@ def chimpn_size_bits(bits: np.ndarray) -> int:
 def chimpn_decode(
     words: np.ndarray, n_values: int | None = None, sentinel: bool = False
 ) -> np.ndarray:
-    """Decode Chimp128 (chimpn.rs:186-238). Sequential: the ring of
+    """Decode Chimp128 (chimpn.rs:186-238)."""
+    return chimpn_decode_bytes(_be_u8(words), n_values, sentinel)
+
+
+def _chimpn_decode_py(words: np.ndarray, n_values: int | None, sentinel: bool) -> np.ndarray:
+    """chimpn_decode without the C pass. Sequential: the ring of
     *decoded* values is loop-carried through explicit stream indices."""
-    if (n_values is None) == (not sentinel):
-        raise ValueError("exactly one of n_values / sentinel required")
-    nat = _native.get()
-    if nat is not None:
-        return _native_decode(nat["chimpn_dec"], _be_u8(words), n_values, sentinel)
     if n_values is not None and n_values == 0:
         return np.zeros(0, dtype=np.uint64)
     wl = words.tolist()
@@ -794,7 +793,7 @@ def chimpn_decode(
     return np.array(out, dtype=np.uint64)
 
 
-chimpn_decode_bytes = _bytes_decoder("chimpn", chimpn_decode)
+chimpn_decode_bytes = _bytes_decoder("chimpn", _chimpn_decode_py)
 
 
 # ---------------------------------------------------------------------------

@@ -18,13 +18,13 @@ write their frame rows with pyarrow into a fresh ``data/<run_id>/``,
 each under an attempt-unique name, and report one small row (file,
 part ids, chunk, row and byte totals). The record is built from the
 reported rows alone, which only successful task attempts deliver: the
-file of a failed or speculative attempt, or any other file in the
-directory, is never named and so never read. The record is then
-appended put-if-absent: it is written to a temp file in ``_log/`` and
-``os.link``-ed to the next number. A link onto an existing name fails,
-so a writer that lost the race takes the next number. No record depends
-on earlier ones, so the retry is always correct and two concurrent
-writers both land.
+file of a failed or speculative attempt is never named, and the driver
+deletes every file in the run directory that no row reported before it
+appends the record. The record is appended put-if-absent: it is
+written to a temp file in ``_log/`` and ``os.link``-ed to the next
+number. A link onto an existing name fails, so a writer that lost the
+race takes the next number. No record depends on earlier ones, so the
+retry is always correct and two concurrent writers both land.
 
 A crash before the link leaves a ``data/<run_id>/`` directory (and
 perhaps a temp record) that no record names: reads never see it, and
@@ -190,13 +190,15 @@ class EncodedTable:
         see completed_scan_units. Returns {version, files, partitions,
         summary}; ``summary`` (the totals) is also in the record.
 
-        One Spark job. The direct, uncached output of ``encode_parquet``
-        or ``encode_dataframe`` commits fused: the file writer runs
-        inside the encode tasks, so frames never leave them. Any other
-        encoded DataFrame (persisted, filtered, empty or user-built)
-        commits chained: a mapInArrow over it writes the frames it
-        reads. Either way the record names exactly the files the
-        tasks reported."""
+        One Spark job whose tasks write their frames into
+        ``data/<run_id>/`` and report their file. The direct, uncached
+        output of ``encode_parquet`` or ``encode_dataframe`` commits
+        fused: the writer runs inside the encode tasks, so frames never
+        leave them. Any other encoded DataFrame (persisted, filtered,
+        empty or user-built) commits chained: a mapInArrow over it
+        writes the frames it reads. The record names exactly the
+        reported files; any other file there (a failed or speculative
+        attempt's) is deleted."""
         from .. import _ship
 
         _ship.ensure(spark)
@@ -212,12 +214,16 @@ class EncodedTable:
         else:
             job = encoded.mapInArrow(write_frames, _REPORT_DDL)
         reported = job.collect()
+        files = {r["file"] for r in reported}
+        for name in os.listdir(out):
+            if name not in files:
+                os.unlink(os.path.join(out, name))
         record = {
             "table": table, "mode": mode, "epoch": epoch,
             "fingerprint": fingerprint, "layout_parts": layout_parts,
             "run_id": run_id, "timestamp_ms": int(time.time() * 1000),
             "part_ids": sorted({p for r in reported for p in r["part_ids"]}),
-            "files": sorted(f"{run_id}/{r['file']}" for r in reported),
+            "files": sorted(f"{run_id}/{f}" for f in files),
             "summary": {k: sum(r[k] for r in reported) for k in _TOTALS},
         }
         return {"version": self.log.append(record, version), "files": len(record["files"]),

@@ -1032,7 +1032,7 @@ def test_commit_fused_and_chained_agree(spark, tmp_path):
 def test_commit_ignores_unreported_files(spark, tmp_path, monkeypatch):
     """A parquet file in the commit's data directory that no task
     reported (a failed attempt's, say) is never named by the record,
-    so reads never see it."""
+    so reads never see it, and the commit deletes it."""
     import types
     import uuid
 
@@ -1053,6 +1053,8 @@ def test_commit_ignores_unreported_files(spark, tmp_path, monkeypatch):
     info = t.commit(spark, enc, "orders", mode="df")
     files = t.data_files()
     assert stray not in files and len(files) == info["files"] > 0
+    assert not os.path.exists(stray)
+    assert sorted(os.listdir(run_dir)) == sorted(os.path.basename(f) for f in files)
     assert all(os.path.dirname(f) == run_dir for f in files)
     assert t.read(spark).count() == len(want) == info["summary"]["chunks"]
 
