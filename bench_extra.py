@@ -4,10 +4,11 @@ frozen driver contract; numbers cited in OPTIMIZATION_r06.md).
 Modes:
     python bench_extra.py kernel [table ...]   per-column encode kernel timing
     python bench_extra.py profile <table>      cProfile of the encode kernel
-    python bench_extra.py decode [table ...]   per-column decode kernel timing
+    python bench_extra.py kernel_decode [table ...]  per-column decode kernel timing
     python bench_extra.py floor                per-task Python worker floor
     python bench_extra.py xor                  XOR codec kernels, C and numpy
     python bench_extra.py commit               EncodedTable.commit, fused and chained
+    python bench_extra.py decode               decode_table of a committed root, fused and shuffled
 """
 
 from __future__ import annotations
@@ -256,6 +257,61 @@ def commit_bench(seed: int = 7, reps: int = 5) -> None:
         shutil.rmtree(work, ignore_errors=True)
 
 
+def decode_table_bench(seed: int = 7, reps: int = 9) -> None:
+    """Seconds of the benchmark's tpch q1 (``benchmark.workloads.Tpch``:
+    ``q1_aggregate`` over ``decode_table`` of lineitem) and of
+    ``decode_table(...).count()`` on one committed tpch root (lineitem
+    and documents), median of ``reps`` at local[nproc], rounds rotating
+    the case order:
+
+    * ``fused``: ``EncodedTable.read`` as returned; the decode runs in
+      the tasks that read the frame files, with no exchange.
+    * ``shuffled``: the same read behind ``select("*")``, which the
+      decode cannot fuse, so the frames are co-located by one hash
+      shuffle of the JVM scan's rows first."""
+    import shutil
+    import statistics
+    import tempfile
+
+    from benchmark.workloads import _LI_COLS, _LI_DDL, Tpch, q1_aggregate
+    from chimp_spark import engine
+
+    cases = [(path, op) for path in ("fused", "shuffled") for op in ("q1", "count")]
+    work = tempfile.mkdtemp(prefix="chimp_decode_bench_")
+    nproc = len(os.sched_getaffinity(0))
+    spark = engine.get_spark(cpus=nproc, app="chimp_decode", driver_memory="1g")
+    try:
+        wl = Tpch(os.path.join(work, "inputs"), os.path.join(work, "run"), seed)
+        wl.stage()
+        wl.prepare(spark)
+        t = engine.EncodedTable(os.path.join(work, "run", "root"))
+        for table, src in wl.sources.items():
+            t.commit(spark, engine.encode_parquet(spark, src, table_name=table), table,
+                     mode="scan")
+        times: dict[tuple, list[float]] = {c: [] for c in cases}
+        for r in range(reps + 1):  # the first round warms the workers
+            for path, op in cases[r % 4:] + cases[:r % 4]:
+                t0 = time.perf_counter()
+                enc = t.read(spark)
+                dec = engine.decode_table(enc if path == "fused" else enc.select("*"),
+                                          _LI_COLS, _LI_DDL)
+                if op == "q1":
+                    got = sorted(tuple(row) for row in q1_aggregate(dec).collect())
+                    assert got == wl.oracle, f"{path} q1 differs from DuckDB"
+                else:
+                    assert dec.count() == wl.rows["lineitem"]
+                times[(path, op)].append(time.perf_counter() - t0)
+        print(f"== decode_table of a committed tpch root (seed {seed}, "
+              f"{len(t.data_files())} files), local[{nproc}], median of {reps} (s) ==")
+        print(f"  {'path':9s} {'q1':>8s} {'count':>8s}")
+        for path in ("fused", "shuffled"):
+            print(f"  {path:9s}" + "".join(
+                f" {statistics.median(times[(path, op)][1:]):8.3f}" for op in ("q1", "count")))
+    finally:
+        spark.stop()
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def _floor_probe(batches):
     """One task of the floor job: time importlib.invalidate_caches(),
     which PySpark runs before every task, and count the cached
@@ -318,8 +374,10 @@ if __name__ == "__main__":
         kernel_bench(args)
     elif mode == "profile":
         profile(args[0])
-    elif mode == "decode":
+    elif mode == "kernel_decode":
         decode_bench(args)
+    elif mode == "decode":
+        decode_table_bench()
     elif mode == "floor":
         floor()
     elif mode == "xor":

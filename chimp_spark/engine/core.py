@@ -22,12 +22,13 @@ is also the unit of resume.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any, NamedTuple
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -67,18 +68,38 @@ ENC_DDL = (
 
 DEFAULT_CHUNK_ROWS = 65_536
 
-# the attribute under which an encode records (input plan, task
-# generator) on the DataFrame it returns, so EncodedTable.commit can run
-# its file writer inside the encode tasks (see manifest.py)
-ENCODE_SOURCE = "_encode_source"
+# the attribute under which a frame DataFrame records its FrameSource,
+# so EncodedTable.commit and decode_table can run their task bodies in
+# the tasks that produce the frames
+FRAME_SOURCE = "_frame_source"
+
+
+class FrameSource(NamedTuple):
+    """``plan.mapInArrow(work)`` yields a frame DataFrame's rows, each
+    chunk group whole and contiguous within one task. ``grouped``: the
+    DataFrame is that mapInArrow itself (an encode's output), so its own
+    partitions hold whole groups too; ``EncodedTable.read``'s JVM scan
+    may split a file's groups across partitions."""
+
+    plan: DataFrame
+    work: Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]
+    grouped: bool
 
 
 def encoded_frames(plan: DataFrame, work) -> DataFrame:
-    """``plan.mapInArrow(work, ENC_DDL)``, remembering ``(plan, work)``
-    on the result under ENCODE_SOURCE."""
+    """``plan.mapInArrow(work, ENC_DDL)``, recording its FrameSource."""
     out = plan.mapInArrow(work, ENC_DDL)
-    setattr(out, ENCODE_SOURCE, (plan, work))
+    setattr(out, FRAME_SOURCE, FrameSource(plan, work, True))
     return out
+
+
+def frame_source(df: DataFrame) -> FrameSource | None:
+    """The FrameSource ``df`` records, unless ``df`` is cached (its
+    tasks then read the cache, which fusing would bypass)."""
+    source = vars(df).get(FRAME_SOURCE)
+    if source is None or df.storageLevel != StorageLevel.NONE:
+        return None
+    return source
 
 
 def session_conf(chunk_rows: int = DEFAULT_CHUNK_ROWS) -> dict[str, str]:
@@ -447,7 +468,9 @@ def iter_decoded_groups(
 ) -> Iterator[pa.RecordBatch]:
     """Worker-side decode of frame rows whose chunk groups arrive whole
     and contiguous: decode_group per (run_id, part_id, chunk_id)
-    group. Shared by decode_table and both parquet sinks."""
+    group. Frames of other columns are skipped, so a group holding none
+    of ``columns`` (another table's) yields nothing. Shared by
+    decode_table and both parquet sinks."""
     types = {c: out_types[c] for c in columns}
     group_key: tuple[str, int, int] | None = None
     group: dict[str, memoryview] = {}
@@ -460,12 +483,14 @@ def iter_decoded_groups(
             raise ValueError(
                 f"chunk (run={group_key[0]}, part={group_key[1]}) lacks columns "
                 f"{missing}: every chunk group must hold all requested columns "
-                f"from ONE encode run, whole within one partition. "
-                f"decode_to_parquet takes an encode's direct output; for any "
-                f"other layout use decode_table(...) (one co-locating shuffle) "
-                f"or decode_table_to_parquet on a committed table. Columns "
-                f"encoded in separate runs decode per column and join on "
-                f"(part_id, row_id)"
+                f"from ONE encode run, whole within one task. decode_to_parquet "
+                f"takes an encode's direct output; decode any other layout with "
+                f"decode_table(...), which co-locates a cached, filtered or "
+                f"user-built input's groups with one shuffle, or commit it and "
+                f"use decode_table_to_parquet. A committed file that splits a "
+                f"group predates co-locating commits: decode_table(df.select(\"*\")) "
+                f"still reads it, or re-encode it. Columns encoded in separate "
+                f"runs decode per column and join on (part_id, row_id)"
             )
         return decode_group(group, sums, types, group_key[1], row_start,
                             verify_checksums, where)
@@ -483,6 +508,9 @@ def iter_decoded_groups(
         checksums = b.column("checksum").to_pylist()
         frames = b.column("frame")
         for i in range(b.num_rows):
+            col = col_names[i]
+            if col not in types:
+                continue
             key = (run_ids[i], part_ids[i], chunk_ids[i])
             if key != group_key and group:
                 yield from emit()
@@ -490,8 +518,8 @@ def iter_decoded_groups(
             group_key = key
             row_start = row_starts[i]
             # zero-copy: the arrow buffer stays alive via refcount
-            group[col_names[i]] = memoryview(frames[i].as_buffer())
-            sums[col_names[i]] = checksums[i]
+            group[col] = memoryview(frames[i].as_buffer())
+            sums[col] = checksums[i]
     if group:
         yield from emit()
 
@@ -502,11 +530,15 @@ def decode_table(
 ) -> DataFrame:
     """Decode several columns back into aligned rows.
 
-    Chunks are co-located by (run_id, part_id, chunk_id) with one hash
-    shuffle of compressed frames, then each group's frames (one per
-    column) decode into a single output batch. ``ddl`` gives the
-    decoded column types, e.g. ``"l_orderkey long, l_extendedprice
-    double"``.
+    Each chunk group's frames (one per column) decode into a single
+    output batch, so a group must reach one task whole. The uncached
+    direct output of an encode, or ``EncodedTable.read`` of a committed
+    table, records where its frames come from (FrameSource): the decode
+    then runs in the tasks that produce the frames, as one stage with
+    no exchange. Any other input (cached, filtered or user-built) is
+    co-located by (run_id, part_id, chunk_id) with one hash shuffle of
+    compressed frames first. ``ddl`` gives the decoded column types,
+    e.g. ``"l_orderkey long, l_extendedprice double"``.
 
     This path emits decoded VALUES through Spark (Arrow -> JVM rows) —
     right when the values feed further Spark plan nodes (joins, aggs).
@@ -517,18 +549,23 @@ def decode_table(
     from .. import _ship
 
     _ship.ensure(encoded.sparkSession)
+    out_types = ddl_arrow_types(ddl)
+    out_ddl = f"part_id int, row_id long, {ddl}"
+
+    def dec_iter(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        yield from iter_decoded_groups(batches, columns, out_types, verify_checksums)
+
+    source = frame_source(encoded)
+    if source is not None:
+        work = source.work
+        return source.plan.mapInArrow(lambda it: dec_iter(work(it)), out_ddl)
     sel = (
         encoded.filter(F.col("column").isin(columns))
         .select(*FRAME_COLS)
         .repartition(F.col("run_id"), F.col("part_id"), F.col("chunk_id"))
         .sortWithinPartitions("run_id", "part_id", "chunk_id", "column")
     )
-    out_types = ddl_arrow_types(ddl)
-
-    def dec_iter(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        yield from iter_decoded_groups(batches, columns, out_types, verify_checksums)
-
-    return sel.mapInArrow(dec_iter, f"part_id int, row_id long, {ddl}")
+    return sel.mapInArrow(dec_iter, out_ddl)
 
 
 def verify_table(

@@ -16,15 +16,17 @@ Commit (the Delta Lake protocol: writers write their own data files, a
 commit appends one record listing them): one Spark job whose tasks
 write their frame rows with pyarrow into a fresh ``data/<run_id>/``,
 each under an attempt-unique name, and report one small row (file,
-part ids, chunk, row and byte totals). The record is built from the
-reported rows alone, which only successful task attempts deliver: the
-file of a failed or speculative attempt is never named, and the driver
-deletes every file in the run directory that no row reported before it
-appends the record. The record is appended put-if-absent: it is
-written to a temp file in ``_log/`` and ``os.link``-ed to the next
-number. A link onto an existing name fails, so a writer that lost the
-race takes the next number. No record depends on earlier ones, so the
-retry is always correct and two concurrent writers both land.
+part ids, chunk, row and byte totals). Each chunk group lands whole
+in one file, so a task can decode any file on its own. The record is
+built from the reported rows alone, which only successful task
+attempts deliver: the file of a failed or speculative attempt is
+never named, and the driver deletes every file in the run directory
+that no row reported before it appends the record. The record is
+appended put-if-absent: it is written to a temp file in ``_log/`` and
+``os.link``-ed to the next number. A link onto an existing name fails,
+so a writer that lost the race takes the next number. No record
+depends on earlier ones, so the retry is always correct and two
+concurrent writers both land.
 
 A crash before the link leaves a ``data/<run_id>/`` directory (and
 perhaps a temp record) that no record names: reads never see it, and
@@ -43,11 +45,10 @@ from collections.abc import Callable, Iterator
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .core import ENC_ARROW_SCHEMA, ENC_DDL, ENCODE_SOURCE
+from .core import ENC_ARROW_SCHEMA, ENC_DDL, FRAME_SOURCE, FrameSource, frame_source
 from .sink import _partition_id, _ShardWriter
 
 
@@ -191,14 +192,18 @@ class EncodedTable:
         summary}; ``summary`` (the totals) is also in the record.
 
         One Spark job whose tasks write their frames into
-        ``data/<run_id>/`` and report their file. The direct, uncached
-        output of ``encode_parquet`` or ``encode_dataframe`` commits
-        fused: the writer runs inside the encode tasks, so frames never
-        leave them. Any other encoded DataFrame (persisted, filtered,
-        empty or user-built) commits chained: a mapInArrow over it
-        writes the frames it reads. The record names exactly the
-        reported files; any other file there (a failed or speculative
-        attempt's) is deleted."""
+        ``data/<run_id>/`` and report their file. A frame DataFrame
+        that records its source (see core.FrameSource) and is not
+        cached commits fused: the writer runs inside the tasks that
+        produce the frames, so they never leave them. Any other input
+        commits chained: a mapInArrow over it writes the frames it
+        reads. Every chunk group lands whole in one file, which
+        ``read``'s fused decode and ``decode_table_to_parquet`` rely
+        on: an encode's output (a persisted one too) holds whole groups
+        per partition, and any other chained input is first co-located
+        by (run_id, part_id, chunk_id) with one hash exchange. The
+        record names exactly the reported files; any other file there
+        (a failed or speculative attempt's) is deleted."""
         from .. import _ship
 
         _ship.ensure(spark)
@@ -207,11 +212,14 @@ class EncodedTable:
         out = os.path.join(self.data_dir, run_id)
         os.makedirs(out, exist_ok=True)
         write_frames = _frame_writer(out)
-        source = vars(encoded).get(ENCODE_SOURCE)
-        if source is not None and encoded.storageLevel == StorageLevel.NONE:
-            plan, work = source
-            job = plan.mapInArrow(lambda it: write_frames(work(it)), _REPORT_DDL)
+        source = frame_source(encoded)
+        if source is not None:
+            work = source.work
+            job = source.plan.mapInArrow(lambda it: write_frames(work(it)), _REPORT_DDL)
         else:
+            recorded = vars(encoded).get(FRAME_SOURCE)
+            if recorded is None or not recorded.grouped:  # not an encode's own output
+                encoded = encoded.repartition(*_GROUP_KEY)
             job = encoded.mapInArrow(write_frames, _REPORT_DDL)
         reported = job.collect()
         files = {r["file"] for r in reported}
@@ -230,10 +238,66 @@ class EncodedTable:
                 "partitions": len(record["part_ids"]), "summary": record["summary"]}
 
     def read(self, spark: SparkSession) -> DataFrame:
+        """Every committed frame row, as a JVM parquet scan (so queries
+        over the lineage columns prune and push down; the declared
+        schema spares a footer-reading inference job). It records a
+        FrameSource that reads the same files task-side, whole files
+        per task, so ``decode_table`` and ``commit`` of the uncached
+        result run fused."""
         files = self.data_files()
         if not files:
             return spark.createDataFrame([], ENC_DDL)
-        return spark.read.parquet(*files)
+        plan = file_plan(spark, len(files))
+
+        def work(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for b in batches:
+                for i in b.column("id").to_pylist():
+                    yield from read_frame_file(files[i]).to_batches()
+
+        scan = spark.read.schema(ENC_DDL).parquet(*files)
+        setattr(scan, FRAME_SOURCE, FrameSource(plan, work, False))
+        return scan
+
+
+def file_plan(spark: SparkSession, n: int) -> DataFrame:
+    """A JVM range over ``n`` file indices in ``min(n, parallelism)``
+    contiguous slices: the file-per-task layout of repartitionByRange
+    without its sampler stage and exchange; tasks look the paths up in
+    their closure (see scan.py)."""
+    return spark.range(0, n, 1, min(n, spark.sparkContext.defaultParallelism))
+
+
+_GROUP_KEY = ["run_id", "part_id", "chunk_id"]
+
+
+def group_keys(t: pa.Table) -> list[tuple[str, int, int]]:
+    return list(zip(*(t.column(k).to_pylist() for k in _GROUP_KEY)))
+
+
+def read_frame_file(path: str, fields: list[str] | None = None, columns: list[str] | None = None,
+                    table: str | None = None, keep: set | None = None) -> pa.Table:
+    """The frame rows of one committed data file, sorted by (run_id,
+    part_id, chunk_id) so each chunk group is contiguous — however the
+    writer interleaved them. ``fields`` projects the parquet columns
+    (None: all); ``columns`` and ``table`` keep only the frames of
+    those columns and that table; ``keep`` keeps only those group keys,
+    with a chunk_id pushdown that skips other groups' frame pages."""
+    import pyarrow.dataset as pads
+
+    flt = pads.scalar(True)
+    if columns is not None:
+        flt &= pads.field("column").isin(columns)
+    if table is not None:
+        flt &= pads.field("table") == table
+    chunk_ids = sorted({k[2] for k in keep or ()})
+    # bounded: a near-unpruned huge file would bloat the filter for no
+    # IO win; the exact key check below stays correct either way
+    if 0 < len(chunk_ids) <= 4096:
+        flt &= pads.field("chunk_id").isin(chunk_ids)
+    t = pads.dataset(path, format="parquet").to_table(columns=fields, filter=flt)
+    if keep is not None:
+        t = t.filter(pa.array([k in keep for k in group_keys(t)], pa.bool_()))
+    return t.sort_by([(k, "ascending") for k in _GROUP_KEY])
 
 
 _TOTALS = ("chunks", "rows", "raw_bytes", "enc_bytes")

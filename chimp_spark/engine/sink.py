@@ -8,22 +8,23 @@ so Spark only schedules); these bypass Arrow -> JVM on DECODE. The
 generic ``decode_table`` is right when decoded values feed further
 Spark plan nodes (joins, aggregations, filters) — but a decode
 *consumer* ("materialize this encoded table back to parquet for the
-trainer") pays the JVM emit for nothing. Both shapes decode with
-NO shuffle: only file metadata returns through Spark.
+trainer") pays the JVM emit for nothing. Both shapes decode with no
+shuffle, as ``decode_table`` does on an encode's output or a committed
+table's ``read()``; here only file metadata returns through Spark.
 
 - ``decode_to_parquet(encoded_df, ...)``: input is an in-flight
   encoded DataFrame whose chunk groups are whole within a partition,
   as the direct output of an encode is. One task per input partition
   decodes its frames and writes a shard.
 - ``decode_table_to_parquet(spark, root, ...)``: input is a COMMITTED
-  EncodedTable. Chunk groups never span data files (each encode task's
-  batches land whole in one file, which the commit records as
-  written), so tasks read their files straight with pyarrow — the
-  mirror of scan.py's work-unit model, and the shape a 100 TB decode
-  job runs in: every task streams encoded shards from the store and
-  writes decoded shards back, nothing crosses the JVM but file indices
-  and file metadata. A ``predicate`` prunes chunk groups by zone map
-  before their frames are read.
+  EncodedTable. Chunk groups never span data files (the commit writes
+  each group whole into one file), so tasks read their files straight
+  with pyarrow (``manifest.read_frame_file``) — the mirror of scan.py's
+  work-unit model, and the shape a 100 TB decode job runs in: every
+  task streams encoded shards from the store and writes decoded shards
+  back, nothing crosses the JVM but file indices and file metadata. A
+  ``predicate`` prunes chunk groups by zone map before their frames
+  are read.
 
 Both run the group-decode core of engine/core.py (iter_decoded_groups
 -> decode_group) and filter rows with the same core.Predicate.
@@ -285,8 +286,9 @@ def decode_to_parquet(
     ``encode_dataframe`` or ``encode_parquet`` does: their tasks emit
     each group as one batch. Any other layout fails on its first
     incomplete group, naming the missing columns, and writes nothing
-    wrong: decode it with ``decode_table(...)`` (one co-locating
-    shuffle), or commit it and use ``decode_table_to_parquet``.
+    wrong: decode it with ``decode_table(...)``, which co-locates such
+    an input's groups with one shuffle, or commit it and use
+    ``decode_table_to_parquet``.
 
     Output schema: ``(part_id int32, row_id int64, *columns)`` (the
     alignment identity of the encode run) unless ``with_row_ids=False``
@@ -326,11 +328,6 @@ _STAT_COLS = ["run_id", "part_id", "chunk_id", "column", "enc_bytes",
               "stat_min", "stat_max", "stat_min_bin", "stat_max_bin"]
 
 
-def _group_keys(t: pa.Table) -> list[tuple[str, int, int]]:
-    return list(zip(t.column("run_id").to_pylist(), t.column("part_id").to_pylist(),
-                    t.column("chunk_id").to_pylist()))
-
-
 def decode_table_to_parquet(
     spark: SparkSession,
     root: str,
@@ -348,9 +345,9 @@ def decode_table_to_parquet(
     """Decode a COMMITTED EncodedTable (engine/manifest.py layout) to a
     decoded parquet directory with NO shuffle: each task reads whole
     encoded data files with pyarrow, decodes, writes a decoded shard.
-    Valid because a chunk group never spans data files — encode emits
-    each group in ONE output batch and commit moves files intact. Rows
-    within a file may be in any order: each file is sorted task-side by
+    Valid because a chunk group never spans data files: the commit
+    writes each group whole into one file. Rows within a file may be in
+    any order: ``manifest.read_frame_file`` sorts each file by
     (run_id, part_id, chunk_id) before group iteration (cheap: ~1
     frame row per 64 K values). The unit of work is the FILE, so
     parallelism == file count; encode jobs already write one file per
@@ -376,7 +373,7 @@ def decode_table_to_parquet(
     prune skipped payload bytes.
     """
     from .. import _ship
-    from .manifest import EncodedTable
+    from .manifest import EncodedTable, file_plan, group_keys, read_frame_file
 
     _ship.ensure(spark)
     files = EncodedTable(root).data_files(table)
@@ -387,30 +384,22 @@ def decode_table_to_parquet(
                        with_audit=True)
     write = _shard_writes(staged, columns, ddl, with_row_ids, compression,
                           row_group_rows, verify_checksums, pred)
-    # a JVM range over file indices, sliced contiguously: the same
-    # file-per-task layout as repartitionByRange without its sampler
-    # stage and exchange; tasks look the paths up in the closure (see
-    # scan.py)
-    plan = spark.range(0, len(files), 1, min(len(files), spark.sparkContext.defaultParallelism))
     col_set = list(dict.fromkeys(columns))
     zone = pred.zone_expr() if pred is not None else None
 
     def work(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.compute as pc
-        import pyarrow.dataset as pads
 
         audit = {"groups_total": 0, "groups_decoded": 0,
                  "frame_bytes_total": 0, "frame_bytes_read": 0}
 
-        def prune_keys(path, flt) -> set:
+        def prune_keys(path) -> set:
             """Zone-map pass over one file WITHOUT the frame column:
             returns the surviving (run_id, part_id, chunk_id) keys."""
-            m = pads.dataset(path, format="parquet").to_table(
-                columns=_STAT_COLS, filter=flt
-            )
-            keys = _group_keys(m)
+            m = read_frame_file(path, _STAT_COLS, col_set, table)
+            keys = group_keys(m)
             on_pred = m.filter(pc.field("column") == pred.col)
-            unchecked = set(keys) - set(_group_keys(on_pred))
+            unchecked = set(keys) - set(group_keys(on_pred))
             if unchecked:
                 # a group with no frame for the predicate column can't
                 # be zone-checked; pruning it silently would turn a
@@ -421,7 +410,7 @@ def decode_table_to_parquet(
                     f"{len(unchecked)} chunk group(s) in {path} "
                     f"— the table was not encoded with this column"
                 )
-            keep = set(_group_keys(on_pred.filter(zone)))
+            keep = set(group_keys(on_pred.filter(zone)))
             ebytes = m.column("enc_bytes").to_pylist()
             audit["groups_total"] += len(set(keys))
             audit["groups_decoded"] += len(keep)
@@ -434,40 +423,15 @@ def decode_table_to_parquet(
         def file_batches() -> Iterator[pa.RecordBatch]:
             for b in batches:
                 for i in b.column("id").to_pylist():
-                    path = files[i]
-                    flt = pads.field("column").isin(col_set)
-                    if table is not None:
-                        flt = flt & (pads.field("table") == table)
-                    if pred is not None:
-                        keep = prune_keys(path, flt)
-                        if not keep:
-                            continue
-                        # chunk_id pushdown skips pruned groups' frame
-                        # pages; the exact key check below handles
-                        # chunk_id collisions across (run, part).
-                        # Bounded: a near-unpruned huge file would
-                        # bloat the filter expression for no IO win —
-                        # the exact check alone stays correct.
-                        chunk_ids = sorted({k[2] for k in keep})
-                        if len(chunk_ids) <= 4096:
-                            flt = flt & pads.field("chunk_id").isin(chunk_ids)
-                    t = pads.dataset(path, format="parquet").to_table(
-                        columns=FRAME_COLS, filter=flt
-                    )
-                    if pred is not None:
-                        t = t.filter(pa.array([k in keep for k in _group_keys(t)], pa.bool_()))
-                    # group contiguity within the file regardless of
-                    # how the encode interleaved its emits
-                    t = t.sort_by(
-                        [("run_id", "ascending"), ("part_id", "ascending"),
-                         ("chunk_id", "ascending")]
-                    )
-                    yield from t.to_batches()
+                    keep = prune_keys(files[i]) if pred is not None else None
+                    if keep is None or keep:
+                        yield from read_frame_file(files[i], FRAME_COLS, col_set, table,
+                                                   keep).to_batches()
 
         pid = _partition_id()
         shard = write(pid, file_batches())
         yield _meta_batch(pid, shard, audit)
 
-    reported = plan.mapInArrow(work, _META_DDL).collect()
+    reported = file_plan(spark, len(files)).mapInArrow(work, _META_DDL).collect()
     return _commit(out_dir, staged, reported, columns, ddl, with_row_ids,
                    with_audit=True)

@@ -750,7 +750,9 @@ def test_decode_to_parquet_single_pass_failure(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
-    assert "decode_table(...)" in str(e.value) and "decode_table_to_parquet" in str(e.value)
+    msg = str(e.value)
+    assert "decode_table(...)" in msg and "decode_table_to_parquet" in msg
+    assert 'decode_table(df.select("*"))' in msg  # the shuffle that reads split groups
     scrambled.unpersist()
     enc.unpersist()
 
@@ -1001,12 +1003,12 @@ def test_commit_fused_and_chained_agree(spark, tmp_path):
     session hands mapInArrow large string/binary Arrow types."""
     import json as _json
 
-    from chimp_spark.engine.core import ENCODE_SOURCE
+    from chimp_spark.engine.core import FRAME_SOURCE
 
     src = str(tmp_path / "src")
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").repartition(3).write.parquet(src)
     enc = engine.encode_parquet(spark, src, table_name="lineitem", chunk_rows=4096)
-    assert ENCODE_SOURCE in vars(enc)
+    assert FRAME_SOURCE in vars(enc)
     fused = engine.EncodedTable(str(tmp_path / "fused"))
     chained = engine.EncodedTable(str(tmp_path / "chained"))
     info_f = fused.commit(spark, enc, "lineitem", mode="scan")
@@ -1103,6 +1105,8 @@ def test_root_mixing_spark_and_task_written_commits(spark, tmp_path):
     back = engine.decode_table(t.read(spark), cols, ddl, verify_checksums=True)
     assert canon(back).exceptAll(docs.select(*cols)).isEmpty()
     assert docs.select(*cols).exceptAll(canon(back)).isEmpty()
+    shuffled = engine.decode_table(t.read(spark).select("*"), cols, ddl, verify_checksums=True)
+    assert back.exceptAll(shuffled).isEmpty() and shuffled.exceptAll(back).isEmpty()
 
     out = str(tmp_path / "only_en")
     res = engine.decode_table_to_parquet(spark, t.root, cols, ddl, out, table="documents",
@@ -1113,6 +1117,96 @@ def test_root_mixing_spark_and_task_written_commits(spark, tmp_path):
     assert written.exceptAll(want).isEmpty() and want.exceptAll(written).isEmpty()
     assert res["rows"] == want.count() > 0
     assert 0 < res["audit"]["groups_decoded"] < res["audit"]["groups_total"]
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _as_strings(dec, cols):
+    """Decoded rows with every value as a string: Spark compares
+    floats normalized (-0.0 == 0.0), their string casts bit for bit."""
+    return dec.select("part_id", "row_id", *(F.col(c).cast("string") for c in cols))
+
+
+def test_commit_colocates_split_chunk_groups(spark, tmp_path):
+    """A chained commit of frames whose chunk groups are spread over
+    partitions (a repartitioned encode output) still writes each group
+    into one file: the files hold the frames a fused commit writes, and
+    both decodes of the committed table return every row."""
+    import pyarrow.parquet as pq
+
+    df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    src = str(tmp_path / "src")
+    df.repartition(3).write.parquet(src)
+    cols = ["l_orderkey", "l_extendedprice", "l_returnflag"]
+    ddl = "l_orderkey long, l_extendedprice double, l_returnflag string"
+    enc = engine.encode_parquet(spark, src, columns=cols, chunk_rows=512, table_name="lineitem")
+    fused = engine.EncodedTable(str(tmp_path / "fused"))
+    fused.commit(spark, enc, "lineitem", mode="scan")
+    split = engine.EncodedTable(str(tmp_path / "split"))
+    split.commit(spark, enc.repartition(5), "lineitem", mode="scan")
+    assert _frame_digests(split) == _frame_digests(fused)
+    owner = {}
+    for f in split.data_files():
+        keys = pq.read_table(f, columns=["run_id", "part_id", "chunk_id"])
+        for key in zip(*(keys.column(k).to_pylist() for k in keys.column_names)):
+            assert owner.setdefault(key, f) == f, f"group {key} spans files"
+    assert len(owner) > 5
+
+    want = df.select(*(F.col(c).cast("string") for c in cols))
+    back = _as_strings(engine.decode_table(split.read(spark), cols, ddl,
+                                           verify_checksums=True), cols).drop("part_id", "row_id")
+    assert back.exceptAll(want).isEmpty() and want.exceptAll(back).isEmpty()
+    res = engine.decode_table_to_parquet(spark, split.root, cols, ddl, str(tmp_path / "out"),
+                                         verify_checksums=True)
+    assert res["rows"] == df.count()
+
+
+def test_decode_table_fuses_over_frame_sources(spark, tmp_path):
+    """decode_table of read() on a multi-table, multi-commit root, or of
+    an uncached encode output, decodes in the tasks that produce the
+    frames (no Exchange, no frame FileScan) and returns the rows the
+    shuffled decode of the same frames returns. A cached read() or a
+    filtered frame DataFrame takes the shuffle; an empty table decodes
+    to no rows either way."""
+    li_cols = ["l_orderkey", "l_extendedprice", "l_returnflag", "l_shipdate"]
+    li_ddl = ("l_orderkey long, l_extendedprice double, l_returnflag string, "
+              "l_shipdate timestamp")
+    doc_cols = ["doc_id", "lang", "text"]
+    doc_ddl = "doc_id long, lang string, text string"
+    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    t = engine.EncodedTable(str(tmp_path / "root"))
+    for k in (0, 1):  # interleaved commits of two tables
+        for name, src, key, cols in (("lineitem", li, "l_orderkey", li_cols),
+                                     ("documents", docs, "doc_id", doc_cols)):
+            part = src.filter(F.col(key) % 2 == k)
+            t.commit(spark, engine.encode_dataframe(part, cols, chunk_rows=1024,
+                                                    table_name=name), name, mode="df")
+    for src, cols, ddl in ((li, li_cols, li_ddl), (docs, doc_cols, doc_ddl)):
+        fused = engine.decode_table(t.read(spark), cols, ddl, verify_checksums=True)
+        plan = _plan(fused)
+        assert "Exchange" not in plan and "FileScan" not in plan, plan
+        shuffled = engine.decode_table(t.read(spark).select("*"), cols, ddl,
+                                       verify_checksums=True)
+        assert "Exchange" in _plan(shuffled)
+        a, b = _as_strings(fused, cols), _as_strings(shuffled, cols)
+        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+        assert a.count() == src.count()
+
+    cached = t.read(spark).persist()
+    filtered = t.read(spark).filter(F.col("table") == "lineitem")
+    for enc in (cached, filtered):
+        assert "Exchange" in _plan(engine.decode_table(enc, li_cols, li_ddl))
+    cached.unpersist()
+    src_dir = str(tmp_path / "src")
+    li.repartition(2).write.parquet(src_dir)
+    direct = engine.encode_parquet(spark, src_dir, columns=li_cols, table_name="lineitem")
+    assert "Exchange" not in _plan(engine.decode_table(direct, li_cols, li_ddl))
+    empty = engine.EncodedTable(str(tmp_path / "empty")).read(spark)
+    for enc in (empty, empty.select("*")):
+        assert engine.decode_table(enc, li_cols, li_ddl, verify_checksums=True).count() == 0
 
 
 def test_commit_empty_encoded_does_not_block(spark, tmp_path):

@@ -6,8 +6,10 @@
   must not read the other 9.
 - reading an encoded table back prunes/pushes down on the lineage
   columns (table/column filters reach the parquet scan of frames).
-- decode_table has exactly one Exchange (the (run,part,chunk)
-  co-location shuffle) and it carries only frame rows, not values.
+- decode_table of an encode's direct output has no Exchange (it runs
+  in the encode tasks); of any other frame DataFrame, exactly one (the
+  (run,part,chunk) co-location shuffle), which carries only frame
+  rows, not values.
 """
 
 import os
@@ -69,9 +71,10 @@ def test_encoded_table_read_pushdown(spark, tmp_path):
 def test_decode_table_single_exchange(spark):
     df = spark.read.parquet(f"{SF_DIR}/orders.parquet")
     enc = engine.encode_dataframe(df, ["o_orderkey", "o_totalprice"], table_name="o")
-    dec = engine.decode_table(enc, ["o_orderkey", "o_totalprice"],
-                              "o_orderkey long, o_totalprice double")
-    plan = _formatted(dec)
+    cols, ddl = ["o_orderkey", "o_totalprice"], "o_orderkey long, o_totalprice double"
+    assert "Exchange" not in _formatted(engine.decode_table(enc, cols, ddl))  # fused
+    # select("*") hides the encode, so the decode co-locates the frames
+    plan = _formatted(engine.decode_table(enc.select("*"), cols, ddl))
     # formatted output lists each operator twice (tree + detail):
     # count operator ids
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1  # chunk co-location only
