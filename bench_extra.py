@@ -8,7 +8,8 @@ Modes:
     python bench_extra.py floor                per-task Python worker floor
     python bench_extra.py xor                  XOR codec kernels, C and numpy
     python bench_extra.py commit               EncodedTable.commit, fused and chained
-    python bench_extra.py decode               decode_table of a committed root, fused and shuffled
+    python bench_extra.py decode               decode_table of a committed root and of a persisted
+                                               encode, without and with a shuffle
 """
 
 from __future__ import annotations
@@ -258,28 +259,66 @@ def commit_bench(seed: int = 7, reps: int = 5) -> None:
 
 
 def decode_table_bench(seed: int = 7, reps: int = 9) -> None:
-    """Seconds of the benchmark's tpch q1 (``benchmark.workloads.Tpch``:
-    ``q1_aggregate`` over ``decode_table`` of lineitem) and of
-    ``decode_table(...).count()`` on one committed tpch root (lineitem
-    and documents), median of ``reps`` at local[nproc], rounds rotating
-    the case order:
+    """``decode_table`` seconds, median of ``reps`` at local[nproc], rounds
+    rotating the case order, and the driver-side plan build of each
+    ``decode_table`` call (``plan_ms``: the call itself, before any task
+    runs).
+
+    On one committed tpch root (lineitem and documents), the benchmark's
+    tpch q1 (``benchmark.workloads.Tpch``: ``q1_aggregate`` over
+    ``decode_table`` of lineitem) and ``decode_table(...).count()``:
 
     * ``fused``: ``EncodedTable.read`` as returned; the decode runs in
       the tasks that read the frame files, with no exchange.
     * ``shuffled``: the same read behind ``select("*")``, which the
       decode cannot fuse, so the frames are co-located by one hash
-      shuffle of the JVM scan's rows first."""
+      shuffle of the JVM scan's rows first.
+
+    On a persisted float_series encode (``benchmark.workloads.
+    FloatSeries``), ``toArrow`` of the checksum-verified decode and the
+    per-sensor aggregate over it, as a benchmark pass runs them:
+
+    * ``in_place``: the persisted output as returned; its partitions
+      hold whole chunk groups, so the decode reads them as they are.
+    * ``shuffled``: the same output behind ``select("*")``, co-located
+      by one hash shuffle first."""
     import shutil
     import statistics
     import tempfile
 
-    from benchmark.workloads import _LI_COLS, _LI_DDL, Tpch, q1_aggregate
+    from pyspark.sql import functions as F
+
+    from benchmark.workloads import _FS_COLS, _FS_DDL, _LI_COLS, _LI_DDL, FloatSeries, Tpch, \
+        q1_aggregate
     from chimp_spark import engine
 
-    cases = [(path, op) for path in ("fused", "shuffled") for op in ("q1", "count")]
     work = tempfile.mkdtemp(prefix="chimp_decode_bench_")
     nproc = len(os.sched_getaffinity(0))
     spark = engine.get_spark(cpus=nproc, app="chimp_decode", driver_memory="1g")
+
+    def rotate(cases, run):
+        """Median seconds per case and plan-build ms per path over
+        ``reps`` rounds of ``run(path, op) -> (plan_s, total_s)``, after
+        one round that warms the workers."""
+        times = {c: [] for c in cases}
+        plans: dict[str, list[float]] = {c[0]: [] for c in cases}
+        for r in range(reps + 1):
+            k = r % len(cases)
+            for case in cases[k:] + cases[:k]:
+                plan_s, total_s = run(*case)
+                if r:
+                    times[case].append(total_s)
+                    plans[case[0]].append(plan_s)
+        return ({c: statistics.median(v) for c, v in times.items()},
+                {p: statistics.median(v) * 1e3 for p, v in plans.items()})
+
+    def show(title, paths, ops, med, plan_ms):
+        print(title)
+        print(f"  {'path':9s}" + "".join(f" {op:>8s}" for op in ops) + f" {'plan_ms':>8s}")
+        for path in paths:
+            print(f"  {path:9s}" + "".join(f" {med[(path, op)]:8.3f}" for op in ops)
+                  + f" {plan_ms[path]:8.1f}")
+
     try:
         wl = Tpch(os.path.join(work, "inputs"), os.path.join(work, "run"), seed)
         wl.stage()
@@ -288,25 +327,61 @@ def decode_table_bench(seed: int = 7, reps: int = 9) -> None:
         for table, src in wl.sources.items():
             t.commit(spark, engine.encode_parquet(spark, src, table_name=table), table,
                      mode="scan")
-        times: dict[tuple, list[float]] = {c: [] for c in cases}
-        for r in range(reps + 1):  # the first round warms the workers
-            for path, op in cases[r % 4:] + cases[:r % 4]:
-                t0 = time.perf_counter()
-                enc = t.read(spark)
-                dec = engine.decode_table(enc if path == "fused" else enc.select("*"),
-                                          _LI_COLS, _LI_DDL)
-                if op == "q1":
-                    got = sorted(tuple(row) for row in q1_aggregate(dec).collect())
-                    assert got == wl.oracle, f"{path} q1 differs from DuckDB"
-                else:
-                    assert dec.count() == wl.rows["lineitem"]
-                times[(path, op)].append(time.perf_counter() - t0)
-        print(f"== decode_table of a committed tpch root (seed {seed}, "
-              f"{len(t.data_files())} files), local[{nproc}], median of {reps} (s) ==")
-        print(f"  {'path':9s} {'q1':>8s} {'count':>8s}")
-        for path in ("fused", "shuffled"):
-            print(f"  {path:9s}" + "".join(
-                f" {statistics.median(times[(path, op)][1:]):8.3f}" for op in ("q1", "count")))
+
+        def tpch_case(path, op):
+            t0 = time.perf_counter()
+            enc = t.read(spark)
+            t1 = time.perf_counter()
+            dec = engine.decode_table(enc if path == "fused" else enc.select("*"),
+                                      _LI_COLS, _LI_DDL)
+            plan_s = time.perf_counter() - t1
+            if op == "q1":
+                got = sorted(tuple(row) for row in q1_aggregate(dec).collect())
+                assert got == wl.oracle, f"{path} q1 differs from DuckDB"
+            else:
+                assert dec.count() == wl.rows["lineitem"]
+            return plan_s, time.perf_counter() - t0
+
+        paths = ("fused", "shuffled")
+        med, plan_ms = rotate([(p, op) for p in paths for op in ("q1", "count")], tpch_case)
+        show(f"== decode_table of a committed tpch root (seed {seed}, {len(t.data_files())} "
+             f"files), local[{nproc}], median of {reps} (s) ==", paths, ("q1", "count"),
+             med, plan_ms)
+
+        fs = FloatSeries(os.path.join(work, "inputs"), os.path.join(work, "run"), seed)
+        fs.stage()
+        fs.prepare(spark)
+        enc = engine.encode_parquet(spark, fs.sources["float_series"],
+                                    table_name="float_series").persist()
+        enc.count()
+
+        def fs_case(path, op):
+            t0 = time.perf_counter()
+            dec = engine.decode_table(enc if path == "in_place" else enc.select("*"),
+                                      _FS_COLS, _FS_DDL, verify_checksums=True)
+            plan_s = time.perf_counter() - t0
+            if op == "toArrow":
+                out = dec.toArrow()
+            else:
+                out = (dec.groupBy("sensor_id")
+                       .agg(F.count("*"), F.min("temp_c"), F.max("temp_c"), F.min("accel_x"),
+                            F.max("gyro_z"), F.max(F.unix_micros("ts"))).collect())
+            total_s = time.perf_counter() - t0
+            if op == "toArrow":
+                assert fs._bit_mismatch(out) is None, f"{path} decode differs"
+            else:
+                assert sorted(tuple(r) for r in out) == fs.oracle, f"{path} query differs"
+            return plan_s, total_s
+
+        paths = ("in_place", "shuffled")
+        try:
+            med, plan_ms = rotate([(p, op) for p in paths for op in ("toArrow", "query")],
+                                  fs_case)
+        finally:
+            enc.unpersist()
+        show(f"== decode_table of a persisted float_series encode (seed {seed}), "
+             f"local[{nproc}], median of {reps} (s) ==", paths, ("toArrow", "query"),
+             med, plan_ms)
     finally:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)

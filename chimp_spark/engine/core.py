@@ -31,6 +31,8 @@ import pyarrow.compute as pc
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_type
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from ..framing import decode_chunk, encode_chunk
 
@@ -58,13 +60,9 @@ ENC_ARROW_SCHEMA = pa.schema(
         ("frame", pa.binary()),
     ]
 )
-ENC_DDL = (
-    "table string, run_id string, column string, part_id int, chunk_id long, row_start long, "
-    "n long, n_valid long, codec string, dtype string, raw_bytes long, "
-    "enc_bytes long, checksum long, encode_ns long, stat_min double, "
-    "stat_max double, stat_min_bin binary, stat_max_bin binary, "
-    "reason string, frame binary"
-)
+# the Spark schema of frame rows, built in Python: a DDL string would
+# cost a JVM parse wherever it is used
+ENC_DDL = from_arrow_schema(ENC_ARROW_SCHEMA)
 
 DEFAULT_CHUNK_ROWS = 65_536
 
@@ -79,11 +77,15 @@ class FrameSource(NamedTuple):
     chunk group whole and contiguous within one task. ``grouped``: the
     DataFrame is that mapInArrow itself (an encode's output), so its own
     partitions hold whole groups too; ``EncodedTable.read``'s JVM scan
-    may split a file's groups across partitions."""
+    may split a file's groups across partitions. ``narrow``, when set,
+    returns the source of only the frames a decode of the given columns
+    can use (``EncodedTable.read``: the files of the commits that hold
+    one of them)."""
 
     plan: DataFrame
     work: Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]
     grouped: bool
+    narrow: Callable[[list[str]], FrameSource] | None = None
 
 
 def encoded_frames(plan: DataFrame, work) -> DataFrame:
@@ -100,6 +102,16 @@ def frame_source(df: DataFrame) -> FrameSource | None:
     if source is None or df.storageLevel != StorageLevel.NONE:
         return None
     return source
+
+
+def holds_whole_groups(df: DataFrame) -> bool:
+    """Whether every partition of ``df`` holds whole chunk groups, each
+    contiguous: true for an encode's own output, cached or not (its
+    tasks emit each group as one batch, and a cache keeps partitions
+    and their row order). Anything derived from it is a new DataFrame
+    and answers False."""
+    source = vars(df).get(FRAME_SOURCE)
+    return source is not None and source.grouped
 
 
 def session_conf(chunk_rows: int = DEFAULT_CHUNK_ROWS) -> dict[str, str]:
@@ -362,6 +374,12 @@ class Predicate(NamedTuple):
 FRAME_COLS = ["run_id", "part_id", "chunk_id", "row_start", "column", "checksum", "frame"]
 
 
+def frame_rows(df: DataFrame) -> DataFrame:
+    """``df.select(*FRAME_COLS)``, each column resolved on ``df``: one
+    JVM round trip per column, where a name costs three."""
+    return df.select(*(df[c] for c in FRAME_COLS))
+
+
 def decode_group(
     frames: dict[str, memoryview],
     sums: dict[str, int],
@@ -421,7 +439,7 @@ def decode_column(
     if pred is not None:
         sel = sel.filter(pred.zone_column(encoded.columns))
     sel = sel.select("part_id", "row_start", "checksum", "frame")
-    types = {"value": _arrow_type_of_ddl(value_ddl)}
+    out_schema, types = _decoded_schema(f"value {value_ddl}")
     where = pred.row_expr("value", types["value"]) if pred is not None else None
 
     def dec_iter(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -438,25 +456,46 @@ def decode_column(
                     types, pids[i], starts[i], verify_checksums, where,
                 )
 
-    return sel.mapInArrow(dec_iter, f"part_id int, row_id long, value {value_ddl}")
-
-
-def _arrow_type_of_ddl(ddl: str) -> pa.DataType:
-    from pyspark.sql.pandas.types import to_arrow_type
-    from pyspark.sql.types import _parse_datatype_string
-
-    return to_arrow_type(_parse_datatype_string(ddl))
+    return sel.mapInArrow(dec_iter, out_schema)
 
 
 def _cast_to(arr: pa.Array, t: pa.DataType) -> pa.Array:
     return arr if arr.type == t else arr.cast(t)
 
 
+def _parse_ddl(ddl: str) -> tuple[StructType, dict[str, pa.DataType]]:
+    """A ``"name type, ..."`` DDL as a StructType and the Arrow type of
+    each field, from one JVM round trip. Parsed per call, never cached:
+    ``timestamp`` resolves through the session's
+    ``spark.sql.timestampType``."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string(ddl)
+    return schema, {f.name: to_arrow_type(f.dataType) for f in schema.fields}
+
+
 def ddl_arrow_types(ddl: str) -> dict[str, pa.DataType]:
-    return {
-        f.split()[0]: _arrow_type_of_ddl(" ".join(f.split()[1:]))
-        for f in ddl.split(",")
-    }
+    """The Arrow type of each field of a ``"name type, ..."`` DDL."""
+    return _parse_ddl(ddl)[1]
+
+
+def _decoded_schema(ddl: str) -> tuple[StructType, dict[str, pa.DataType]]:
+    """A decode's output schema, ``(part_id int, row_id long, *ddl)``,
+    and the Arrow type of each ``ddl`` field."""
+    schema, types = _parse_ddl(ddl)
+    ids = [StructField("part_id", IntegerType()), StructField("row_id", LongType())]
+    return StructType(ids + schema.fields), types
+
+
+def frame_column_filter(columns: list[str]) -> Column:
+    """``column IN columns`` over frame rows, built with a fixed number
+    of py4j calls: the names travel as one JSON literal, which the
+    optimizer folds into an array. ``isin`` costs several JVM round
+    trips per name."""
+    import json
+
+    names = F.from_json(F.lit(json.dumps(list(columns))), "array<string>")
+    return F.array_contains(names, F.col("column"))
 
 
 def iter_decoded_groups(
@@ -535,10 +574,14 @@ def decode_table(
     direct output of an encode, or ``EncodedTable.read`` of a committed
     table, records where its frames come from (FrameSource): the decode
     then runs in the tasks that produce the frames, as one stage with
-    no exchange. Any other input (cached, filtered or user-built) is
-    co-located by (run_id, part_id, chunk_id) with one hash shuffle of
-    compressed frames first. ``ddl`` gives the decoded column types,
-    e.g. ``"l_orderkey long, l_extendedprice double"``.
+    no exchange (over ``read()``, only the files of commits that hold
+    one of ``columns``). A persisted encode output decodes in place:
+    its partitions already hold whole chunk groups, so the decode reads
+    them with no exchange and no sort. Any other input (a cached
+    ``read()``, a filtered or user-built DataFrame) is co-located by
+    (run_id, part_id, chunk_id) with one hash shuffle of compressed
+    frames first. ``ddl`` gives the decoded column types, e.g.
+    ``"l_orderkey long, l_extendedprice double"``.
 
     This path emits decoded VALUES through Spark (Arrow -> JVM rows) —
     right when the values feed further Spark plan nodes (joins, aggs).
@@ -549,23 +592,26 @@ def decode_table(
     from .. import _ship
 
     _ship.ensure(encoded.sparkSession)
-    out_types = ddl_arrow_types(ddl)
-    out_ddl = f"part_id int, row_id long, {ddl}"
+    out_schema, out_types = _decoded_schema(ddl)
 
     def dec_iter(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         yield from iter_decoded_groups(batches, columns, out_types, verify_checksums)
 
     source = frame_source(encoded)
     if source is not None:
+        if source.narrow is not None:
+            source = source.narrow(columns)
         work = source.work
-        return source.plan.mapInArrow(lambda it: dec_iter(work(it)), out_ddl)
-    sel = (
-        encoded.filter(F.col("column").isin(columns))
-        .select(*FRAME_COLS)
-        .repartition(F.col("run_id"), F.col("part_id"), F.col("chunk_id"))
-        .sortWithinPartitions("run_id", "part_id", "chunk_id", "column")
-    )
-    return sel.mapInArrow(dec_iter, out_ddl)
+        return source.plan.mapInArrow(lambda it: dec_iter(work(it)), out_schema)
+    if holds_whole_groups(encoded):
+        sel = frame_rows(encoded)
+    else:
+        sel = (
+            frame_rows(encoded.filter(frame_column_filter(columns)))
+            .repartition(F.col("run_id"), F.col("part_id"), F.col("chunk_id"))
+            .sortWithinPartitions("run_id", "part_id", "chunk_id", "column")
+        )
+    return sel.mapInArrow(dec_iter, out_schema)
 
 
 def verify_table(

@@ -8,18 +8,20 @@ through it here, and ``ops.ann_index`` links its build and append
 records through it the same way.
 
 A record is immutable and self-contained: ``{table, mode, epoch,
-fingerprint, layout_parts, run_id, timestamp_ms, part_ids, files,
-summary}``. The table is the set of records; every query replays the
-log once and only files a record names are visible.
+fingerprint, layout_parts, run_id, timestamp_ms, part_ids, columns,
+files, summary}`` (``columns``: the encoded columns its files hold;
+records written before it existed lack it). The table is the set of
+records; every query replays the log once and only files a record
+names are visible.
 
 Commit (the Delta Lake protocol: writers write their own data files, a
 commit appends one record listing them): one Spark job whose tasks
 write their frame rows with pyarrow into a fresh ``data/<run_id>/``,
 each under an attempt-unique name, and report one small row (file,
-part ids, chunk, row and byte totals). Each chunk group lands whole
-in one file, so a task can decode any file on its own. The record is
-built from the reported rows alone, which only successful task
-attempts deliver: the file of a failed or speculative attempt is
+part ids, columns, chunk, row and byte totals). Each chunk group lands
+whole in one file, so a task can decode any file on its own. The
+record is built from the reported rows alone, which only successful
+task attempts deliver: the file of a failed or speculative attempt is
 never named, and the driver deletes every file in the run directory
 that no row reported before it appends the record. The record is
 appended put-if-absent: it is written to a temp file in ``_log/`` and
@@ -47,8 +49,10 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from .core import ENC_ARROW_SCHEMA, ENC_DDL, FRAME_SOURCE, FrameSource, frame_source
+from .core import (ENC_ARROW_SCHEMA, ENC_DDL, FRAME_SOURCE, FrameSource, frame_source,
+                   holds_whole_groups)
 from .sink import _partition_id, _ShardWriter
 
 
@@ -167,8 +171,7 @@ class EncodedTable:
 
     def data_files(self, table: str | None = None) -> list[str]:
         """Committed data file paths, in commit order."""
-        return [os.path.join(self.data_dir, f)
-                for r in self._records(table) for f in r["files"]]
+        return self._files(self._records(table))
 
     def committed_epochs(self, table: str) -> set[int]:
         return {r["epoch"] for r in self._records(table) if r["epoch"] is not None}
@@ -217,8 +220,7 @@ class EncodedTable:
             work = source.work
             job = source.plan.mapInArrow(lambda it: write_frames(work(it)), _REPORT_DDL)
         else:
-            recorded = vars(encoded).get(FRAME_SOURCE)
-            if recorded is None or not recorded.grouped:  # not an encode's own output
+            if not holds_whole_groups(encoded):
                 encoded = encoded.repartition(*_GROUP_KEY)
             job = encoded.mapInArrow(write_frames, _REPORT_DDL)
         reported = job.collect()
@@ -231,6 +233,7 @@ class EncodedTable:
             "fingerprint": fingerprint, "layout_parts": layout_parts,
             "run_id": run_id, "timestamp_ms": int(time.time() * 1000),
             "part_ids": sorted({p for r in reported for p in r["part_ids"]}),
+            "columns": sorted({c for r in reported for c in r["columns"]}),
             "files": sorted(f"{run_id}/{f}" for f in files),
             "summary": {k: sum(r[k] for r in reported) for k in _TOTALS},
         }
@@ -243,28 +246,45 @@ class EncodedTable:
         schema spares a footer-reading inference job). It records a
         FrameSource that reads the same files task-side, whole files
         per task, so ``decode_table`` and ``commit`` of the uncached
-        result run fused."""
-        files = self.data_files()
+        result run fused; the decode's source plans only the files of
+        the commits that hold one of its columns."""
+        records = self._records()
+        files = self._files(records)
         if not files:
             return spark.createDataFrame([], ENC_DDL)
-        plan = file_plan(spark, len(files))
+        scan = spark.read.schema(ENC_DDL).parquet(*files)
+        setattr(scan, FRAME_SOURCE, self._file_source(spark, records))
+        return scan
+
+    def _files(self, records: list[dict], columns: list[str] | None = None) -> list[str]:
+        """The data files of ``records``; with ``columns``, only those
+        of the records that hold one of them (a record without a
+        ``columns`` list keeps its files)."""
+        return [os.path.join(self.data_dir, f) for r in records
+                if columns is None or not set(columns).isdisjoint(r.get("columns", columns))
+                for f in r["files"]]
+
+    def _file_source(self, spark: SparkSession, records: list[dict],
+                     columns: list[str] | None = None) -> FrameSource:
+        """The frames of ``records``' files (with ``columns``: see
+        ``_files``), read whole files per task with read_frame_file."""
+        files = self._files(records, columns)
 
         def work(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             for b in batches:
                 for i in b.column("id").to_pylist():
                     yield from read_frame_file(files[i]).to_batches()
 
-        scan = spark.read.schema(ENC_DDL).parquet(*files)
-        setattr(scan, FRAME_SOURCE, FrameSource(plan, work, False))
-        return scan
+        return FrameSource(file_plan(spark, len(files)), work, False,
+                           lambda cols: self._file_source(spark, records, cols))
 
 
 def file_plan(spark: SparkSession, n: int) -> DataFrame:
     """A JVM range over ``n`` file indices in ``min(n, parallelism)``
-    contiguous slices: the file-per-task layout of repartitionByRange
-    without its sampler stage and exchange; tasks look the paths up in
-    their closure (see scan.py)."""
-    return spark.range(0, n, 1, min(n, spark.sparkContext.defaultParallelism))
+    contiguous slices (one when ``n`` is 0): the file-per-task layout of
+    repartitionByRange without its sampler stage and exchange; tasks
+    look the paths up in their closure (see scan.py)."""
+    return spark.range(0, n, 1, max(1, min(n, spark.sparkContext.defaultParallelism)))
 
 
 _GROUP_KEY = ["run_id", "part_id", "chunk_id"]
@@ -301,12 +321,11 @@ def read_frame_file(path: str, fields: list[str] | None = None, columns: list[st
 
 
 _TOTALS = ("chunks", "rows", "raw_bytes", "enc_bytes")
-_REPORT_DDL = ("file string, part_ids array<int>, chunks long, rows long, "
-               "raw_bytes long, enc_bytes long")
 _REPORT_SCHEMA = pa.schema([
     ("file", pa.string()), ("part_ids", pa.list_(pa.int32())),
-    *((k, pa.int64()) for k in _TOTALS),
+    ("columns", pa.list_(pa.string())), *((k, pa.int64()) for k in _TOTALS),
 ])
+_REPORT_DDL = from_arrow_schema(_REPORT_SCHEMA)
 
 
 def _frame_writer(out: str) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
@@ -319,6 +338,7 @@ def _frame_writer(out: str) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.
     def write_frames(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         w = _ShardWriter(out, _partition_id(), ENC_ARROW_SCHEMA, "snappy", row_group_rows=1)
         part_ids: set[int] = set()
+        columns: set[str] = set()
         totals = dict.fromkeys(_TOTALS, 0)
         for rb in batches:
             if not rb.num_rows:
@@ -328,13 +348,15 @@ def _frame_writer(out: str) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.
                 rb = rb.cast(ENC_ARROW_SCHEMA)
             w.add(rb)
             part_ids.update(pc.unique(rb.column("part_id")).to_pylist())
+            columns.update(pc.unique(rb.column("column")).to_pylist())
             totals["chunks"] += rb.num_rows
             for k, c in (("rows", "n"), ("raw_bytes", "raw_bytes"), ("enc_bytes", "enc_bytes")):
                 totals[k] += pc.sum(rb.column(c)).as_py() or 0
         shard = w.close()
         if shard is not None:
             yield pa.RecordBatch.from_pylist(
-                [{"file": os.path.basename(shard[0]), "part_ids": sorted(part_ids), **totals}],
+                [{"file": os.path.basename(shard[0]), "part_ids": sorted(part_ids),
+                  "columns": sorted(columns), **totals}],
                 schema=_REPORT_SCHEMA)
 
     return write_frames

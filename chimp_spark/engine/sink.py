@@ -50,9 +50,10 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from .core import FRAME_COLS, Predicate, ddl_arrow_types, iter_decoded_groups
+from .core import (FRAME_COLS, Predicate, ddl_arrow_types, frame_column_filter, frame_rows,
+                   iter_decoded_groups)
 
 _MANIFEST = "_decode_manifest.json"
 
@@ -161,33 +162,23 @@ class _ShardWriter:
         return self.path, self.rows, os.path.getsize(self.path)
 
 
+_AUDIT = ("groups_total", "groups_decoded", "frame_bytes_total", "frame_bytes_read")
+_META_SCHEMA = pa.schema(
+    [("spark_part", pa.int32()), ("path", pa.string()),
+     ("rows", pa.int64()), ("bytes", pa.int64()), *((k, pa.int64()) for k in _AUDIT)]
+)
+_META_DDL = from_arrow_schema(_META_SCHEMA)
+
+
 def _meta_batch(pid: int, shard: tuple[str, int, int] | None,
                 audit: dict | None = None) -> pa.RecordBatch:
     path, rows, size = shard if shard is not None else (None, 0, 0)
     a = audit or {}
     return pa.RecordBatch.from_pydict(
-        {
-            "spark_part": [pid], "path": [path], "rows": [rows],
-            "bytes": [size],
-            "groups_total": [a.get("groups_total", 0)],
-            "groups_decoded": [a.get("groups_decoded", 0)],
-            "frame_bytes_total": [a.get("frame_bytes_total", 0)],
-            "frame_bytes_read": [a.get("frame_bytes_read", 0)],
-        },
-        schema=pa.schema(
-            [("spark_part", pa.int32()), ("path", pa.string()),
-             ("rows", pa.int64()), ("bytes", pa.int64()),
-             ("groups_total", pa.int64()), ("groups_decoded", pa.int64()),
-             ("frame_bytes_total", pa.int64()), ("frame_bytes_read", pa.int64())]
-        ),
+        {"spark_part": [pid], "path": [path], "rows": [rows], "bytes": [size],
+         **{k: [a.get(k, 0)] for k in _AUDIT}},
+        schema=_META_SCHEMA,
     )
-
-
-_META_DDL = (
-    "spark_part int, path string, rows long, bytes long, "
-    "groups_total long, groups_decoded long, "
-    "frame_bytes_total long, frame_bytes_read long"
-)
 
 
 def _commit(out_dir: str, staged: str, reported: list, columns: list[str],
@@ -202,8 +193,7 @@ def _commit(out_dir: str, staged: str, reported: list, columns: list[str],
     files: list[dict] = []
     total_rows = 0
     total_bytes = 0
-    audit = {k: 0 for k in ("groups_total", "groups_decoded",
-                            "frame_bytes_total", "frame_bytes_read")}
+    audit = dict.fromkeys(_AUDIT, 0)
     shards = [r for r in reported if r["path"] is not None]
     for i, r in enumerate(sorted(shards, key=lambda r: (r["spark_part"], r["path"]))):
         final = os.path.join(out_dir, f"part-{i:05d}.parquet")
@@ -319,7 +309,7 @@ def decode_to_parquet(
         if shard is not None:
             yield _meta_batch(pid, shard)
 
-    sel = encoded.filter(F.col("column").isin(columns)).select(*FRAME_COLS)
+    sel = frame_rows(encoded.filter(frame_column_filter(columns)))
     reported = sel.mapInArrow(task, _META_DDL).collect()
     return _commit(out_dir, staged, reported, columns, ddl, with_row_ids)
 
@@ -390,8 +380,7 @@ def decode_table_to_parquet(
     def work(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.compute as pc
 
-        audit = {"groups_total": 0, "groups_decoded": 0,
-                 "frame_bytes_total": 0, "frame_bytes_read": 0}
+        audit = dict.fromkeys(_AUDIT, 0)
 
         def prune_keys(path) -> set:
             """Zone-map pass over one file WITHOUT the frame column:

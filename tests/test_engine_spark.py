@@ -1209,6 +1209,178 @@ def test_decode_table_fuses_over_frame_sources(spark, tmp_path):
         assert engine.decode_table(enc, li_cols, li_ddl, verify_checksums=True).count() == 0
 
 
+def _special_doubles(n: int) -> np.ndarray:
+    """n doubles that include NaNs with distinct payloads, both signs
+    of zero and infinities among ordinary values."""
+    bits = np.random.default_rng(5).normal(0, 1e3, n).view(np.uint64)
+    bits[::7] = 0x7FF8000000000000 | np.arange(len(bits[::7]), dtype=np.uint64)  # NaN payloads
+    bits[1::11] = 0xFFF0000000000001  # a negative signalling NaN
+    bits[2::13] = 0x8000000000000000  # -0.0
+    bits[3::17] = 0x7FF0000000000000  # inf
+    return bits.view(np.float64)
+
+
+def _sorted_arrow(dec):
+    return dec.toArrow().sort_by([("part_id", "ascending"), ("row_id", "ascending")])
+
+
+def test_decode_table_in_place_over_persisted_encode(spark, tmp_path):
+    """decode_table of a persisted encode output decodes its partitions
+    in place: no Exchange and no Sort in the executed plan. Its rows
+    are bit-identical (NaN payloads, -0.0) to the shuffled decode of
+    the same frames (select("*")) and to the input; a repartition of
+    the persisted output still shuffles."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = 3 * 5000
+    src = tmp_path / "src"
+    src.mkdir()
+    v = _special_doubles(n)
+    for i in range(3):  # three files: three scan units, several chunks each
+        sl = slice(i * 5000, (i + 1) * 5000)
+        pq.write_table(pa.table({
+            "k": pa.array(np.arange(n)[sl], pa.int64()),
+            "v": pa.array(v[sl]),
+            "s": pa.array([f"s{j % 13}" for j in range(sl.start, sl.stop)]),
+        }), str(src / f"part-{i}.parquet"))
+    cols, ddl = ["k", "v", "s"], "k long, v double, s string"
+    enc = engine.encode_parquet(spark, str(src), table_name="t", chunk_rows=1024).persist()
+    try:
+        enc.count()
+        in_place = engine.decode_table(enc, cols, ddl, verify_checksums=True)
+        plan = _plan(in_place)
+        assert "Exchange" not in plan and "Sort" not in plan, plan
+        shuffled = engine.decode_table(enc.select("*"), cols, ddl, verify_checksums=True)
+        assert "Exchange" in _plan(shuffled)
+        assert "Exchange" in _plan(engine.decode_table(enc.repartition(3), cols, ddl))
+        got, want = _sorted_arrow(in_place), _sorted_arrow(shuffled)
+        assert got.num_rows == n
+        for c in ("part_id", "row_id", "k", "s"):
+            assert got.column(c).equals(want.column(c)), c
+        got_bits = got.column("v").to_numpy().view(np.uint64)
+        assert np.array_equal(got_bits, want.column("v").to_numpy().view(np.uint64))
+        order = np.argsort(got.column("k").to_numpy())
+        assert np.array_equal(got_bits[order], v.view(np.uint64))
+    finally:
+        enc.unpersist()
+
+
+def _ddls_in_sources() -> dict[str, str]:
+    """Every string literal shaped like a ``"name type, ..."`` DDL of
+    simple types in tests/, jobs/ and the benchmark workloads."""
+    import ast
+    import glob
+    import re
+
+    field = r"[A-Za-z_]\w*\s+[a-z]+(?:<[a-z]+>)?"
+    shape = re.compile(rf"^\s*{field}(?:\s*,\s*{field})*\s*$")
+    types = {"long", "int", "double", "float", "string", "timestamp", "binary",
+             "boolean", "short", "byte", "date", "array"}
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = [*glob.glob(f"{root}/tests/*.py"), *glob.glob(f"{root}/jobs/*.py"),
+             f"{root}/benchmark/workloads.py"]
+    found = {}
+    for f in sorted(files):
+        with open(f) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            s = getattr(node, "value", None)
+            if (isinstance(node, ast.Constant) and isinstance(s, str) and shape.match(s)
+                    and {p.split()[1].split("<")[0] for p in s.split(",")} <= types):
+                found.setdefault(s, os.path.relpath(f, root))
+    return found
+
+
+def test_ddl_arrow_types_one_parse(spark, monkeypatch, tmp_path):
+    """ddl_arrow_types gives the per-field parse's Arrow types for every
+    DDL in the sources, from one JVM parse; building a decode_table plan
+    parses its DDL at most once. The parse is per call: ``timestamp``
+    follows the session's spark.sql.timestampType."""
+    import pyarrow as pa
+    import pyspark.sql.types as T
+    from pyspark.core.context import SparkContext
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    from chimp_spark.engine.core import ddl_arrow_types
+
+    ddls = _ddls_in_sources()
+    assert {"sensor_id int, ts timestamp, temp_c double, pressure double, accel_x double, "
+            "accel_y double, accel_z double, gyro_x double, gyro_y double, gyro_z double",
+            "doc_id long, text string, split string"} <= set(ddls)
+    for ddl, where in ddls.items():
+        per_field = {f.split()[0]: to_arrow_type(T._parse_datatype_string(f.split(None, 1)[1]))
+                     for f in ddl.split(",")}
+        assert ddl_arrow_types(ddl) == per_field, (where, ddl)
+
+    calls = {"parse": 0, "jvm": 0}
+    parse, jvm_parse = T._parse_datatype_string, SparkContext._parse_ddl
+
+    def counted(key, fn):
+        def wrapper(*a, **k):
+            calls[key] += 1
+            return fn(*a, **k)
+        return wrapper
+
+    monkeypatch.setattr(T, "_parse_datatype_string", counted("parse", parse))
+    monkeypatch.setattr(SparkContext, "_parse_ddl", counted("jvm", jvm_parse))
+    df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    cols = ["l_orderkey", "l_extendedprice", "l_returnflag", "l_shipdate"]
+    ddl = "l_orderkey long, l_extendedprice double, l_returnflag string, l_shipdate timestamp"
+    enc = engine.encode_dataframe(df, cols, chunk_rows=4096, table_name="lineitem")
+    t = engine.EncodedTable(str(tmp_path / "root"))
+    t.commit(spark, enc, "lineitem", mode="df")
+    persisted = enc.persist()
+    try:
+        for frames in (enc, persisted, persisted.select("*"), t.read(spark)):
+            calls.update(parse=0, jvm=0)
+            engine.decode_table(frames, cols, ddl)
+            assert calls["parse"] <= 1 and calls["jvm"] <= 1, calls
+    finally:
+        persisted.unpersist()
+    assert ddl_arrow_types("ts timestamp")["ts"] == pa.timestamp("us", tz="UTC")
+    spark.conf.set("spark.sql.timestampType", "TIMESTAMP_NTZ")
+    try:
+        assert ddl_arrow_types("ts timestamp")["ts"] == pa.timestamp("us")
+    finally:
+        spark.conf.unset("spark.sql.timestampType")
+
+
+def test_read_source_plans_files_of_decoded_columns(spark, tmp_path):
+    """Commit records list the columns their files hold. decode_table
+    over read() plans only the files of the records that hold one of
+    the decoded columns; a record without the list keeps its files."""
+    import json as _json
+
+    from chimp_spark.engine.core import FRAME_SOURCE
+
+    t = engine.EncodedTable(str(tmp_path / "root"))
+    for name, cols in (("orders", ["o_orderkey", "o_totalprice"]),
+                       ("customer", ["c_custkey"])):
+        df = spark.read.parquet(f"{SF_DIR}/{name}.parquet").repartition(2)
+        t.commit(spark, engine.encode_dataframe(df, cols, chunk_rows=1024, table_name=name),
+                 name, mode="df")
+    rec = [_json.load(open(t.log.path(v))) for v in t.log.versions()]
+    assert [r["columns"] for r in rec] == [["o_orderkey", "o_totalprice"], ["c_custkey"]]
+    n_orders, n_customer = (len(r["files"]) for r in rec)
+
+    def planned(cols):
+        return vars(t.read(spark))[FRAME_SOURCE].narrow(cols).plan.count()
+
+    assert planned(["o_totalprice"]) == n_orders
+    assert planned(["c_custkey", "o_orderkey"]) == n_orders + n_customer
+    assert planned(["nope"]) == 0
+    assert engine.decode_table(t.read(spark), ["nope"], "nope long").count() == 0
+    dec = engine.decode_table(t.read(spark), ["c_custkey"], "c_custkey long")
+    assert dec.count() == spark.read.parquet(f"{SF_DIR}/customer.parquet").count()
+    del rec[1]["columns"]  # a record written before the list existed
+    with open(t.log.path(2), "w") as f:
+        _json.dump(rec[1], f)
+    assert planned(["o_totalprice"]) == n_orders + n_customer
+    assert engine.decode_table(t.read(spark), ["o_totalprice"], "o_totalprice double").count() \
+        == spark.read.parquet(f"{SF_DIR}/orders.parquet").count()
+
+
 def test_commit_empty_encoded_does_not_block(spark, tmp_path):
     import threading
 
