@@ -10,6 +10,8 @@ Modes:
     python bench_extra.py commit               EncodedTable.commit, fused and chained
     python bench_extra.py decode               decode_table of a committed root and of a persisted
                                                encode, without and with a shuffle
+    python bench_extra.py frames <workload> <seed>  codec and sha256 of every frame a commit of
+                                               a benchmark workload's inputs writes
 """
 
 from __future__ import annotations
@@ -387,6 +389,49 @@ def decode_table_bench(seed: int = 7, reps: int = 9) -> None:
         shutil.rmtree(work, ignore_errors=True)
 
 
+def frames(workload: str, seed: int) -> None:
+    """Frame identity of a benchmark workload's inputs
+    (``benchmark.workloads.WORKLOADS``): each source table is encoded
+    with ``encode_parquet`` and committed, as an untraced benchmark pass
+    commits tpch. Prints one line ``table part_id chunk_id column codec
+    sha256`` per committed frame, sorted, then one line with the frame
+    count and the sha256 of those lines. Two trees write the same frames
+    exactly when their outputs ``diff`` clean (run_id, a fresh id per
+    encode, is left out)."""
+    import hashlib
+    import shutil
+    import tempfile
+
+    import pyarrow.dataset as pads
+
+    from benchmark.workloads import WORKLOADS
+    from chimp_spark import engine
+
+    work = tempfile.mkdtemp(prefix="chimp_frames_")
+    nproc = len(os.sched_getaffinity(0))
+    spark = engine.get_spark(cpus=nproc, app="chimp_frames", driver_memory="1g")
+    try:
+        wl = WORKLOADS[workload](os.path.join(work, "inputs"), os.path.join(work, "run"), seed)
+        wl.stage()
+        t = engine.EncodedTable(os.path.join(work, "run", "root"))
+        for table, src in wl.sources.items():
+            t.commit(spark, engine.encode_parquet(spark, src, table_name=table), table,
+                     mode="scan")
+        cols = ["table", "part_id", "chunk_id", "column", "codec", "frame"]
+        m = pads.dataset(t.data_files(), format="parquet").to_table(columns=cols)
+        rows = sorted((*key, hashlib.sha256(frame).hexdigest())
+                      for *key, frame in zip(*(m.column(k).to_pylist() for k in cols)))
+        overall = hashlib.sha256()
+        for row in rows:
+            line = " ".join(map(str, row))
+            print(line)
+            overall.update(line.encode() + b"\n")
+        print(f"{workload} seed {seed}: {len(rows)} frames, sha256 {overall.hexdigest()}")
+    finally:
+        spark.stop()
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def _floor_probe(batches):
     """One task of the floor job: time importlib.invalidate_caches(),
     which PySpark runs before every task, and count the cached
@@ -459,3 +504,5 @@ if __name__ == "__main__":
         xor_bench()
     elif mode == "commit":
         commit_bench()
+    elif mode == "frames":
+        frames(sys.argv[2], int(sys.argv[3]))

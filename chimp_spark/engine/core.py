@@ -67,16 +67,19 @@ ENC_DDL = from_arrow_schema(ENC_ARROW_SCHEMA)
 DEFAULT_CHUNK_ROWS = 65_536
 
 # the attribute under which a frame DataFrame records its FrameSource,
-# so EncodedTable.commit and decode_table can run their task bodies in
-# the tasks that produce the frames
+# so group_tasks can run a task body in the tasks that produce the frames
 FRAME_SOURCE = "_frame_source"
+
+# a chunk group's identity: its frames (one per column) decode together
+GROUP_KEY = ["run_id", "part_id", "chunk_id"]
 
 
 class FrameSource(NamedTuple):
     """``plan.mapInArrow(work)`` yields a frame DataFrame's rows, each
     chunk group whole and contiguous within one task. ``grouped``: the
     DataFrame is that mapInArrow itself (an encode's output), so its own
-    partitions hold whole groups too; ``EncodedTable.read``'s JVM scan
+    partitions hold whole groups too, cached or not (a cache keeps
+    partitions and their row order); ``EncodedTable.read``'s JVM scan
     may split a file's groups across partitions. ``narrow``, when set,
     returns the source of only the frames a decode of the given columns
     can use (``EncodedTable.read``: the files of the commits that hold
@@ -93,25 +96,6 @@ def encoded_frames(plan: DataFrame, work) -> DataFrame:
     out = plan.mapInArrow(work, ENC_DDL)
     setattr(out, FRAME_SOURCE, FrameSource(plan, work, True))
     return out
-
-
-def frame_source(df: DataFrame) -> FrameSource | None:
-    """The FrameSource ``df`` records, unless ``df`` is cached (its
-    tasks then read the cache, which fusing would bypass)."""
-    source = vars(df).get(FRAME_SOURCE)
-    if source is None or df.storageLevel != StorageLevel.NONE:
-        return None
-    return source
-
-
-def holds_whole_groups(df: DataFrame) -> bool:
-    """Whether every partition of ``df`` holds whole chunk groups, each
-    contiguous: true for an encode's own output, cached or not (its
-    tasks emit each group as one batch, and a cache keeps partitions
-    and their row order). Anything derived from it is a new DataFrame
-    and answers False."""
-    source = vars(df).get(FRAME_SOURCE)
-    return source is not None and source.grouped
 
 
 def session_conf(chunk_rows: int = DEFAULT_CHUNK_ROWS) -> dict[str, str]:
@@ -374,12 +358,6 @@ class Predicate(NamedTuple):
 FRAME_COLS = ["run_id", "part_id", "chunk_id", "row_start", "column", "checksum", "frame"]
 
 
-def frame_rows(df: DataFrame) -> DataFrame:
-    """``df.select(*FRAME_COLS)``, each column resolved on ``df``: one
-    JVM round trip per column, where a name costs three."""
-    return df.select(*(df[c] for c in FRAME_COLS))
-
-
 def decode_group(
     frames: dict[str, memoryview],
     sums: dict[str, int],
@@ -488,14 +466,52 @@ def _decoded_schema(ddl: str) -> tuple[StructType, dict[str, pa.DataType]]:
 
 
 def frame_column_filter(columns: list[str]) -> Column:
-    """``column IN columns`` over frame rows, built with a fixed number
-    of py4j calls: the names travel as one JSON literal, which the
-    optimizer folds into an array. ``isin`` costs several JVM round
-    trips per name."""
-    import json
+    """``column IN columns`` over frame rows, as one SQL expression the
+    JVM parses in one call: Column builders cost several round trips a
+    name. Each name travels as a hex literal, so no quoting or escaping
+    rule of the SQL parser can change it."""
+    names = ", ".join(f"cast(X'{c.encode().hex()}' as string)" for c in columns)
+    return F.expr(f"`column` IN ({names})")
 
-    names = F.from_json(F.lit(json.dumps(list(columns))), "array<string>")
-    return F.array_contains(names, F.col("column"))
+
+def group_tasks(
+    df: DataFrame,
+    body: Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]],
+    schema: StructType,
+    columns: list[str] | None = None,
+) -> DataFrame:
+    """``mapInArrow(body, schema)`` over ``df``'s frame rows, each chunk
+    group whole and contiguous within one task. The one place that
+    decides how groups reach a task; every decode and commit asks it.
+
+    * fused: ``df`` is uncached and records a FrameSource. ``body`` runs
+      in the tasks that produce the frames (over ``narrow(columns)``
+      when the source has it): one stage, no exchange.
+    * in place: ``df`` is an encode's own output, persisted. Its
+      partitions already hold whole groups: no exchange, no sort.
+    * shuffled: anything else (a cached ``read()``, a filtered,
+      repartitioned or user-built DataFrame) is hash-partitioned by
+      GROUP_KEY and sorted within each partition by it.
+
+    ``body`` gets whole frame rows and must skip frames of columns it
+    does not read. ``columns``, when given, names the ones it reads: a
+    fused source narrows to their files and the shuffle moves only
+    their frames. None (a commit) keeps every frame."""
+    source = vars(df).get(FRAME_SOURCE)
+    if source is not None and df.storageLevel == StorageLevel.NONE:
+        if columns is not None and source.narrow is not None:
+            source = source.narrow(columns)
+        work = source.work
+        return source.plan.mapInArrow(lambda it: body(work(it)), schema)
+    if source is None or not source.grouped:
+        if columns is not None:
+            df = df.filter(frame_column_filter(columns))
+        # resolved on df: a name costs several JVM round trips. Each
+        # plan node costs a JVM analysis (~5 ms at 4 vCPU), so the
+        # shuffle moves whole frame rows rather than add a projection
+        key = [df[k] for k in GROUP_KEY]
+        df = df.repartition(*key).sortWithinPartitions(*key)
+    return df.mapInArrow(body, schema)
 
 
 def iter_decoded_groups(
@@ -521,15 +537,13 @@ def iter_decoded_groups(
         if missing:
             raise ValueError(
                 f"chunk (run={group_key[0]}, part={group_key[1]}) lacks columns "
-                f"{missing}: every chunk group must hold all requested columns "
-                f"from ONE encode run, whole within one task. decode_to_parquet "
-                f"takes an encode's direct output; decode any other layout with "
-                f"decode_table(...), which co-locates a cached, filtered or "
-                f"user-built input's groups with one shuffle, or commit it and "
-                f"use decode_table_to_parquet. A committed file that splits a "
-                f"group predates co-locating commits: decode_table(df.select(\"*\")) "
-                f"still reads it, or re-encode it. Columns encoded in separate "
-                f"runs decode per column and join on (part_id, row_id)"
+                f"{missing}: a chunk group decodes only with a frame for every "
+                f"requested column. Either a committed file splits this group (a "
+                f"root committed before commits kept each group in one file: "
+                f"decode read().select(\"*\"), which co-locates its groups with "
+                f"one shuffle, or re-encode it), or the columns were not all "
+                f"encoded in one run (decode each run's columns and join on "
+                f"(part_id, row_id))"
             )
         return decode_group(group, sums, types, group_key[1], row_start,
                             verify_checksums, where)
@@ -570,18 +584,13 @@ def decode_table(
     """Decode several columns back into aligned rows.
 
     Each chunk group's frames (one per column) decode into a single
-    output batch, so a group must reach one task whole. The uncached
-    direct output of an encode, or ``EncodedTable.read`` of a committed
-    table, records where its frames come from (FrameSource): the decode
-    then runs in the tasks that produce the frames, as one stage with
-    no exchange (over ``read()``, only the files of commits that hold
-    one of ``columns``). A persisted encode output decodes in place:
-    its partitions already hold whole chunk groups, so the decode reads
-    them with no exchange and no sort. Any other input (a cached
-    ``read()``, a filtered or user-built DataFrame) is co-located by
-    (run_id, part_id, chunk_id) with one hash shuffle of compressed
-    frames first. ``ddl`` gives the decoded column types, e.g.
-    ``"l_orderkey long, l_extendedprice double"``.
+    output batch, so a group must reach one task whole: ``group_tasks``
+    decides how (fused into the tasks of an uncached encode output or
+    ``EncodedTable.read``, over only the files of commits that hold one
+    of ``columns``; in place over a persisted encode output; otherwise
+    after one hash shuffle of compressed frames). ``ddl`` gives the
+    decoded column types, e.g. ``"l_orderkey long, l_extendedprice
+    double"``.
 
     This path emits decoded VALUES through Spark (Arrow -> JVM rows) —
     right when the values feed further Spark plan nodes (joins, aggs).
@@ -597,21 +606,7 @@ def decode_table(
     def dec_iter(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         yield from iter_decoded_groups(batches, columns, out_types, verify_checksums)
 
-    source = frame_source(encoded)
-    if source is not None:
-        if source.narrow is not None:
-            source = source.narrow(columns)
-        work = source.work
-        return source.plan.mapInArrow(lambda it: dec_iter(work(it)), out_schema)
-    if holds_whole_groups(encoded):
-        sel = frame_rows(encoded)
-    else:
-        sel = (
-            frame_rows(encoded.filter(frame_column_filter(columns)))
-            .repartition(F.col("run_id"), F.col("part_id"), F.col("chunk_id"))
-            .sortWithinPartitions("run_id", "part_id", "chunk_id", "column")
-        )
-    return sel.mapInArrow(dec_iter, out_schema)
+    return group_tasks(encoded, dec_iter, out_schema, columns)
 
 
 def verify_table(

@@ -51,8 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
-from .core import (ENC_ARROW_SCHEMA, ENC_DDL, FRAME_SOURCE, FrameSource, frame_source,
-                   holds_whole_groups)
+from .core import ENC_ARROW_SCHEMA, ENC_DDL, FRAME_SOURCE, GROUP_KEY, FrameSource, group_tasks
 from .sink import _partition_id, _ShardWriter
 
 
@@ -195,18 +194,15 @@ class EncodedTable:
         summary}; ``summary`` (the totals) is also in the record.
 
         One Spark job whose tasks write their frames into
-        ``data/<run_id>/`` and report their file. A frame DataFrame
-        that records its source (see core.FrameSource) and is not
-        cached commits fused: the writer runs inside the tasks that
-        produce the frames, so they never leave them. Any other input
-        commits chained: a mapInArrow over it writes the frames it
-        reads. Every chunk group lands whole in one file, which
-        ``read``'s fused decode and ``decode_table_to_parquet`` rely
-        on: an encode's output (a persisted one too) holds whole groups
-        per partition, and any other chained input is first co-located
-        by (run_id, part_id, chunk_id) with one hash exchange. The
-        record names exactly the reported files; any other file there
-        (a failed or speculative attempt's) is deleted."""
+        ``data/<run_id>/`` and report their file. ``core.group_tasks``
+        places the writer: inside the tasks that produce the frames for
+        an uncached encode output or ``read()`` (fused), over the
+        partitions of a persisted encode output, or after one hash
+        exchange by (run_id, part_id, chunk_id) for any other input.
+        Either way every chunk group lands whole in one file, which
+        ``read``'s fused decode and ``decode_table_to_parquet`` rely on.
+        The record names exactly the reported files; any other file
+        there (a failed or speculative attempt's) is deleted."""
         from .. import _ship
 
         _ship.ensure(spark)
@@ -214,16 +210,7 @@ class EncodedTable:
         run_id = uuid.uuid4().hex[:12]
         out = os.path.join(self.data_dir, run_id)
         os.makedirs(out, exist_ok=True)
-        write_frames = _frame_writer(out)
-        source = frame_source(encoded)
-        if source is not None:
-            work = source.work
-            job = source.plan.mapInArrow(lambda it: write_frames(work(it)), _REPORT_DDL)
-        else:
-            if not holds_whole_groups(encoded):
-                encoded = encoded.repartition(*_GROUP_KEY)
-            job = encoded.mapInArrow(write_frames, _REPORT_DDL)
-        reported = job.collect()
+        reported = group_tasks(encoded, _frame_writer(out), _REPORT_DDL).collect()
         files = {r["file"] for r in reported}
         for name in os.listdir(out):
             if name not in files:
@@ -245,9 +232,9 @@ class EncodedTable:
         over the lineage columns prune and push down; the declared
         schema spares a footer-reading inference job). It records a
         FrameSource that reads the same files task-side, whole files
-        per task, so ``decode_table`` and ``commit`` of the uncached
-        result run fused; the decode's source plans only the files of
-        the commits that hold one of its columns."""
+        per task, so a decode or commit of the uncached result runs
+        fused (see core.group_tasks); a decode's source plans only the
+        files of the commits that hold one of its columns."""
         records = self._records()
         files = self._files(records)
         if not files:
@@ -287,11 +274,8 @@ def file_plan(spark: SparkSession, n: int) -> DataFrame:
     return spark.range(0, n, 1, max(1, min(n, spark.sparkContext.defaultParallelism)))
 
 
-_GROUP_KEY = ["run_id", "part_id", "chunk_id"]
-
-
 def group_keys(t: pa.Table) -> list[tuple[str, int, int]]:
-    return list(zip(*(t.column(k).to_pylist() for k in _GROUP_KEY)))
+    return list(zip(*(t.column(k).to_pylist() for k in GROUP_KEY)))
 
 
 def read_frame_file(path: str, fields: list[str] | None = None, columns: list[str] | None = None,
@@ -317,7 +301,7 @@ def read_frame_file(path: str, fields: list[str] | None = None, columns: list[st
     t = pads.dataset(path, format="parquet").to_table(columns=fields, filter=flt)
     if keep is not None:
         t = t.filter(pa.array([k in keep for k in group_keys(t)], pa.bool_()))
-    return t.sort_by([(k, "ascending") for k in _GROUP_KEY])
+    return t.sort_by([(k, "ascending") for k in GROUP_KEY])
 
 
 _TOTALS = ("chunks", "rows", "raw_bytes", "enc_bytes")

@@ -8,14 +8,15 @@ so Spark only schedules); these bypass Arrow -> JVM on DECODE. The
 generic ``decode_table`` is right when decoded values feed further
 Spark plan nodes (joins, aggregations, filters) — but a decode
 *consumer* ("materialize this encoded table back to parquet for the
-trainer") pays the JVM emit for nothing. Both shapes decode with no
-shuffle, as ``decode_table`` does on an encode's output or a committed
-table's ``read()``; here only file metadata returns through Spark.
+trainer") pays the JVM emit for nothing. Here only file metadata
+returns through Spark.
 
-- ``decode_to_parquet(encoded_df, ...)``: input is an in-flight
-  encoded DataFrame whose chunk groups are whole within a partition,
-  as the direct output of an encode is. One task per input partition
-  decodes its frames and writes a shard.
+- ``decode_to_parquet(encoded_df, ...)``: input is any frame
+  DataFrame. ``core.group_tasks`` brings each chunk group whole to one
+  task, as it does for ``decode_table``: fused into the tasks of an
+  uncached encode output or ``EncodedTable.read``, in place over a
+  persisted encode output, after one hash shuffle otherwise. Each task
+  decodes its groups and writes a shard.
 - ``decode_table_to_parquet(spark, root, ...)``: input is a COMMITTED
   EncodedTable. Chunk groups never span data files (the commit writes
   each group whole into one file), so tasks read their files straight
@@ -52,8 +53,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import from_arrow_schema
 
-from .core import (FRAME_COLS, Predicate, ddl_arrow_types, frame_column_filter, frame_rows,
-                   iter_decoded_groups)
+from .core import FRAME_COLS, Predicate, ddl_arrow_types, group_tasks, iter_decoded_groups
 
 _MANIFEST = "_decode_manifest.json"
 
@@ -267,18 +267,15 @@ def decode_to_parquet(
     with_row_ids: bool = True,
     predicate: tuple | None = None,
 ) -> dict:
-    """Decode ``columns`` of an in-flight encoded DataFrame into a
-    parquet directory: one shard per partition of ``encoded``, no
-    shuffle.
+    """Decode ``columns`` of a frame DataFrame into a parquet
+    directory: one shard per task.
 
-    ``encoded`` must hold every chunk group whole and contiguous within
-    one partition. The direct (possibly cached) output of
-    ``encode_dataframe`` or ``encode_parquet`` does: their tasks emit
-    each group as one batch. Any other layout fails on its first
-    incomplete group, naming the missing columns, and writes nothing
-    wrong: decode it with ``decode_table(...)``, which co-locates such
-    an input's groups with one shuffle, or commit it and use
-    ``decode_table_to_parquet``.
+    ``encoded`` may be any frame DataFrame: an encode's output (cached
+    or not), ``EncodedTable.read`` (cached or not), or a filtered,
+    repartitioned or user-built one. ``core.group_tasks`` brings each
+    chunk group whole to one task: without a shuffle for an encode's
+    output or an uncached ``read()``, after one hash shuffle of the
+    compressed frames otherwise.
 
     Output schema: ``(part_id int32, row_id int64, *columns)`` (the
     alignment identity of the encode run) unless ``with_row_ids=False``
@@ -286,10 +283,8 @@ def decode_to_parquet(
 
     ``predicate=(col, op, value)`` (see core.Predicate) exports only
     matching rows via an exact filter on the decoded values. No chunk
-    pruning here: an in-flight frame DataFrame has already paid its
-    materialization, so pruning would save only decode CPU; the
-    committed-table sink, where stats ride with the files and pruning
-    skips IO, is the split-export shape.
+    pruning here: the committed-table sink, where stats ride with the
+    files and pruning skips IO, is the split-export shape.
 
     Returns ``{"out_dir", "files", "rows", "bytes"}``. ``mode`` is
     ``"error"`` (refuse an existing non-empty out_dir) or
@@ -309,8 +304,7 @@ def decode_to_parquet(
         if shard is not None:
             yield _meta_batch(pid, shard)
 
-    sel = frame_rows(encoded.filter(frame_column_filter(columns)))
-    reported = sel.mapInArrow(task, _META_DDL).collect()
+    reported = group_tasks(encoded, task, _META_DDL, columns).collect()
     return _commit(out_dir, staged, reported, columns, ddl, with_row_ids)
 
 

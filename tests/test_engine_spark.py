@@ -557,10 +557,10 @@ def test_decode_table_to_parquet_no_shuffle_sink(spark, tmp_path):
 
 
 def test_decode_to_parquet_colocated_fast_path(spark, tmp_path):
-    """decode_to_parquet never shuffles: on encode-direct DataFrames
-    (frames of a chunk are emitted contiguously by the encode kernel)
-    its output must be bit-identical to the shuffled decode_table, and
-    a NON-colocated input must fail loudly, never write wrong data."""
+    """decode_to_parquet of a cached encode output decodes its
+    partitions in place, bit-identical to decode_table; a repartitioned
+    (non-colocated) frame layout is co-located first and writes the
+    same rows."""
     df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     cols = ["l_orderkey", "l_extendedprice", "l_returnflag"]
     ddl = "l_orderkey long, l_extendedprice double, l_returnflag string"
@@ -582,10 +582,12 @@ def test_decode_to_parquet_colocated_fast_path(spark, tmp_path):
     assert canon(a).exceptAll(canon(b)).isEmpty()
     assert canon(b).exceptAll(canon(a)).isEmpty()
 
-    # a repartitioned (genuinely non-colocated) frame layout must raise
-    scrambled = enc.repartition(7)
-    with pytest.raises(Exception, match="lacks columns|needs all columns"):
-        engine.decode_to_parquet(scrambled, cols, ddl, str(tmp_path / "bad"))
+    out_c = str(tmp_path / "scrambled")
+    res = engine.decode_to_parquet(enc.repartition(7), cols, ddl, out_c, verify_checksums=True)
+    assert res["rows"] == df.count()
+    c = spark.read.parquet(out_c)
+    assert canon(a).exceptAll(canon(c)).isEmpty()
+    assert canon(c).exceptAll(canon(a)).isEmpty()
     enc.unpersist()
 
 
@@ -727,34 +729,74 @@ def test_decode_to_parquet_auto_colocation(spark, tmp_path):
     enc.unpersist()
 
 
-def test_decode_to_parquet_single_pass_failure(spark, tmp_path):
-    """A non-colocated input fails after ONE Spark job (no retry through
-    a shuffle), naming the missing columns and the decode paths that
-    handle any layout."""
+def _group_plans(monkeypatch) -> list[str]:
+    """The executed plan of every ``core.group_tasks`` call from now on,
+    as a list the caller reads after its decodes and commits."""
+    from chimp_spark.engine import core, manifest, sink
+
+    plans = []
+    real = core.group_tasks
+
+    def spy(*args, **kwargs):
+        out = real(*args, **kwargs)
+        plans.append(_plan(out))
+        return out
+
+    for module in (core, manifest, sink):
+        monkeypatch.setattr(module, "group_tasks", spy)
+    return plans
+
+
+def _key_exchanges(plan: str) -> int:
+    """Hash exchanges on (run_id, part_id, chunk_id) in ``plan``."""
+    import re
+
+    return len(re.findall(r"Exchange hashpartitioning\(run_id#\d+, part_id#\d+, chunk_id#\d+L?,",
+                          plan))
+
+
+def test_decode_to_parquet_scrambled_cached_input(spark, tmp_path, monkeypatch):
+    """A cached, non-colocated input decodes to parquet after one
+    co-locating shuffle of its frames, and the shards hold every
+    source row."""
     df = spark.read.parquet(f"{SF_DIR}/orders.parquet")
     cols = ["o_orderkey", "o_totalprice"]
     enc = engine.encode_dataframe(df, cols, codec="auto", chunk_rows=4096,
                                   table_name="orders").cache()
-    # materialize the scrambled layout first, so its own exchange (a
-    # separate job under AQE) is not counted as a decode pass
     scrambled = enc.repartition(7).cache()
     scrambled.count()
-    sc = spark.sparkContext
-    group = "decode-single-pass"
-    sc.setJobGroup(group, "decode_to_parquet on a scrambled layout")
-    try:
-        with pytest.raises(Exception, match=r"lacks columns \['o_(orderkey|totalprice)'\]") as e:
-            engine.decode_to_parquet(scrambled, cols,
-                                     "o_orderkey long, o_totalprice double",
-                                     str(tmp_path / "bad"))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
-    msg = str(e.value)
-    assert "decode_table(...)" in msg and "decode_table_to_parquet" in msg
-    assert 'decode_table(df.select("*"))' in msg  # the shuffle that reads split groups
+    plans = _group_plans(monkeypatch)
+    out = str(tmp_path / "scrambled")
+    res = engine.decode_to_parquet(scrambled, cols, "o_orderkey long, o_totalprice double",
+                                   out, verify_checksums=True)
+    assert [_key_exchanges(p) for p in plans] == [1], plans
+    assert res["rows"] == df.count()
+
+    def canon(d):
+        return d.select("o_orderkey", F.col("o_totalprice").cast("string").alias("p"))
+    got = spark.read.parquet(out)
+    assert canon(got).exceptAll(canon(df)).isEmpty()
+    assert canon(df).exceptAll(canon(got)).isEmpty()
     scrambled.unpersist()
     enc.unpersist()
+
+
+def test_decode_of_columns_from_separate_runs_raises(spark, tmp_path):
+    """Columns encoded in separate runs never form one chunk group: both
+    decode paths raise "lacks columns", naming the cause, and write
+    nothing wrong."""
+    df = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    cols, ddl = ["o_orderkey", "o_totalprice"], "o_orderkey long, o_totalprice double"
+    runs = [engine.encode_dataframe(df, [c], chunk_rows=4096, table_name="orders")
+            for c in cols]
+    both = runs[0].unionByName(runs[1])
+    match = r"lacks columns \['o_(orderkey|totalprice)'\].*not all encoded in one run"
+    with pytest.raises(Exception, match=match):
+        engine.decode_table(both, cols, ddl).collect()
+    out = str(tmp_path / "bad")
+    with pytest.raises(Exception, match=match):
+        engine.decode_to_parquet(both, cols, ddl, out)
+    assert not [f for f in os.listdir(out) if f.endswith(".parquet")]
 
 
 def test_decode_column_predicate_is_exact(spark):
@@ -1266,6 +1308,86 @@ def test_decode_table_in_place_over_persisted_encode(spark, tmp_path):
         enc.unpersist()
 
 
+@pytest.fixture(scope="module")
+def special_source(spark, tmp_path_factory):
+    """Three parquet files of ``k`` (the row's index), ``v`` (special
+    doubles) and ``s``, and a root holding one commit of their encode."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("shapes")
+    src = d / "src"
+    src.mkdir()
+    v = _special_doubles(3 * 5000)
+    for i in range(3):
+        k = np.arange(i * 5000, (i + 1) * 5000)
+        pq.write_table(pa.table({"k": pa.array(k, pa.int64()), "v": pa.array(v[k]),
+                                 "s": pa.array([f"s{j % 13}" for j in k])}),
+                       str(src / f"part-{i}.parquet"))
+    root = engine.EncodedTable(str(d / "root"))
+    root.commit(spark, engine.encode_parquet(spark, str(src), table_name="t", chunk_rows=1024),
+                "t", mode="scan")
+    return str(src), v, root
+
+
+# input shape -> hash exchanges on the group key its consumer plans
+_SHAPES = {"direct": 0, "persisted": 0, "select_star": 1, "repartition_7": 1,
+           "read": 0, "cached_read": 1, "by_column": 1}
+
+
+@pytest.mark.parametrize("consumer", ["decode_table", "decode_to_parquet", "commit_read"])
+@pytest.mark.parametrize("shape", list(_SHAPES))
+def test_group_tasks_over_input_shapes(spark, special_source, monkeypatch, tmp_path,
+                                       shape, consumer):
+    """Every decode and commit of every frame-DataFrame shape returns the
+    source rows bit for bit (NaN payloads, -0.0; checksums verified),
+    and plans a hash exchange on (run_id, part_id, chunk_id) exactly
+    when the input is neither an encode's own output nor an uncached
+    read()."""
+    import pyarrow.parquet as pq
+
+    src, v, root = special_source
+    cols, ddl = ["k", "v", "s"], "k long, v double, s string"
+    if shape.endswith("read"):
+        df = root.read(spark)
+    else:
+        df = engine.encode_parquet(spark, src, table_name="t", chunk_rows=1024)
+    if shape in ("persisted", "cached_read"):
+        df = df.persist()
+    elif shape == "select_star":
+        df = df.select("*")
+    elif shape == "repartition_7":
+        df = df.repartition(7)
+    elif shape == "by_column":  # each partition holds whole columns, so every
+        # task of the group-key exchange reads the frames of a group apart
+        df = df.repartition(3, "column").persist()
+
+    plans = _group_plans(monkeypatch)
+    try:
+        if consumer == "decode_table":
+            got = engine.decode_table(df, cols, ddl, verify_checksums=True).toArrow()
+        elif consumer == "decode_to_parquet":
+            out = str(tmp_path / "out")
+            engine.decode_to_parquet(df, cols, ddl, out, verify_checksums=True)
+            got = pq.read_table(out)
+        else:
+            t = engine.EncodedTable(str(tmp_path / "again"))
+            t.commit(spark, df, "t", mode="scan")
+            got = engine.decode_table(t.read(spark), cols, ddl, verify_checksums=True).toArrow()
+    finally:
+        df.unpersist()
+    want = [_SHAPES[shape]] + [0] * (consumer == "commit_read")  # commit, then decode of read()
+    assert [_key_exchanges(p) for p in plans] == want, plans
+    got = got.sort_by("k")
+    n = len(v)
+    assert np.array_equal(got.column("k").to_numpy(), np.arange(n))
+    assert np.array_equal(got.column("v").to_numpy().view(np.uint64), v.view(np.uint64))
+    assert got.column("s").to_pylist() == [f"s{j % 13}" for j in range(n)]
+    # one scan unit per file: (part_id, row_id) is the row's place in its file
+    assert np.array_equal(got.column("part_id").to_numpy(), np.arange(n) // 5000)
+    assert np.array_equal(got.column("row_id").to_numpy(), np.arange(n) % 5000)
+
+
 def _ddls_in_sources() -> dict[str, str]:
     """Every string literal shaped like a ``"name type, ..."`` DDL of
     simple types in tests/, jobs/ and the benchmark workloads."""
@@ -1344,6 +1466,55 @@ def test_ddl_arrow_types_one_parse(spark, monkeypatch, tmp_path):
         assert ddl_arrow_types("ts timestamp")["ts"] == pa.timestamp("us")
     finally:
         spark.conf.unset("spark.sql.timestampType")
+
+
+def test_shuffle_plan_round_trips(spark, monkeypatch):
+    """Building the shuffled decode plan costs a fixed number of py4j
+    round trips, whatever the number of decoded columns: the column
+    filter is one SQL expression and the group key resolves on the
+    DataFrame. The bound is the count at which it was pinned."""
+    gateway = type(spark.sparkContext._gateway._gateway_client)
+    calls = [0]
+    send = gateway.send_command
+
+    def counted(self, *args, **kwargs):
+        calls[0] += 1
+        return send(self, *args, **kwargs)
+
+    df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    cols = ["l_orderkey", "l_extendedprice", "l_returnflag", "l_shipdate"]
+    ddl = "l_orderkey long, l_extendedprice double, l_returnflag string, l_shipdate timestamp"
+    enc = engine.encode_dataframe(df, cols, chunk_rows=4096, table_name="lineitem")
+    star = enc.select("*")
+    monkeypatch.setattr(gateway, "send_command", counted)
+    counts = {}
+    for n in (1, 4, 1, 4):  # the first calls pay one-time lookups
+        calls[0] = 0
+        dec = engine.decode_table(star, cols[:n], ", ".join(ddl.split(", ")[:n]))
+        counts[n] = calls[0]
+    monkeypatch.undo()
+    counts = list(counts.values())
+    assert counts[0] == counts[1] <= 95, counts
+    assert "Exchange hashpartitioning" in _plan(dec)
+
+
+def test_frame_column_filter_keeps_any_name(spark):
+    """The frame-column filter keeps exactly the named columns' rows for
+    names that SQL quoting would mangle, under either string-literal
+    parser mode."""
+    from chimp_spark.engine.core import frame_column_filter
+
+    names = ["it's", "a\\b", "ü", "`x`", 'q"', "x') OR true --"]
+    rows = spark.createDataFrame([(n,) for n in [*names, "other"]], "column string")
+    for escaped in ("false", "true"):
+        spark.conf.set("spark.sql.parser.escapedStringLiterals", escaped)
+        try:
+            for n in names:
+                assert [r[0] for r in rows.filter(frame_column_filter([n])).collect()] == [n]
+            got = rows.filter(frame_column_filter(names[:3])).collect()
+            assert sorted(r[0] for r in got) == sorted(names[:3])
+        finally:
+            spark.conf.unset("spark.sql.parser.escapedStringLiterals")
 
 
 def test_read_source_plans_files_of_decoded_columns(spark, tmp_path):
